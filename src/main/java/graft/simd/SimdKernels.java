@@ -22,6 +22,10 @@ import jdk.incubator.vector.VectorSpecies;
  * tolerance plus full top-k agreement on the test corpus — the same
  * tolerance-not-bit-exactness contract the reference applies to its own
  * SIMD kernels (tests pin recall +/- epsilon, not exact distances).
+ * The exception is the dimension-major tile kernels at the end of this
+ * class (l2TileT / ipTileT): they put rows, not elements, in the lanes, so
+ * each lane runs the scalar fold itself and the results are bit-identical
+ * to it; FlatKnn's tile scan runs them on the certified paths.
  *
  * This class touches jdk.incubator.vector at class-load time; callers must
  * go through {@link graft.core.Simd} which probes availability and falls
@@ -737,5 +741,113 @@ public final class SimdKernels {
             return 0.0;
         }
         return sd / (Math.sqrt(sa) * Math.sqrt(sb));
+    }
+
+    // ---- dimension-major tile kernels (lanes = rows) ---------------------
+    // The tile is DIMENSION-MAJOR: tT[i * cap + r] is element i of row r,
+    // already widened to double. Each vector lane is a different ROW, and
+    // every lane folds its own pair in element order with unfused
+    // sub/mul/add from a +0.0 start: the exact operation sequence of the
+    // scalar Metric.L2 / Metric.IP fold (computeAt / computeAtF), so every
+    // out[r] carries the scalar kernel's bits. No lane reduction happens,
+    // which is what keeps it bit-identical where the row-major kernels
+    // above are not. Four vector accumulators (4 * lanes rows) run in
+    // parallel, so the sweep is throughput-bound instead of bound by the
+    // latency of one add chain. Rows past the last full lane group take
+    // the scalar fold.
+
+    /** Squared L2 of q against rows [0, n) of a dimension-major tile. */
+    public static void l2TileT(double[] q, double[] tT, int cap, int n,
+                               double[] out) {
+        @SuppressWarnings("unchecked")
+        final VectorSpecies<Double> S = (VectorSpecies<Double>) SPECIES;
+        final int L = S.length();
+        final int d = q.length;
+        int r = 0;
+        for (; r + 4 * L <= n; r += 4 * L) {
+            DoubleVector a0 = DoubleVector.zero(S);
+            DoubleVector a1 = a0;
+            DoubleVector a2 = a0;
+            DoubleVector a3 = a0;
+            for (int i = 0, off = r; i < d; i++, off += cap) {
+                DoubleVector qi = DoubleVector.broadcast(S, q[i]);
+                DoubleVector x0 = qi.sub(DoubleVector.fromArray(S, tT, off));
+                DoubleVector x1 =
+                    qi.sub(DoubleVector.fromArray(S, tT, off + L));
+                DoubleVector x2 =
+                    qi.sub(DoubleVector.fromArray(S, tT, off + 2 * L));
+                DoubleVector x3 =
+                    qi.sub(DoubleVector.fromArray(S, tT, off + 3 * L));
+                a0 = a0.add(x0.mul(x0));
+                a1 = a1.add(x1.mul(x1));
+                a2 = a2.add(x2.mul(x2));
+                a3 = a3.add(x3.mul(x3));
+            }
+            a0.intoArray(out, r);
+            a1.intoArray(out, r + L);
+            a2.intoArray(out, r + 2 * L);
+            a3.intoArray(out, r + 3 * L);
+        }
+        for (; r + L <= n; r += L) {
+            DoubleVector a0 = DoubleVector.zero(S);
+            for (int i = 0, off = r; i < d; i++, off += cap) {
+                DoubleVector x0 = DoubleVector.broadcast(S, q[i])
+                    .sub(DoubleVector.fromArray(S, tT, off));
+                a0 = a0.add(x0.mul(x0));
+            }
+            a0.intoArray(out, r);
+        }
+        for (; r < n; r++) {
+            double acc = 0.0;
+            for (int i = 0, off = r; i < d; i++, off += cap) {
+                double x = q[i] - tT[off];
+                acc += x * x;
+            }
+            out[r] = acc;
+        }
+    }
+
+    /** Inner product of q with rows [0, n) of a dimension-major tile. */
+    public static void ipTileT(double[] q, double[] tT, int cap, int n,
+                               double[] out) {
+        @SuppressWarnings("unchecked")
+        final VectorSpecies<Double> S = (VectorSpecies<Double>) SPECIES;
+        final int L = S.length();
+        final int d = q.length;
+        int r = 0;
+        for (; r + 4 * L <= n; r += 4 * L) {
+            DoubleVector a0 = DoubleVector.zero(S);
+            DoubleVector a1 = a0;
+            DoubleVector a2 = a0;
+            DoubleVector a3 = a0;
+            for (int i = 0, off = r; i < d; i++, off += cap) {
+                DoubleVector qi = DoubleVector.broadcast(S, q[i]);
+                a0 = a0.add(qi.mul(DoubleVector.fromArray(S, tT, off)));
+                a1 = a1.add(qi.mul(DoubleVector.fromArray(S, tT, off + L)));
+                a2 = a2.add(
+                    qi.mul(DoubleVector.fromArray(S, tT, off + 2 * L)));
+                a3 = a3.add(
+                    qi.mul(DoubleVector.fromArray(S, tT, off + 3 * L)));
+            }
+            a0.intoArray(out, r);
+            a1.intoArray(out, r + L);
+            a2.intoArray(out, r + 2 * L);
+            a3.intoArray(out, r + 3 * L);
+        }
+        for (; r + L <= n; r += L) {
+            DoubleVector a0 = DoubleVector.zero(S);
+            for (int i = 0, off = r; i < d; i++, off += cap) {
+                a0 = a0.add(DoubleVector.broadcast(S, q[i])
+                    .mul(DoubleVector.fromArray(S, tT, off)));
+            }
+            a0.intoArray(out, r);
+        }
+        for (; r < n; r++) {
+            double acc = 0.0;
+            for (int i = 0, off = r; i < d; i++, off += cap) {
+                acc += q[i] * tT[off];
+            }
+            out[r] = acc;
+        }
     }
 }

@@ -110,6 +110,49 @@ object KernelBench {
           f""""simd_pairs_per_sec":${dbSimd.toLong},""" +
           f""""speedup":${dbSimd / db}%.3f}""")
       }
+      // tile sweep: FlatKnn.TileScan's per-query kernel over one packed
+      // tile of f32 rows — the row-major scalar fold (Metric.scoreTileF)
+      // against the dimension-major lane sweep (SimdKernels.l2TileT) on
+      // the same rows, with the outputs compared by raw bits
+      if (SimdSupport.available) {
+        val cap = graft.operators.FlatKnn.TileScan.cap(d, 8,
+          4 * SimdSupport.lanes)
+        val rows = Array.tabulate(cap)(r => vecsF(r % n))
+        val rowMajor = rows.flatten
+        val dimMajor = new Array[Double](cap * d)
+        for (r <- 0 until cap; i <- 0 until d)
+          dimMajor(i * cap + r) = rows(r)(i)
+        val sweeps = math.max(1, reps * n / cap)
+        def benchTile(sweep: Array[Double] => Unit): Double = {
+          val out = new Array[Double](cap)
+          var best = Double.MaxValue
+          var sink = 0.0
+          for (_ <- 0 until rounds) {
+            val t0 = System.nanoTime()
+            var s = 0
+            while (s < sweeps) { sweep(out); sink += out(s % cap); s += 1 }
+            best = math.min(best, (System.nanoTime() - t0) / 1e9)
+          }
+          if (sink == Double.MinPositiveValue) print("")
+          cap.toDouble * sweeps / best
+        }
+        val rowSweep = (out: Array[Double]) =>
+          Metric.L2.scoreTileF(q, rowMajor, d, cap, out)
+        val laneSweep = (out: Array[Double]) =>
+          graft.simd.SimdKernels.l2TileT(q, dimMajor, cap, cap, out)
+        val rowRate = benchTile(rowSweep)
+        val laneRate = benchTile(laneSweep)
+        val (o1, o2) = (new Array[Double](cap), new Array[Double](cap))
+        rowSweep(o1); laneSweep(o2)
+        val same = o1.indices.forall(r =>
+          java.lang.Double.doubleToRawLongBits(o1(r)) ==
+            java.lang.Double.doubleToRawLongBits(o2(r)))
+        println(f"""{"experiment":"tile_sweep","dims":$d,"metric":"l2",""" +
+          f""""rows":$cap,"row_major_pairs_per_sec":${rowRate.toLong},""" +
+          f""""lanes_rows_pairs_per_sec":${laneRate.toLong},""" +
+          f""""speedup":${laneRate / rowRate}%.3f,""" +
+          f""""bit_identical":$same}""")
+      }
     }
 
     // ---- overflow re-prune second-gather share ----------------------------

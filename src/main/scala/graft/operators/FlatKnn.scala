@@ -24,35 +24,56 @@ import graft.core.Metric
   */
 object FlatKnn {
 
-  /** Per-partition tiled scan state — the reference's flat-index tile
-    * posture (include/svs/index/flat/flat.h:175,329-358) and the same
-    * trick as BatchScore.probeTopKTiled: rows pack ONCE into a flat
-    * structure-of-arrays tile (float32 at half, i8/u8 at an eighth of
-    * the f64 bytes — widening happens per element inside the fold,
-    * bit-identical to pre-widened copies; ByteKnnSpec/F32BuildSpec),
-    * then each query sweeps the cache-hot tile with the metric's
-    * MONOMORPHIC tile kernel ([[Metric.scoreTile]]) and a tight insert
-    * pass. Rows are added in partition order and distances land in row
-    * order, so heap state — and every tie-break — evolves exactly as in
-    * a row-at-a-time scan: results are bit-identical to the per-row
-    * sweep this replaces. `arr` accepts both UnsafeRow-backed arrays
-    * (row scan) and ColumnarArray (columnar scan). */
-  private final class TileScan(qIds: Array[Long],
+  /** Per-partition tiled scan state, shared by both flat paths
+    * ([[search]] and the SQL path's `graft.plans.KnnPartialExec`) — the
+    * reference's flat-index tile posture
+    * (include/svs/index/flat/flat.h:175,329-358) and the same trick as
+    * BatchScore.probeTopKTiled: rows pack ONCE into a flat
+    * structure-of-arrays tile, then each query sweeps the cache-hot tile
+    * and a tight insert pass follows. Rows are added in partition order
+    * and distances land in row order, so heap state — and every
+    * tie-break — evolves exactly as in a row-at-a-time scan. `arr`
+    * accepts both UnsafeRow-backed arrays (row scan) and ColumnarArray
+    * (columnar scan).
+    *
+    * Two tile layouts:
+    *  - lanes = rows (exactly `Metric.L2` / `Metric.IP` over f64, f32 or
+    *    decoded-half rows, when the Vector API is loadable): the tile is
+    *    DIMENSION-MAJOR doubles, `tile(i·cap + r)` = element i of row r,
+    *    widened exactly at pack time. `SimdKernels.l2TileT` / `ipTileT`
+    *    give each vector lane its own row; a lane folds its pair in
+    *    element order with unfused sub/mul/add from +0.0 — the scalar
+    *    `computeAt`/`computeAtF` fold, operation for operation — so every
+    *    distance keeps the scalar bits, while 4·lanes rows fold in
+    *    parallel instead of one latency-bound add chain. The `SimdOf`
+    *    twins are NOT routed here: their row-major kernels split one pair
+    *    across lanes and reduce the lanes at the end, a different fold by
+    *    design. `cap` is a whole number of 4·lanes blocks, so only a
+    *    partition's last tile has rows in the scalar tail.
+    *  - row-major (everything else: cosine, Hamming, the SimdOf twins,
+    *    byte rows, JVMs without the Vector API): float32 at half, i8/u8 at
+    *    an eighth of the f64 bytes, widened per element inside the metric's
+    *    MONOMORPHIC tile kernel ([[Metric.scoreTile]] and twins) —
+    *    bit-identical to pre-widened copies (ByteKnnSpec/F32BuildSpec),
+    *    and the reference the lane kernel is checked against (SimdSpec). */
+  private[graft] final class TileScan(qIds: Array[Long],
       qVecs: Array[Array[Double]], k: Int, asc: Boolean, m: Metric,
       elKind: Char, unsigned: Boolean, bf16: Boolean = false) {
     private val isByte = elKind == 'b'
-    // half rows ('h') decode into the FLOAT tile at pack time: the f16→f32
-    // conversion runs once per row per scan instead of once per
-    // (query, row) pair, the tile stays at half the f64 bytes, and the
-    // sweep reuses the f32 kernels (incl. SIMD) unchanged. Both half
-    // formats inject losslessly into f32, so results are bit-identical
-    // to scanning the decoded ARRAY<FLOAT> copy (HalfKnnSpec).
+    // half rows ('h') decode at pack time: the f16→f32 conversion runs
+    // once per row per scan instead of once per (query, row) pair. Both
+    // half formats inject losslessly into f32 (and f32 into f64), so
+    // results are bit-identical to scanning the decoded ARRAY<FLOAT> copy
+    // (HalfKnnSpec).
     private val isHalf = elKind == 'h'
     private val isFloat = elKind == 'f' || isHalf
+    private val byRows = !isByte && (m == Metric.L2 || m == Metric.IP) &&
+      graft.core.SimdSupport.available
+    private val isL2 = m == Metric.L2
     private val nq = qIds.length
     private val heaps = Array.fill(nq)(new LocalTopK(k, asc))
-    private val TileBytes = 1 << 18 // ≲ L2-resident per scan task
-    private val elemSize = if (isByte) 1 else if (isFloat) 4 else 8
+    private val elemSize =
+      if (byRows) 8 else if (isByte) 1 else if (isFloat) 4 else 8
     private var d = -1
     private var cap = 0
     private var n = 0
@@ -67,13 +88,17 @@ object FlatKnn {
       while (q < nq) {
         val qv = qVecs(q)
         // loud dims contract: the offset kernels read qv.length elements
-        // at r*d — a longer query would silently read into the NEXT row
+        // per row — a longer query would silently read into the NEXT row
         // (the old per-row buffer crashed instead), a shorter one would
         // silently score a prefix
         require(qv.length == d,
           s"query dims ${qv.length} != data dims $d")
         val h = heaps(q)
-        if (isByte) m.scoreTileB(qv, bflat, d, n, out, unsigned)
+        if (byRows) {
+          if (isL2) graft.simd.SimdKernels.l2TileT(qv, flat, cap, n, out)
+          else graft.simd.SimdKernels.ipTileT(qv, flat, cap, n, out)
+        }
+        else if (isByte) m.scoreTileB(qv, bflat, d, n, out, unsigned)
         else if (isFloat) m.scoreTileF(qv, fflat, d, n, out)
         else m.scoreTile(qv, flat, d, n, out)
         var r = 0
@@ -85,11 +110,12 @@ object FlatKnn {
 
     private def reinit(d0: Int): Unit = {
       d = d0
-      cap = math.max(1, TileBytes / math.max(1, d * elemSize))
+      cap = TileScan.cap(d, elemSize,
+        if (byRows) 4 * graft.core.SimdSupport.lanes else 1)
       tIds = new Array[Long](cap)
       out = new Array[Double](cap)
       if (isByte) bflat = new Array[Byte](cap * d)
-      else if (isFloat) fflat = new Array[Float](cap * d)
+      else if (isFloat && !byRows) fflat = new Array[Float](cap * d)
       else flat = new Array[Double](cap * d)
     }
 
@@ -97,20 +123,40 @@ object FlatKnn {
                arr: org.apache.spark.sql.catalyst.util.ArrayData): Unit = {
       val d0 = arr.numElements()
       if (d0 != d) { if (d >= 0) flush(); reinit(d0) }
-      val off = n * d
       // bulk extraction: UnsafeArrayData and ColumnarArray both implement
       // toXArray as ONE memory copy, vs d virtual getX calls per row
-      if (isByte) System.arraycopy(arr.toByteArray(), 0, bflat, off, d)
-      else if (isHalf) {
-        val bits = arr.toShortArray()
+      if (byRows) {
+        // dimension-major scatter, widened exactly to double
         var i = 0
-        while (i < d) {
-          fflat(off + i) = graft.functions.HalfVecs.decodeOne(bits(i), bf16)
-          i += 1
+        var off = n
+        if (isHalf) {
+          val bits = arr.toShortArray()
+          while (i < d) {
+            flat(off) = graft.functions.HalfVecs.decodeOne(bits(i), bf16)
+            i += 1; off += cap
+          }
+        } else if (isFloat) {
+          val v = arr.toFloatArray()
+          while (i < d) { flat(off) = v(i); i += 1; off += cap }
+        } else {
+          val v = arr.toDoubleArray()
+          while (i < d) { flat(off) = v(i); i += 1; off += cap }
         }
+      } else {
+        val off = n * d
+        if (isByte) System.arraycopy(arr.toByteArray(), 0, bflat, off, d)
+        else if (isHalf) {
+          val bits = arr.toShortArray()
+          var i = 0
+          while (i < d) {
+            fflat(off + i) = graft.functions.HalfVecs.decodeOne(bits(i), bf16)
+            i += 1
+          }
+        }
+        else if (isFloat)
+          System.arraycopy(arr.toFloatArray(), 0, fflat, off, d)
+        else System.arraycopy(arr.toDoubleArray(), 0, flat, off, d)
       }
-      else if (isFloat) System.arraycopy(arr.toFloatArray(), 0, fflat, off, d)
-      else System.arraycopy(arr.toDoubleArray(), 0, flat, off, d)
       tIds(n) = id
       n += 1
       if (n == cap) flush()
@@ -122,6 +168,18 @@ object FlatKnn {
         val h = heaps(q)
         (0 until h.n).iterator.map(i => (qIds(q), h.ids(i), h.dists(i)))
       }
+    }
+  }
+
+  private[graft] object TileScan {
+    private val TileBytes = 1 << 18 // ≲ L2-resident per scan task
+
+    /** Rows per tile: as many `d`-element rows of `elemSize` bytes as fit
+      * [[TileBytes]], rounded down to a whole number of `block`-row lane
+      * blocks, at least one block. */
+    def cap(d: Int, elemSize: Int, block: Int): Int = {
+      val rows = TileBytes / math.max(1, d * elemSize)
+      math.max(block, rows / block * block)
     }
   }
 

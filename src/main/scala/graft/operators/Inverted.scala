@@ -288,14 +288,19 @@ object Calibrate {
   def calibrateWindow(search: Int => DataFrame, truth: DataFrame, k: Int,
                       targetRecall: Double, minWindow: Int, maxWindow: Int)
       : (Int, Double) = {
-    // truth collected ONCE (bounded |Q|·k); nq = its distinct query ids —
-    // replaces the truth cache + distinct-count job and the per-dial
-    // join chain with one collect per dial
-    val truthSet = truthSetOf(truth)
-    val nq = truthSet.iterator.map(_._1).toSet.size.toLong
-    calibrateWindowWith(
-      w => recallPairsLocal(search(w), truthSet, k, nq),
+    // truth collected ONCE (bounded |Q|·k) — replaces the truth cache +
+    // distinct-count job and the per-dial join chain with one collect per
+    // dial
+    calibrateWindowWith(recallOf(search, truthSetOf(truth), k),
       targetRecall, minWindow, maxWindow)
+  }
+
+  /** Dial → recall against a collected truth set; nq = its distinct
+    * query ids. */
+  private def recallOf(search: Int => DataFrame,
+                       truthSet: Set[(Long, Long)], k: Int): Int => Double = {
+    val nq = truthSet.iterator.map(_._1).toSet.size.toLong
+    w => recallPairsLocal(search(w), truthSet, k, nq)
   }
 
   /** Split-buffer calibration (the reference's second tuning axis,
@@ -308,13 +313,12 @@ object Calibrate {
                                  truth: DataFrame, k: Int,
                                  targetRecall: Double, minWindow: Int,
                                  maxWindow: Int): (Int, Int, Double) = {
-    val (w1, r1) = calibrateWindow(w => search(w, 0), truth, k, targetRecall,
-      minWindow, maxWindow)
-    if (r1 < targetRecall) return (w1, w1, r1) // unreachable: report max
+    // one truth collect serves both phases
     val truthSet = truthSetOf(truth)
-    val nq = truthSet.iterator.map(_._1).toSet.size.toLong
-    def recallAt(w: Int): Double =
-      recallPairsLocal(search(w, w1), truthSet, k, nq)
+    val (w1, r1) = calibrateWindowWith(recallOf(w => search(w, 0), truthSet,
+      k), targetRecall, minWindow, maxWindow)
+    if (r1 < targetRecall) return (w1, w1, r1) // unreachable: report max
+    val recallAt = recallOf(w => search(w, w1), truthSet, k)
     var lo = math.max(k, minWindow / 2)
     var hi = w1
     var best = (w1, w1, r1)

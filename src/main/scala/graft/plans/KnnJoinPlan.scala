@@ -7,18 +7,22 @@ import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan}
 import org.apache.spark.sql.types.{DoubleType, LongType}
 import graft.core.Metric
-import graft.operators.LocalTopK
+import graft.operators.FlatKnn
 
 /** kNN join as first-class Catalyst plan machinery (the prompt's tier (c):
   * custom `LogicalPlan` + `SparkStrategy` + `SparkPlan`, registered through
   * `SparkSessionExtensions`): [[KnnPartial]] declares "per data partition,
   * the k best (query, id, dist) candidates for every query" as a logical
   * operator; [[KnnPartialStrategy]] plans it into [[KnnPartialExec]], which
-  * runs the same executor-local bounded-heap scan as FlatKnn; the exact
-  * global merge stays declarative (window rank over the partials), so
-  * Catalyst's own WindowGroupLimit/AQE machinery optimizes it.
+  * feeds each data partition through FlatKnn's own tile scan
+  * (`FlatKnn.TileScan`: the same packing, the same distance kernels, the
+  * same bounded heaps) — there is one flat-kNN kernel path, not a copy of
+  * it here. The exact global merge stays declarative (window rank over the
+  * partials), so Catalyst's own WindowGroupLimit/AQE machinery optimizes
+  * it.
   *
-  * Semantics match FlatKnn.search exactly (proven in KnnPlanSpec).
+  * Results, distances included, match FlatKnn.search bit for bit
+  * (KnnPlanSpec).
   */
 case class KnnPartial(queries: LogicalPlan, data: LogicalPlan, k: Int,
                       metricName: String,
@@ -73,69 +77,36 @@ case class KnnPartialExec(queries: SparkPlan, data: SparkPlan, k: Int,
     val metric = Metric.byName(metricName)
       .getOrElse(sys.error(s"unknown metric $metricName"))
     // element-type-aware reads: ARRAY<FLOAT> is 4-byte-packed in ArrayData,
-    // so a getDouble read would return garbage (same dual-path as
-    // FlatKnn.search; float→double widening matches the distance
-    // expressions' per-element (double) cast, so results stay bit-identical)
+    // so a getDouble read would return garbage; float→double widening
+    // matches the distance expressions' per-element (double) cast, so
+    // results stay bit-identical
     val qFloat = floatElems(queries.output(1).dataType)
-    val dFloat = floatElems(data.output(1).dataType)
+    val elKind = if (floatElems(data.output(1).dataType)) 'f' else 'd'
     // query side is broadcast-small by contract (the reference's in-memory
     // query batch); data side streams partition-local. Float queries widen
-    // ONCE here: the batch is cache-resident during the scan, so the mixed
-    // DF kernel beats all-float FF, which pays an extra per-element widen
-    // per pair (measured; see FlatKnn.search and SCALE.md).
-    val qCollected = queries.executeCollect().map { row =>
+    // ONCE here, as in FlatKnn.search.
+    val qRows = queries.executeCollect()
+    val qIds = qRows.map(_.getLong(0))
+    val qVecs = qRows.map { row =>
       val arr = row.getArray(1)
-      val d = arr.numElements()
-      val v = new Array[Double](d)
-      var i = 0
-      if (qFloat) while (i < d) { v(i) = arr.getFloat(i).toDouble; i += 1 }
-      else while (i < d) { v(i) = arr.getDouble(i); i += 1 }
-      (row.getLong(0), v)
+      if (qFloat) arr.toFloatArray().map(_.toDouble) else arr.toDoubleArray()
     }
-    val bc = sparkContext.broadcast(qCollected)
+    val bc = sparkContext.broadcast((qIds, qVecs))
     val asc = metric.ascending
     val kk = k
     val schema = output.map(_.dataType)
     data.execute().mapPartitions { iter =>
-      val qs = bc.value
-      val nq = qs.length
-      val heaps = Array.fill(nq)(new LocalTopK(kk, asc))
-      // float rows stay float through the kernel (computeDF widens per
-      // element inside the fold — bit-identical to widening the buffer,
-      // same dual-path as FlatKnn.search)
-      var buf: Array[Double] = null
-      var fbuf: Array[Float] = null
+      val (ids, vecs) = bc.value
+      val ts = new FlatKnn.TileScan(ids, vecs, kk, asc, metric, elKind,
+        unsigned = false)
       while (iter.hasNext) {
         val row = iter.next()
-        if (!row.isNullAt(0) && !row.isNullAt(1)) {
-          val id = row.getLong(0)
-          val arr = row.getArray(1)
-          val d = arr.numElements()
-          var q = 0
-          if (dFloat) {
-            if (fbuf == null || fbuf.length != d) fbuf = new Array[Float](d)
-            var i = 0
-            while (i < d) { fbuf(i) = arr.getFloat(i); i += 1 }
-            while (q < nq) {
-              heaps(q).insert(metric.computeDF(qs(q)._2, fbuf), id)
-              q += 1 }
-          } else {
-            if (buf == null || buf.length != d) buf = new Array[Double](d)
-            var i = 0
-            while (i < d) { buf(i) = arr.getDouble(i); i += 1 }
-            while (q < nq) {
-              heaps(q).insert(metric.compute(qs(q)._2, buf), id)
-              q += 1 }
-          }
-        }
+        if (!row.isNullAt(0) && !row.isNullAt(1))
+          ts.addRow(row.getLong(0), row.getArray(1))
       }
       val proj = UnsafeProjection.create(schema.toArray)
-      (0 until nq).iterator.flatMap { q =>
-        val h = heaps(q)
-        (0 until h.n).iterator.map { i =>
-          proj(new GenericInternalRow(
-            Array[Any](qs(q)._1, h.ids(i), h.dists(i))))
-        }
+      ts.emit().map { case (q, id, dist) =>
+        proj(new GenericInternalRow(Array[Any](q, id, dist)))
       }
     }
   }

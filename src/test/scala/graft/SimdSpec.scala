@@ -11,7 +11,9 @@ import graft.operators.FlatKnn
   * end-to-end top-k agreement with the certified scalar path. The certified
   * oracle paths themselves stay scalar (bit-identical to DuckDB); this is
   * the same tolerance-not-bit-exactness contract the reference applies to
-  * its own AVX kernels. */
+  * its own AVX kernels. The dimension-major tile kernels the flat scans
+  * run for L2/IP are the exception: lanes hold rows, not elements, so
+  * they are pinned bit for bit to the scalar fold. */
 class SimdSpec extends SparkSpec {
 
   test("Vector API module is present in the test JVM") {
@@ -192,6 +194,119 @@ class SimdSpec extends SparkSpec {
               s"${b.getLong(2)} with non-tied dists")
         }
       }
+    }
+  }
+
+  private def rawBits(x: Double): Long = java.lang.Double.doubleToRawLongBits(x)
+
+  /** Pack row-major rows into the dimension-major double tile the lane
+    * kernels read: tile(i·cap + r) = element i of row r. */
+  private def packT(rows: Array[Array[Double]], d: Int, cap: Int)
+      : Array[Double] = {
+    val t = new Array[Double](cap * d)
+    for (r <- rows.indices; i <- 0 until d) t(i * cap + r) = rows(r)(i)
+    t
+  }
+
+  // ±0.0, NaN, ±∞ and subnormals (double and float32 ones)
+  private val specials = Array(0.0, -0.0, Double.NaN,
+    Double.PositiveInfinity, Double.NegativeInfinity,
+    java.lang.Double.MIN_VALUE, -1e-310, Float.MinPositiveValue.toDouble,
+    -Float.MinPositiveValue.toDouble * 3)
+
+  private def withSpecials(rnd: scala.util.Random, v: Array[Double],
+                           p: Double): Array[Double] =
+    v.map(x => if (rnd.nextDouble() < p)
+      specials(rnd.nextInt(specials.length)) else x)
+
+  test("dimension-major tile kernels are bit-identical to the scalar " +
+      "L2/IP folds over f64, f32 and half rows, special values included") {
+    assume(SimdSupport.available)
+    val lanes = SimdSupport.lanes
+    val rnd = new scala.util.Random(5)
+    for (d <- Seq(1, 3, 127, 128, 768)) {
+      val cap = FlatKnn.TileScan.cap(d, 8, 4 * lanes)
+      assert(cap % (4 * lanes) == 0 && cap >= 4 * lanes, s"cap $cap")
+      // a 768-d tile holds a single 4·lanes block, so 4·lanes + 3 rows
+      // exceed it there
+      for (n <- Seq(1, lanes - 1, 4 * lanes + 3, cap).distinct
+             .filter(n => n >= 1 && n <= cap)) {
+        // special-value density: none, sparse, dense
+        for (p <- Seq(0.0, 0.5 / d, 0.2)) {
+          val f64 = Array.fill(n)(withSpecials(rnd, randVec(rnd, d), p))
+          val f32 = Array.fill(n)(
+            withSpecials(rnd, randVec(rnd, d), p).map(_.toFloat))
+          val half = Array.fill(n) {
+            val bf16 = rnd.nextBoolean()
+            Array.fill(d)(graft.functions.HalfVecs.decodeOne(
+              rnd.nextInt(1 << 16).toShort, bf16))
+          }
+          val qs = Seq(randVec(rnd, d), withSpecials(rnd, randVec(rnd, d), p),
+            Array.fill(d)(0.0))
+          val out = new Array[Double](cap)
+          for (q <- qs; m <- Seq(Metric.L2, Metric.IP)) {
+            def check(kind: String, rows: Array[Array[Double]],
+                      scalar: Int => Double): Unit = {
+              java.util.Arrays.fill(out, 42.0)
+              if (m == Metric.L2)
+                graft.simd.SimdKernels.l2TileT(q, packT(rows, d, cap), cap,
+                  n, out)
+              else
+                graft.simd.SimdKernels.ipTileT(q, packT(rows, d, cap), cap,
+                  n, out)
+              for (r <- 0 until n) {
+                val want = scalar(r)
+                // raw bits for every value (±0.0 sign included); a NaN
+                // only has to be NaN — neither Java nor IEEE 754 fixes a
+                // NaN result's sign or payload, and the JIT's scalar and
+                // vector code do not agree on them
+                assert(if (want.isNaN) out(r).isNaN
+                  else rawBits(out(r)) == rawBits(want),
+                  s"${m.name} $kind d=$d n=$n r=$r p=$p: " +
+                    s"tile ${out(r)} scalar $want")
+              }
+              assert(n == cap || out(n) == 42.0, "wrote past n")
+            }
+            val flat = f64.flatten
+            check("f64", f64, r => m.computeAt(q, flat, r * d))
+            val fflat = f32.flatten
+            check("f32", f32.map(_.map(_.toDouble)),
+              r => m.computeAtF(q, fflat, r * d))
+            val hflat = half.flatten
+            check("half", half.map(_.map(_.toDouble)),
+              r => m.computeAtF(q, hflat, r * d))
+          }
+        }
+      }
+    }
+  }
+
+  test("flat kNN over a corpus that is not a multiple of the tile cap " +
+      "equals the window reference, distances bit for bit") {
+    val s = spark
+    import s.implicits._
+    val rnd = new scala.util.Random(77)
+    val d = 128
+    val lanes = math.max(1, SimdSupport.lanes)
+    // 3 full tiles, then one 4·lanes block, one single-lane block and a
+    // scalar tail of 3 rows
+    val nRows = 3 * FlatKnn.TileScan.cap(d, 8, 4 * lanes) + 5 * lanes + 3
+    val rows = (0 until nRows).map(i => (i.toLong, randVec(rnd, d).toSeq))
+    val qRows = (0 until 9).map(i => (i.toLong, randVec(rnd, d).toSeq))
+    val data64 = rows.toDF("id", "vec").coalesce(1)
+    val q64 = qRows.toDF("query_id", "qvec")
+    for ((label, data) <- Seq("f64" -> data64,
+           "f32" -> data64.withColumn("vec", col("vec").cast("array<float>")));
+         m <- Seq(Metric.L2, Metric.IP)) {
+      def rowsOf(df: org.apache.spark.sql.DataFrame) =
+        df.select("query_id", "rnk", "neighbor_id", "dist")
+          .orderBy("query_id", "rnk").collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+            rawBits(r.getDouble(3)))).toSeq
+      val fast = rowsOf(FlatKnn.search(q64, data, 10, m))
+      val ref = rowsOf(FlatKnn.searchViaWindow(q64, data, 10, m))
+      assert(fast.length == 90, s"$label ${m.name}")
+      assert(fast === ref, s"$label ${m.name}")
     }
   }
 }
