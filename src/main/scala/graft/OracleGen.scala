@@ -639,8 +639,8 @@ object OracleGen {
     * word-encode through the same thresholds as the data, each query
     * keeps its `nProbes` Hamming-nearest centroids (ties by cid), the
     * Hamming ranking runs only over rows whose label was probed, and the
-    * exact-L2 rerank finishes. Mirrors `GraphLayout.serveHamming` /
-    * `searchHammingLocal` at full window: the walk visits every
+    * exact-L2 rerank finishes. Mirrors `GraphLayout.serve` with
+    * `Codec.Binary` at full window: the walk visits every
     * reachable row of each probed shard, so candidates = Hamming top
     * kReorder·k within the probed union. */
   def binaryRerankProbed(kNN: Int, kReorder: Int, nProbes: Int): String = {

@@ -13,19 +13,18 @@ import graft.sources.SyntheticData
   * makes this fit a sandbox and a 100 TB executor alike):
   *
   *   - flat f16-SIMD exact scan (also the recall truth),
-  *   - `searchRoutedLocal` at the SELECTIVE regime (5 queries) and the
-  *     100-query batch, with probed-shard counts + bytes so READ ∝ probes
-  *     is checkable one order past the 10M ceiling,
-  *   - `searchAdcLocal` (codes-only walk),
-  *   - the BINARY family (r13): `searchHammingLocal` bincodes walk +
-  *     exact rerank at both batch sizes, its cogroup contrast, and the
-  *     `serveHamming()` Auto dispatch — the smallest store per row, so
-  *     the likeliest extreme-scale pick,
+  *   - `GraphLayout.serve` routed (`Codec.Full(l1Probes)`) at the
+  *     SELECTIVE regime (5 queries) and the 100-query batch, with
+  *     probed-shard counts + bytes so READ ∝ probes is checkable one
+  *     order past the 10M ceiling,
+  *   - the PQ codec (codes-only walk),
+  *   - the BINARY codec (r13): bincodes walk + exact rerank at both
+  *     batch sizes — the smallest store per row, so the likeliest
+  *     extreme-scale pick,
   *   - the ≥10⁴-probed-shards planning witness: ONE query probing every
   *     shard — the shape whose per-shard driver planning (~100 ms × 2·10⁴
   *     scan plans) made the old zipServe unusable; the listing-driven
-  *     zipServe pays one distributed listing job + one reader per side,
-  *   - `serve()` dispatch decisions at both batch sizes.
+  *     zipServe pays one distributed listing job + one reader per side.
   *
   * Sharding is RANGE-based (`cluster_id = id / shardRows`) with per-shard
   * sampled-mean centroids: the synthetic corpus is uniform hash noise, so
@@ -223,28 +222,25 @@ object Scale100M {
         duBytes(s"$storePath/$s/cluster_id=$c")).sum).sum
 
     // selective: 5 queries × 8 probes of 2·10⁴ shards
+    val routed = GraphLayout.Codec.Full(l1Probes = l1Probes)
     val probed5 = probedOf(queries5, 8)
     meter.delta()
     val (_, tLocal5) = time {
-      GraphLayout.searchRoutedLocal(layout, queries5, k, searchWindow = 64,
-        l1Probes = l1Probes, nProbes = 8, simdL2).count()
+      GraphLayout.serve(layout, queries5, k, searchWindow = 64,
+        nProbes = 8, simdL2, routed).count()
     }
     val (shufRl5, shufWl5) = meter.delta()
     // 100-query batch
     val probed100 = probedOf(queries, 8)
     val (localRes, tLocal100) = time {
-      val r = GraphLayout.searchRoutedLocal(layout, queries, k,
-          searchWindow = 64, l1Probes = l1Probes, nProbes = 8, simdL2)
+      val r = GraphLayout.serve(layout, queries, k, searchWindow = 64,
+          nProbes = 8, simdL2, routed)
         .select("query_id", "neighbor_id").cache()
       r.count(); r
     }
     val (shufRl1, shufWl1) = meter.delta()
     val localRecall =
       localRes.intersect(truth).count().toDouble / (k.toLong * nq)
-    val (dec5, frac5) = GraphLayout.serveDecision(layout, queries5, 8,
-      simdL2, l1Probes)
-    val (dec100, frac100) = GraphLayout.serveDecision(layout, queries, 8,
-      simdL2, l1Probes)
     println(s"""{"experiment":"scale100m_stored_routed","n":$n,""" +
       s""""shards":$nShards,"l1_probes":$l1Probes,""" +
       s""""probed5_shards":${probed5.size},""" +
@@ -259,8 +255,6 @@ object Scale100M {
       s""""local100_shuffle_read_bytes":$shufRl1,""" +
       s""""local100_shuffle_write_bytes":$shufWl1,""" +
       s""""local_recall_vs_exact":$localRecall,""" +
-      s""""decision5":"$dec5","fraction5":$frac5,""" +
-      s""""decision100":"$dec100","fraction100":$frac100,""" +
       s""""data_graph_bytes":${
         duBytes(s"$storePath/data") + duBytes(s"$storePath/graph")}}""")
 
@@ -270,17 +264,16 @@ object Scale100M {
     // tens of minutes); the listing-driven zipServe pays one distributed
     // listing job + 2·10⁴ single-shard walk tasks. Run twice: the second
     // run's delta is the warm (page-cached) planning+walk floor.
+    val exhaustive = GraphLayout.Codec.Full(l1Probes = nGroups)
     meter.delta()
     val (_, tPlanCold) = time {
-      GraphLayout.searchRoutedLocal(layout, queries5.limit(1), k,
-        searchWindow = 64, l1Probes = nGroups, nProbes = nShards,
-        simdL2).count()
+      GraphLayout.serve(layout, queries5.limit(1), k, searchWindow = 64,
+        nProbes = nShards, simdL2, exhaustive).count()
     }
     val (shufRp, shufWp) = meter.delta()
     val (_, tPlanWarm) = time {
-      GraphLayout.searchRoutedLocal(layout, queries5.limit(1), k,
-        searchWindow = 64, l1Probes = nGroups, nProbes = nShards,
-        simdL2).count()
+      GraphLayout.serve(layout, queries5.limit(1), k, searchWindow = 64,
+        nProbes = nShards, simdL2, exhaustive).count()
     }
     println(s"""{"experiment":"scale100m_planning","n":$n,""" +
       s""""probed_shards":$nShards,""" +
@@ -289,20 +282,14 @@ object Scale100M {
       s""""shuffle_read_bytes":$shufRp,""" +
       s""""shuffle_write_bytes":$shufWp}""")
 
-    // ---- DiskANN: codes-only local walk -----------------------------------
-    val probedAdc = {
-      val qRows = queries.select(col("query_id").cast("long"),
-          col("qvec").cast("array<double>")).collect()
-        .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-      val cArr = layout.centroids
-        .map { case (i, v) => (i, v.toArray) }.toIndexedSeq
-      graft.operators.BatchScore.probeTopK(qRows, cArr, 8, Metric.L2)
-        .flatten.toSet
-    }
+    // ---- DiskANN: codes-only walk -----------------------------------------
+    val pq = GraphLayout.Codec.Pq()
+    val probedAdc =
+      GraphLayout.probes(layout, queries, 8, Metric.L2, pq).keySet
     meter.delta()
     val (_, tAdcLocal) = time {
-      GraphLayout.searchAdcLocal(layout, queries, k, searchWindow = 64,
-        nProbes = 8).count()
+      GraphLayout.serve(layout, queries, k, searchWindow = 64, nProbes = 8,
+        Metric.L2, pq).count()
     }
     val (shufRal, shufWal) = meter.delta()
     println(s"""{"experiment":"scale100m_stored_adc","n":$n,""" +
@@ -312,98 +299,35 @@ object Scale100M {
       s""""adc_local_shuffle_read_bytes":$shufRal,""" +
       s""""adc_local_shuffle_write_bytes":$shufWal}""")
 
-    // ---- the COGROUP contrast at 10⁸ (r12b) -------------------------------
-    // The exchange-volume regime the local paths replace, measured one
-    // order past the 10M run: searchRouted moves the probed shards'
-    // data+graph rows through one exchange per side, searchAdc the
-    // codes+graph rows. The local wins above are only proven at this
-    // scale if the cogroup numbers are MEASURED here too, not
-    // extrapolated. serveAdc() Auto then has both regimes on record to
-    // dispatch between.
-    meter.delta()
-    val (_, tCog100) = time {
-      GraphLayout.searchRouted(layout, queries, k, searchWindow = 64,
-        l1Probes = l1Probes, nProbes = 8, simdL2).count()
-    }
-    val (shufRc, shufWc) = meter.delta()
-    val (_, tAdcCog) = time {
-      GraphLayout.searchAdc(layout, queries, k, searchWindow = 64,
-        nProbes = 8).count()
-    }
-    val (shufRac, shufWac) = meter.delta()
-    val (adec100, afrac100) = GraphLayout.serveAdcDecision(layout,
-      queries, 8)
-    // the decision's own probe job (driver-side query collect) must not
-    // leak into the timed auto window — close the meter before serving
-    meter.delta()
-    val (_, tAdcAuto) = time {
-      GraphLayout.serveAdc(layout, queries, k, searchWindow = 64,
-        nProbes = 8).count()
-    }
-    val (shufRaa, shufWaa) = meter.delta()
-    println(s"""{"experiment":"scale100m_cogroup_contrast","n":$n,""" +
-      s""""cogroup_routed100_sec":$tCog100,""" +
-      s""""cogroup_routed100_shuffle_read_bytes":$shufRc,""" +
-      s""""cogroup_routed100_shuffle_write_bytes":$shufWc,""" +
-      s""""cogroup_adc100_sec":$tAdcCog,""" +
-      s""""cogroup_adc100_shuffle_read_bytes":$shufRac,""" +
-      s""""cogroup_adc100_shuffle_write_bytes":$shufWac,""" +
-      s""""adc_auto_decision100":"$adec100",""" +
-      s""""adc_auto_fraction100":$afrac100,""" +
-      s""""adc_auto100_sec":$tAdcAuto,""" +
-      s""""adc_auto100_shuffle_read_bytes":$shufRaa,""" +
-      s""""adc_auto100_shuffle_write_bytes":$shufWaa}""")
-
     // ---- BINARY/Hamming serving at 10⁸ (r13, re-measured r14) -------------
     // The smallest store of any codec (ONE full-density 8-byte word per
     // row at 64-d since the v2 packing — bincodes ≈ 1/16 of data's f16
-    // bytes and now smaller than m=8 PQ codes) and therefore the family
-    // most likely chosen at extreme scale. Mirror the ADC legs one order
-    // past the sf0.1 evidence behind q187–q189: local bincodes walk +
-    // exact rerank UNPRUNED (the r13 historical shape — full-corpus
-    // rerank data scan) and PRUNED (r13's probe-pruned rerankData, the
-    // serve() path's shape), the cogroup contrast, and the
-    // serveHamming() Auto dispatch — shuffle-byte columns confirm the
-    // |Q|·probes·(kReorder·k) walk-partial exchange law at 10⁸.
+    // bytes and now smaller than m=8 PQ codes) and therefore the codec
+    // most likely chosen at extreme scale. Mirrors the ADC leg one order
+    // past the sf0.1 evidence behind q187–q189: bincodes walk + exact
+    // rerank against the probed shards' data rows, at both batch sizes —
+    // shuffle-byte columns confirm the |Q|·probes·(kReorder·k)
+    // walk-partial exchange law at 10⁸.
     val kReorder = 2
-    val (hdec100, hfrac100, hpm) = GraphLayout
-      .serveHammingDecisionProbed(layout, queries, 8)
-    val probedHam = hpm.keySet
-    meter.delta() // decision's probe job stays out of every timed window
+    val binary = GraphLayout.Codec.Binary(kReorder)
+    val probedHam =
+      GraphLayout.probes(layout, queries, 8, Metric.L2, binary).keySet
+    meter.delta()
     val (hamRes, tHamLocal) = time {
-      val r = GraphLayout.searchHammingLocal(layout, queries, k,
-          searchWindow = 64, nProbes = 8, kReorder = kReorder)
+      val r = GraphLayout.serve(layout, queries, k, searchWindow = 64,
+          nProbes = 8, Metric.L2, binary)
         .select("query_id", "neighbor_id").cache()
       r.count(); r
     }
     val (shufRhl, shufWhl) = meter.delta()
     val hamRecall =
       hamRes.intersect(truth).count().toDouble / (k.toLong * nq)
-    // the PRUNED rerank (prebuilt probe map in hand, as every serve()
-    // call has): identical rows, rerank data scan ∝ the probed union —
-    // the r13 projection (8.4 → ~2.5 s) made a measured row
     meter.delta()
-    val (_, tHamLocalPruned) = time {
-      GraphLayout.searchHammingLocal(layout, queries, k,
-        searchWindow = 64, nProbes = 8, kReorder = kReorder,
-        prebuiltProbes = Some(hpm)).count()
-    }
-    val (shufRhp, shufWhp) = meter.delta()
     val (_, tHamLocal5) = time {
-      GraphLayout.searchHammingLocal(layout, queries5, k,
-        searchWindow = 64, nProbes = 8, kReorder = kReorder).count()
+      GraphLayout.serve(layout, queries5, k, searchWindow = 64,
+        nProbes = 8, Metric.L2, binary).count()
     }
     val (shufRhl5, shufWhl5) = meter.delta()
-    val (_, tHamCog) = time {
-      GraphLayout.searchHamming(layout, queries, k, searchWindow = 64,
-        nProbes = 8, kReorder = kReorder).count()
-    }
-    val (shufRhc, shufWhc) = meter.delta()
-    val (_, tHamAuto) = time {
-      GraphLayout.serveHamming(layout, queries, k, searchWindow = 64,
-        nProbes = 8, kReorder = kReorder).count()
-    }
-    val (shufRha, shufWha) = meter.delta()
     println(s"""{"experiment":"scale100m_stored_hamming","n":$n,""" +
       s""""k_reorder":$kReorder,""" +
       s""""probed100_shards":${probedHam.size},""" +
@@ -412,21 +336,10 @@ object Scale100M {
       s""""hamming_local100_sec":$tHamLocal,""" +
       s""""hamming_local100_shuffle_read_bytes":$shufRhl,""" +
       s""""hamming_local100_shuffle_write_bytes":$shufWhl,""" +
-      s""""hamming_local100_pruned_sec":$tHamLocalPruned,""" +
-      s""""hamming_pruned_shuffle_read_bytes":$shufRhp,""" +
-      s""""hamming_pruned_shuffle_write_bytes":$shufWhp,""" +
       s""""probed_data_bytes":${probedBytes(probedHam, Seq("data"))},""" +
       s""""hamming_local5_sec":$tHamLocal5,""" +
       s""""hamming_local5_shuffle_read_bytes":$shufRhl5,""" +
       s""""hamming_local5_shuffle_write_bytes":$shufWhl5,""" +
-      s""""hamming_cogroup100_sec":$tHamCog,""" +
-      s""""hamming_cogroup100_shuffle_read_bytes":$shufRhc,""" +
-      s""""hamming_cogroup100_shuffle_write_bytes":$shufWhc,""" +
-      s""""hamming_auto_decision100":"$hdec100",""" +
-      s""""hamming_auto_fraction100":$hfrac100,""" +
-      s""""hamming_auto100_sec":$tHamAuto,""" +
-      s""""hamming_auto100_shuffle_read_bytes":$shufRha,""" +
-      s""""hamming_auto100_shuffle_write_bytes":$shufWha,""" +
       s""""hamming_recall_vs_exact":$hamRecall}""")
     hamRes.unpersist()
 

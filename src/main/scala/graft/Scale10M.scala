@@ -207,21 +207,22 @@ object Scale10M {
     // re-pay the full 10M exact sweep inside each recall computation)
     graph.unpersist(blocking = true); split.unpersist(blocking = true)
     val layout = graft.operators.GraphLayout.open(spark, storedPath)
+    val routed = graft.operators.GraphLayout.Codec.Full(l1Probes = l1Probes)
     meter.delta()
     val (storedRes, tStoredServe) = time {
-      val r = graft.operators.GraphLayout.searchRouted(layout, queries, k,
-          searchWindow = 64, l1Probes = l1Probes, nProbes = 8, simdL2)
+      val r = graft.operators.GraphLayout.serve(layout, queries, k,
+          searchWindow = 64, nProbes = 8, simdL2, routed)
         .select("query_id", "neighbor_id").cache()
       r.count(); r
     }
     val (shufRss, shufWss) = meter.delta()
-    // bytes-read fraction: task inputMetrics don't account local-fs
-    // parquet data bytes, so the honest witness is the on-disk size of
-    // exactly the probed cluster_id= partition dirs (what the pruned
-    // scan reads; PlanSpec pins the PartitionFilters pushdown) over the
-    // full store size — the stored-serving twin of the BM25 row's 0.4%.
-    val probedSet = {
-      val qRows = queries.select(col("query_id").cast("long"),
+    // bytes-read fraction: the walk reads each probed shard's files
+    // directly inside its task, which Spark's input metrics do not see,
+    // so the honest witness is the on-disk size of exactly the probed
+    // cluster_id= partition dirs over the full store size — the
+    // stored-serving twin of the BM25 row's 0.4%.
+    def probedOf(qs: DataFrame): Set[Long] = {
+      val qRows = qs.select(col("query_id").cast("long"),
           col("qvec").cast("array<double>")).collect()
         .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
       val cArr = layout.centroids
@@ -232,10 +233,12 @@ object Scale10M {
       graft.operators.BatchScore.probeTopKHierarchical(qRows, cArr, l1Arr,
         g1, l1Probes, 8, simdL2).flatten.toSet
     }
-    val probedBytes = probedSet.toSeq.map { c =>
+    def dataGraphBytes(probed: Set[Long]): Long = probed.toSeq.map { c =>
       duBytes(s"$storedPath/data/cluster_id=$c") +
         duBytes(s"$storedPath/graph/cluster_id=$c")
     }.sum
+    val probedSet = probedOf(queries)
+    val probedBytes = dataGraphBytes(probedSet)
     val storedRecall =
       storedRes.intersect(truth).count().toDouble / (k.toLong * nq)
     // the small-batch leg (5 of the nq queries): the uniform 100-query
@@ -247,64 +250,22 @@ object Scale10M {
     queries5.count()
     meter.delta()
     val (_, tServe5) = time {
-      graft.operators.GraphLayout.searchRouted(layout, queries5, k,
-          searchWindow = 64, l1Probes = l1Probes, nProbes = 8, simdL2)
+      graft.operators.GraphLayout.serve(layout, queries5, k,
+          searchWindow = 64, nProbes = 8, simdL2, routed)
         .select("query_id", "neighbor_id").count()
     }
     val (shufRs5, shufWs5) = meter.delta()
-    val probed5 = {
-      val qRows = queries5.select(col("query_id").cast("long"),
-          col("qvec").cast("array<double>")).collect()
-        .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-      val cArr = layout.centroids
-        .map { case (i, v) => (i, v.toArray) }.toIndexedSeq
-      val (l1t, g1) = layout.routing.get
-      val l1Arr = l1t.sortBy(_._1)
-        .map { case (i, v) => (i, v.toArray) }.toIndexedSeq
-      graft.operators.BatchScore.probeTopKHierarchical(qRows, cArr, l1Arr,
-        g1, l1Probes, 8, simdL2).flatten.toSet
-    }
-    val probed5Bytes = probed5.toSeq.map { c =>
-      duBytes(s"$storedPath/data/cluster_id=$c") +
-        duBytes(s"$storedPath/graph/cluster_id=$c")
-    }.sum
-    // the ZERO-corpus-shuffle serve (searchRoutedLocal): each probed
-    // shard's data+graph dirs zip narrowly into the walk task, so the
-    // only exchange is the |Q|·probes·k top-k partials — shuffle must
-    // collapse from rows-read scale to walk-output scale at identical
-    // results
-    meter.delta()
-    val (localRes, tLocal) = time {
-      val r = graft.operators.GraphLayout.searchRoutedLocal(layout,
-          queries, k, searchWindow = 64, l1Probes = l1Probes, nProbes = 8,
-          simdL2)
-        .select("query_id", "neighbor_id").cache()
-      r.count(); r
-    }
-    val (shufRlo, shufWlo) = meter.delta()
-    val localRecall =
-      localRes.intersect(truth).count().toDouble / (k.toLong * nq)
-    meter.delta()
-    val (_, tLocal5) = time {
-      graft.operators.GraphLayout.searchRoutedLocal(layout, queries5, k,
-          searchWindow = 64, l1Probes = l1Probes, nProbes = 8, simdL2)
-        .select("query_id", "neighbor_id").count()
-    }
-    val (shufRl5, shufWl5) = meter.delta()
-    // DiskANN serving legs: codes-only walk, data never read during the
-    // walk. The cogroup path's exchange is the probed CODES+graph rows
-    // (64× below the data walk); the local path exchanges partials only.
+    val probed5 = probedOf(queries5)
+    val probed5Bytes = dataGraphBytes(probed5)
+    // DiskANN serving leg: codes-only walk, data never read during the
+    // walk; the exchange is the top-k partials only
     meter.delta()
     val (_, tAdc) = time {
-      graft.operators.GraphLayout.searchAdc(layout, queries, k,
-        searchWindow = 64, nProbes = 8).count()
+      graft.operators.GraphLayout.serve(layout, queries, k,
+        searchWindow = 64, nProbes = 8, Metric.L2,
+        graft.operators.GraphLayout.Codec.Pq()).count()
     }
     val (shufRa, shufWa) = meter.delta()
-    val (_, tAdcLocal) = time {
-      graft.operators.GraphLayout.searchAdcLocal(layout, queries, k,
-        searchWindow = 64, nProbes = 8).count()
-    }
-    val (shufRal, shufWal) = meter.delta()
     val probedAdc = {
       val qRows = queries.select(col("query_id").cast("long"),
           col("qvec").cast("array<double>")).collect()
@@ -318,116 +279,12 @@ object Scale10M {
       duBytes(s"$storedPath/codes/cluster_id=$c") +
         duBytes(s"$storedPath/graph/cluster_id=$c")
     }.sum
-    // serve() auto-dispatch (round-12 task #1): the single entry point
-    // must route the 5-query selective batch to the local path and the
-    // saturating 100-query sweep to the cogroup path, each matching the
-    // best manual choice's wall within noise (rows are spec-pinned
-    // bit-identical, so only the decision + wall are measured here)
-    val (dec5, frac5) = graft.operators.GraphLayout.serveDecision(layout,
-      queries5, nProbes = 8, simdL2, l1Probes = l1Probes)
-    meter.delta()
-    val (_, tAuto5) = time {
-      graft.operators.GraphLayout.serve(layout, queries5, k,
-          searchWindow = 64, nProbes = 8, simdL2, l1Probes = l1Probes)
-        .select("query_id", "neighbor_id").count()
-    }
-    val (shufRau5, shufWau5) = meter.delta()
-    val (dec100, frac100) = graft.operators.GraphLayout.serveDecision(
-      layout, queries, nProbes = 8, simdL2, l1Probes = l1Probes)
-    val (_, tAuto100) = time {
-      graft.operators.GraphLayout.serve(layout, queries, k,
-          searchWindow = 64, nProbes = 8, simdL2, l1Probes = l1Probes)
-        .select("query_id", "neighbor_id").count()
-    }
-    val (shufRau1, shufWau1) = meter.delta()
-    println(s"""{"experiment":"scale10m_serve_auto","n":$n,""" +
-      s""""decision5":"$dec5","fraction5":$frac5,""" +
-      s""""auto5_sec":$tAuto5,""" +
-      s""""auto5_shuffle_read_bytes":$shufRau5,""" +
-      s""""auto5_shuffle_write_bytes":$shufWau5,""" +
-      s""""decision100":"$dec100","fraction100":$frac100,""" +
-      s""""auto100_sec":$tAuto100,""" +
-      s""""auto100_shuffle_read_bytes":$shufRau1,""" +
-      s""""auto100_shuffle_write_bytes":$shufWau1}""")
-    // serveAdc() auto-dispatch: the compressed-serving entry point must
-    // match the best manual ADC choice (searchAdcLocal per the cogroup
-    // vs local numbers above) at both batch regimes — rows are
-    // spec-pinned bit-identical, so decision + wall + exchange are the
-    // measurements
-    val (adec5, afrac5) = graft.operators.GraphLayout.serveAdcDecision(
-      layout, queries5, nProbes = 8)
-    meter.delta()
-    val (_, tAdcAuto5) = time {
-      graft.operators.GraphLayout.serveAdc(layout, queries5, k,
-          searchWindow = 64, nProbes = 8)
-        .select("query_id", "neighbor_id").count()
-    }
-    val (shufRaa5, shufWaa5) = meter.delta()
-    val (adec100, afrac100) = graft.operators.GraphLayout.serveAdcDecision(
-      layout, queries, nProbes = 8)
-    val (_, tAdcAuto100) = time {
-      graft.operators.GraphLayout.serveAdc(layout, queries, k,
-          searchWindow = 64, nProbes = 8)
-        .select("query_id", "neighbor_id").count()
-    }
-    val (shufRaa1, shufWaa1) = meter.delta()
-    println(s"""{"experiment":"scale10m_serve_adc_auto","n":$n,""" +
-      s""""decision5":"$adec5","fraction5":$afrac5,""" +
-      s""""adc_auto5_sec":$tAdcAuto5,""" +
-      s""""adc_auto5_shuffle_read_bytes":$shufRaa5,""" +
-      s""""adc_auto5_shuffle_write_bytes":$shufWaa5,""" +
-      s""""decision100":"$adec100","fraction100":$afrac100,""" +
-      s""""adc_auto100_sec":$tAdcAuto100,""" +
-      s""""adc_auto100_shuffle_read_bytes":$shufRaa1,""" +
-      s""""adc_auto100_shuffle_write_bytes":$shufWaa1}""")
-    // CACHED-FRAME regime (r13): the hypothesized cogroup-wins case —
-    // clustered+graph cache-resident, so the local path's store re-read
-    // looked like the extra cost. Measured rule-independently (both
-    // modes FORCED on the same cached store): the first run showed
-    // cogroup-on-cached 34.8 s / 4.68 GB vs local-on-cached 4.2 s /
-    // 174 KB — the corpus exchange dominates wherever the input rows
-    // live, so Auto stays cache-blind (decision recorded to pin that).
-    layout.clustered.cache().count()
-    layout.graph.cache().count()
-    val (decC, fracC) = graft.operators.GraphLayout.serveDecision(layout,
-      queries, nProbes = 8, simdL2, l1Probes = l1Probes)
-    meter.delta()
-    val (_, tCachedCog) = time {
-      graft.operators.GraphLayout.serve(layout, queries, k,
-          searchWindow = 64, nProbes = 8, simdL2, l1Probes = l1Probes,
-          mode = graft.operators.GraphLayout.ServeMode.Cogroup)
-        .select("query_id", "neighbor_id").count()
-    }
-    val (shufRcc, shufWcc) = meter.delta()
-    val (_, tCachedLocal) = time {
-      graft.operators.GraphLayout.serve(layout, queries, k,
-          searchWindow = 64, nProbes = 8, simdL2, l1Probes = l1Probes,
-          mode = graft.operators.GraphLayout.ServeMode.Local)
-        .select("query_id", "neighbor_id").count()
-    }
-    val (shufRcl, shufWcl) = meter.delta()
-    layout.clustered.unpersist(true)
-    layout.graph.unpersist(true)
-    val (decU, _) = graft.operators.GraphLayout.serveDecision(layout,
-      queries, nProbes = 8, simdL2, l1Probes = l1Probes)
-    println(s"""{"experiment":"scale10m_serve_cached","n":$n,""" +
-      s""""decision_cached":"$decC","fraction":$fracC,""" +
-      s""""cached_forced_cogroup100_sec":$tCachedCog,""" +
-      s""""cached_cogroup100_shuffle_read_bytes":$shufRcc,""" +
-      s""""cached_cogroup100_shuffle_write_bytes":$shufWcc,""" +
-      s""""cached_forced_local100_sec":$tCachedLocal,""" +
-      s""""cached_local100_shuffle_read_bytes":$shufRcl,""" +
-      s""""cached_local100_shuffle_write_bytes":$shufWcl,""" +
-      s""""decision_after_unpersist":"$decU"}""")
     println(s"""{"experiment":"scale10m_stored_adc","n":$n,""" +
       s""""codes_bytes":$codesBytes,""" +
       s""""probed_codes_graph_bytes":$probedAdcBytes,""" +
       s""""adc_serve_sec":$tAdc,""" +
       s""""adc_shuffle_read_bytes":$shufRa,""" +
-      s""""adc_shuffle_write_bytes":$shufWa,""" +
-      s""""adc_local_serve_sec":$tAdcLocal,""" +
-      s""""adc_local_shuffle_read_bytes":$shufRal,""" +
-      s""""adc_local_shuffle_write_bytes":$shufWal}""")
+      s""""adc_shuffle_write_bytes":$shufWa}""")
     println(s"""{"experiment":"scale10m_stored_routed","n":$n,""" +
       s""""shards":${splitCents.length},"groups":$nGroups,""" +
       s""""l1_probes":$l1Probes,"store_write_sec":$tStoreWrite,""" +
@@ -443,16 +300,9 @@ object Scale10M {
       s""""bytes_read_fraction5":${probed5Bytes.toDouble / dgBytes},""" +
       s""""serve5_shuffle_read_bytes":$shufRs5,""" +
       s""""serve5_shuffle_write_bytes":$shufWs5,""" +
-      s""""local_serve_sec":$tLocal,""" +
-      s""""local_serve_shuffle_read_bytes":$shufRlo,""" +
-      s""""local_serve_shuffle_write_bytes":$shufWlo,""" +
-      s""""local_serve5_sec":$tLocal5,""" +
-      s""""local_serve5_shuffle_read_bytes":$shufRl5,""" +
-      s""""local_serve5_shuffle_write_bytes":$shufWl5,""" +
-      s""""local_recall":$localRecall,""" +
       s""""recall":$storedRecall}""")
     queries5.unpersist()
-    localRes.unpersist(); storedRes.unpersist(); truth.unpersist()
+    storedRes.unpersist(); truth.unpersist()
     rmr(storedPath); rmr(f32Path); rmr(i8Path); rmr(f16Path)
 
     // SPARK_GRAFT_10M_ONLY=vector skips the text experiments (3+4) —

@@ -24,7 +24,8 @@ import graft.sources.SyntheticData
   *      suite's standard density at 64-d (0.5 bit/dim), dims/4 is TRUE
   *      BIT PARITY with the 1-bit/dim binary codes) AND v2 bincodes;
   *      per-dir bytes,
-  *   4. serveAdc / serveHamming at kReorder 0 and 4: wall, shuffle,
+  *   4. `GraphLayout.serve` with the Pq and Binary codecs at kReorder 0
+  *      and 4: wall, shuffle,
   *      probed code bytes (the serving I/O ∝ probes law, per codec),
   *      recall@10 vs the exact truth.
   *
@@ -191,14 +192,14 @@ object ScaleHighDim {
       graft.operators.Recall.recallAtK(res, truth, k)
     for ((regime, nProbes) <- Seq(("probed", 8), ("exhaustive", nShards))) {
       // PQ-ADC walk (codes ⋈ graph), pure and reranked
-      val (_, _, pmAdc) = GraphLayout.serveAdcDecisionProbed(layout,
-        queries, nProbes)
+      val pmAdc = GraphLayout.probes(layout, queries, nProbes, Metric.L2,
+        GraphLayout.Codec.Pq())
       val adcProbed = probedBytes(pmAdc.keySet, "codes")
       for (kr <- Seq(0, 4)) {
         meter.delta()
         val (res, tA) = time {
-          val r = GraphLayout.serveAdc(layout, queries, k,
-            searchWindow = 64, nProbes = nProbes, kReorder = kr).cache()
+          val r = GraphLayout.serve(layout, queries, k, searchWindow = 64,
+            nProbes = nProbes, Metric.L2, GraphLayout.Codec.Pq(kr)).cache()
           r.count(); r
         }
         val (sr, sw) = meter.delta()
@@ -212,14 +213,15 @@ object ScaleHighDim {
           s""""shuffle_read_bytes":$sr,"shuffle_write_bytes":$sw}""")
       }
       // binary Hamming walk (bincodes ⋈ graph), pure and reranked
-      val (_, _, pmH) = GraphLayout.serveHammingDecisionProbed(layout,
-        queries, nProbes)
+      val pmH = GraphLayout.probes(layout, queries, nProbes, Metric.L2,
+        GraphLayout.Codec.Binary(0))
       val hProbed = probedBytes(pmH.keySet, "bincodes")
       for (kr <- Seq(0, 4)) {
         meter.delta()
         val (res, tH) = time {
-          val r = GraphLayout.serveHamming(layout, queries, k,
-            searchWindow = 64, nProbes = nProbes, kReorder = kr).cache()
+          val r = GraphLayout.serve(layout, queries, k, searchWindow = 64,
+            nProbes = nProbes, Metric.L2, GraphLayout.Codec.Binary(kr))
+            .cache()
           r.count(); r
         }
         val (sr, sw) = meter.delta()

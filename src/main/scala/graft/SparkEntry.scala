@@ -640,57 +640,41 @@ object SparkEntry {
     out
   }
 
-  /** q162: the SERVED binary index — word codes persisted in the graph
-    * layout (8 bytes/row of walk state, the smallest serving footprint),
-    * Hamming walk over stored bincodes+graph partitions, exact rerank
-    * against only the candidate rows of data. All shards probed + full
-    * window ⇒ global Hamming top-R + exact rerank ≡ q155 (same oracle);
-    * thresholds round-trip the sidecar bit-exactly. */
+  /** q162 (and q187/q188, which name the same serve): the SERVED binary
+    * index — word codes persisted in the graph layout (8 bytes/row of
+    * walk state, the smallest serving footprint), `GraphLayout.serve`
+    * with the Binary codec: probes once by Hamming over the word-encoded
+    * batch, zips each probed shard's bincodes+graph dirs into the walk
+    * task, reranks exactly against only the candidate rows of data. All
+    * shards probed + full window ⇒ global Hamming top-R + exact rerank
+    * ≡ q155 (same oracle); thresholds round-trip the sidecar
+    * bit-exactly. */
   private def binaryStoredQ(s: SparkSession, dir: String): DataFrame = {
     val layout = binGraphLayout(s, dir)
-    graft.operators.GraphLayout.searchHamming(layout, embQueries(s, dir),
-        K, searchWindow = 1 << 14, nProbes = layout.centroids.size,
-        kReorder = PqWalkReorder)
+    graft.operators.GraphLayout.serve(layout, embQueries(s, dir), K,
+        searchWindow = 1 << 14, nProbes = layout.centroids.size, Metric.L2,
+        graft.operators.GraphLayout.Codec.Binary(PqWalkReorder))
       .select("query_id", "rnk", "neighbor_id")
       .orderBy("query_id", "rnk")
   }
 
-  /** q188: the ONE binary serving entry point end-to-end —
-    * `GraphLayout.serveHamming` in Auto mode over q162/q187's store:
-    * probes once by Hamming over the word-encoded batch, dispatches
-    * (store on disk) to the zero-shuffle bincodes walk, reranks
-    * exactly. Rows ≡ both manual paths (GraphLayoutSpec), so
-    * q155/q162/q187's oracle certifies the binary dispatcher too —
-    * the serve() family is now oracle-certified across all four codec
-    * families (q184 data / q185 PQ / q186 IVF codecs / q188 binary). */
-  private def serveHammingAutoQ(s: SparkSession, dir: String): DataFrame = {
-    val layout = binGraphLayout(s, dir)
-    graft.operators.GraphLayout.serveHamming(layout, embQueries(s, dir),
-        K, searchWindow = 1 << 14, nProbes = layout.centroids.size,
-        kReorder = PqWalkReorder)
-      .select("query_id", "rnk", "neighbor_id")
-      .orderBy("query_id", "rnk")
-  }
-
-  /** q189: SELECTIVE binary serving — serveHamming with nProbes < |L1|,
+  /** q189: SELECTIVE binary serving — the Binary serve with nProbes < |L1|,
     * so probe routing actually prunes shards (q187/q188 certify the
     * exhaustive sweep; this certifies the Hamming PROBE SELECTION
     * itself): each query keeps its 3 Hamming-nearest word-encoded
     * centroids, the full-window walk makes per-shard results exact, and
     * the oracle replays the same selection in SQL. */
-  private def serveHammingProbedQ(s: SparkSession, dir: String)
+  private def binaryProbedQ(s: SparkSession, dir: String)
       : DataFrame = {
     val layout = binGraphLayout(s, dir)
-    graft.operators.GraphLayout.serveHamming(layout, embQueries(s, dir),
-        K, searchWindow = 1 << 14, nProbes = VamanaProbes,
-        kReorder = PqWalkReorder)
+    graft.operators.GraphLayout.serve(layout, embQueries(s, dir), K,
+        searchWindow = 1 << 14, nProbes = VamanaProbes, Metric.L2,
+        graft.operators.GraphLayout.Codec.Binary(PqWalkReorder))
       .select("query_id", "rnk", "neighbor_id")
       .orderBy("query_id", "rnk")
   }
 
-  /** The binary store q162/q187 share — ONE memoized builder (the
-    * q180/q184 `routedGraphLayout` pattern) so the cogroup and local
-    * binary serves cannot drift apart under the shared memo key. */
+  /** The binary store q162/q187/q188/q189 share — ONE memoized builder. */
   private def binGraphLayout(s: SparkSession, dir: String)
       : graft.operators.GraphLayout.Layout =
     memoized[graft.operators.GraphLayout.Layout]("graph_layout_bin", dir) {
@@ -701,22 +685,6 @@ object SparkEntry {
         bin = Some(binParams(s, dir)))
       graft.operators.GraphLayout.open(s, path)
     }
-
-  /** q187: the zero-corpus-shuffle BINARY serve — q162's Hamming walk +
-    * exact rerank through `searchHammingLocal`, which zips each probed
-    * shard's bincodes+graph dirs narrowly into the walk task (8 bytes of
-    * walk state per row — the smallest serving read of any codec; data
-    * touched only for the rerank candidates). ≡ searchHamming
-    * bit-for-bit (GraphLayoutSpec), so q155/q162's oracle certifies it
-    * verbatim. */
-  private def binaryStoredLocalQ(s: SparkSession, dir: String): DataFrame = {
-    val layout = binGraphLayout(s, dir)
-    graft.operators.GraphLayout.searchHammingLocal(layout,
-        embQueries(s, dir), K, searchWindow = 1 << 14,
-        nProbes = layout.centroids.size, kReorder = PqWalkReorder)
-      .select("query_id", "rnk", "neighbor_id")
-      .orderBy("query_id", "rnk")
-  }
 
   private[graft] val DsirTargetMod = 7L
 
@@ -1081,33 +1049,36 @@ object SparkEntry {
       graft.operators.GraphLayout.open(s, path)
     }
 
-  /** q150: the SERVED graph index — probe-and-walk from the persisted
-    * layout, reading only the probed shards' graph+data partitions; must
+  /** q150: the persisted graph index reopened — the in-memory cogroup
+    * probe-and-walk over the reopened layout's frames (the probe `isin`
+    * prunes the scan to the probed shards' graph+data partitions); must
     * be bit-identical to q24's in-memory search (same oracle). */
-  private def vamanaStoredQ(s: SparkSession, dir: String): DataFrame =
-    graft.operators.GraphLayout.search(storedGraphLayout(s, dir),
-        embQueries(s, dir), K, searchWindow = 1 << 14,
+  private def vamanaStoredQ(s: SparkSession, dir: String): DataFrame = {
+    val layout = storedGraphLayout(s, dir)
+    Vamana.searchSharded(embQueries(s, dir), layout.clustered,
+        layout.graph, layout.centroids, K, searchWindow = 1 << 14,
         nProbes = VamanaProbes, Metric.L2)
       .select("query_id", "rnk", "neighbor_id")
       .orderBy("query_id", "rnk")
+  }
 
-  /** q180: the ZERO-corpus-shuffle stored serve — a ROUTED layout
-    * (persisted level-1) served via `searchRoutedLocal`, which zips each
+  /** q180 (and q184, which names the same serve): the ZERO-corpus-
+    * shuffle stored serve — `GraphLayout.serve` over a ROUTED layout
+    * (persisted level-1, `Codec.Full(l1Probes = 5)`), which zips each
     * probed shard's data+graph partition dirs narrowly into the walk
     * task (no corpus exchange at all; only the |Q|·probes·k top-k
     * partials move). At exhaustive l1Probes routing ≡ flat probing and
-    * the local path ≡ the cogroup path bit-for-bit (HierRoutingSpec), so
-    * this certifies against q24/q150's oracle verbatim. */
+    * the stored walk ≡ the in-memory walk bit-for-bit (HierRoutingSpec),
+    * so this certifies against q24/q150's oracle verbatim. */
   private def vamanaStoredLocalQ(s: SparkSession, dir: String): DataFrame =
-    graft.operators.GraphLayout.searchRoutedLocal(
-        routedGraphLayout(s, dir), embQueries(s, dir), K,
-        searchWindow = 1 << 14, l1Probes = 5, nProbes = VamanaProbes,
-        Metric.L2)
+    graft.operators.GraphLayout.serve(routedGraphLayout(s, dir),
+        embQueries(s, dir), K, searchWindow = 1 << 14,
+        nProbes = VamanaProbes, Metric.L2,
+        graft.operators.GraphLayout.Codec.Full(l1Probes = 5))
       .select("query_id", "rnk", "neighbor_id")
       .orderBy("query_id", "rnk")
 
-  /** The routed store q180/q184 share — ONE memoized builder so the two
-    * queries cannot drift apart under the shared memo key. */
+  /** The routed store q180/q184/q190 share — ONE memoized builder. */
   private def routedGraphLayout(s: SparkSession, dir: String)
       : graft.operators.GraphLayout.Layout =
     memoized[graft.operators.GraphLayout.Layout]("graph_layout_routed",
@@ -1120,26 +1091,12 @@ object SparkEntry {
       graft.operators.GraphLayout.open(s, path)
     }
 
-  /** q184: the ONE serving entry point end-to-end — `GraphLayout.serve`
-    * in Auto mode over q180's routed store: the dispatch computes the
-    * probe-union fraction and (store on disk) takes the zero-shuffle
-    * local path; rows are bit-identical to both manual paths
-    * (GraphLayoutSpec), so q180's oracle (= q24/q150's exact
-    * within-probed-shards kNN at exhaustive l1Probes) certifies the
-    * dispatcher itself through DuckDB. */
-  private def serveAutoQ(s: SparkSession, dir: String): DataFrame =
-    graft.operators.GraphLayout.serve(routedGraphLayout(s, dir),
-        embQueries(s, dir), K, searchWindow = 1 << 14,
-        nProbes = VamanaProbes, Metric.L2, l1Probes = 5)
-      .select("query_id", "rnk", "neighbor_id")
-      .orderBy("query_id", "rnk")
-
   /** q190: STREAMING query serving — the deployment shape of a 100 TB
     * index (store is persisted, queries arrive continuously): embQueries
     * stream in two micro-batches through
     * [[graft.streaming.StreamingServe.attachGraph]] against q180/q184's
     * routed store, each batch answered by `GraphLayout.serve` (probe-once
-    * routing, Auto dispatch) into its own replay-idempotent `batch_id=`
+    * routing, the stored walk) into its own replay-idempotent `batch_id=`
     * partition. Batch ≡ stream (StreamingServeSpec), so q184's oracle —
     * exact within-probed-shards kNN — certifies the streaming recipe
     * end-to-end through DuckDB. */
@@ -1161,7 +1118,7 @@ object SparkEntry {
     val q = graft.streaming.StreamingServe.attachGraph(
       mem.toDF().toDF("query_id", "qvec"), layout, out, ckpt, K,
       searchWindow = 1 << 14, nProbes = VamanaProbes, Metric.L2,
-      l1Probes = 5)
+      graft.operators.GraphLayout.Codec.Full(l1Probes = 5))
     val rows = embQueries(s, dir).collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1)))
     try {
@@ -1266,54 +1223,47 @@ object SparkEntry {
       .orderBy("query_id", "rnk")
   }
 
-  /** q151: DiskANN serving from the store — codes-only walk over the
-    * persisted codes+graph partitions, exact rerank touching only the
+  /** q151: DiskANN serving from the reopened store — the in-memory
+    * codes-only cogroup walk over the persisted codes+graph frames
+    * (probe-pruned to the probed partitions), exact rerank touching only the
     * |Q|·kReorder·k candidate rows of data; ≡ q148 (same oracle), with
     * codebooks round-tripped through the sidecar bit-exactly. */
-  private def pqWalkStoredQ(s: SparkSession, dir: String): DataFrame =
-    graft.operators.GraphLayout.searchAdc(storedGraphLayout(s, dir),
-        embQueries(s, dir), K, searchWindow = 1 << 14,
-        nProbes = VamanaProbes, kReorder = PqWalkReorder)
+  private def pqWalkStoredQ(s: SparkSession, dir: String): DataFrame = {
+    val layout = storedGraphLayout(s, dir)
+    Vamana.searchShardedAdcRerank(embQueries(s, dir), layout.codes.get,
+        layout.graph, layout.centroids, layout.pq.get, layout.clustered, K,
+        PqWalkReorder, searchWindow = 1 << 14, nProbes = VamanaProbes)
       .select("query_id", "rnk", "neighbor_id")
       .orderBy("query_id", "rnk")
+  }
 
-  /** q181: the zero-corpus-shuffle DiskANN serve — q151's codes-only
-    * walk + exact rerank through `searchAdcLocal`, which zips each
-    * probed shard's codes+graph dirs narrowly into the PqStore walk (no
-    * corpus exchange; data touched only for the |Q|·kReorder·k rerank
-    * candidates). ≡ searchAdc bit-for-bit (GraphLayoutSpec), so q148's
-    * oracle certifies it verbatim like q151. */
+  /** q181 (and q185, which names the same serve): the zero-corpus-
+    * shuffle DiskANN serve — q151's codes-only walk + exact rerank
+    * through `GraphLayout.serve` with `Codec.Pq(kReorder)`, which zips
+    * each probed shard's codes+graph dirs narrowly into the PqStore walk
+    * (no corpus exchange; data touched only for the |Q|·kReorder·k
+    * rerank candidates). ≡ q151's in-memory walk bit-for-bit
+    * (GraphLayoutSpec), so q148's oracle certifies it verbatim. */
   private def pqWalkStoredLocalQ(s: SparkSession, dir: String): DataFrame =
-    graft.operators.GraphLayout.searchAdcLocal(storedGraphLayout(s, dir),
+    graft.operators.GraphLayout.serve(storedGraphLayout(s, dir),
         embQueries(s, dir), K, searchWindow = 1 << 14,
-        nProbes = VamanaProbes, kReorder = PqWalkReorder)
-      .select("query_id", "rnk", "neighbor_id")
-      .orderBy("query_id", "rnk")
-
-  /** q185: the ONE compressed-serving entry point end-to-end —
-    * `GraphLayout.serveAdc` in Auto mode over q151/q181's stored PQ
-    * layout: probes once on the walk metric, dispatches (store on disk)
-    * to the zero-shuffle codes walk, reranks exactly. Rows are
-    * bit-identical to both manual ADC paths (GraphLayoutSpec), so q148's
-    * oracle certifies the dispatcher itself through DuckDB. */
-  private def serveAdcAutoQ(s: SparkSession, dir: String): DataFrame =
-    graft.operators.GraphLayout.serveAdc(storedGraphLayout(s, dir),
-        embQueries(s, dir), K, searchWindow = 1 << 14,
-        nProbes = VamanaProbes, kReorder = PqWalkReorder)
+        nProbes = VamanaProbes, Metric.L2,
+        graft.operators.GraphLayout.Codec.Pq(kReorder = PqWalkReorder))
       .select("query_id", "rnk", "neighbor_id")
       .orderBy("query_id", "rnk")
 
   /** q182: filtered × compressed × LOCAL serving — q157's traverse-but-
-    * filter PQ-ADC walk through `searchAdcLocal`'s zero-corpus-shuffle
+    * filter PQ-ADC walk through `GraphLayout.serve`'s zero-corpus-shuffle
     * path: the keep predicate is analyzer-resolved and bound against the
     * codes FILE schema (Bridge.resolveBoundPredicate) and evaluated per
     * decoded row inside the per-shard walk task. Full window ⇒ exact
     * ADC-over-kept — q157's oracle verbatim. */
   private def pqWalkFilteredLocalQ(s: SparkSession, dir: String)
       : DataFrame =
-    graft.operators.GraphLayout.searchAdcLocal(storedGraphLayout(s, dir),
+    graft.operators.GraphLayout.serve(storedGraphLayout(s, dir),
         embQueries(s, dir), K, searchWindow = 1 << 14,
-        nProbes = VamanaProbes, keep = col("id") % 3 =!= 1)
+        nProbes = VamanaProbes, Metric.L2,
+        graft.operators.GraphLayout.Codec.Pq(keep = col("id") % 3 =!= 1))
       .select("query_id", "rnk", "neighbor_id")
       .orderBy("query_id", "rnk")
 
@@ -1333,8 +1283,9 @@ object SparkEntry {
     val deleted = embVectors(s, dir).filter(col("id") % 13 === 5).select("id")
     val upserted = graft.operators.GraphLayout.upsert(s, path, added,
       deleted, VamanaParams, Metric.L2)
-    graft.operators.GraphLayout.search(upserted, embQueries(s, dir), K,
-        searchWindow = 1 << 14, nProbes = VamanaProbes, Metric.L2)
+    Vamana.searchSharded(embQueries(s, dir), upserted.clustered,
+        upserted.graph, upserted.centroids, K, searchWindow = 1 << 14,
+        nProbes = VamanaProbes, Metric.L2)
       .select("query_id", "rnk", "neighbor_id")
       .orderBy("query_id", "rnk")
   }
@@ -2126,8 +2077,9 @@ object SparkEntry {
         graft.operators.GraphLayout.write(clH, g, cents, path)
         graft.operators.GraphLayout.open(s, path)
       }
-    graft.operators.GraphLayout.search(layout, embQueries(s, dir), K,
-        searchWindow = 1 << 14, nProbes = VamanaProbes, Metric.L2)
+    Vamana.searchSharded(embQueries(s, dir), layout.clustered, layout.graph,
+        layout.centroids, K, searchWindow = 1 << 14, nProbes = VamanaProbes,
+        Metric.L2)
       .select("query_id", "rnk", "neighbor_id")
       .orderBy("query_id", "rnk")
   }
@@ -2157,8 +2109,9 @@ object SparkEntry {
         graft.operators.GraphLayout.write(clH, g, cents, path)
         graft.operators.GraphLayout.open(s, path)
       }
-    graft.operators.GraphLayout.search(layout, embQueries(s, dir), K,
-        searchWindow = 1 << 14, nProbes = VamanaProbes, Metric.L2)
+    Vamana.searchSharded(embQueries(s, dir), layout.clustered, layout.graph,
+        layout.centroids, K, searchWindow = 1 << 14, nProbes = VamanaProbes,
+        Metric.L2)
       .select("query_id", "rnk", "neighbor_id")
       .orderBy("query_id", "rnk")
   }
@@ -3424,12 +3377,12 @@ object SparkEntry {
     "q181_pq_walk_stored_local" -> (pqWalkStoredLocalQ _),
     "q182_pq_walk_filtered_local" -> (pqWalkFilteredLocalQ _),
     "q183_bf16_vamana_stored" -> (vamanaStoredBf16Q _),
-    "q184_serve_auto" -> (serveAutoQ _),
-    "q185_serve_adc_auto" -> (serveAdcAutoQ _),
+    "q184_serve_auto" -> (vamanaStoredLocalQ _),
+    "q185_serve_adc_auto" -> (pqWalkStoredLocalQ _),
     "q186_index_serve" -> (indexServeQ _),
-    "q187_binary_stored_local" -> (binaryStoredLocalQ _),
-    "q188_serve_hamming_auto" -> (serveHammingAutoQ _),
-    "q189_serve_hamming_probed" -> (serveHammingProbedQ _),
+    "q187_binary_stored_local" -> (binaryStoredQ _),
+    "q188_serve_hamming_auto" -> (binaryStoredQ _),
+    "q189_serve_hamming_probed" -> (binaryProbedQ _),
     "q190_serve_stream" -> (serveStreamQ _),
     "q191_index_upsert" -> (indexUpsertQ _),
     "q192_index_upsert_stream" -> (indexUpsertStreamQ _),
@@ -3829,7 +3782,7 @@ object SparkEntry {
     // probing ≡ the cogroup walk (HierRoutingSpec pins both identities),
     // so q24/q150's oracle certifies it verbatim.
     "q180_vamana_stored_local" -> OracleGen.vamanaShardedKnn(K, VamanaProbes),
-    // q181: local ADC serve ≡ searchAdc (GraphLayoutSpec pins it), so
+    // q181: the stored ADC serve ≡ q151's in-memory walk (GraphLayoutSpec), so
     // q148/q151's oracle certifies the zero-shuffle DiskANN path too.
     "q181_pq_walk_stored_local" ->
       OracleGen.pqWalkRerank(PqM, PqK, K, VamanaProbes, PqWalkReorder),
@@ -3845,15 +3798,12 @@ object SparkEntry {
     // oracle applies unchanged.
     "q183_bf16_vamana_stored" ->
       OracleGen.vamanaShardedKnnI8(K, VamanaProbes, ByteScale),
-    // q184: serve() Auto over the q180 store — both dispatch outcomes
-    // are bit-identical to searchRouted[Local] (GraphLayoutSpec), and at
-    // exhaustive l1Probes routing ≡ flat, so q24/q150/q180's oracle
-    // certifies the dispatcher end-to-end.
+    // q184: the same serve as q180 (the name predates the one serve
+    // path); at exhaustive l1Probes routing ≡ flat, so q24/q150/q180's
+    // oracle applies.
     "q184_serve_auto" -> OracleGen.vamanaShardedKnn(K, VamanaProbes),
-    // q185: serveAdc() Auto over the q151 store — both dispatch outcomes
-    // are bit-identical to searchAdc[Local] (GraphLayoutSpec), so
-    // q148/q151/q181's reranked-ADC oracle certifies the compressed
-    // dispatcher end-to-end.
+    // q185: the same Pq serve as q181 — q148/q151/q181's reranked-ADC
+    // oracle.
     "q185_serve_adc_auto" ->
       OracleGen.pqWalkRerank(PqM, PqK, K, VamanaProbes, PqWalkReorder),
     // q186: IndexLayout.serve over the routed IVFADC store — serve ≡
@@ -3861,13 +3811,10 @@ object SparkEntry {
     // q156/q169's oracle certifies the codec-layout dispatcher.
     "q186_index_serve" ->
       OracleGen.ivfPqSearch(PqM, PqK, K, IvfPqProbes),
-    // q187: the local binary serve ≡ searchHamming (GraphLayoutSpec pins
-    // it), all shards probed at full window ⇒ global Hamming top-R +
-    // exact rerank — q155/q162's oracle verbatim.
+    // q187: the same Binary serve as q162 — all shards probed at full
+    // window ⇒ global Hamming top-R + exact rerank, q155/q162's oracle.
     "q187_binary_stored_local" -> OracleGen.binaryRerank(K, PqWalkReorder),
-    // q188: serveHamming() Auto over the q162 store — both dispatch
-    // outcomes ≡ searchHamming[Local] (GraphLayoutSpec), so the binary
-    // dispatcher certifies against the same oracle.
+    // q188: the same Binary serve as q162 — the same oracle.
     "q188_serve_hamming_auto" -> OracleGen.binaryRerank(K, PqWalkReorder),
     // q189: SELECTIVE binary serving — Hamming probe selection over
     // word-encoded label centroids (ties by cid), Hamming ranks within

@@ -99,19 +99,6 @@ object BinaryQuant {
     out.toSeq
   }
 
-  /** Re-split stored v2 (64-bit) word columns into the v1 32-bit
-    * word-double space — BIT-IDENTICAL to [[codeColumns]] values on the
-    * same vector (lo half = v1 even word, unsigned hi half = v1 odd
-    * word), truncated to `words32` (the last odd half is all-padding
-    * when dims mod 64 ≤ 32). This is how a v2 STORE rides every
-    * existing words-as-doubles surface (cogroup walk, probe routing)
-    * unchanged. */
-  def splitWords64(words32: Int, wordCols: Seq[Column]): Seq[Column] =
-    wordCols.flatMap { c =>
-      Seq(c.bitwiseAND(lit(0xFFFFFFFFL)).cast("double"),
-        shiftrightunsigned(c, 32).cast("double"))
-    }.take(words32)
-
   /** Hamming top-k riding [[FlatKnn.search]]'s broadcast + partition-
     * local-heap kernel: code words (integral, < 2³²) pack into an
     * `ARRAY<DOUBLE>` "vector" and [[graft.core.Metric.Hamming]] scores

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Metric
 
@@ -30,6 +30,8 @@ import graft.core.Metric
   */
 object GraphLayout {
 
+  /** An opened store: its frames, centroids and sidecar params, and the
+    * store directory `path` whose `cluster_id=` dirs [[serve]] walks. */
   final case class Layout(clustered: DataFrame, graph: DataFrame,
                           codes: Option[DataFrame],
                           centroids: Seq[(Long, Seq[Double])],
@@ -40,7 +42,7 @@ object GraphLayout {
                           routing: Option[(Seq[(Long, Seq[Double])],
                             Map[Long, Long])] = None,
                           routingMetricName: Option[String] = None,
-                          path: Option[String] = None)
+                          path: String)
 
   /** Byte vec columns widened for VALUE arithmetic (centroid means, PQ /
     * sign-bit encodes) — the shared mark-aware helper: a raw TINYINT fold
@@ -97,7 +99,7 @@ object GraphLayout {
       // trained deterministically from the centroids FOR THE SERVING METRIC
       // (similarity metrics get spherical groups), stored with that metric's
       // name so a reopened index routes hierarchically without re-training
-      // and a metric-mismatched searchRouted fails loudly. Trained before
+      // and a metric-mismatched routed serve fails loudly. Trained before
       // the concurrent writes (driver-side, milliseconds) so its two
       // table writes can join them.
       val routing =
@@ -185,13 +187,11 @@ object GraphLayout {
     openUnchecked(spark, path)
   }
 
-  private def markerPath(path: String): String = StoreMarker.markerPath(path)
-
   /** Everything [[openUnchecked]] reads EXCEPT the big cluster-partitioned
     * directories (data/graph/codes/bincodes) — sidecar params, centroid
     * table, routing level. None of it scales with shard count; the big
     * dirs' partition LISTING is the one open cost ∝ total shards, which
-    * the serve*Cold twins avoid by listing only probed `cluster_id=` dirs
+    * [[serveCold]] avoids by listing only probed `cluster_id=` dirs
     * (the [[IndexLayout.serveCold]] pattern, r15/r16 scale finding). */
   private case class GMeta(pq: Option[Pq.Params],
                            bin: Option[BinaryQuant.Params], binVersion: Int,
@@ -211,7 +211,7 @@ object GraphLayout {
 
   /** Build the served frames from [[GMeta]] + a reader for the big
     * cluster-partitioned dirs (full listing for [[openUnchecked]], probed
-    * dirs only for the cold serves). */
+    * dirs only for [[serveCold]]). */
   private def assembleLayout(spark: SparkSession, path: String, m: GMeta,
                              readBig: String => DataFrame): Layout = {
     val codes = if (m.pq.isDefined && m.hasCodesDir) Some(readBig("codes"))
@@ -230,7 +230,7 @@ object GraphLayout {
     }
     Layout(data, readBig("graph"), codes, m.centroids, m.pq, binCodes,
       m.bin, m.binVersion, m.routing,
-      if (m.routing.isDefined) m.routingMetricName else None, Some(path))
+      if (m.routing.isDefined) m.routingMetricName else None, path)
   }
 
   private def readMetaG(spark: SparkSession, path: String): GMeta = {
@@ -324,236 +324,232 @@ object GraphLayout {
       byteU, halfF, hasCodesDir, hasBinDir)
   }
 
-  /** Cold one-shot serves — [[IndexLayout.serveCold]]'s graph-store twins.
-    * [[open]]'s `spark.read.parquet` over the four cluster-partitioned
-    * dirs lists EVERY `cluster_id=` partition up front, a driver-side
-    * cost ∝ total shards (measured 34.7 s at 20k shards on the IVF store,
-    * SCALE.md r16) that an amortized server pays once but a cold one-shot
-    * serve pays per call. These twins read the sidecar + centroids +
-    * routing (none of it scales with shard count), choose the probe union
-    * DRIVER-SIDE with the SAME routing kernels the warm serve uses, and
-    * build the layout over ONLY the probed `cluster_id=` dirs — then
-    * dispatch through the very same serve entry point with the probe map
-    * attached, so rows are bit-identical to `serve*(open(path), …)`
-    * (GraphLayoutSpec pins each family). Listing cost becomes ∝ probes,
-    * not shards. The marker guard still runs — a crashed store is
-    * refused, not partially served. */
-  private def coldLayout(spark: SparkSession, path: String, m: GMeta,
-                         pm: ProbeMap): (Layout, ProbeMap) = {
-    require(pm.nonEmpty, s"cold serve: no probed shards for $path " +
-      "(empty query batch or empty centroid table)")
-    val probed = pm.keySet.toSeq.sorted
-    (assembleLayout(spark, path, m, sub =>
-      spark.read.option("basePath", s"$path/$sub")
-        .parquet(probed.map(c => s"$path/$sub/cluster_id=$c"): _*)), pm)
+  /** What a serve walks, and how it ranks. One case per stored codec
+    * family, so each family takes exactly its own parameters:
+    *
+    *   - [[Codec.Full]] walks the full-precision `data` + `graph` dirs.
+    *     With `l1Probes > 0` on a layout written with `routingGroups`,
+    *     probe selection routes through the persisted level-1 (scores the
+    *     l1 groups, then only their member centroids); otherwise it
+    *     sweeps every centroid. `keep` is the traverse-but-filter
+    *     predicate over the data FILE columns (`id`, `vec`): rows failing
+    *     it keep the graph connected through them but are never emitted.
+    *   - [[Codec.Pq]] is DiskANN serving: the walk scores PQ codes by ADC
+    *     over the `codes` + `graph` dirs and never reads `data`.
+    *     `kReorder > 0` keeps `kReorder·k` candidates and reranks them
+    *     exactly against only their rows of `data`; `kReorder = 0` returns
+    *     ADC ranks. The walk needs a subspace-decomposable metric (L2/IP);
+    *     any other metric walks on L2 and needs the rerank. `keep` is
+    *     evaluated against the codes file columns (practically `id`, the
+    *     tombstone shape).
+    *   - [[Codec.Binary]] walks the sign-bit `bincodes` + `graph` dirs by
+    *     Hamming (8 bytes of walk state per row at 64 dims, the smallest
+    *     serving read), probing by Hamming to the word-encoded centroids,
+    *     then reranks `kReorder·k` candidates exactly.
+    *
+    * In every case the serve's `metric` is the metric results are ranked
+    * by. */
+  sealed trait Codec
+  object Codec {
+    final case class Full(l1Probes: Int = 0, keep: Column = lit(true))
+      extends Codec
+    final case class Pq(kReorder: Int = 0, keep: Column = lit(true))
+      extends Codec
+    final case class Binary(kReorder: Int) extends Codec
   }
+
+  /** Probed shard id → the (query_id, query vector) pairs probing it. */
+  private[graft] type ProbeMap = Map[Long, Array[(Long, Array[Double])]]
+
+  /** THE serving entry point — the reference posture of one type-erased
+    * `search()` (orchestrators/manager.h:217) over the stored layout:
+    * the batch is collected and probe-scored ONCE on the driver by the
+    * codec's routing kernel ([[probeMap]]), then each probed shard's two
+    * `cluster_id=` dirs (codec side + graph) are read straight off their
+    * parquet files into one walk task per shard. Corpus rows never enter
+    * a shuffle: I/O is the probed dirs' bytes and the only exchange is
+    * the |Q|·nProbes·k top-k partials (plus the candidate rows of `data`
+    * when a codec reranks). Rows are bit-identical to the in-memory
+    * Vamana walks over the layout's frames (`searchSharded*`,
+    * GraphLayoutSpec / HierRoutingSpec / ServingPropSpec). */
+  def serve(layout: Layout, queries: DataFrame, k: Int, searchWindow: Int,
+            nProbes: Int, metric: Metric,
+            codec: Codec = Codec.Full()): DataFrame =
+    serveProbed(layout, queries, k, searchWindow, metric, codec,
+      probes(layout, queries, nProbes, metric, codec))
+
+  /** Cold one-shot serve ≡ `serve(open(path), …)`, row for row (and an
+    * empty batch returns the same empty result). [[open]] lists EVERY
+    * `cluster_id=` partition of the four big dirs up front, a driver-side
+    * cost ∝ total shards (34.7 s at 20k shards on the IVF store,
+    * SCALE.md r16) that an amortized server pays once but a one-shot
+    * serve pays per call. This reads the sidecar, centroids and routing
+    * (none of it scales with shard count), probes with the same
+    * [[probeMap]] the warm serve uses, and builds the layout over ONLY
+    * the probed `cluster_id=` dirs — listing cost ∝ probes. The marker
+    * guard still runs: a crashed store is refused, not partially
+    * served. */
+  def serveCold(spark: SparkSession, path: String, queries: DataFrame,
+                k: Int, searchWindow: Int, nProbes: Int, metric: Metric,
+                codec: Codec = Codec.Full()): DataFrame = {
+    StoreMarker.guard(spark, path, "graph layout",
+      "GraphLayout.repair(spark, path)", "GraphLayout.write")
+    val m = readMetaG(spark, path)
+    val pm = probeMap(queries, nProbes, metric, codec, m.centroids,
+      m.routing, m.routingMetricName, m.bin)
+    // an empty batch probes nothing: read one shard's dirs (for their
+    // schemas only) so the walk plans the same empty result a warm
+    // serve returns
+    val read = if (pm.nonEmpty) pm.keys else m.centroids.take(1).map(_._1)
+    serveProbed(coldLayout(spark, path, m, read), queries, k, searchWindow,
+      metric, codec, pm)
+  }
+
+  /** The layout over only the `probed` dirs of the big cluster-partitioned
+    * components — [[serveCold]]'s read. */
+  private def coldLayout(spark: SparkSession, path: String, m: GMeta,
+                         probed: Iterable[Long]): Layout =
+    assembleLayout(spark, path, m,
+      sub => IvfIndex.readProbed(spark, s"$path/$sub", probed))
 
   /** Regression seam (r16 verdict: the cold path must keep its listing
     * ∝ probes, not shards): the cold layout [[serveCold]] would build for
     * a flat probe set, so a spec can assert every big-dir FileIndex is
     * rooted at probed `cluster_id=` dirs — never the store-wide dir
-    * whose listing the cold twins exist to avoid. */
+    * whose listing the cold serve exists to avoid. */
   private[graft] def coldLayoutFor(spark: SparkSession, path: String,
       queries: DataFrame, nProbes: Int, metric: Metric): Layout = {
     val m = readMetaG(spark, path)
     coldLayout(spark, path, m,
-      Vamana.flatProbeMap(queries, m.centroids, nProbes, metric))._1
+      Vamana.flatProbeMap(queries, m.centroids, nProbes, metric).keys)
   }
 
-  /** Full-precision cold serve ≡ `serve(open(path), …)` (flat or routed
-    * by `l1Probes`, the [[serve]] contract). */
-  def serveCold(spark: SparkSession, path: String, queries: DataFrame,
-                k: Int, searchWindow: Int, nProbes: Int, metric: Metric,
-                l1Probes: Int = 0,
-                keep: org.apache.spark.sql.Column = lit(true)): DataFrame = {
-    StoreMarker.guard(spark, path, "graph layout",
-      "GraphLayout.repair(spark, path)", "GraphLayout.write")
-    val m = readMetaG(spark, path)
-    val routed = m.routing.isDefined && l1Probes > 0
-    if (routed) m.routingMetricName.foreach { rm =>
-      require(metric.name.stripSuffix("_simd") == rm,
-        s"layout routing level was trained for metric '$rm' but " +
-          s"serveCold got '${metric.name}' — rewrite the layout with " +
-          s"routingMetric = ${metric.name} or serve with '$rm'")
+  /** [[probeMap]] over an opened layout — with [[serveProbed]], the
+    * probe-once seam StreamingServe's decision log uses to record the
+    * probe map the serve then reads. */
+  private[graft] def probes(layout: Layout, queries: DataFrame,
+                            nProbes: Int, metric: Metric,
+                            codec: Codec): ProbeMap =
+    probeMap(queries, nProbes, metric, codec, layout.centroids,
+      layout.routing, layout.routingMetricName, layout.bin)
+
+  /** The codec's routing kernel — the one probe-map definition shared by
+    * [[serve]], [[serveCold]] and StreamingServe's decision log, so every
+    * entry reads exactly the shards the others would:
+    * Full routes on `metric` (hierarchically when `l1Probes > 0` and the
+    * layout has a level-1 — a metric mismatched with the level fails
+    * here, before any probing work), Pq on its walk metric, Binary by
+    * Hamming over the word-encoded batch and centroids (the pairs then
+    * carry the word-encoded query, which is what the Hamming walk
+    * scores). */
+  private def probeMap(queries: DataFrame, nProbes: Int, metric: Metric,
+                       codec: Codec,
+                       centroids: Seq[(Long, Seq[Double])],
+                       routing: Option[(Seq[(Long, Seq[Double])],
+                         Map[Long, Long])],
+                       routingMetricName: Option[String],
+                       bin: Option[BinaryQuant.Params]): ProbeMap =
+    codec match {
+      case Codec.Full(l1Probes, _) if l1Probes > 0 && routing.isDefined =>
+        Vamana.requireRoutingMetric(routingMetricName, metric)
+        val (l1, groupOf) = routing.get
+        Vamana.hierProbeMap(queries, centroids, l1, groupOf, l1Probes,
+          nProbes, metric)
+      case Codec.Full(_, _) =>
+        Vamana.flatProbeMap(queries, centroids, nProbes, metric)
+      case Codec.Pq(kReorder, _) =>
+        Vamana.flatProbeMap(queries, centroids, nProbes,
+          adcWalkMetric(metric, kReorder))
+      case Codec.Binary(_) =>
+        val b = bin.getOrElse(sys.error(
+          "layout has no binary codes — write(bin = Some(...)) first"))
+        Vamana.flatProbeMap(
+          queries.select(col("query_id"),
+            array(BinaryQuant.codeColumns(col("qvec"), b)
+              .map(_.cast("double")): _*).as("qvec")),
+          centroids.map { case (cid, cv) =>
+            (cid, BinaryQuant.encodeWords(cv, b)) },
+          nProbes, Metric.Hamming)
     }
-    val pm =
-      if (routed) {
-        val (l1, groupOf) = m.routing.get
-        Vamana.hierProbeMap(queries, m.centroids, l1, groupOf,
-          l1Probes, nProbes, metric)
-      } else Vamana.flatProbeMap(queries, m.centroids, nProbes, metric)
-    val (layout, pmm) = coldLayout(spark, path, m, pm)
-    serve(layout, queries, k, searchWindow, nProbes, metric, l1Probes,
-      keep, prebuiltProbes = Some(pmm))
-  }
 
-  /** DiskANN (PQ codes) cold serve ≡ `serveAdc(open(path), …)`. */
-  def serveAdcCold(spark: SparkSession, path: String, queries: DataFrame,
-                   k: Int, searchWindow: Int, nProbes: Int,
-                   kReorder: Int = 0, metric: Metric = Metric.L2,
-                   keep: org.apache.spark.sql.Column = lit(true))
-      : DataFrame = {
-    StoreMarker.guard(spark, path, "graph layout",
-      "GraphLayout.repair(spark, path)", "GraphLayout.write")
-    val m = readMetaG(spark, path)
-    // probe on the WALK metric, exactly like serveAdc
-    val walkM =
-      if (metric == Metric.L2 || metric == Metric.IP) metric else Metric.L2
-    val pm = Vamana.flatProbeMap(queries, m.centroids, nProbes, walkM)
-    val (layout, pmm) = coldLayout(spark, path, m, pm)
-    serveAdc(layout, queries, k, searchWindow, nProbes, kReorder, metric,
-      keep, prebuiltProbes = Some(pmm))
-  }
-
-  /** Binary (sign-bit) cold serve ≡ `serveHamming(open(path), …)`. */
-  def serveHammingCold(spark: SparkSession, path: String,
-                       queries: DataFrame, k: Int, searchWindow: Int,
-                       nProbes: Int, kReorder: Int,
-                       rerankMetric: Metric = Metric.L2): DataFrame = {
-    StoreMarker.guard(spark, path, "graph layout",
-      "GraphLayout.repair(spark, path)", "GraphLayout.write")
-    val m = readMetaG(spark, path)
-    val b = m.bin.getOrElse(
-      sys.error("layout has no binary codes — write(bin = Some(...)) first"))
-    // probe ONCE in the word-encoded Hamming space, exactly like
-    // serveHamming
-    val wordCents = m.centroids.map { case (cid, cv) =>
-      (cid, BinaryQuant.encodeWords(cv, b)) }
-    val qWords = queries.select(col("query_id"),
-      array(BinaryQuant.codeColumns(col("qvec"), b)
-        .map(_.cast("double")): _*).as("qvec"))
-    val pm = Vamana.flatProbeMap(qWords, wordCents, nProbes, Metric.Hamming)
-    val (layout, pmm) = coldLayout(spark, path, m, pm)
-    serveHamming(layout, queries, k, searchWindow, nProbes, kReorder,
-      rerankMetric, prebuiltProbes = Some(pmm))
-  }
-
-  /** Full-precision probe-and-walk over the stored shards — identical rows
-    * to [[Vamana.searchSharded]] on the in-memory frames. */
-  def search(layout: Layout, queries: DataFrame, k: Int, searchWindow: Int,
-             nProbes: Int, metric: Metric): DataFrame =
-    Vamana.searchSharded(queries, layout.clustered, layout.graph,
-      layout.centroids, k, searchWindow, nProbes, metric)
-
-  /** [[search]] routed through the PERSISTED level-1 table
-    * ([[write]]'s `routingGroups`): probe selection scores the l1 groups
-    * then only their member centroids — the shard-count scale dial for
-    * stored indexes. At `l1Probes = |l1|` it is bit-identical to
-    * [[search]] (HierRoutingSpec). */
-  def searchRouted(layout: Layout, queries: DataFrame, k: Int,
-                   searchWindow: Int, l1Probes: Int, nProbes: Int,
-                   metric: Metric): DataFrame = {
-    val (l1, groupOf) = layout.routing.getOrElse(sys.error(
-      "layout has no routing level — write(routingGroups = …) first"))
-    // the persisted groups partition centroid space for ONE metric; an
-    // IP/cosine search over L2-shaped groups (or vice versa) silently
-    // degrades routing recall at realistic l1Probes — fail loudly instead
-    layout.routingMetricName.foreach { rm =>
-      require(metric.name.stripSuffix("_simd") == rm,
-        s"layout routing level was trained for metric '$rm' but " +
-          s"searchRouted got '${metric.name}' — rewrite the layout with " +
-          s"routingMetric = ${metric.name} or serve with '$rm'")
+  /** The metric a PQ walk scores by: ADC decomposes over subspaces only
+    * for L2/IP, so any other metric walks on L2 and must rerank exactly
+    * (`kReorder > 0`) on the requested one. */
+  private def adcWalkMetric(metric: Metric, kReorder: Int): Metric =
+    if (metric == Metric.L2 || metric == Metric.IP) metric
+    else {
+      require(kReorder > 0,
+        s"ADC requires a subspace-decomposable metric (L2/IP) unless " +
+          s"kReorder > 0 reranks exactly — got $metric with no rerank")
+      Metric.L2
     }
-    Vamana.searchShardedHierarchical(queries, layout.clustered,
-      layout.graph, layout.centroids, l1, groupOf, k, searchWindow,
-      l1Probes, nProbes, metric)
-  }
 
-  /** [[searchRouted]] with ZERO corpus shuffle: each probed shard's
-    * `data/cluster_id=c` and `graph/cluster_id=c` dirs load as
-    * single-partition scans zipped NARROWLY into the same walk kernel
-    * ([[Vamana.searchStoredHierarchical]]) — bit-identical rows, I/O =
-    * the probed dirs' bytes, and the only exchange is the final
-    * |Q|·nProbes·k top-k partials. The serving path for selective probe
-    * batches at 10⁵+ shards; a store-saturating query sweep does equally
-    * well on [[searchRouted]]. */
-  def searchRoutedLocal(layout: Layout, queries: DataFrame, k: Int,
-                        searchWindow: Int, l1Probes: Int, nProbes: Int,
-                        metric: Metric,
-                        keep: org.apache.spark.sql.Column = lit(true),
-                        prebuiltProbes: Option[Map[Long,
-                          Array[(Long, Array[Double])]]] = None)
-      : DataFrame = {
-    val path = layout.path.getOrElse(sys.error(
-      "searchRoutedLocal serves straight off the stored partition dirs — " +
-        "open the layout from disk (GraphLayout.open) first"))
-    val (l1, groupOf) = layout.routing.getOrElse(sys.error(
-      "layout has no routing level — write(routingGroups = …) first"))
-    layout.routingMetricName.foreach { rm =>
-      require(metric.name.stripSuffix("_simd") == rm,
-        s"layout routing level was trained for metric '$rm' but " +
-          s"searchRoutedLocal got '${metric.name}' — rewrite the layout " +
-          s"with routingMetric = ${metric.name} or serve with '$rm'")
+  /** The codec's walk over the probed shards' stored dirs, given the
+    * batch's probe map (see [[serve]]). */
+  private[graft] def serveProbed(layout: Layout, queries: DataFrame,
+                                 k: Int, searchWindow: Int, metric: Metric,
+                                 codec: Codec, pm: ProbeMap): DataFrame = {
+    val spark = queries.sparkSession
+    val path = layout.path
+    codec match {
+      case Codec.Full(_, keep) =>
+        Vamana.searchStored(spark, pm, s"$path/data", s"$path/graph",
+          layout.clustered.schema, layout.graph.schema, k, searchWindow,
+          metric, keep)
+      case Codec.Pq(kReorder, keep) =>
+        val codes = layout.codes.getOrElse(
+          sys.error("layout has no PQ codes — write(pq = Some(...)) first"))
+        val walkK = if (kReorder > 0) kReorder * k else k
+        val walked = Vamana.searchStoredAdc(spark, pm, s"$path/codes",
+          s"$path/graph", codes.schema, layout.graph.schema, layout.pq.get,
+          walkK, searchWindow, adcWalkMetric(metric, kReorder), keep)
+        if (kReorder > 0) rerankExact(walked, queries, layout, pm, k, metric)
+        else walked
+      case Codec.Binary(kReorder) =>
+        val b = layout.bin.getOrElse(sys.error(
+          "layout has no binary codes — write(bin = Some(...)) first"))
+        val codes = layout.binCodes.getOrElse(sys.error(
+          "layout has no bincodes table — rewrite with bin = Some(...) " +
+            "(sidecar thresholds present but bincodes directory missing)"))
+        val cand = Vamana.searchStoredHamming(spark, pm,
+          s"$path/bincodes", s"$path/graph", codes.schema,
+          layout.graph.schema, b.wordsFor(layout.binVersion), kReorder * k,
+          searchWindow, fullDensity = layout.binVersion >= 2)
+        rerankExact(cand, queries, layout, pm, k, metric)
     }
-    Vamana.searchStoredHierarchical(queries, s"$path/data", s"$path/graph",
-      layout.clustered.schema, layout.graph.schema, layout.centroids,
-      l1, groupOf, k, searchWindow, l1Probes, nProbes, metric,
-      keep = keep, prebuiltProbes = prebuiltProbes)
   }
 
-  /** DiskANN serving from the stored layout: codes-only walk (reads
-    * `codes` + `graph` partitions of the probed shards, never `data`),
-    * optional exact rerank reading only the candidate rows of `data`.
-    * kReorder = 0 skips the rerank (pure ADC ranks). `keep` is the
-    * traverse-but-filter predicate over the codes columns (practically
-    * `id` — the tombstone shape): excluded rows keep the graph connected
-    * through them but are never emitted or reranked. */
-  /** The exact-rerank's `data` side, partition-pruned to the PROBED
-    * shards when the caller's probe map is available: every rerank
-    * candidate comes from a probed `cluster_id=` partition by
-    * construction (the walk reads only those dirs and graph edges stay
-    * in-shard), so the filter is a pure partition-prune — bit-identical
-    * rows, rerank scan I/O ∝ the probed union instead of the full
-    * corpus. At 10⁸ the un-pruned rerank's data scan (~12.4 GB) was the
-    * dominant wall slice of the binary serve (SCALE.md r13 Hamming leg);
-    * pruned it reads the probed ~600 MB. Without a probe map (manual
-    * paths compute probes inside the walk) the full frame is used —
-    * same rows, the historical shape.
+  /** [[Rerank.exact]] of a walk's candidates against the `data` rows of
+    * the PROBED shards only: every candidate comes from a probed
+    * `cluster_id=` partition by construction (the walk reads only those
+    * dirs and graph edges stay in-shard), so the filter is a pure
+    * partition-prune — bit-identical rows, rerank scan I/O ∝ the probed
+    * union instead of the full corpus. At 10⁸ the un-pruned rerank's
+    * data scan (~12.4 GB) was the dominant wall slice of the binary
+    * serve (SCALE.md r13 Hamming leg); pruned it reads the probed
+    * ~600 MB.
     *
-    * HARD CONTRACT (the prune feeds an INNER join in `Rerank.exact`, so
-    * a violation drops valid candidates silently): every walk candidate
-    * must come from a probed `cluster_id=` partition. Today that holds
-    * by construction — [[Vamana.buildSharded]] builds each shard's graph
-    * independently (groupByKey on cluster_id), so edges never cross
-    * shards and the walk can only ever visit ids of the shards it was
-    * handed. Any future layout with CROSS-SHARD edges or shard
-    * reassignment (e.g. a merged/global graph over sharded data) MUST
-    * NOT use this prune — pass `pm = None` (full frame) or extend the
-    * filter to the reachable shard set. `graft.debug.rerank.assert`
-    * (session conf / JVM property, default off) verifies the invariant
-    * per serve by anti-joining candidates against the pruned frame. */
-  private def rerankData(layout: Layout,
-                         pm: Option[Map[Long,
-                           Array[(Long, Array[Double])]]]): DataFrame =
-    pm match {
-      case Some(m) =>
-        layout.clustered.filter(col("cluster_id").isin(m.keySet.toSeq: _*))
-      case None => layout.clustered
-    }
-
-  /** [[Rerank.exact]] over [[rerankData]]'s pruned frame, with the
-    * opt-in invariant check: `graft.debug.rerank.assert=true` (session
-    * conf or JVM property) anti-joins the candidate ids against the
-    * pruned frame before reranking and fails loudly on any candidate
-    * outside the probed partitions — the guard for a future layout that
-    * breaks the in-shard-edges contract (see [[rerankData]]). Off by
-    * default: the check is one extra job over the shortlist. Covers
-    * every GraphLayout rerank that consumes the pruned frame directly
-    * (Hamming local + cogroup, local ADC rerank); the cogroup ADC
-    * rerank reranks inside [[Vamana.searchShardedAdcRerank]] from the
-    * same probe map, so a violation would trip here first on the
-    * bit-identical local path. */
+    * HARD CONTRACT (the prune feeds an INNER join, so a violation drops
+    * valid candidates silently): every walk candidate must come from a
+    * probed `cluster_id=` partition. Today that holds by construction —
+    * [[Vamana.buildSharded]] builds each shard's graph independently
+    * (groupByKey on cluster_id), so edges never cross shards. Any future
+    * layout with CROSS-SHARD edges or shard reassignment (e.g. a
+    * merged/global graph over sharded data) MUST NOT use this prune.
+    * `graft.debug.rerank.assert=true` (session conf or JVM property,
+    * default off — the check is one extra job over the shortlist)
+    * anti-joins the candidate ids against the pruned frame before
+    * reranking and fails loudly on any candidate outside it. */
   private def rerankExact(cand: DataFrame, queries: DataFrame,
-                          layout: Layout,
-                          pm: Option[Map[Long,
-                            Array[(Long, Array[Double])]]],
-                          k: Int, metric: Metric): DataFrame = {
-    val data = rerankData(layout, pm)
+                          layout: Layout, pm: ProbeMap, k: Int,
+                          metric: Metric): DataFrame = {
+    val data =
+      layout.clustered.filter(col("cluster_id").isin(pm.keySet.toSeq: _*))
     val spark = cand.sparkSession
     val flag = spark.conf.getOption("graft.debug.rerank.assert")
       .orElse(sys.props.get("graft.debug.rerank.assert"))
       .exists(_.equalsIgnoreCase("true"))
-    if (flag && pm.isDefined) {
+    if (flag) {
       val missing = cand.select(col("neighbor_id")).distinct()
         .join(data.select(col("id").as("neighbor_id")),
           Seq("neighbor_id"), "left_anti")
@@ -561,376 +557,9 @@ object GraphLayout {
       require(missing.isEmpty,
         s"rerank candidates outside the probed partitions (in-shard-" +
           s"edges contract violated): ids ${missing.mkString(", ")} — " +
-          "this layout must rerank against the full frame (pm = None)")
+          "this layout must rerank against the full frame")
     }
     Rerank.exact(cand, queries, data, k, metric)
-  }
-
-  def searchAdc(layout: Layout, queries: DataFrame, k: Int,
-                searchWindow: Int, nProbes: Int, kReorder: Int = 0,
-                metric: Metric = Metric.L2,
-                keep: org.apache.spark.sql.Column = lit(true),
-                prebuiltProbes: Option[Map[Long,
-                  Array[(Long, Array[Double])]]] = None): DataFrame = {
-    val codes = layout.codes.getOrElse(
-      sys.error("layout has no PQ codes — write(pq = Some(...)) first"))
-    val p = layout.pq.get
-    if (kReorder <= 0)
-      Vamana.searchShardedAdc(queries, codes, layout.graph, layout.centroids,
-        p, k, searchWindow, nProbes, metric, keep, prebuiltProbes)
-    else {
-      // walk on a subspace-decomposable metric, rerank on the requested
-      // one — this is how cosine serves from the stored layout (the walk
-      // metric stays L2; searchShardedAdcRerank's documented contract)
-      val walkM =
-        if (metric == Metric.L2 || metric == Metric.IP) metric else Metric.L2
-      Vamana.searchShardedAdcRerank(queries, codes, layout.graph,
-        layout.centroids, p, rerankData(layout, prebuiltProbes), k,
-        kReorder, searchWindow, nProbes, walkMetric = walkM,
-        rerankMetric = metric, keep = keep,
-        prebuiltProbes = prebuiltProbes)
-    }
-  }
-
-  /** [[search]] with ZERO corpus shuffle — [[searchRoutedLocal]] for
-    * layouts written WITHOUT a routing level: probe selection runs flat
-    * over all centroids (implemented as a single-group hierarchical
-    * sweep, which HierRoutingSpec pins bit-identical to flat at
-    * exhaustive level-1), and the per-shard walk is the same narrow
-    * zipPartitions serve. */
-  def searchLocal(layout: Layout, queries: DataFrame, k: Int,
-                  searchWindow: Int, nProbes: Int, metric: Metric,
-                  keep: org.apache.spark.sql.Column = lit(true),
-                  prebuiltProbes: Option[Map[Long,
-                    Array[(Long, Array[Double])]]] = None)
-      : DataFrame = {
-    val path = layout.path.getOrElse(sys.error(
-      "searchLocal serves straight off the stored partition dirs — " +
-        "open the layout from disk (GraphLayout.open) first"))
-    // trivial single-group level: the one group is always selected, so
-    // level-2 scores every centroid — exactly the flat probe sweep
-    // (HierRoutingSpec pins the bit-identity, so a FLAT prebuilt probe
-    // map from serve() slots in unchanged)
-    val l1 = Seq(0L -> layout.centroids.head._2)
-    val groupOf = layout.centroids.map { case (cid, _) => cid -> 0L }.toMap
-    Vamana.searchStoredHierarchical(queries, s"$path/data", s"$path/graph",
-      layout.clustered.schema, layout.graph.schema, layout.centroids,
-      l1, groupOf, k, searchWindow, l1Probes = 1, nProbes, metric,
-      keep = keep, prebuiltProbes = prebuiltProbes)
-  }
-
-  /** [[searchAdc]] with ZERO corpus shuffle ([[searchRoutedLocal]]'s
-    * DiskANN twin): the codes-only walk zips each probed shard's
-    * `codes/cluster_id=c` + `graph/cluster_id=c` dirs narrowly into the
-    * PqStore walk task — bit-identical candidates, I/O = the probed CODE
-    * partitions (never `data` during the walk), exchange = top-k
-    * partials only. `kReorder > 0` reranks exactly like [[searchAdc]]:
-    * the rerank join touches only the |Q|·kReorder·k candidate rows.
-    * `keep` = [[searchAdc]]'s traverse-but-filter predicate, evaluated
-    * against the codes FILE columns (`id`, `c0`..) on the local path. */
-  def searchAdcLocal(layout: Layout, queries: DataFrame, k: Int,
-                     searchWindow: Int, nProbes: Int, kReorder: Int = 0,
-                     metric: Metric = Metric.L2,
-                     keep: org.apache.spark.sql.Column = lit(true),
-                     prebuiltProbes: Option[Map[Long,
-                       Array[(Long, Array[Double])]]] = None)
-      : DataFrame = {
-    val path = layout.path.getOrElse(sys.error(
-      "searchAdcLocal serves straight off the stored partition dirs — " +
-        "open the layout from disk (GraphLayout.open) first"))
-    val codes = layout.codes.getOrElse(
-      sys.error("layout has no PQ codes — write(pq = Some(...)) first"))
-    val p = layout.pq.get
-    if (kReorder <= 0)
-      Vamana.searchStoredAdc(queries, s"$path/codes", s"$path/graph",
-        codes.schema, layout.graph.schema, layout.centroids, p, k,
-        searchWindow, nProbes, metric, keep, prebuiltProbes)
-    else {
-      val walkM =
-        if (metric == Metric.L2 || metric == Metric.IP) metric else Metric.L2
-      val cand = Vamana.searchStoredAdc(queries, s"$path/codes",
-        s"$path/graph", codes.schema, layout.graph.schema,
-        layout.centroids, p, kReorder * k, searchWindow, nProbes, walkM,
-        keep, prebuiltProbes)
-      rerankExact(cand, queries, layout, prebuiltProbes, k, metric)
-    }
-  }
-
-  /** [[serve]]'s dispatch override: Auto picks local iff the layout is
-    * stored on disk (see [[autoPick]] — the fraction dial is a
-    * documented tautology at the default, and cache residency
-    * deliberately does not flip the choice); Local / Cogroup force a
-    * path (the measured escape hatch). */
-  sealed trait ServeMode
-  object ServeMode {
-    case object Auto extends ServeMode
-    case object Local extends ServeMode
-    case object Cogroup extends ServeMode
-  }
-
-  /** A probe map as the routing kernels emit it: probed shard id → the
-    * (query_id, query vector) pairs probing it. [[serveDecisionProbed]]
-    * returns one; `serve*`'s `prebuiltProbes` accepts it back, so a
-    * caller inspecting the decision before serving pays the routing
-    * kernel ONCE end-to-end. */
-  type ProbeMap = Map[Long, Array[(Long, Array[Double])]]
-
-  /** The shared Auto rule (identical across all three codec families and
-    * their decision twins): an in-memory layout can only cogroup;
-    * otherwise local iff the probe-union fraction clears
-    * `localMaxFraction`. At the DEFAULT dial (1.0) the fraction test is
-    * a tautology — post-r12 O(1)-planning, local wins every measured
-    * on-disk regime on both wall and exchange (SCALE.md), so Auto
-    * reduces to "local iff stored"; the dial exists for callers who have
-    * measured their own crossover.
-    *
-    * CACHE RESIDENCY deliberately does NOT flip the choice. Round 13
-    * implemented the obvious rule (cached layout frames ⇒ cogroup, the
-    * regime where local's store re-read looked like the extra cost) and
-    * MEASURED it at 10M (SCALE.md scale10m_serve_cached): with
-    * clustered+graph fully cache-resident the cogroup walk took 34.8 s /
-    * 4.68 GB exchange vs the local path's 4.2 s / 174 KB on the SAME
-    * cached store — the corpus exchange dominates regardless of where
-    * the input rows live, and 15 GB of cached row objects made cogroup
-    * SLOWER than its uncached run (12.1 s; columnar parquet reads beat
-    * deserialized-object scans). The rule was reversed on that
-    * measurement; `mode = ServeMode.Cogroup` remains the explicit dial
-    * for topologies where the store read is genuinely costlier than the
-    * exchange. */
-  private def autoPick(fraction: Double, localMaxFraction: Double,
-                       onDisk: Boolean): String =
-    if (!onDisk) "cogroup"
-    else if (fraction <= localMaxFraction) "local"
-    else "cogroup"
-
-  /** The dispatch [[serve]] will take for this batch, without running
-    * it: ("local" | "cogroup", probe-union fraction). Exposed so specs
-    * and capacity planning can pin the decision itself, not just the
-    * (bit-identical) rows. Routing is the same kernel the search paths
-    * use, so the fraction is exactly the store fraction the chosen path
-    * will read.
-    *
-    * `localMaxFraction` defaults to 1.0 — local whenever the store is on
-    * disk. Round 10's local path lost the SATURATING regime to serial
-    * per-shard planning (23.3 s vs 16.3 s at 10M × 100 q); the round-12
-    * O(1)-planning zipServe removed that cost and the measurement
-    * flipped: local 5.1 s / 176 KB shuffle vs cogroup 23.7–33.3 s /
-    * 4.68 GB on the same store — local wins BOTH regimes on wall AND by
-    * 26 000× on exchange volume (both paths are one task per probed
-    * shard, so there is no parallelism regime left where the corpus
-    * exchange pays). Cache residency does NOT flip the choice either:
-    * r13 measured the cached-frame regime (SCALE.md
-    * scale10m_serve_cached — cogroup 34.8 s / 4.68 GB vs local 4.2 s /
-    * 174 KB on the SAME cached store) and the exchange still dominates;
-    * see [[autoPick]] for the full adjudication. The threshold dial and
-    * `mode` override remain for callers who measured their own
-    * crossover. */
-  def serveDecision(layout: Layout, queries: DataFrame, nProbes: Int,
-                    metric: Metric, l1Probes: Int = 0,
-                    localMaxFraction: Double = 1.0): (String, Double) = {
-    val (m, f, _) = serveDecisionProbed(layout, queries, nProbes, metric,
-      l1Probes, localMaxFraction)
-    (m, f)
-  }
-
-  /** [[serveDecision]] that also RETURNS the probe map it computed —
-    * hand it to [[serve]]'s `prebuiltProbes` so inspect-then-serve pays
-    * the routing kernel once (the map is the same one serve would build:
-    * same kernel, same metric, same routing level). */
-  def serveDecisionProbed(layout: Layout, queries: DataFrame, nProbes: Int,
-                          metric: Metric, l1Probes: Int = 0,
-                          localMaxFraction: Double = 1.0)
-      : (String, Double, ProbeMap) = {
-    val routed = layout.routing.isDefined && l1Probes > 0
-    val pm: ProbeMap =
-      if (routed) {
-        val (l1, groupOf) = layout.routing.get
-        Vamana.hierProbeMap(queries, layout.centroids, l1, groupOf,
-          l1Probes, nProbes, metric)
-      } else Vamana.flatProbeMap(queries, layout.centroids, nProbes, metric)
-    val fraction = pm.size.toDouble / layout.centroids.size
-    val mode = autoPick(fraction, localMaxFraction, layout.path.isDefined)
-    (mode, fraction, pm)
-  }
-
-  /** ONE serving entry point — the reference posture of a single
-    * type-erased `search()` (orchestrators/manager.h:217) applied to the
-    * stored layout's two execution paths:
-    *
-    *   - the zero-corpus-shuffle LOCAL walk ([[searchRoutedLocal]] /
-    *     [[searchLocal]]) — I/O = probed dirs, exchange = top-k partials
-    *     only. Since the round-12 O(1)-planning zipServe this path wins
-    *     BOTH regimes measured (10M × 100 q saturating: 5.1 s / 176 KB
-    *     vs cogroup 23.7–33.3 s / 4.68 GB; 5 q selective: 1.4 s /
-    *     8.8 KB vs 2.6 s / 451 MB), so Auto picks it whenever the store
-    *     is on disk.
-    *   - the COGROUP walk ([[searchRouted]] / [[search]]) — required for
-    *     in-memory layouts (no partition dirs to read), and the explicit
-    *     `mode` dial for topologies where the store read is genuinely
-    *     costlier than the corpus exchange. Cache residency of the
-    *     layout frames deliberately does NOT auto-flip to cogroup: the
-    *     regime was MEASURED and local still wins 8× on wall and
-    *     26,800× on exchange (see [[autoPick]]).
-    *
-    * Auto mode computes the probe-union fraction from the same routing
-    * kernel the search itself uses (milliseconds, driver-side, queries
-    * are broadcast-small by the serving contract) and dispatches at
-    * `localMaxFraction` (see [[serveDecision]]; at the default 1.0 the
-    * fraction never flips the choice — local wins every measured on-disk
-    * uncached regime, SCALE.md); both paths return bit-identical rows
-    * (HierRoutingSpec/GraphLayoutSpec), so the dispatch is a pure cost
-    * decision — the wrong MANUAL choice costs 26,000× shuffle or 4–6×
-    * wall (SCALE.md), which is why this entry point exists.
-    *
-    * Routed when the layout has a persisted level-1 AND `l1Probes > 0`;
-    * flat otherwise. `keep` is the traverse-but-filter predicate over
-    * the data columns, honored on every path. `mode` forces a path
-    * (Local requires a disk-opened layout). `prebuiltProbes` accepts
-    * [[serveDecisionProbed]]'s map so inspect-then-serve probes once;
-    * it must come from the SAME (queries, nProbes, l1Probes, metric) —
-    * the search reads exactly the shards the map names. */
-  def serve(layout: Layout, queries: DataFrame, k: Int, searchWindow: Int,
-            nProbes: Int, metric: Metric, l1Probes: Int = 0,
-            keep: org.apache.spark.sql.Column = lit(true),
-            mode: ServeMode = ServeMode.Auto,
-            localMaxFraction: Double = 1.0,
-            prebuiltProbes: Option[ProbeMap] = None): DataFrame = {
-    val routed = layout.routing.isDefined && l1Probes > 0
-    // metric-vs-routing mismatch fails BEFORE any probing work
-    if (routed) layout.routingMetricName.foreach { rm =>
-      require(metric.name.stripSuffix("_simd") == rm,
-        s"layout routing level was trained for metric '$rm' but " +
-          s"serve got '${metric.name}' — rewrite the layout with " +
-          s"routingMetric = ${metric.name} or serve with '$rm'")
-    }
-    // the query batch is collected and probe-scored exactly ONCE — the
-    // dispatch decision and the dispatched search share this map (the
-    // same routing kernel, Vamana.hierProbeMap/flatProbeMap, so the
-    // planner provably probes the shards the search reads); a caller who
-    // already paid the kernel via serveDecisionProbed hands the map in
-    val pm = prebuiltProbes.getOrElse {
-      if (routed) {
-        val (l1, groupOf) = layout.routing.get
-        Vamana.hierProbeMap(queries, layout.centroids, l1, groupOf,
-          l1Probes, nProbes, metric)
-      } else Vamana.flatProbeMap(queries, layout.centroids, nProbes, metric)
-    }
-    val chosen = mode match {
-      case ServeMode.Local   => "local"
-      case ServeMode.Cogroup => "cogroup"
-      case ServeMode.Auto    =>
-        autoPick(pm.size.toDouble / layout.centroids.size,
-          localMaxFraction, layout.path.isDefined)
-    }
-    (chosen, routed) match {
-      case ("local", true) =>
-        searchRoutedLocal(layout, queries, k, searchWindow, l1Probes,
-          nProbes, metric, keep, prebuiltProbes = Some(pm))
-      case ("local", false) =>
-        searchLocal(layout, queries, k, searchWindow, nProbes, metric,
-          keep, prebuiltProbes = Some(pm))
-      case ("cogroup", true) =>
-        val (l1, groupOf) = layout.routing.get
-        Vamana.searchShardedHierarchical(queries, layout.clustered,
-          layout.graph, layout.centroids, l1, groupOf, k, searchWindow,
-          l1Probes, nProbes, metric, keep = keep,
-          prebuiltProbes = Some(pm))
-      case _ =>
-        Vamana.searchShardedFiltered(queries, layout.clustered,
-          layout.graph, layout.centroids, k, searchWindow, nProbes,
-          metric, keep, prebuiltProbes = Some(pm))
-    }
-  }
-
-  /** [[serve]]'s DiskANN twin — ONE entry point for compressed serving
-    * that dispatches between the two ADC execution paths:
-    *
-    *   - the zero-corpus-shuffle LOCAL codes walk ([[searchAdcLocal]]) —
-    *     I/O = the probed shards' CODE partitions (64× smaller than
-    *     data), exchange = top-k partials (+ the |Q|·kReorder·k rerank
-    *     rows when kReorder > 0). SCALE.md 10M/10⁸: 174 KB/168 KB
-    *     exchange vs the cogroup's 1.55 GB on the same store — Auto
-    *     picks it whenever the codes dirs are on disk.
-    *   - the COGROUP codes walk ([[searchAdc]]) — required for in-memory
-    *     layouts, the explicit `mode` dial otherwise. At the DEFAULT
-    *     `localMaxFraction` (1.0) the probe-union fraction never flips
-    *     the choice (it is ≤ 1.0 by construction), so Auto reduces to
-    *     "local iff stored"; cache residency deliberately does not flip
-    *     it either (measured — see [[autoPick]]); the dial exists for
-    *     callers who measured their own crossover.
-    *
-    * Probing runs EXACTLY ONCE on the WALK metric (ADC probe routing is
-    * flat — codes shards carry no level-1) and the map threads through
-    * whichever path is dispatched, so the planner provably probes the
-    * shards the walk reads. Walk-metric rules are [[searchAdc]]'s: with
-    * `kReorder ≤ 0` the metric must be subspace-decomposable (L2/IP);
-    * with a rerank, a non-decomposable metric (cosine) walks on L2 and
-    * reranks exactly. `keep` is the traverse-but-filter predicate over
-    * the codes columns on BOTH paths. Both paths return bit-identical
-    * rows (GraphLayoutSpec), so the dispatch is a pure cost decision —
-    * the reference posture of one type-erased `search()`
-    * (orchestrators/manager.h:217) extended to its compressed datasets. */
-  def serveAdc(layout: Layout, queries: DataFrame, k: Int,
-               searchWindow: Int, nProbes: Int, kReorder: Int = 0,
-               metric: Metric = Metric.L2,
-               keep: org.apache.spark.sql.Column = lit(true),
-               mode: ServeMode = ServeMode.Auto,
-               localMaxFraction: Double = 1.0,
-               prebuiltProbes: Option[ProbeMap] = None): DataFrame = {
-    require(layout.codes.isDefined,
-      "serveAdc needs PQ codes — write(pq = Some(...)) first")
-    val walkM =
-      if (metric == Metric.L2 || metric == Metric.IP) metric
-      else {
-        require(kReorder > 0,
-          s"ADC requires a subspace-decomposable metric (L2/IP) unless " +
-            s"kReorder > 0 reranks exactly — got $metric with no rerank")
-        Metric.L2
-      }
-    // probe ONCE, on the metric the codes walk will use (or reuse the
-    // map serveAdcDecisionProbed already built for this batch)
-    val pm = prebuiltProbes.getOrElse(
-      Vamana.flatProbeMap(queries, layout.centroids, nProbes, walkM))
-    val chosen = mode match {
-      case ServeMode.Local   => "local"
-      case ServeMode.Cogroup => "cogroup"
-      case ServeMode.Auto    =>
-        autoPick(pm.size.toDouble / layout.centroids.size,
-          localMaxFraction, layout.path.isDefined)
-    }
-    if (chosen == "local")
-      searchAdcLocal(layout, queries, k, searchWindow, nProbes, kReorder,
-        metric, keep, prebuiltProbes = Some(pm))
-    else
-      searchAdc(layout, queries, k, searchWindow, nProbes, kReorder,
-        metric, keep, prebuiltProbes = Some(pm))
-  }
-
-  /** The dispatch [[serveAdc]] will take for this batch, without running
-    * it — [[serveDecision]]'s ADC twin: ("local" | "cogroup",
-    * probe-union fraction), probed on the walk metric like the serve
-    * itself. */
-  def serveAdcDecision(layout: Layout, queries: DataFrame, nProbes: Int,
-                       metric: Metric = Metric.L2,
-                       localMaxFraction: Double = 1.0): (String, Double) = {
-    val (m, f, _) = serveAdcDecisionProbed(layout, queries, nProbes,
-      metric, localMaxFraction)
-    (m, f)
-  }
-
-  /** [[serveAdcDecision]] that also returns its probe map — feed it to
-    * [[serveAdc]]'s `prebuiltProbes` (same batch, same nProbes, same
-    * metric) so inspect-then-serve probes once. */
-  def serveAdcDecisionProbed(layout: Layout, queries: DataFrame,
-                             nProbes: Int, metric: Metric = Metric.L2,
-                             localMaxFraction: Double = 1.0)
-      : (String, Double, ProbeMap) = {
-    val walkM =
-      if (metric == Metric.L2 || metric == Metric.IP) metric else Metric.L2
-    val pm = Vamana.flatProbeMap(queries, layout.centroids, nProbes, walkM)
-    val fraction = pm.size.toDouble / layout.centroids.size
-    val m = autoPick(fraction, localMaxFraction, layout.path.isDefined)
-    (m, fraction, pm)
   }
 
   /** Incremental maintenance of the persisted index — the M1–M4 lifecycle
@@ -1200,7 +829,7 @@ object GraphLayout {
       else None
     Layout(dataR, spark.read.parquet(s"$path/graph"), codesR, mergedCents,
       layout.pq, binCodesR, layout.bin, layout.binVersion, routing,
-      layout.routingMetricName, Some(path))
+      layout.routingMetricName, path)
   }
 
   /** Restore a graph store whose upsert crashed mid-commit (open()
@@ -1370,158 +999,6 @@ object GraphLayout {
       case JNull | JNothing => 0
       case node             => node.extract[Int]
     }
-  }
-
-  /** Binary serving from the store: Hamming walk over the persisted
-    * word-codes + graph partitions (8 bytes/row of walk state — the
-    * smallest serving footprint), probe routing by Hamming distance to
-    * the word-encoded centroids, then exact `metric` rerank touching
-    * only the |Q|·kReorder·k candidate rows of `data`. */
-  def searchHamming(layout: Layout, queries: DataFrame, k: Int,
-                    searchWindow: Int, nProbes: Int, kReorder: Int,
-                    rerankMetric: Metric = Metric.L2,
-                    prebuiltProbes: Option[Map[Long,
-                      Array[(Long, Array[Double])]]] = None): DataFrame = {
-    val b = layout.bin.getOrElse(
-      sys.error("layout has no binary codes — write(bin = Some(...)) first"))
-    val codes = layout.binCodes.getOrElse(sys.error(
-      "layout has no bincodes table — rewrite with bin = Some(...) " +
-        "(sidecar thresholds present but bincodes directory missing)"))
-    // v2 stores re-split their 64-bit words into the v1 word-double
-    // space for the cogroup walk (bit-identical values — the split IS
-    // codeColumns' packing); v1 stores cast their words directly
-    val wv =
-      if (layout.binVersion >= 2)
-        codes.select(col("cluster_id"), col("id"),
-          array(BinaryQuant.splitWords64(b.words,
-            (0 until b.words64).map(j => col(s"w$j"))): _*).as("vec"))
-      else codes.select(col("cluster_id"), col("id"),
-        array((0 until b.words).map(w => col(s"w$w").cast("double")): _*)
-          .as("vec"))
-    val wordCents = layout.centroids.map { case (cid, cv) =>
-      (cid, BinaryQuant.encodeWords(cv, b)) }
-    val qWords = queries.select(col("query_id"),
-      array(BinaryQuant.codeColumns(col("qvec"), b)
-        .map(_.cast("double")): _*).as("qvec"))
-    val cand = Vamana.searchSharded(qWords, wv, layout.graph, wordCents,
-      kReorder * k, searchWindow, nProbes, Metric.Hamming,
-      prebuiltProbes = prebuiltProbes)
-    rerankExact(cand, queries, layout, prebuiltProbes, k, rerankMetric)
-  }
-
-  /** [[searchHamming]] with ZERO corpus shuffle ([[searchAdcLocal]]'s
-    * binary twin, completing the local serving family): the Hamming walk
-    * zips each probed shard's `bincodes/cluster_id=c` +
-    * `graph/cluster_id=c` dirs narrowly into the walk task — candidates
-    * bit-identical to [[searchHamming]], I/O = the probed BINCODE
-    * partitions (8 bytes of walk state per row, the smallest serving
-    * read of any codec), exchange = the |Q|·nProbes·(kReorder·k) walk
-    * partials plus the exact rerank's candidate rows of `data`. */
-  def searchHammingLocal(layout: Layout, queries: DataFrame, k: Int,
-                         searchWindow: Int, nProbes: Int, kReorder: Int,
-                         rerankMetric: Metric = Metric.L2,
-                         prebuiltProbes: Option[Map[Long,
-                           Array[(Long, Array[Double])]]] = None)
-      : DataFrame = {
-    val path = layout.path.getOrElse(sys.error(
-      "searchHammingLocal serves straight off the stored partition dirs " +
-        "— open the layout from disk (GraphLayout.open) first"))
-    val b = layout.bin.getOrElse(
-      sys.error("layout has no binary codes — write(bin = Some(...)) first"))
-    val codes = layout.binCodes.getOrElse(sys.error(
-      "layout has no bincodes table — rewrite with bin = Some(...) " +
-        "(sidecar thresholds present but bincodes directory missing)"))
-    val wordCents = layout.centroids.map { case (cid, cv) =>
-      (cid, BinaryQuant.encodeWords(cv, b)) }
-    val qWords = queries.select(col("query_id"),
-      array(BinaryQuant.codeColumns(col("qvec"), b)
-        .map(_.cast("double")): _*).as("qvec"))
-    val cand = Vamana.searchStoredHamming(qWords, s"$path/bincodes",
-      s"$path/graph", codes.schema, layout.graph.schema, wordCents,
-      b.wordsFor(layout.binVersion), kReorder * k, searchWindow, nProbes,
-      prebuiltProbes, fullDensity = layout.binVersion >= 2)
-    rerankExact(cand, queries, layout, prebuiltProbes, k, rerankMetric)
-  }
-
-  /** [[serve]]'s BINARY twin — ONE entry point for sign-bit serving
-    * that dispatches between [[searchHammingLocal]] (zero corpus
-    * shuffle; 8 bytes of walk state per row) and [[searchHamming]]
-    * (cogroup — required for in-memory layouts, the explicit `mode`
-    * dial otherwise; at the default `localMaxFraction` = 1.0 the
-    * fraction never flips the choice, and cache residency deliberately
-    * does not either — measured, see [[autoPick]]). Probing runs
-    * EXACTLY ONCE, by Hamming
-    * distance over the word-encoded query batch and centroids — the
-    * same routing both manual paths compute — and threads through the
-    * dispatched path. Both paths return bit-identical rows
-    * (GraphLayoutSpec), so the dispatch is a pure cost decision,
-    * completing the one-`search()` posture
-    * (orchestrators/manager.h:217) across every layout codec family:
-    * full-precision ([[serve]]), PQ ([[serveAdc]]), binary (this), and
-    * the IVF codecs ([[IndexLayout.serve]]). */
-  def serveHamming(layout: Layout, queries: DataFrame, k: Int,
-                   searchWindow: Int, nProbes: Int, kReorder: Int,
-                   rerankMetric: Metric = Metric.L2,
-                   mode: ServeMode = ServeMode.Auto,
-                   localMaxFraction: Double = 1.0,
-                   prebuiltProbes: Option[ProbeMap] = None): DataFrame = {
-    val b = layout.bin.getOrElse(
-      sys.error("layout has no binary codes — write(bin = Some(...)) first"))
-    val wordCents = layout.centroids.map { case (cid, cv) =>
-      (cid, BinaryQuant.encodeWords(cv, b)) }
-    val qWords = queries.select(col("query_id"),
-      array(BinaryQuant.codeColumns(col("qvec"), b)
-        .map(_.cast("double")): _*).as("qvec"))
-    // probe ONCE in the word-encoded Hamming space (or reuse the map
-    // serveHammingDecisionProbed already built for this batch)
-    val pm = prebuiltProbes.getOrElse(
-      Vamana.flatProbeMap(qWords, wordCents, nProbes, Metric.Hamming))
-    val chosen = mode match {
-      case ServeMode.Local   => "local"
-      case ServeMode.Cogroup => "cogroup"
-      case ServeMode.Auto    =>
-        autoPick(pm.size.toDouble / layout.centroids.size,
-          localMaxFraction, layout.path.isDefined)
-    }
-    if (chosen == "local")
-      searchHammingLocal(layout, queries, k, searchWindow, nProbes,
-        kReorder, rerankMetric, prebuiltProbes = Some(pm))
-    else
-      searchHamming(layout, queries, k, searchWindow, nProbes, kReorder,
-        rerankMetric, prebuiltProbes = Some(pm))
-  }
-
-  /** The dispatch [[serveHamming]] will take for this batch, without
-    * running it — [[serveDecision]]'s binary twin (probed by Hamming
-    * over the word-encoded batch, like the serve itself). */
-  def serveHammingDecision(layout: Layout, queries: DataFrame,
-                           nProbes: Int,
-                           localMaxFraction: Double = 1.0)
-      : (String, Double) = {
-    val (m, f, _) = serveHammingDecisionProbed(layout, queries, nProbes,
-      localMaxFraction)
-    (m, f)
-  }
-
-  /** [[serveHammingDecision]] that also returns its (word-space) probe
-    * map — feed it to [[serveHamming]]'s `prebuiltProbes` (same batch,
-    * same nProbes) so inspect-then-serve probes once. */
-  def serveHammingDecisionProbed(layout: Layout, queries: DataFrame,
-                                 nProbes: Int,
-                                 localMaxFraction: Double = 1.0)
-      : (String, Double, ProbeMap) = {
-    val b = layout.bin.getOrElse(
-      sys.error("layout has no binary codes — write(bin = Some(...)) first"))
-    val wordCents = layout.centroids.map { case (cid, cv) =>
-      (cid, BinaryQuant.encodeWords(cv, b)) }
-    val qWords = queries.select(col("query_id"),
-      array(BinaryQuant.codeColumns(col("qvec"), b)
-        .map(_.cast("double")): _*).as("qvec"))
-    val pm = Vamana.flatProbeMap(qWords, wordCents, nProbes,
-      Metric.Hamming)
-    val fraction = pm.size.toDouble / layout.centroids.size
-    val m = autoPick(fraction, localMaxFraction, layout.path.isDefined)
-    (m, fraction, pm)
   }
 
   private def writeSidecar(spark: SparkSession, path: String,

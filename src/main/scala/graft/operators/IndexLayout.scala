@@ -313,26 +313,29 @@ object IndexLayout {
     * [[BatchScore.probeTopKHierarchical]] — every codec branch probes on
     * the serve metric), and the pruned frame contains every partition
     * any query probes, so the inner probe joins prune identically
-    * (IndexLayoutSpec pins equality). The marker guard still runs —
-    * a crashed store is refused, not partially served. */
+    * (IndexLayoutSpec pins equality), and an empty batch returns the
+    * same empty result. The marker guard still runs — a crashed store
+    * is refused, not partially served. */
   def serveCold(spark: SparkSession, path: String, queries: DataFrame,
                 k: Int, nProbes: Int, metric: Metric, l1Probes: Int = 0,
                 kReorder: Int = 3): DataFrame = {
     StoreMarker.guard(spark, path, "layout",
       "IndexLayout.repair(spark, path)", "IndexLayout.write")
     val m = readMeta(spark, path)
-    val data = coldData(spark, path, m, queries, nProbes, metric, l1Probes)
-    val layout = Layout(data, m.centroids, m.codec, m.routing,
-      m.routingMetricName)
-    serve(layout, queries, k, nProbes, metric, l1Probes, kReorder)
+    val probed = coldProbes(m, queries, nProbes, metric, l1Probes)
+    // an empty batch probes nothing: read one shard (for its schema
+    // only) so the codec scan plans the same empty result a warm serve
+    // returns
+    val read = if (probed.nonEmpty) probed else m.centroids.take(1).map(_._1)
+    serve(Layout(coldData(spark, path, m, read), m.centroids, m.codec,
+      m.routing, m.routingMetricName), queries, k, nProbes, metric,
+      l1Probes, kReorder)
   }
 
-  /** [[serveCold]]'s probe-pruned clustered frame: the probe union is
-    * chosen driver-side with the SAME kernels the serve scan uses, and
-    * the read is rooted at ONLY the probed `cluster_id=` dirs. */
-  private def coldData(spark: SparkSession, path: String, m: Meta,
-                       queries: DataFrame, nProbes: Int, metric: Metric,
-                       l1Probes: Int): DataFrame = {
+  /** [[serveCold]]'s probe union, chosen driver-side with the SAME
+    * kernels the serve scan uses. */
+  private def coldProbes(m: Meta, queries: DataFrame, nProbes: Int,
+                         metric: Metric, l1Probes: Int): Seq[Long] = {
     val centArr = m.centroids
       .map { case (cid, cv) => (cid, cv.toArray) }.toIndexedSeq
     import org.apache.spark.sql.functions.col
@@ -340,28 +343,32 @@ object IndexLayout {
       .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
     val probedPerQ: Array[Array[Long]] =
       if (m.routing.isDefined && l1Probes > 0) {
+        Vamana.requireRoutingMetric(m.routingMetricName, metric)
         val (l1, groupOf) = m.routing.get
         val l1Arr = l1.sortBy(_._1)
           .map { case (i, v) => (i, v.toArray) }.toIndexedSeq
         BatchScore.probeTopKHierarchical(qs, centArr, l1Arr, groupOf,
           l1Probes, nProbes, metric)
       } else BatchScore.probeTopK(qs, centArr, nProbes, metric)
-    val probed = probedPerQ.iterator.flatten.toArray.distinct.sorted
-    val dirs = probed.map(c => s"$path/data/cluster_id=$c")
-    require(dirs.nonEmpty, s"serveCold: no probed shards for $path " +
-      "(empty query batch or empty centroid table)")
-    markVec(
-      spark.read.option("basePath", s"$path/data").parquet(dirs: _*),
-      m.byteU, m.halfF)
+    probedPerQ.iterator.flatten.toArray.distinct.sorted.toSeq
   }
+
+  /** [[serveCold]]'s clustered frame, rooted at ONLY the probed
+    * `cluster_id=` dirs. */
+  private def coldData(spark: SparkSession, path: String, m: Meta,
+                       probed: Seq[Long]): DataFrame =
+    markVec(IvfIndex.readProbed(spark, s"$path/data", probed), m.byteU,
+      m.halfF)
 
   /** Regression seam (r16 verdict: cold listing must stay ∝ probes, not
     * shards): the frame [[serveCold]] scans, so a spec can assert its
     * FileIndex is rooted at probed `cluster_id=` dirs only. */
   private[graft] def coldClusteredFor(spark: SparkSession, path: String,
-      queries: DataFrame, nProbes: Int, metric: Metric): DataFrame =
-    coldData(spark, path, readMeta(spark, path), queries, nProbes, metric,
-      l1Probes = 0)
+      queries: DataFrame, nProbes: Int, metric: Metric): DataFrame = {
+    val m = readMeta(spark, path)
+    coldData(spark, path, m, coldProbes(m, queries, nProbes, metric,
+      l1Probes = 0))
+  }
 
   /** Search the layout with the codec-matched coarse scan: SQ layouts run
     * the decode-free code scan + full-precision reorder, LVQ layouts the
@@ -400,7 +407,8 @@ object IndexLayout {
 
   /** [[search]] routed through the PERSISTED level-1 table
     * ([[write]]'s `routingGroups`) — the stored-IVF twin of
-    * [[GraphLayout.searchRouted]]: probe selection scores the l1 groups
+    * [[GraphLayout.serve]] with `Codec.Full(l1Probes)`: probe selection
+    * scores the l1 groups
     * first and only their member centroids after
     * ([[BatchScore.probeTopKHierarchical]]), then the codec-matched scan
     * runs unchanged on the selected probes. At `l1Probes = |l1|` probe
@@ -411,12 +419,7 @@ object IndexLayout {
                    kReorder: Int = 3): DataFrame = {
     val (l1, groupOf) = layout.routing.getOrElse(sys.error(
       "layout has no routing level — write(routingGroups = …) first"))
-    layout.routingMetricName.foreach { rm =>
-      require(metric.name.stripSuffix("_simd") == rm,
-        s"layout routing level was trained for metric '$rm' but " +
-          s"searchRouted got '${metric.name}' — rewrite the layout with " +
-          s"routingMetric = ${metric.name} or serve with '$rm'")
-    }
+    Vamana.requireRoutingMetric(layout.routingMetricName, metric)
     // one route closure shared by every codec branch (the Uncompressed
     // branch routes through IvfIndex.searchHierarchical, which rebuilds
     // the same selection from (l1, groupOf) — same inputs, same kernel)
@@ -460,12 +463,11 @@ object IndexLayout {
     * caller asks for routing (`l1Probes > 0`), falls back to the flat
     * probe sweep otherwise — so one call signature serves every codec
     * (Uncompressed/SQ/LVQ/LeanVec/IVFADC) and every layout, routed or
-    * not. There is no local/cogroup regime choice on this family: every
-    * coarse pass already broadcasts the probe list and scans only the
+    * not. Every coarse pass broadcasts the probe list and scans only the
     * probed `cluster_id=` partitions (PlanSpec pins the
     * PartitionFilters), so corpus rows never shuffle on ANY path.
     * At `l1Probes = |l1|` routed ≡ flat bit-for-bit (IndexRoutingSpec),
-    * making the dispatch a pure cost decision like serve()'s. */
+    * making the routing dial a pure cost decision. */
   def serve(layout: Layout, queries: DataFrame, k: Int, nProbes: Int,
             metric: Metric, l1Probes: Int = 0,
             kReorder: Int = 3): DataFrame =

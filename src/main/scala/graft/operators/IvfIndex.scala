@@ -29,6 +29,18 @@ object IvfIndex {
   def readClustered(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(path)
 
+  /** The cold-serve read of a cluster-partitioned store dir: a frame over
+    * ONLY the `probed` shards' `cluster_id=` dirs (`basePath` keeps
+    * `cluster_id` a column), so the listing cost is ∝ probes instead of
+    * the store-wide listing ∝ total shards. Shared by the graph and IVF
+    * stores' `serveCold`. */
+  def readProbed(spark: SparkSession, path: String,
+                 probed: Iterable[Long]): DataFrame = {
+    require(probed.nonEmpty, s"no probed shards to read under $path")
+    spark.read.option("basePath", path)
+      .parquet(probed.toSeq.sorted.map(c => s"$path/cluster_id=$c"): _*)
+  }
+
   /** Attach a resident scalar-quantized `codes` column — the Spark analog of
     * the reference keeping the SQ codes as the dataset it scans
     * (quantization/scalar/scalar.h:364). Stored as ARRAY<SMALLINT> (codes fit

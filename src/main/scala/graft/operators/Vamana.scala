@@ -243,11 +243,9 @@ object Vamana {
   def searchSharded(queries: DataFrame, clustered: DataFrame, graph: DataFrame,
                     centroids: Seq[(Long, Seq[Double])], k: Int,
                     searchWindow: Int, nProbes: Int, metric: Metric,
-                    searchCapacity: Int = 0,
-                    prebuiltProbes: Option[Map[Long,
-                      Array[(Long, Array[Double])]]] = None): DataFrame =
+                    searchCapacity: Int = 0): DataFrame =
     searchShardedImpl(queries, clustered, graph, centroids, k, searchWindow,
-      nProbes, metric, searchCapacity, lit(true), prebuiltProbes)
+      nProbes, metric, searchCapacity, lit(true))
 
   /** Predicate-filtered probe-and-walk: rows failing `keep` (a boolean
     * Column over the clustered table) are still TRAVERSED — they sit in
@@ -267,12 +265,9 @@ object Vamana {
                             centroids: Seq[(Long, Seq[Double])], k: Int,
                             searchWindow: Int, nProbes: Int, metric: Metric,
                             keep: org.apache.spark.sql.Column,
-                            searchCapacity: Int = 0,
-                            prebuiltProbes: Option[Map[Long,
-                              Array[(Long, Array[Double])]]] = None)
-      : DataFrame =
+                            searchCapacity: Int = 0): DataFrame =
     searchShardedImpl(queries, clustered, graph, centroids, k, searchWindow,
-      nProbes, metric, searchCapacity, keep, prebuiltProbes)
+      nProbes, metric, searchCapacity, keep)
 
   /** Two-level routed [[searchSharded]] — the shard-count scale path
     * (reference hierarchical_kmeans.h posture): probe selection scores
@@ -289,20 +284,17 @@ object Vamana {
                                 searchWindow: Int, l1Probes: Int,
                                 nProbes: Int, metric: Metric,
                                 searchCapacity: Int = 0,
-                                keep: org.apache.spark.sql.Column = lit(true),
-                                prebuiltProbes: Option[Map[Long,
-                                  Array[(Long, Array[Double])]]] = None)
-      : DataFrame = {
-    val pm = prebuiltProbes.getOrElse(hierProbeMap(queries, centroids, l1,
-      groupOf, l1Probes, nProbes, metric))
+                                keep: org.apache.spark.sql.Column = lit(true))
+      : DataFrame =
     searchShardedImpl(queries, clustered, graph, centroids, k, searchWindow,
-      nProbes, metric, searchCapacity, keep, Some(pm))
-  }
+      nProbes, metric, searchCapacity, keep,
+      Some(hierProbeMap(queries, centroids, l1, groupOf, l1Probes, nProbes,
+        metric)))
 
   /** THE two-level routing kernel — the one definition every
-    * hierarchical path (cogroup, stored-local, and serve()'s dispatch
-    * planning) shares, so the planner provably probes exactly the
-    * shards the search reads. Returns cluster → (query_id, qvec) batch. */
+    * hierarchical path (the in-memory walk and GraphLayout's stored
+    * serve) shares, so both probe exactly the same shards. Returns
+    * cluster → (query_id, qvec) batch. */
   private[operators] def hierProbeMap(queries: DataFrame,
       centroids: Seq[(Long, Seq[Double])], l1: Seq[(Long, Seq[Double])],
       groupOf: Map[Long, Long], l1Probes: Int, nProbes: Int,
@@ -319,15 +311,9 @@ object Vamana {
       : Map[Long, Array[(Long, Array[Double])]] =
     probeMap(queries, centroids, nProbes, metric)
 
-  /** The DISTINCT shards a query batch will probe under flat routing —
-    * the [[graft.operators.GraphLayout.serveDecision]] planning input
-    * (same routing kernel as the search paths, so the fraction it
-    * implies is exactly the fraction the chosen path will read). */
-  def probedShards(queries: DataFrame, centroids: Seq[(Long, Seq[Double])],
-                   nProbes: Int, metric: Metric): Set[Long] =
-    flatProbeMap(queries, centroids, nProbes, metric).keySet
-
-  /** [[probedShards]] under the persisted two-level routing. */
+  /** The DISTINCT shards a query batch probes under the persisted
+    * two-level routing (the same kernel the walks use, so the set is
+    * exactly the shards a serve reads). */
   def probedShardsHierarchical(queries: DataFrame,
                                centroids: Seq[(Long, Seq[Double])],
                                l1: Seq[(Long, Seq[Double])],
@@ -336,38 +322,8 @@ object Vamana {
     hierProbeMap(queries, centroids, l1, groupOf, l1Probes, nProbes,
       metric).keySet
 
-  /** [[searchShardedHierarchical]] served straight off a PERSISTED
-    * sharded layout with ZERO corpus shuffle — the 100 TB serving shape
-    * (reference posture: the serialized index IS the serving format and
-    * each cluster's file is walked where it is read,
-    * include/svs/index/ivf/index.h:299-332 cluster pruning).
-    *
-    * The stored layout keeps `data/cluster_id=c/` and `graph/cluster_id=c/`
-    * as sibling partition dirs, so for each PROBED shard one task reads
-    * both sides straight off the shard's parquet files (no scan plan per
-    * shard — see [[zipServe]]) and hands them to the same per-shard
-    * merge + walk kernel the cogroup path uses — results are
-    * bit-identical to [[searchShardedHierarchical]]
-    * over the reopened frames, but corpus rows never enter a shuffle: the
-    * only exchange is the |Q|·nProbes·k partials of the final top-k.
-    * I/O is the probed dirs' bytes (partition pruning by construction),
-    * parallelism is one task per probed shard. Planning is O(1) in
-    * probed shards (one distributed listing job + one reader per side),
-    * so the path serves BOTH regimes; the cogroup path remains ahead
-    * only when a saturating sweep benefits from multi-task shards.
-    *
-    * `clusteredSchema`/`graphSchema` come from the reopened layout — the
-    * vec element type plus its signedness/half-format marks (restored
-    * from the sidecar) pick the same element-resident store the cogroup
-    * branches do. A probed shard missing either dir emits nothing, the
-    * inner-join semantics of the frame path.
-    *
-    * `keep` carries the [[searchShardedFiltered]] traverse-but-filter
-    * semantics into the local path: rows failing it are walked through
-    * but never emitted. It may reference the data FILE columns (`id`,
-    * `vec`) — `cluster_id` lives in the directory name, not the files. */
   /** The stored zero-shuffle serve scaffold shared by
-    * [[searchStoredHierarchical]] and [[searchStoredAdc]]: for each
+    * [[searchStored]] and [[searchStoredAdc]]: for each
     * probed shard with data files under BOTH `cluster_id=` dirs, one
     * task reads the shard's two sides straight off the parquet files and
     * feeds them to `walk`; the bounded per-query top-k finishes. A shard
@@ -473,7 +429,7 @@ object Vamana {
   }
 
   /** The shared per-shard shape of every stored zero-shuffle walk
-    * ([[searchStoredHierarchical]]'s residency branches,
+    * ([[searchStored]]'s residency branches,
     * [[searchStoredAdc]], [[searchStoredHamming]]): broadcast the probe
     * map, read each probed shard's two dirs through [[zipServe]],
     * extract (id, payload) per left-file row, id-sort, merge with the
@@ -510,25 +466,47 @@ object Vamana {
       }, k, metric)
   }
 
-  def searchStoredHierarchical(queries: DataFrame, dataPath: String,
-                               graphPath: String,
-                               clusteredSchema: org.apache.spark.sql.types.StructType,
-                               graphSchema: org.apache.spark.sql.types.StructType,
-                               centroids: Seq[(Long, Seq[Double])],
-                               l1: Seq[(Long, Seq[Double])],
-                               groupOf: Map[Long, Long], k: Int,
-                               searchWindow: Int, l1Probes: Int,
-                               nProbes: Int, metric: Metric,
-                               searchCapacity: Int = 0,
-                               keep: org.apache.spark.sql.Column = lit(true),
-                               prebuiltProbes: Option[Map[Long,
-                                 Array[(Long, Array[Double])]]] = None)
+  /** The in-memory walk ([[searchShardedFiltered]] /
+    * [[searchShardedHierarchical]]) served straight off a PERSISTED
+    * sharded layout with ZERO corpus shuffle — the 100 TB serving shape
+    * (reference posture: the serialized index IS the serving format and
+    * each cluster's file is walked where it is read,
+    * include/svs/index/ivf/index.h:299-332 cluster pruning).
+    *
+    * The stored layout keeps `data/cluster_id=c/` and `graph/cluster_id=c/`
+    * as sibling partition dirs, so for each PROBED shard one task reads
+    * both sides straight off the shard's parquet files (no scan plan per
+    * shard — see [[zipServe]]) and hands them to the same per-shard
+    * merge + walk kernel the cogroup walk uses — results are
+    * bit-identical to the in-memory walk over the reopened frames with
+    * the same probes, but corpus rows never enter a shuffle: the only
+    * exchange is the |Q|·nProbes·k partials of the final top-k. I/O is
+    * the probed dirs' bytes (partition pruning by construction),
+    * parallelism is one task per probed shard, and planning is O(1) in
+    * probed shards (one distributed listing job + one reader per side).
+    * `pm` is the batch's probe map (shard → (query_id, query vector)),
+    * computed once by the caller's routing kernel; the walk reads
+    * exactly the shards it names.
+    *
+    * `clusteredSchema`/`graphSchema` come from the reopened layout — the
+    * vec element type plus its signedness/half-format marks (restored
+    * from the sidecar) pick the same element-resident store the cogroup
+    * branches do. A probed shard missing either dir emits nothing, the
+    * inner-join semantics of the frame path.
+    *
+    * `keep` carries the [[searchShardedFiltered]] traverse-but-filter
+    * semantics into the stored walk: rows failing it are walked through
+    * but never emitted. It may reference the data FILE columns (`id`,
+    * `vec`) — `cluster_id` lives in the directory name, not the files. */
+  def searchStored(spark: org.apache.spark.sql.SparkSession,
+                   pm: Map[Long, Array[(Long, Array[Double])]],
+                   dataPath: String, graphPath: String,
+                   clusteredSchema: org.apache.spark.sql.types.StructType,
+                   graphSchema: org.apache.spark.sql.types.StructType,
+                   k: Int, searchWindow: Int, metric: Metric,
+                   keep: org.apache.spark.sql.Column = lit(true))
       : DataFrame = {
-    val spark = queries.sparkSession
-    import spark.implicits._
     require(searchWindow >= k, "searchWindow must be ≥ k")
-    val pm = prebuiltProbes.getOrElse(hierProbeMap(queries, centroids, l1,
-      groupOf, l1Probes, nProbes, metric))
     import org.apache.spark.sql.types.{ArrayType, ByteType, FloatType, StructType}
     val isFloat = clusteredSchema("vec").dataType match {
       case ArrayType(FloatType, _) => true
@@ -564,25 +542,25 @@ object Vamana {
         gSub, Some(keep),
         r => (longAt(r, dIdIx), r.getSeq[Short](dVecIx).toArray),
         xs => new VamanaKernel.HalfStore(xs.toArray, bf16),
-        k, searchWindow, metric, searchCapacity)
+        k, searchWindow, metric)
     else if (isByte)
       zipServeMerged[Array[Byte]](spark, pm, dataPath, graphPath, dSub,
         gSub, Some(keep),
         r => (longAt(r, dIdIx), r.getSeq[Byte](dVecIx).toArray),
         xs => new VamanaKernel.ByteStore(xs.toArray, unsigned),
-        k, searchWindow, metric, searchCapacity)
+        k, searchWindow, metric)
     else if (isFloat)
       zipServeMerged[Array[Float]](spark, pm, dataPath, graphPath, dSub,
         gSub, Some(keep),
         r => (longAt(r, dIdIx), r.getSeq[Float](dVecIx).toArray),
         xs => new VamanaKernel.FloatStore(xs.toArray),
-        k, searchWindow, metric, searchCapacity)
+        k, searchWindow, metric)
     else
       zipServeMerged[Array[Double]](spark, pm, dataPath, graphPath, dSub,
         gSub, Some(keep),
         r => (longAt(r, dIdIx), doubleArrayAt(r, dVecIx, vecIsDouble)),
         xs => new VamanaKernel.DoubleStore(xs.toArray),
-        k, searchWindow, metric, searchCapacity)
+        k, searchWindow, metric)
   }
 
   /** The former per-dir scan selects applied `cast("long")` /
@@ -611,6 +589,20 @@ object Vamana {
     if (isDouble) r.getSeq[Double](i).toArray
     else r.getSeq[Any](i)
       .map(_.asInstanceOf[java.lang.Number].doubleValue()).toArray
+
+  /** A persisted level-1 partitions centroid space for ONE metric (the
+    * one it was trained with, [[trainRoutingLevel]]); routing an IP/cosine
+    * serve over L2-shaped groups (or vice versa) silently degrades
+    * routed recall at realistic l1Probes — the one guard both stored
+    * layouts run before any routed probing. */
+  private[operators] def requireRoutingMetric(trainedFor: Option[String],
+                                              metric: Metric): Unit =
+    trainedFor.foreach { rm =>
+      require(metric.name.stripSuffix("_simd") == rm,
+        s"layout routing level was trained for metric '$rm' but the " +
+          s"serve got '${metric.name}' — rewrite the layout with " +
+          s"routingMetric = ${metric.name} or serve with '$rm'")
+    }
 
   /** Broadcast-small ceiling for [[trainRoutingLevel]]'s input: the shard
     * centroid table is held, trained, and broadcast whole — at 64-d
@@ -694,7 +686,7 @@ object Vamana {
                                 searchWindow: Int, nProbes: Int,
                                 metric: Metric, searchCapacity: Int,
                                 keep: org.apache.spark.sql.Column,
-                                prebuiltProbes: Option[Map[Long,
+                                hierProbes: Option[Map[Long,
                                   Array[(Long, Array[Double])]]] = None)
       : DataFrame = {
     val spark = clustered.sparkSession
@@ -702,8 +694,9 @@ object Vamana {
     require(searchWindow >= k, "searchWindow must be ≥ k")
 
     // (a) per-query probe list — tiny; computed on the driver so the probe
-    // map broadcasts with the query vectors attached.
-    val probesByCluster = prebuiltProbes.getOrElse(
+    // map broadcasts with the query vectors attached (the hierarchical
+    // walk hands in its two-level map).
+    val probesByCluster = hierProbes.getOrElse(
       probeMap(queries, centroids, nProbes, metric))
     val bc = spark.sparkContext.broadcast(probesByCluster)
     val probedIds = probesByCluster.keys.toSeq
@@ -858,9 +851,7 @@ object Vamana {
                        centroids: Seq[(Long, Seq[Double])], p: Pq.Params,
                        k: Int, searchWindow: Int, nProbes: Int,
                        metric: Metric = Metric.L2,
-                       keep: org.apache.spark.sql.Column = lit(true),
-                       prebuiltProbes: Option[Map[Long,
-                         Array[(Long, Array[Double])]]] = None)
+                       keep: org.apache.spark.sql.Column = lit(true))
       : DataFrame = {
     val spark = codes.sparkSession
     import spark.implicits._
@@ -868,8 +859,7 @@ object Vamana {
     require(metric == Metric.L2 || metric == Metric.IP,
       s"ADC requires a subspace-decomposable metric (L2/IP), got $metric")
 
-    val probesByCluster =
-      prebuiltProbes.getOrElse(probeMap(queries, centroids, nProbes, metric))
+    val probesByCluster = probeMap(queries, centroids, nProbes, metric)
     val bc = spark.sparkContext.broadcast(probesByCluster)
     val probedIds = probesByCluster.keys.toSeq
     val m = metric
@@ -925,18 +915,16 @@ object Vamana {
                              kReorder: Int, searchWindow: Int, nProbes: Int,
                              walkMetric: Metric = Metric.L2,
                              rerankMetric: Metric = Metric.L2,
-                             keep: org.apache.spark.sql.Column = lit(true),
-                             prebuiltProbes: Option[Map[Long,
-                               Array[(Long, Array[Double])]]] = None)
+                             keep: org.apache.spark.sql.Column = lit(true))
       : DataFrame = {
     val cand = searchShardedAdc(queries, codes, graph, centroids, p,
-      kReorder * k, searchWindow, nProbes, walkMetric, keep, prebuiltProbes)
+      kReorder * k, searchWindow, nProbes, walkMetric, keep)
     Rerank.exact(cand, queries, data, k, rerankMetric)
   }
 
   /** [[searchShardedAdc]] served straight off a PERSISTED layout's
     * `codes/cluster_id=c` + `graph/cluster_id=c` dirs with ZERO corpus
-    * shuffle — the codes twin of [[searchStoredHierarchical]]: one task
+    * shuffle — the codes twin of [[searchStored]]: one task
     * per probed shard reads codes + graph files directly (O(1) planning,
     * see [[zipServe]]) into the same PqStore walk; the
     * only exchange is the |Q|·nProbes·k top-k partials. At 100 TB this
@@ -945,24 +933,18 @@ object Vamana {
     * traverse-but-filter predicate over the codes file columns —
     * [[searchShardedAdc]]'s deleted-slot semantics on the stored path
     * (reference: index/vamana/dynamic_index.h:617-629). */
-  def searchStoredAdc(queries: DataFrame, codesPath: String,
-                      graphPath: String,
+  def searchStoredAdc(spark: org.apache.spark.sql.SparkSession,
+                      pm: Map[Long, Array[(Long, Array[Double])]],
+                      codesPath: String, graphPath: String,
                       codesSchema: org.apache.spark.sql.types.StructType,
                       graphSchema: org.apache.spark.sql.types.StructType,
-                      centroids: Seq[(Long, Seq[Double])], p: Pq.Params,
-                      k: Int, searchWindow: Int, nProbes: Int,
+                      p: Pq.Params, k: Int, searchWindow: Int,
                       metric: Metric = Metric.L2,
-                      keep: org.apache.spark.sql.Column = lit(true),
-                      prebuiltProbes: Option[Map[Long,
-                        Array[(Long, Array[Double])]]] = None)
+                      keep: org.apache.spark.sql.Column = lit(true))
       : DataFrame = {
-    val spark = queries.sparkSession
-    import spark.implicits._
     require(searchWindow >= k, "searchWindow must be ≥ k")
     require(metric == Metric.L2 || metric == Metric.IP,
       s"ADC requires a subspace-decomposable metric (L2/IP), got $metric")
-    val pm = prebuiltProbes.getOrElse(
-      probeMap(queries, centroids, nProbes, metric))
     import org.apache.spark.sql.types.StructType
     val cSub = StructType(codesSchema.filterNot(_.name == "cluster_id"))
     val gSub = StructType(graphSchema.filterNot(_.name == "cluster_id"))
@@ -992,8 +974,8 @@ object Vamana {
     * corpus shuffle — one task per probed shard reads word codes + graph
     * files directly into a Hamming walk kernel. With
     * `fullDensity = false` (bincodes layout v1) that is the
-    * words-as-doubles `DoubleStore` + `Metric.Hamming` — exactly the
-    * frame [[graft.operators.GraphLayout.searchHamming]] builds; with
+    * words-as-doubles `DoubleStore` + `Metric.Hamming` (the in-memory
+    * [[searchSharded]] over word-double rows scores the same); with
     * `fullDensity = true` (layout v2, the write default) rows stay raw
     * 64-bit words in a [[VamanaKernel.WordStore]] (native xor/popcount,
     * half the walk state) while QUERIES remain in the v1 word-double
@@ -1004,24 +986,18 @@ object Vamana {
     * only exchange is the |Q|·nProbes·k top-k partials. At 100 TB this
     * is the smallest serving I/O shape of all: 8 bytes of walk state
     * per row at 64 dims.
-    * `queries` must already be word-encoded (query_id, qvec of
-    * word-doubles); `wordCents` are the word-encoded centroids the probe
-    * routing scores — both exactly as the cogroup path prepares them. */
-  def searchStoredHamming(queries: DataFrame, codesPath: String,
-                          graphPath: String,
+    * The query vectors in `pm` must already be word-encoded (word-
+    * doubles, `BinaryQuant.codeColumns`), probed by Hamming against the
+    * word-encoded centroids (`BinaryQuant.encodeWords`). */
+  def searchStoredHamming(spark: org.apache.spark.sql.SparkSession,
+                          pm: Map[Long, Array[(Long, Array[Double])]],
+                          codesPath: String, graphPath: String,
                           codesSchema: org.apache.spark.sql.types.StructType,
                           graphSchema: org.apache.spark.sql.types.StructType,
-                          wordCents: Seq[(Long, Seq[Double])], words: Int,
-                          k: Int, searchWindow: Int, nProbes: Int,
-                          prebuiltProbes: Option[Map[Long,
-                            Array[(Long, Array[Double])]]] = None,
+                          words: Int, k: Int, searchWindow: Int,
                           fullDensity: Boolean = false)
       : DataFrame = {
-    val spark = queries.sparkSession
-    import spark.implicits._
     require(searchWindow >= k, "searchWindow must be ≥ k")
-    val pm = prebuiltProbes.getOrElse(
-      probeMap(queries, wordCents, nProbes, Metric.Hamming))
     import org.apache.spark.sql.types.StructType
     val cSub = StructType(codesSchema.filterNot(_.name == "cluster_id"))
     val gSub = StructType(graphSchema.filterNot(_.name == "cluster_id"))

@@ -13,8 +13,8 @@ import graft.operators.{GraphLayout, IndexLayout}
   * ([[graft.operators.GraphLayout]] / [[graft.operators.IndexLayout]]),
   * queries arrive continuously, and every micro-batch is answered through
   * the family's ONE `serve()` entry point, so each batch gets the same
-  * probe-once routing, regime auto-dispatch, and zero-corpus-shuffle
-  * execution the batch API certifies (reference posture: the long-lived
+  * probe-once routing and zero-corpus-shuffle execution the batch API
+  * certifies (reference posture: the long-lived
   * orchestrator object queries flow through,
   * include/svs/orchestrators/manager.h:197-245 — here the "orchestrator"
   * is the opened layout plus this attached stream).
@@ -44,12 +44,14 @@ import graft.operators.{GraphLayout, IndexLayout}
   *     both flat under a burst). No query is ever dropped. Source-side
   *     admission (fewer queries per TRIGGER) composes via the reader's
   *     own `maxFilesPerTrigger`/`maxOffsetsPerTrigger` options.
-  *   - `decisionLog` (graph families) — per-batch dispatch provenance:
-  *     each slice probes ONCE via the family's `serve*DecisionProbed`,
-  *     the map feeds `prebuiltProbes` (so logging adds zero extra routing
-  *     work), and (slice, mode, fraction, probed_shards) rows land under
-  *     the log path partitioned by `batch_id` with the same
-  *     dynamic-overwrite idempotence as the result sink.
+  *   - `decisionLog` (graph stores) — per-batch probe provenance: each
+  *     slice probes ONCE and the walk reads that same map (so logging
+  *     adds zero extra routing work), and (slice, mode, fraction,
+  *     probed_shards) rows land under the log path partitioned by
+  *     `batch_id` with the same dynamic-overwrite idempotence as the
+  *     result sink. `mode` reads `local` (the stored walk) on every row;
+  *     the column stays so logs written by older versions, which could
+  *     also record `cogroup`, keep one schema.
   *
   * Scale shape: each micro-batch pays I/O ∝ its probed shard union and
   * exchange ∝ |batch|·probes·k (SCALE.md serving laws) — a steady query
@@ -80,7 +82,7 @@ object StreamingServe {
     StructField("batch_id", LongType)))
 
   /** Attach a query stream to ANY per-batch serving function — the
-    * generic core the four family overloads share. Each micro-batch is
+    * generic core the graph and IVF attaches share. Each micro-batch is
     * served via `serve` and written to `outPath/batch_id=N/` with
     * dynamic partition overwrite (idempotent under replay). Callers own
     * the returned query's lifecycle. */
@@ -252,7 +254,8 @@ object StreamingServe {
     * latency fold dedupes to one wall per (batch, mode) first (a
     * batch's slice rows share its wall — counting them per slice would
     * weight bursty batches) and then keeps ONLY single-mode batches: a
-    * batch whose slices span modes (Auto can flip per slice) has one
+    * batch whose slices span modes (older logs, written when each slice
+    * could dispatch to either walk) has one
     * wall and no single mode to charge it to — attributing it to every
     * mode present would let walls dominated by the OTHER mode's slices
     * pollute each mode's percentiles. Excluded batches are not silent:
@@ -316,95 +319,27 @@ object StreamingServe {
     expired
   }
 
-  /** Full-precision graph serving: every micro-batch through
-    * [[GraphLayout.serve]] (probe-once routing, Auto local/cogroup
-    * dispatch, `keep` honored). With `decisionLog`, each slice probes
-    * via [[GraphLayout.serveDecisionProbed]], logs what dispatched, and
-    * hands the map to serve's `prebuiltProbes` — probe once, record
-    * once. */
+  /** Graph-store serving: every micro-batch through
+    * [[GraphLayout.serve]] with `codec` (probe-once routing, the stored
+    * zero-corpus-shuffle walk; `codec` carries the family's own dials —
+    * routing, `keep`, rerank width). Each slice's probe map is computed
+    * once and handed to the walk; with `decisionLog` the same map is
+    * recorded (mode `local` — the one stored walk — probe-union
+    * fraction, probed shards), so logging adds no routing work. */
   def attachGraph(queryStream: DataFrame, layout: GraphLayout.Layout,
                   outPath: String, checkpoint: String, k: Int,
                   searchWindow: Int, nProbes: Int, metric: Metric,
-                  l1Probes: Int = 0,
-                  keep: org.apache.spark.sql.Column = lit(true),
-                  mode: GraphLayout.ServeMode = GraphLayout.ServeMode.Auto,
-                  localMaxFraction: Double = 1.0,
+                  codec: GraphLayout.Codec = GraphLayout.Codec.Full(),
                   trigger: Option[Trigger] = None,
                   maxQueriesPerBatch: Int = 0,
                   decisionLog: Option[String] = None): StreamingQuery =
     attachCore(queryStream, outPath, checkpoint, trigger,
       maxQueriesPerBatch, decisionLog) { slice =>
-      if (decisionLog.isDefined) {
-        val (auto, fraction, pm) = GraphLayout.serveDecisionProbed(layout,
-          slice, nProbes, metric, l1Probes, localMaxFraction)
-        (GraphLayout.serve(layout, slice, k, searchWindow, nProbes, metric,
-          l1Probes, keep, mode, localMaxFraction, Some(pm)),
-          Some((forcedOr(mode, auto), fraction, pm.size)))
-      } else
-        (GraphLayout.serve(layout, slice, k, searchWindow, nProbes, metric,
-          l1Probes, keep, mode, localMaxFraction), None)
-    }
-
-  /** Compressed (PQ/ADC) serving: every micro-batch through
-    * [[GraphLayout.serveAdc]]; `decisionLog` via
-    * [[GraphLayout.serveAdcDecisionProbed]] (probe once, record once). */
-  def attachAdc(queryStream: DataFrame, layout: GraphLayout.Layout,
-                outPath: String, checkpoint: String, k: Int,
-                searchWindow: Int, nProbes: Int, kReorder: Int = 0,
-                metric: Metric = Metric.L2,
-                keep: org.apache.spark.sql.Column = lit(true),
-                mode: GraphLayout.ServeMode = GraphLayout.ServeMode.Auto,
-                localMaxFraction: Double = 1.0,
-                trigger: Option[Trigger] = None,
-                maxQueriesPerBatch: Int = 0,
-                decisionLog: Option[String] = None): StreamingQuery =
-    attachCore(queryStream, outPath, checkpoint, trigger,
-      maxQueriesPerBatch, decisionLog) { slice =>
-      if (decisionLog.isDefined) {
-        val (auto, fraction, pm) = GraphLayout.serveAdcDecisionProbed(
-          layout, slice, nProbes, metric, localMaxFraction)
-        (GraphLayout.serveAdc(layout, slice, k, searchWindow, nProbes,
-          kReorder, metric, keep, mode, localMaxFraction, Some(pm)),
-          Some((forcedOr(mode, auto), fraction, pm.size)))
-      } else
-        (GraphLayout.serveAdc(layout, slice, k, searchWindow, nProbes,
-          kReorder, metric, keep, mode, localMaxFraction), None)
-    }
-
-  /** Binary (sign-bit / Hamming) serving: every micro-batch through
-    * [[GraphLayout.serveHamming]]; `decisionLog` via
-    * [[GraphLayout.serveHammingDecisionProbed]] (probe once, record
-    * once). */
-  def attachHamming(queryStream: DataFrame, layout: GraphLayout.Layout,
-                    outPath: String, checkpoint: String, k: Int,
-                    searchWindow: Int, nProbes: Int, kReorder: Int,
-                    rerankMetric: Metric = Metric.L2,
-                    mode: GraphLayout.ServeMode =
-                      GraphLayout.ServeMode.Auto,
-                    localMaxFraction: Double = 1.0,
-                    trigger: Option[Trigger] = None,
-                    maxQueriesPerBatch: Int = 0,
-                    decisionLog: Option[String] = None): StreamingQuery =
-    attachCore(queryStream, outPath, checkpoint, trigger,
-      maxQueriesPerBatch, decisionLog) { slice =>
-      if (decisionLog.isDefined) {
-        val (auto, fraction, pm) = GraphLayout.serveHammingDecisionProbed(
-          layout, slice, nProbes, localMaxFraction)
-        (GraphLayout.serveHamming(layout, slice, k, searchWindow, nProbes,
-          kReorder, rerankMetric, mode, localMaxFraction, Some(pm)),
-          Some((forcedOr(mode, auto), fraction, pm.size)))
-      } else
-        (GraphLayout.serveHamming(layout, slice, k, searchWindow, nProbes,
-          kReorder, rerankMetric, mode, localMaxFraction), None)
-    }
-
-  /** The mode the serve actually ran: a forced `mode` overrides the Auto
-    * decision in the log exactly as it does in the dispatch. */
-  private def forcedOr(mode: GraphLayout.ServeMode, auto: String): String =
-    mode match {
-      case GraphLayout.ServeMode.Local   => "local"
-      case GraphLayout.ServeMode.Cogroup => "cogroup"
-      case GraphLayout.ServeMode.Auto    => auto
+      val pm = GraphLayout.probes(layout, slice, nProbes, metric, codec)
+      (GraphLayout.serveProbed(layout, slice, k, searchWindow, metric,
+        codec, pm),
+        decisionLog.map(_ =>
+          ("local", pm.size.toDouble / layout.centroids.size, pm.size)))
     }
 
   /** Stored-IVF codec serving: every micro-batch through

@@ -33,8 +33,7 @@ class BinaryQuantSpec extends SparkSpec {
   }
 
   test("full-density v2 packing: word j = v1(2j) | (v1(2j+1) << 32), " +
-      "bit 63 included; splitWords64 round-trips to codeColumns values; " +
-      "Hamming sums are invariant to the word grouping") {
+      "bit 63 included; Hamming sums are invariant to the word grouping") {
     import org.apache.spark.sql.Row
     val p = BinaryQuant.train(vecs())
     assert(p.words === 2 && p.words64 === 1,
@@ -56,9 +55,7 @@ class BinaryQuantSpec extends SparkSpec {
     }
     assert(sawBit63, "no corpus row set bit 63 — the sign-bit edge is " +
       "untested; pick a corpus whose dim 63 crosses its threshold")
-    // DataFrame encode ≡ driver encode, and the v2→v1 split restores
-    // codeColumns' exact values (what lets v2 stores ride the cogroup
-    // walk and probe routing unchanged)
+    // DataFrame encode ≡ driver encode
     val df = vecs()
     val enc64 = df.select(col("id") +:
       BinaryQuant.codeColumns64(col("vec"), p).zipWithIndex.map {
@@ -68,14 +65,6 @@ class BinaryQuantSpec extends SparkSpec {
     enc64.collect().foreach { r =>
       assert((1 to p.words64).map(r.getLong).toSeq ===
         BinaryQuant.encodeWords64(data(r.getLong(0)), p), s"id ${r.get(0)}")
-    }
-    val split = enc64.select(col("id") +:
-      BinaryQuant.splitWords64(p.words,
-        (0 until p.words64).map(j => col(s"w$j"))).zipWithIndex.map {
-        case (c, w) => c.as(s"s$w") }: _*)
-    split.collect().foreach { r =>
-      assert((1 to p.words).map(r.getDouble).toSeq ===
-        BinaryQuant.encodeWords(data(r.getLong(0)), p), s"id ${r.get(0)}")
     }
     // grouping invariance of the Hamming SUM (the property the whole v2
     // design rests on), via the driver kernels

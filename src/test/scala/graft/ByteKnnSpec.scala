@@ -123,9 +123,9 @@ class ByteKnnSpec extends SparkSpec {
     val lD = GraphLayout.open(spark, pD)
     // stored vec column kept its element type (the 1/8-bytes claim)
     assert(ByteVecs.isByteVec(l8.clustered.schema("vec").dataType))
-    val r8 = GraphLayout.search(l8, q, 5, 16, 2, Metric.L2)
+    val r8 = GraphLayout.serve(l8, q, 5, 16, 2, Metric.L2)
       .orderBy("query_id", "rnk").collect().map(_.toSeq).toSeq
-    val rD = GraphLayout.search(lD, q, 5, 16, 2, Metric.L2)
+    val rD = GraphLayout.serve(lD, q, 5, 16, 2, Metric.L2)
       .orderBy("query_id", "rnk").collect().map(_.toSeq).toSeq
     assert(r8 === rD)
     assert(r8.nonEmpty)
@@ -176,7 +176,7 @@ class ByteKnnSpec extends SparkSpec {
     // the upserted store is still byte-resident on disk
     assert(ByteVecs.isByteVec(up.clustered.schema("vec").dataType),
       s"upsert widened the store: ${up.clustered.schema("vec").dataType}")
-    val served = GraphLayout.search(up, q, 5, 16, 4, Metric.L2)
+    val served = GraphLayout.serve(up, q, 5, 16, 4, Metric.L2)
       .orderBy("query_id", "rnk").collect().map(_.toSeq).toSeq
     val merged = cl8.join(delIds, Seq("id"), "left_anti").unionByName(added)
     val gFresh = Vamana.buildSharded(merged, params, Metric.L2)
@@ -226,7 +226,7 @@ class ByteKnnSpec extends SparkSpec {
     for ((cid, ev) <- expected)
       assert(upCents(cid) === ev, s"centroid $cid not in unsigned space")
     // and the upserted store serves like a from-scratch u8 store
-    val served = GraphLayout.search(up, q, 5, 16, 4, Metric.L2)
+    val served = GraphLayout.serve(up, q, 5, 16, 4, Metric.L2)
       .orderBy("query_id", "rnk").collect().map(_.toSeq).toSeq
     val gFresh = Vamana.buildSharded(merged, params, Metric.L2)
     val fresh = Vamana.searchSharded(q, merged, gFresh, up.centroids, 5,
@@ -388,7 +388,7 @@ class ByteKnnSpec extends SparkSpec {
     val gU = Vamana.buildSharded(clU, params, Metric.L2)
     val path = "/tmp/graft_bytes_sidecar_auth"
     GraphLayout.write(clU, gU, cents, path)
-    val want = GraphLayout.search(GraphLayout.open(spark, path), q, 5, 16,
+    val want = GraphLayout.serve(GraphLayout.open(spark, path), q, 5, 16,
         4, Metric.L2)
       .orderBy("query_id", "rnk").collect().map(_.toSeq).toSeq
     // simulate an external rewrite of data/ that strips schema metadata
@@ -409,7 +409,7 @@ class ByteKnnSpec extends SparkSpec {
     val re = GraphLayout.open(spark, path)
     assert(ByteVecs.isUnsigned(re.clustered.schema, "vec"),
       "sidecar did not restore the u8 mark after a stripping rewrite")
-    val got = GraphLayout.search(re, q, 5, 16, 4, Metric.L2)
+    val got = GraphLayout.serve(re, q, 5, 16, 4, Metric.L2)
       .orderBy("query_id", "rnk").collect().map(_.toSeq).toSeq
     assert(got === want)
     // bare byte DataFrame: ambiguous, refused loudly

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.core.{Metric, Tables}
 import graft.operators.{GraphLayout, KMeans, Pq, Vamana}
+import graft.operators.GraphLayout.Codec
 import graft.operators.VamanaKernel.BuildParams
 
 /** Persisted sharded-Vamana layout: roundtrip fidelity (graph, data,
@@ -46,7 +47,7 @@ class GraphLayoutSpec extends SparkSpec {
     assert(layout.centroids === cents)
 
     // served full-precision walk ≡ in-memory walk, bit-for-bit
-    val served = GraphLayout.search(layout, queries, 10, searchWindow = 40,
+    val served = GraphLayout.serve(layout, queries, 10, searchWindow = 40,
         nProbes = 2, Metric.L2)
       .orderBy("query_id", "rnk").collect().toSeq
     val mem = Vamana.searchSharded(queries, clustered, graph, cents, 10,
@@ -56,8 +57,8 @@ class GraphLayoutSpec extends SparkSpec {
 
     // served ADC walk ≡ in-memory ADC walk over freshly-derived codes
     val codes = Pq.encodeClustered(clustered, p)
-    val servedAdc = GraphLayout.searchAdc(layout, queries, 10,
-        searchWindow = 40, nProbes = 2)
+    val servedAdc = GraphLayout.serve(layout, queries, 10,
+        searchWindow = 40, nProbes = 2, Metric.L2, Codec.Pq())
       .orderBy("query_id", "rnk").collect().toSeq
     val memAdc = Vamana.searchShardedAdc(queries, codes, graph, cents, p,
         10, searchWindow = 40, nProbes = 2)
@@ -65,8 +66,8 @@ class GraphLayoutSpec extends SparkSpec {
     assert(servedAdc.map(_.toSeq) === memAdc.map(_.toSeq))
 
     // rerank path from the store ≡ in-memory rerank
-    val servedRr = GraphLayout.searchAdc(layout, queries, 10,
-        searchWindow = 40, nProbes = 2, kReorder = 4)
+    val servedRr = GraphLayout.serve(layout, queries, 10,
+        searchWindow = 40, nProbes = 2, Metric.L2, Codec.Pq(kReorder = 4))
       .orderBy("query_id", "rnk").collect().toSeq
     val memRr = Vamana.searchShardedAdcRerank(queries, codes, graph, cents,
         p, clustered, 10, 4, searchWindow = 40, nProbes = 2)
@@ -131,10 +132,10 @@ class GraphLayoutSpec extends SparkSpec {
     GraphLayout.write(merged, graph2, cents2, path2, pq = Some(p))
     val fresh = GraphLayout.open(spark, path2)
     def rows(l: GraphLayout.Layout) = {
-      val a = GraphLayout.search(l, queries, 10, 1 << 14, 4, Metric.L2)
+      val a = GraphLayout.serve(l, queries, 10, 1 << 14, 4, Metric.L2)
         .orderBy("query_id", "rnk").collect().map(_.toSeq).toSeq
-      val b = GraphLayout.searchAdc(l, queries, 10, 1 << 14, 4,
-        kReorder = 4).orderBy("query_id", "rnk").collect()
+      val b = GraphLayout.serve(l, queries, 10, 1 << 14, 4, Metric.L2,
+        Codec.Pq(kReorder = 4)).orderBy("query_id", "rnk").collect()
         .map(_.toSeq).toSeq
       (a, b)
     }
@@ -162,55 +163,23 @@ class GraphLayoutSpec extends SparkSpec {
     assert(layout.bin.get.thresholds === b.thresholds)
     // all shards probed + full window ⇒ global Hamming top-R + exact
     // rerank — must equal the flat in-memory two-pass bit-for-bit
-    val served = GraphLayout.searchHamming(layout, queries, 10,
-        searchWindow = 1 << 14, nProbes = cents.size, kReorder = 4)
+    val served = GraphLayout.serve(layout, queries, 10,
+        searchWindow = 1 << 14, nProbes = cents.size, Metric.L2,
+        Codec.Binary(kReorder = 4))
       .orderBy("query_id", "rnk").collect().map(_.toSeq).toSeq
     val mem = BinaryQuant.searchHammingRerank(queries,
         BinaryQuant.encode(data, b), b, data, 10, 4)
       .orderBy("query_id", "rnk").collect().map(_.toSeq).toSeq
     assert(served === mem)
-    // the zero-corpus-shuffle local twin ≡ the cogroup path bit-for-bit,
-    // exhaustive probes AND a selective probe subset
-    val servedLocal = GraphLayout.searchHammingLocal(layout, queries, 10,
-        searchWindow = 1 << 14, nProbes = cents.size, kReorder = 4)
-      .orderBy("query_id", "rnk").collect().map(_.toSeq).toSeq
-    assert(servedLocal === served)
-    val sel = GraphLayout.searchHamming(layout, queries, 10,
-        searchWindow = 1 << 14, nProbes = 1, kReorder = 4)
-      .orderBy("query_id", "rnk").collect().map(_.toSeq).toSeq
-    assert(GraphLayout.searchHammingLocal(layout, queries, 10,
-        searchWindow = 1 << 14, nProbes = 1, kReorder = 4)
-      .orderBy("query_id", "rnk").collect().map(_.toSeq).toSeq === sel)
-    // a memory-only layout cannot serve locally — loud failure
-    val e = intercept[RuntimeException] {
-      GraphLayout.searchHammingLocal(layout.copy(path = None), queries,
-        10, searchWindow = 1 << 14, nProbes = 1, kReorder = 4)
-    }
-    assert(e.getMessage.contains("open"))
-    // serveHamming(): the one binary entry point — Auto dispatches local
-    // (store on disk) with rows ≡ both manual paths at both regimes;
-    // an in-memory layout auto-cogroups instead of erroring
-    val (hm1, hf1) = GraphLayout.serveHammingDecision(layout, queries,
-      nProbes = 1)
-    assert(hm1 === "local" && hf1 <= 1.0, s"($hm1, $hf1)")
-    val servedH = GraphLayout.serveHamming(layout, queries, 10,
-        searchWindow = 1 << 14, nProbes = cents.size, kReorder = 4)
-      .orderBy("query_id", "rnk").collect().map(_.toSeq).toSeq
-    assert(servedH === served)
-    assert(servedH === GraphLayout.serveHamming(layout, queries, 10,
-        searchWindow = 1 << 14, nProbes = cents.size, kReorder = 4,
-        mode = GraphLayout.ServeMode.Cogroup)
-      .orderBy("query_id", "rnk").collect().map(_.toSeq).toSeq)
-    val selServed = GraphLayout.serveHamming(layout, queries, 10,
-        searchWindow = 1 << 14, nProbes = 1, kReorder = 4)
-      .orderBy("query_id", "rnk").collect().map(_.toSeq).toSeq
-    assert(selServed === sel)
-    assert(GraphLayout.serveHammingDecision(layout.copy(path = None),
-      queries, nProbes = 1)._1 === "cogroup")
-    assert(servedH === GraphLayout.serveHamming(layout.copy(path = None),
-        queries, 10, searchWindow = 1 << 14, nProbes = cents.size,
-        kReorder = 4)
-      .orderBy("query_id", "rnk").collect().map(_.toSeq).toSeq)
+    // the stored bincodes walk ≡ the in-memory Hamming walk over the
+    // layout's frames bit-for-bit, exhaustive probes AND a selective
+    // probe subset
+    for (np <- Seq(cents.size, 1))
+      assert(GraphRefs.rows(GraphLayout.serve(layout, queries, 10,
+          searchWindow = 1 << 14, nProbes = np, Metric.L2,
+          Codec.Binary(kReorder = 4))) ===
+        GraphRefs.rows(GraphRefs.walk(layout, queries, 10, 1 << 14, np,
+          Metric.L2, Codec.Binary(kReorder = 4))), s"np=$np")
     // upsert keeps bincodes in sync: after an add+delete, the served
     // global rerank equals the in-memory two-pass over the survivors
     val added = data.filter(col("id") % 61 === 2).orderBy("id").limit(6)
@@ -224,8 +193,9 @@ class GraphLayoutSpec extends SparkSpec {
     val survivors = data
       .join(dels, Seq("id"), "left_anti")
       .unionByName(added.drop("cluster_id"))
-    val servedUp = GraphLayout.searchHamming(up, queries, 10,
-        searchWindow = 1 << 14, nProbes = up.centroids.size, kReorder = 4)
+    val servedUp = GraphLayout.serve(up, queries, 10,
+        searchWindow = 1 << 14, nProbes = up.centroids.size, Metric.L2,
+        Codec.Binary(kReorder = 4))
       .orderBy("query_id", "rnk").collect().map(_.toSeq).toSeq
     val memUp = BinaryQuant.searchHammingRerank(queries,
         BinaryQuant.encode(survivors, b), b, survivors, 10, 4)
@@ -331,12 +301,14 @@ class GraphLayoutSpec extends SparkSpec {
     assert(spark.read.parquet(s"$path/codes")
       .filter(col("id").isin(delSeq: _*)).count() === 0)
     // ...so the kReorder=0 code-only serves cannot emit one
-    val hammed = GraphLayout.serveHamming(rep, queries, 10,
-        searchWindow = 1 << 14, nProbes = rep.centroids.size, kReorder = 0)
+    val hammed = GraphLayout.serve(rep, queries, 10,
+        searchWindow = 1 << 14, nProbes = rep.centroids.size, Metric.L2,
+        Codec.Binary(kReorder = 0))
       .select("neighbor_id").collect().map(_.getLong(0)).toSet
     assert(hammed.intersect(delSeq.toSet).isEmpty)
-    val adced = GraphLayout.searchAdc(rep, queries, 10,
-        searchWindow = 1 << 14, nProbes = rep.centroids.size, kReorder = 0)
+    val adced = GraphLayout.serve(rep, queries, 10,
+        searchWindow = 1 << 14, nProbes = rep.centroids.size, Metric.L2,
+        Codec.Pq())
       .select("neighbor_id").collect().map(_.getLong(0)).toSet
     assert(adced.intersect(delSeq.toSet).isEmpty)
 
@@ -347,13 +319,10 @@ class GraphLayoutSpec extends SparkSpec {
     val twin = GraphLayout.upsert(spark, pathTwin, added, delIds, params,
       Metric.L2)
     assert(up.centroids === twin.centroids)
-    def servedAll(l: GraphLayout.Layout) = Seq(
-      GraphLayout.search(l, queries, 10, 1 << 14, l.centroids.size,
-        Metric.L2),
-      GraphLayout.searchAdc(l, queries, 10, 1 << 14, l.centroids.size,
-        kReorder = 4),
-      GraphLayout.serveHamming(l, queries, 10, 1 << 14, l.centroids.size,
-        kReorder = 4))
+    def servedAll(l: GraphLayout.Layout) = Seq(Codec.Full(),
+        Codec.Pq(kReorder = 4), Codec.Binary(kReorder = 4))
+      .map(c => GraphLayout.serve(l, queries, 10, 1 << 14,
+        l.centroids.size, Metric.L2, c))
       .map(_.orderBy("query_id", "rnk").collect().map(_.toSeq).toSeq)
     assert(servedAll(up) === servedAll(twin))
     // repair without a marker is the identity
@@ -456,21 +425,18 @@ class GraphLayoutSpec extends SparkSpec {
     assert(b.words64 < b.words)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.orderBy("query_id", "rnk").collect().map(_.toSeq).toSeq
-    // bit-parity across versions: cogroup, local, and the dispatcher, at
-    // exhaustive AND selective probes (identical neighbor sets on the
-    // same grid — Hamming sums are grouping-invariant)
+    def served(l: GraphLayout.Layout, np: Int) =
+      rows(GraphLayout.serve(l, queries, 10, searchWindow = 1 << 14,
+        nProbes = np, Metric.L2, Codec.Binary(kReorder = 4)))
+    // bit-parity across versions: both stores' serves ≡ the in-memory
+    // Hamming walk, at exhaustive AND selective probes (identical
+    // neighbor sets on the same grid — Hamming sums are
+    // grouping-invariant)
     for (np <- Seq(cents.size, 1)) {
-      val expect = rows(GraphLayout.searchHamming(l1, queries, 10,
-        searchWindow = 1 << 14, nProbes = np, kReorder = 4))
-      assert(rows(GraphLayout.searchHamming(l2, queries, 10,
-        searchWindow = 1 << 14, nProbes = np, kReorder = 4)) === expect,
-        s"cogroup np=$np")
-      assert(rows(GraphLayout.searchHammingLocal(l2, queries, 10,
-        searchWindow = 1 << 14, nProbes = np, kReorder = 4)) === expect,
-        s"local np=$np")
-      assert(rows(GraphLayout.serveHamming(l2, queries, 10,
-        searchWindow = 1 << 14, nProbes = np, kReorder = 4)) === expect,
-        s"serve np=$np")
+      val expect = rows(GraphRefs.walk(l1, queries, 10, 1 << 14, np,
+        Metric.L2, Codec.Binary(kReorder = 4)))
+      assert(served(l1, np) === expect, s"v1 np=$np")
+      assert(served(l2, np) === expect, s"v2 np=$np")
     }
     // pre-v2 sidecar (no version field) opens as v1 and still serves.
     // (Drop hadoop's local-FS checksum sibling — these out-of-band edits
@@ -484,10 +450,7 @@ class GraphLayoutSpec extends SparkSpec {
       sc.replace("\"version\":1,", "").getBytes)
     val lOld = GraphLayout.open(spark, pathV1)
     assert(lOld.binVersion === 1)
-    assert(rows(GraphLayout.searchHammingLocal(lOld, queries, 10,
-      searchWindow = 1 << 14, nProbes = 1, kReorder = 4)) ===
-      rows(GraphLayout.searchHammingLocal(l1, queries, 10,
-        searchWindow = 1 << 14, nProbes = 1, kReorder = 4)))
+    assert(served(lOld, 1) === served(l1, 1))
     // unknown version refuses to open (fail loudly, never misread words)
     java.nio.file.Files.write(scPath, new String(
       java.nio.file.Files.readAllBytes(scPath))
@@ -513,12 +476,7 @@ class GraphLayoutSpec extends SparkSpec {
     assert(u2.binVersion === 2 && u1.binVersion === 1)
     assert(u2.binCodes.get.columns.count(_.startsWith("w")) === b.words64)
     assert(u1.binCodes.get.columns.count(_.startsWith("w")) === b.words)
-    assert(rows(GraphLayout.searchHammingLocal(u2, queries, 10,
-      searchWindow = 1 << 14, nProbes = u2.centroids.size,
-      kReorder = 4)) ===
-      rows(GraphLayout.searchHammingLocal(u1, queries, 10,
-        searchWindow = 1 << 14, nProbes = u1.centroids.size,
-        kReorder = 4)))
+    assert(served(u2, u2.centroids.size) === served(u1, u1.centroids.size))
   }
 
   test("upsert batch hygiene: duplicate identical adds collapse, delete " +
@@ -553,40 +511,29 @@ class GraphLayoutSpec extends SparkSpec {
 
   test("searchAdcLocal (zero-corpus-shuffle DiskANN serve) ≡ searchAdc " +
       "bit-for-bit, pure-ADC and reranked; refuses a memory-only layout") {
+    // (names predate the one serve path: the stored codes walk is
+    // serve(…, Codec.Pq), the reference is the in-memory cogroup ADC
+    // walk; a memory-only layout no longer type-checks — Layout.path is
+    // a required String)
     val (_, cents, clustered, graph, p) = fixture()
     val queries = Tables.embeddingQueries(spark, sfDir)
     val path = "/tmp/graft_graphlayout_adclocal"
     GraphLayout.write(clustered, graph, cents, path, pq = Some(p))
     val layout = GraphLayout.open(spark, path)
-    def rows(df: org.apache.spark.sql.DataFrame) = df
-      .select("query_id", "rnk", "neighbor_id")
-      .orderBy("query_id", "rnk").collect().map(_.toSeq).toSeq
+    def same(metric: Metric, codec: Codec) =
+      assert(GraphRefs.rows(GraphLayout.serve(layout, queries, 5, 32, 3,
+        metric, codec)) === GraphRefs.rows(GraphRefs.walk(layout, queries,
+        5, 32, 3, metric, codec)), s"$metric $codec")
     // pure ADC ranks
-    assert(rows(GraphLayout.searchAdcLocal(layout, queries, 5, 32, 3)) ===
-      rows(GraphLayout.searchAdc(layout, queries, 5, 32, 3)))
+    same(Metric.L2, Codec.Pq())
     // exact rerank on top (touches only candidate rows of data)
-    assert(
-      rows(GraphLayout.searchAdcLocal(layout, queries, 5, 32, 3,
-        kReorder = 2)) ===
-      rows(GraphLayout.searchAdc(layout, queries, 5, 32, 3, kReorder = 2)))
-    // cosine walks L2 and reranks cosine, same as searchAdc's contract
-    assert(
-      rows(GraphLayout.searchAdcLocal(layout, queries, 5, 32, 3,
-        kReorder = 2, metric = Metric.Cosine)) ===
-      rows(GraphLayout.searchAdc(layout, queries, 5, 32, 3, kReorder = 2,
-        metric = Metric.Cosine)))
-    val mem = layout.copy(path = None)
-    val e = intercept[RuntimeException] {
-      GraphLayout.searchAdcLocal(mem, queries, 5, 32, 3)
-    }
-    assert(e.getMessage.contains("open"))
-    // a layout written WITHOUT routing serves locally through the flat
-    // probe sweep — ≡ search bit-for-bit
-    assert(rows(GraphLayout.searchLocal(layout, queries, 5, 32, 3,
-        Metric.L2)) ===
-      rows(GraphLayout.search(layout, queries, 5, 32, 3, Metric.L2)))
+    same(Metric.L2, Codec.Pq(kReorder = 2))
+    // cosine walks L2 and reranks cosine
+    same(Metric.Cosine, Codec.Pq(kReorder = 2))
+    // a layout written WITHOUT routing serves through the flat probe
+    // sweep — ≡ the in-memory walk bit-for-bit
+    same(Metric.L2, Codec.Full())
   }
-
   test("keep predicate on the compressed serving paths: searchAdcLocal/" +
       "searchAdc(keep) ≡ searchShardedAdc(keep) bit-for-bit; excluded " +
       "ids never emitted, pure-ADC and reranked") {
@@ -597,193 +544,89 @@ class GraphLayoutSpec extends SparkSpec {
     val layout = GraphLayout.open(spark, path)
     val keep = col("id") % 3 =!= 1
     val codes = Pq.encodeClustered(clustered, p)
-    def rows(df: org.apache.spark.sql.DataFrame) = df
-      .select("query_id", "rnk", "neighbor_id")
-      .orderBy("query_id", "rnk").collect().map(_.toSeq).toSeq
-    // pure ADC: local ≡ cogroup ≡ in-memory under the same predicate
-    val localF = rows(GraphLayout.searchAdcLocal(layout, queries, 5, 32, 3,
-      keep = keep))
+    def rows(df: org.apache.spark.sql.DataFrame) = GraphRefs.rows(df)
+    // pure ADC: the stored walk ≡ the in-memory walk under the same
+    // predicate
+    val localF = rows(GraphLayout.serve(layout, queries, 5, 32, 3,
+      Metric.L2, Codec.Pq(keep = keep)))
     assert(localF ===
       rows(Vamana.searchShardedAdc(queries, codes, graph, cents, p, 5, 32,
         3, Metric.L2, keep = keep)))
-    assert(localF ===
-      rows(GraphLayout.searchAdc(layout, queries, 5, 32, 3, keep = keep)))
     localF.foreach(r =>
       assert(r(2).asInstanceOf[Long] % 3 !== 1, s"filtered id emitted: $r"))
     // the predicate changes the result (it actually filters something)
-    assert(localF !== rows(GraphLayout.searchAdcLocal(layout, queries, 5,
-      32, 3)))
-    // reranked: the rerank sees only kept candidates on both paths
+    assert(localF !== rows(GraphLayout.serve(layout, queries, 5, 32, 3,
+      Metric.L2, Codec.Pq())))
+    // reranked: the rerank sees only kept candidates
     assert(
-      rows(GraphLayout.searchAdcLocal(layout, queries, 5, 32, 3,
-        kReorder = 2, keep = keep)) ===
-      rows(GraphLayout.searchAdc(layout, queries, 5, 32, 3, kReorder = 2,
-        keep = keep)))
+      rows(GraphLayout.serve(layout, queries, 5, 32, 3, Metric.L2,
+        Codec.Pq(kReorder = 2, keep = keep))) ===
+      rows(Vamana.searchShardedAdcRerank(queries, codes, graph, cents, p,
+        clustered, 5, 2, 32, 3, keep = keep)))
   }
-
-  test("serve(): one entry point auto-dispatches local vs cogroup by " +
-      "probe-union fraction; rows bit-identical to both manual paths at " +
-      "both regimes; override + keep honored") {
+  test("serve() with Codec.Full ≡ the in-memory walks, flat and routed, " +
+      "selective and saturating probes; keep honored; the probe map is " +
+      "authoritative") {
     val (_, cents, clustered, graph, _) = fixture()
     val queries = Tables.embeddingQueries(spark, sfDir)
     val path = "/tmp/graft_graphlayout_serve"
     GraphLayout.write(clustered, graph, cents, path, routingGroups = 2)
     val layout = GraphLayout.open(spark, path)
-    def rows(df: org.apache.spark.sql.DataFrame) = df
-      .select("query_id", "rnk", "neighbor_id")
-      .orderBy("query_id", "rnk").collect().map(_.toSeq).toSeq
-
-    // SELECTIVE regime: one query, one probe → fraction 1/4 → local at
-    // the default threshold AND at the conservative 0.5 dial
     val q1 = queries.orderBy("query_id").limit(1)
-    val (m1, f1) = GraphLayout.serveDecision(layout, q1, nProbes = 1,
-      Metric.L2, l1Probes = 1)
-    assert(m1 === "local" && f1 <= 0.5, s"($m1, $f1)")
-    assert(GraphLayout.serveDecision(layout, q1, nProbes = 1, Metric.L2,
-      l1Probes = 1, localMaxFraction = 0.5)._1 === "local")
-    val servedSel = rows(GraphLayout.serve(layout, q1, 5, 32, nProbes = 1,
-      Metric.L2, l1Probes = 1))
-    assert(servedSel === rows(GraphLayout.searchRoutedLocal(layout, q1, 5,
-      32, l1Probes = 1, nProbes = 1, Metric.L2)))
-    assert(servedSel === rows(GraphLayout.searchRouted(layout, q1, 5, 32,
-      l1Probes = 1, nProbes = 1, Metric.L2)))
-
-    // SATURATING regime: every query, exhaustive probes → fraction 1.
-    // Default (post-r12 O(1)-planning measurement): still local — zero
-    // corpus shuffle wins both regimes. The localMaxFraction DIAL pins
-    // the other outcome: at 0.5 a saturating sweep dispatches cogroup.
-    val (m2, f2) = GraphLayout.serveDecision(layout, queries, nProbes = 4,
-      Metric.L2, l1Probes = 2)
-    assert(m2 === "local" && f2 > 0.5, s"($m2, $f2)")
-    assert(GraphLayout.serveDecision(layout, queries, nProbes = 4,
-      Metric.L2, l1Probes = 2, localMaxFraction = 0.5)._1 === "cogroup")
-    val servedSat = rows(GraphLayout.serve(layout, queries, 5, 32,
-      nProbes = 4, Metric.L2, l1Probes = 2))
-    assert(servedSat === rows(GraphLayout.searchRouted(layout, queries, 5,
-      32, l1Probes = 2, nProbes = 4, Metric.L2)))
-    assert(servedSat === rows(GraphLayout.searchRoutedLocal(layout,
-      queries, 5, 32, l1Probes = 2, nProbes = 4, Metric.L2)))
-    // the dialed-down serve dispatches cogroup — rows unchanged
-    assert(servedSat === rows(GraphLayout.serve(layout, queries, 5, 32,
-      nProbes = 4, Metric.L2, l1Probes = 2, localMaxFraction = 0.5)))
-
-    // override forces the other path, rows unchanged (pure cost decision)
-    assert(servedSat === rows(GraphLayout.serve(layout, queries, 5, 32,
-      nProbes = 4, Metric.L2, l1Probes = 2,
-      mode = GraphLayout.ServeMode.Local)))
-    assert(servedSel === rows(GraphLayout.serve(layout, q1, 5, 32,
-      nProbes = 1, Metric.L2, l1Probes = 1,
-      mode = GraphLayout.ServeMode.Cogroup)))
-
-    // flat dispatch (l1Probes = 0 ignores routing): ≡ search/searchLocal
-    val servedFlat = rows(GraphLayout.serve(layout, q1, 5, 32, nProbes = 1,
-      Metric.L2))
-    assert(servedFlat === rows(GraphLayout.searchLocal(layout, q1, 5, 32,
-      1, Metric.L2)))
-    assert(servedFlat === rows(GraphLayout.search(layout, q1, 5, 32, 1,
-      Metric.L2)))
-
-    // keep honored on both dispatch outcomes
     val keep = col("id") % 3 =!= 1
-    val keptLocal = rows(GraphLayout.serve(layout, q1, 5, 32, nProbes = 1,
-      Metric.L2, l1Probes = 1, keep = keep))
-    keptLocal.foreach(r => assert(r(2).asInstanceOf[Long] % 3 !== 1))
-    val keptCog = rows(GraphLayout.serve(layout, queries, 5, 32,
-      nProbes = 4, Metric.L2, l1Probes = 2, keep = keep,
-      localMaxFraction = 0.5)) // dialed down ⇒ the cogroup+keep path
-    keptCog.foreach(r => assert(r(2).asInstanceOf[Long] % 3 !== 1))
-    assert(keptCog === rows(GraphLayout.serve(layout, queries, 5, 32,
-      nProbes = 4, Metric.L2, l1Probes = 2, keep = keep,
-      mode = GraphLayout.ServeMode.Local)))
-
-    // an in-memory layout (no path) can only cogroup — Auto must not
-    // dispatch local into a sys.error
-    val mem = layout.copy(path = None)
-    val (m3, _) = GraphLayout.serveDecision(mem, q1, nProbes = 1,
-      Metric.L2, l1Probes = 1)
-    assert(m3 === "cogroup")
-    assert(servedSel === rows(GraphLayout.serve(mem, q1, 5, 32,
-      nProbes = 1, Metric.L2, l1Probes = 1)))
+    // selective (one query, one probe) and saturating (every query,
+    // exhaustive probes); routed, flat (l1Probes = 0 ignores the
+    // persisted level), and keep-filtered
+    for ((q, np, l1p) <- Seq((q1, 1, 1), (queries, 4, 2), (q1, 1, 0),
+        (queries, 4, 0)); filtered <- Seq(false, true)) {
+      val codec = if (filtered) Codec.Full(l1p, keep) else Codec.Full(l1p)
+      val served = GraphRefs.rows(GraphLayout.serve(layout, q, 5, 32, np,
+        Metric.L2, codec))
+      assert(served.nonEmpty)
+      assert(served === GraphRefs.rows(GraphRefs.walk(layout, q, 5, 32, np,
+        Metric.L2, codec)), s"np=$np l1Probes=$l1p filtered=$filtered")
+      if (filtered)
+        served.foreach(r => assert(r(2).asInstanceOf[Long] % 3 !== 1))
+    }
+    // the probe map is authoritative, not advisory: a TRUNCATED map
+    // serves only its shard's rows (the seam StreamingServe's decision
+    // log relies on to probe once)
+    val pm = GraphLayout.probes(layout, queries, 2, Metric.L2, Codec.Full())
+    val kept = pm.keySet.min
+    val ids = clustered.filter(col("cluster_id") === kept).select("id")
+      .collect().map(_.getLong(0)).toSet
+    val cut = GraphRefs.rows(GraphLayout.serveProbed(layout, queries, 5, 32,
+      Metric.L2, Codec.Full(), pm.filter(_._1 == kept)))
+    assert(cut.nonEmpty && cut.forall(r => ids(r(2).asInstanceOf[Long])))
   }
-
-  test("serveAdc(): one compressed-serving entry point auto-dispatches " +
-      "local vs cogroup; rows bit-identical to both manual ADC paths; " +
-      "keep + rerank + cosine-walks-L2 + override honored") {
+  test("serve() with Codec.Pq ≡ the in-memory ADC walks, selective and " +
+      "saturating; keep + rerank + cosine-walks-L2 honored; cosine " +
+      "without a rerank refused") {
     val (_, cents, clustered, graph, p) = fixture()
     val queries = Tables.embeddingQueries(spark, sfDir)
     val path = "/tmp/graft_graphlayout_serveadc"
     GraphLayout.write(clustered, graph, cents, path, pq = Some(p))
     val layout = GraphLayout.open(spark, path)
-    def rows(df: org.apache.spark.sql.DataFrame) = df
-      .select("query_id", "rnk", "neighbor_id")
-      .orderBy("query_id", "rnk").collect().map(_.toSeq).toSeq
-
-    // SELECTIVE regime: one query, one probe → local at the default dial
     val q1 = queries.orderBy("query_id").limit(1)
-    val (m1, f1) = GraphLayout.serveAdcDecision(layout, q1, nProbes = 1)
-    assert(m1 === "local" && f1 <= 0.5, s"($m1, $f1)")
-    val servedSel = rows(GraphLayout.serveAdc(layout, q1, 5, 32,
-      nProbes = 1))
-    assert(servedSel === rows(GraphLayout.searchAdcLocal(layout, q1, 5, 32,
-      nProbes = 1)))
-    assert(servedSel === rows(GraphLayout.searchAdc(layout, q1, 5, 32,
-      nProbes = 1)))
-
-    // SATURATING regime: default stays local (zero corpus shuffle wins
-    // both regimes post-r12); the dial pins the cogroup outcome
-    val (m2, f2) = GraphLayout.serveAdcDecision(layout, queries,
-      nProbes = 4)
-    assert(m2 === "local" && f2 > 0.5, s"($m2, $f2)")
-    assert(GraphLayout.serveAdcDecision(layout, queries, nProbes = 4,
-      localMaxFraction = 0.5)._1 === "cogroup")
-    val servedSat = rows(GraphLayout.serveAdc(layout, queries, 5, 32,
-      nProbes = 4))
-    assert(servedSat === rows(GraphLayout.searchAdc(layout, queries, 5, 32,
-      nProbes = 4)))
-    assert(servedSat === rows(GraphLayout.serveAdc(layout, queries, 5, 32,
-      nProbes = 4, localMaxFraction = 0.5))) // dialed ⇒ cogroup, same rows
-
-    // override forces the other path, rows unchanged
-    assert(servedSel === rows(GraphLayout.serveAdc(layout, q1, 5, 32,
-      nProbes = 1, mode = GraphLayout.ServeMode.Cogroup)))
-    assert(servedSat === rows(GraphLayout.serveAdc(layout, queries, 5, 32,
-      nProbes = 4, mode = GraphLayout.ServeMode.Local)))
-
-    // rerank + keep on both dispatch outcomes ≡ the manual paths
     val keep = col("id") % 3 =!= 1
-    val kept = rows(GraphLayout.serveAdc(layout, queries, 5, 32,
-      nProbes = 3, kReorder = 2, keep = keep))
-    kept.foreach(r => assert(r(2).asInstanceOf[Long] % 3 !== 1))
-    assert(kept === rows(GraphLayout.searchAdc(layout, queries, 5, 32,
-      nProbes = 3, kReorder = 2, keep = keep)))
-    assert(kept === rows(GraphLayout.serveAdc(layout, queries, 5, 32,
-      nProbes = 3, kReorder = 2, keep = keep, localMaxFraction = 0.5)))
-
-    // cosine walks L2 and reranks cosine on BOTH dispatch outcomes —
-    // and the probe map (built on the walk metric) matches the manual
-    // paths' probing exactly
-    val cosServed = rows(GraphLayout.serveAdc(layout, queries, 5, 32,
-      nProbes = 3, kReorder = 2, metric = Metric.Cosine))
-    assert(cosServed === rows(GraphLayout.searchAdc(layout, queries, 5, 32,
-      nProbes = 3, kReorder = 2, metric = Metric.Cosine)))
-    assert(cosServed === rows(GraphLayout.serveAdc(layout, queries, 5, 32,
-      nProbes = 3, kReorder = 2, metric = Metric.Cosine,
-      mode = GraphLayout.ServeMode.Cogroup)))
+    for ((q, np, metric, codec, filtered) <- Seq(
+        (q1, 1, Metric.L2, Codec.Pq(), false),
+        (queries, 4, Metric.L2, Codec.Pq(), false),
+        (queries, 3, Metric.L2, Codec.Pq(kReorder = 2, keep = keep), true),
+        (queries, 3, Metric.Cosine, Codec.Pq(kReorder = 2), false))) {
+      val served = GraphRefs.rows(GraphLayout.serve(layout, q, 5, 32, np,
+        metric, codec))
+      assert(served === GraphRefs.rows(GraphRefs.walk(layout, q, 5, 32, np,
+        metric, codec)), s"np=$np $metric ${codec.kReorder} $filtered")
+      if (filtered)
+        served.foreach(r => assert(r(2).asInstanceOf[Long] % 3 !== 1))
+    }
     // cosine with NO rerank cannot walk ADC — loud failure
     assertThrows[IllegalArgumentException] {
-      GraphLayout.serveAdc(layout, queries, 5, 32, nProbes = 3,
-        metric = Metric.Cosine)
+      GraphLayout.serve(layout, queries, 5, 32, 3, Metric.Cosine,
+        Codec.Pq())
     }
-
-    // an in-memory layout (no path) can only cogroup — Auto must not
-    // dispatch local into a sys.error
-    val mem = layout.copy(path = None)
-    assert(GraphLayout.serveAdcDecision(mem, q1, nProbes = 1)._1 ===
-      "cogroup")
-    assert(servedSel === rows(GraphLayout.serveAdc(mem, q1, 5, 32,
-      nProbes = 1)))
   }
-
   test("upsert ↔ local-serve contract: a serve planned pre-upsert fails " +
       "loudly once its probed partitions are overwritten — never a " +
       "silent mixed read; a reopened layout serves the merged corpus") {
@@ -798,8 +641,8 @@ class GraphLayoutSpec extends SparkSpec {
     // the probed set must include the shard the upsert will overwrite);
     // zipServe pins the shard file list at plan time — that is the
     // snapshot the contract is about
-    val planned = GraphLayout.searchRoutedLocal(layout, queries, 5, 32,
-      l1Probes = 2, nProbes = 4, Metric.L2)
+    val planned = GraphLayout.serve(layout, queries, 5, 32, nProbes = 4,
+      Metric.L2, Codec.Full(l1Probes = 2))
     val preRows = planned.select("query_id", "rnk", "neighbor_id")
       .orderBy("query_id", "rnk").collect().map(_.toSeq).toSeq
     assert(preRows.nonEmpty)
@@ -827,138 +670,16 @@ class GraphLayoutSpec extends SparkSpec {
         hasFnf(t.getCause))
     assert(hasFnf(e), s"expected FileNotFound-rooted failure, got $e")
 
-    // the REOPENED layout serves the merged corpus: local ≡ cogroup over
-    // the upserted store, added ids reachable, deleted ids gone
-    val local = GraphLayout.searchRoutedLocal(reopened, queries, 5, 32,
-        l1Probes = 2, nProbes = 4, Metric.L2)
-      .select("query_id", "rnk", "neighbor_id")
-      .orderBy("query_id", "rnk").collect().map(_.toSeq).toSeq
-    val cog = GraphLayout.searchRouted(reopened, queries, 5, 32,
-        l1Probes = 2, nProbes = 4, Metric.L2)
-      .select("query_id", "rnk", "neighbor_id")
-      .orderBy("query_id", "rnk").collect().map(_.toSeq).toSeq
-    assert(local === cog)
+    // the REOPENED layout serves the merged corpus: stored walk ≡
+    // in-memory walk over the upserted store, deleted ids gone
+    val local = GraphRefs.rows(GraphLayout.serve(reopened, queries, 5, 32,
+      nProbes = 4, Metric.L2, Codec.Full(l1Probes = 2)))
+    assert(local === GraphRefs.rows(GraphRefs.walk(reopened, queries, 5,
+      32, 4, Metric.L2, Codec.Full(l1Probes = 2))))
     val delSet = delIds.as[Long].collect().toSet
     local.foreach(r =>
       assert(!delSet.contains(r(2).asInstanceOf[Long]),
         s"deleted id served: $r"))
-  }
-
-  test("Auto dispatch deliberately IGNORES cache residency: a cached " +
-      "layout frame changes no family's decision (measured — the corpus " +
-      "exchange dominates, SCALE.md scale10m_serve_cached); the manual " +
-      "Cogroup dial serves the cached store with identical rows") {
-    val (data, cents, clustered, graph, p) = fixture()
-    val queries = Tables.embeddingQueries(spark, sfDir)
-    val b = graft.operators.BinaryQuant.train(data)
-    val path = "/tmp/graft_graphlayout_cached"
-    GraphLayout.write(clustered, graph, cents, path, pq = Some(p),
-      bin = Some(b))
-    val layout = GraphLayout.open(spark, path)
-    def rows(df: org.apache.spark.sql.DataFrame) = df
-      .select("query_id", "rnk", "neighbor_id")
-      .orderBy("query_id", "rnk").collect().map(_.toSeq).toSeq
-
-    // on-disk, nothing cached: all three families dispatch local
-    assert(GraphLayout.serveDecision(layout, queries, 2, Metric.L2)._1
-      === "local")
-    assert(GraphLayout.serveAdcDecision(layout, queries, 2)._1 === "local")
-    assert(GraphLayout.serveHammingDecision(layout, queries, 2)._1
-      === "local")
-    val base = rows(GraphLayout.serve(layout, queries, 5, 32, 2,
-      Metric.L2))
-
-    // cache every frame the cogroup paths would read. r13 first shipped
-    // the obvious rule (cached ⇒ cogroup), then MEASURED it at 10M:
-    // cogroup-on-cached 34.8 s / 4.68 GB exchange vs local-on-cached
-    // 4.2 s / 174 KB — the exchange dominates regardless of where the
-    // input rows live, so the rule was REVERSED and this spec pins the
-    // reversal: decisions are cache-blind, the manual dial remains.
-    layout.clustered.cache().count()
-    layout.graph.cache().count()
-    layout.codes.get.cache().count()
-    try {
-      assert(GraphLayout.serveDecision(layout, queries, 2, Metric.L2)._1
-        === "local", "cached frames must NOT flip the data family")
-      assert(GraphLayout.serveAdcDecision(layout, queries, 2)._1
-        === "local", "cached frames must NOT flip the ADC family")
-      assert(GraphLayout.serveHammingDecision(layout, queries, 2)._1
-        === "local", "cached frames must NOT flip the binary family")
-      // Auto (local) on the cached store: rows unchanged
-      assert(rows(GraphLayout.serve(layout, queries, 5, 32, 2,
-        Metric.L2)) === base)
-      // the manual dial serves THROUGH the cached frames, same rows
-      assert(rows(GraphLayout.serve(layout, queries, 5, 32, 2, Metric.L2,
-        mode = GraphLayout.ServeMode.Cogroup)) === base)
-      assert(rows(GraphLayout.serveAdc(layout, queries, 5, 32,
-        nProbes = 2, mode = GraphLayout.ServeMode.Cogroup)) ===
-        rows(GraphLayout.serveAdc(layout, queries, 5, 32, nProbes = 2)))
-    } finally {
-      layout.clustered.unpersist(true)
-      layout.graph.unpersist(true)
-      layout.codes.get.unpersist(true)
-    }
-    assert(GraphLayout.serveDecision(layout, queries, 2, Metric.L2)._1
-      === "local")
-  }
-
-  test("serveDecisionProbed hands serve() its probe map: one routing " +
-      "computation end-to-end, rows identical, and the map is HONORED " +
-      "(a truncated map serves only its shards)") {
-    val (_, cents, clustered, graph, p) = fixture()
-    val queries = Tables.embeddingQueries(spark, sfDir)
-    val path = "/tmp/graft_graphlayout_probed"
-    GraphLayout.write(clustered, graph, cents, path, pq = Some(p),
-      routingGroups = 2)
-    val layout = GraphLayout.open(spark, path)
-    def rows(df: org.apache.spark.sql.DataFrame) = df
-      .select("query_id", "rnk", "neighbor_id")
-      .orderBy("query_id", "rnk").collect().map(_.toSeq).toSeq
-
-    // inspect-then-serve: the decision's map, handed back, reproduces
-    // the self-probed serve bit-for-bit (routed AND flat)
-    val (m1, f1, pmR) = GraphLayout.serveDecisionProbed(layout, queries,
-      nProbes = 2, Metric.L2, l1Probes = 2)
-    assert(m1 === "local" && f1 > 0 && pmR.nonEmpty)
-    assert(rows(GraphLayout.serve(layout, queries, 5, 32, nProbes = 2,
-      Metric.L2, l1Probes = 2, prebuiltProbes = Some(pmR))) ===
-      rows(GraphLayout.serve(layout, queries, 5, 32, nProbes = 2,
-        Metric.L2, l1Probes = 2)))
-    val (_, _, pmF) = GraphLayout.serveDecisionProbed(layout, queries,
-      nProbes = 2, Metric.L2)
-    assert(rows(GraphLayout.serve(layout, queries, 5, 32, nProbes = 2,
-      Metric.L2, prebuiltProbes = Some(pmF))) ===
-      rows(GraphLayout.serve(layout, queries, 5, 32, nProbes = 2,
-        Metric.L2)))
-
-    // the map is authoritative, not advisory: serving a TRUNCATED map
-    // equals the manual path given the same truncation — proof the
-    // dispatched search probes exactly the decision's shards instead of
-    // recomputing its own routing
-    val keep = pmF.keySet.min
-    val pmCut = pmF.filter { case (cid, _) => cid == keep }
-    assert(rows(GraphLayout.serve(layout, queries, 5, 32, nProbes = 2,
-      Metric.L2, prebuiltProbes = Some(pmCut))) ===
-      rows(GraphLayout.searchLocal(layout, queries, 5, 32, nProbes = 2,
-        Metric.L2, prebuiltProbes = Some(pmCut))))
-
-    // the ADC and binary twins honor their maps the same way
-    val bPath = "/tmp/graft_graphlayout_probed_bin"
-    val (dataB, centsB, clusteredB, graphB, _) = fixture()
-    GraphLayout.write(clusteredB, graphB, centsB, bPath, pq = Some(p),
-      bin = Some(graft.operators.BinaryQuant.train(dataB)))
-    val lb = GraphLayout.open(spark, bPath)
-    val (_, _, pmA) = GraphLayout.serveAdcDecisionProbed(lb, queries,
-      nProbes = 2)
-    assert(rows(GraphLayout.serveAdc(lb, queries, 5, 32, nProbes = 2,
-      prebuiltProbes = Some(pmA))) ===
-      rows(GraphLayout.serveAdc(lb, queries, 5, 32, nProbes = 2)))
-    val (_, _, pmH) = GraphLayout.serveHammingDecisionProbed(lb, queries,
-      nProbes = 2)
-    assert(rows(GraphLayout.serveHamming(lb, queries, 5, 32, nProbes = 2,
-      kReorder = 2, prebuiltProbes = Some(pmH))) ===
-      rows(GraphLayout.serveHamming(lb, queries, 5, 32, nProbes = 2,
-        kReorder = 2)))
   }
 
   test("probe-pruned rerank: served rerank paths scan only probed data " +
@@ -977,11 +698,12 @@ class GraphLayoutSpec extends SparkSpec {
 
     // selective probes so the prune is a strict subset of the shards
     val q1 = queries.orderBy("query_id").limit(2)
-    val servedH = GraphLayout.serveHamming(layout, q1, 5, 1 << 12,
-      nProbes = 1, kReorder = 2)
-    // identical rows to the manual path that scans the full data frame
-    assert(rows(servedH) === rows(GraphLayout.searchHammingLocal(layout,
-      q1, 5, 1 << 12, nProbes = 1, kReorder = 2)))
+    val servedH = GraphLayout.serve(layout, q1, 5, 1 << 12, nProbes = 1,
+      Metric.L2, Codec.Binary(kReorder = 2))
+    // identical rows to the in-memory walk, which reranks against the
+    // full data frame
+    assert(rows(servedH) === rows(GraphRefs.walk(layout, q1, 5, 1 << 12, 1,
+      Metric.L2, Codec.Binary(kReorder = 2))))
     // the rerank's data scan is partition-pruned: the FileSourceScan
     // over the data dir carries a cluster_id MEMBERSHIP partition
     // filter (one probed shard folds isin to an equality; several stay
@@ -1001,11 +723,11 @@ class GraphLayoutSpec extends SparkSpec {
       "expected a cluster_id membership partition filter on the " +
         "Hamming rerank's data scan")
 
-    // the reranked ADC dispatcher prunes the same way, rows unchanged
-    val servedA = GraphLayout.serveAdc(layout, q1, 5, 1 << 12,
-      nProbes = 1, kReorder = 2)
-    assert(rows(servedA) === rows(GraphLayout.searchAdcLocal(layout, q1,
-      5, 1 << 12, nProbes = 1, kReorder = 2)))
+    // the reranked ADC serve prunes the same way, rows unchanged
+    val servedA = GraphLayout.serve(layout, q1, 5, 1 << 12, nProbes = 1,
+      Metric.L2, Codec.Pq(kReorder = 2))
+    assert(rows(servedA) === rows(GraphRefs.walk(layout, q1, 5, 1 << 12, 1,
+      Metric.L2, Codec.Pq(kReorder = 2))))
     assert(dataScanPruned(servedA),
       "expected a cluster_id membership partition filter on the ADC " +
         "rerank's data scan")
@@ -1019,10 +741,10 @@ class GraphLayoutSpec extends SparkSpec {
     val layout = GraphLayout.open(spark, path)
     assert(layout.pq.isEmpty && layout.codes.isEmpty)
     // full-precision serving still works
-    assert(GraphLayout.search(layout, queries, 10, 40, 2,
+    assert(GraphLayout.serve(layout, queries, 10, 40, 2,
       Metric.L2).count() > 0)
     assertThrows[RuntimeException] {
-      GraphLayout.searchAdc(layout, queries, 10, 40, 2)
+      GraphLayout.serve(layout, queries, 10, 40, 2, Metric.L2, Codec.Pq())
     }
   }
 
@@ -1040,25 +762,15 @@ class GraphLayoutSpec extends SparkSpec {
       .orderBy("query_id", "rnk").collect().map(_.toSeq).toSeq
     val layout = GraphLayout.open(spark, path)
 
-    // full-precision, flat probes
-    assert(rows(GraphLayout.serveCold(spark, path, queries, 10, 40, 2,
-        Metric.L2)) ===
-      rows(GraphLayout.serve(layout, queries, 10, 40, 2, Metric.L2)))
-    // full-precision, ROUTED probes: cold must follow the same
-    // hierarchical selection
-    assert(rows(GraphLayout.serveCold(spark, path, queries, 10, 40, 2,
-        Metric.L2, l1Probes = 1)) ===
-      rows(GraphLayout.serve(layout, queries, 10, 40, 2, Metric.L2,
-        l1Probes = 1)))
-    // ADC walk with exact rerank
-    assert(rows(GraphLayout.serveAdcCold(spark, path, queries, 10, 40, 2,
-        kReorder = 4)) ===
-      rows(GraphLayout.serveAdc(layout, queries, 10, 40, 2, kReorder = 4)))
-    // binary Hamming walk with exact rerank
-    assert(rows(GraphLayout.serveHammingCold(spark, path, queries, 10,
-        1 << 14, 2, kReorder = 4)) ===
-      rows(GraphLayout.serveHamming(layout, queries, 10, 1 << 14, 2,
-        kReorder = 4)))
+    // every codec: full-precision flat and ROUTED probes (cold must
+    // follow the same hierarchical selection), ADC pure and reranked,
+    // binary Hamming with exact rerank
+    for (codec <- Seq(Codec.Full(), Codec.Full(l1Probes = 1), Codec.Pq(),
+        Codec.Pq(kReorder = 4), Codec.Binary(kReorder = 4)))
+      assert(rows(GraphLayout.serveCold(spark, path, queries, 10, 40, 2,
+          Metric.L2, codec)) ===
+        rows(GraphLayout.serve(layout, queries, 10, 40, 2, Metric.L2,
+          codec)), s"$codec")
 
     // FileIndex regression pin (r16 verdict item 9): every big-dir scan
     // of the cold layout is rooted at probed `cluster_id=` dirs — never
@@ -1076,7 +788,7 @@ class GraphLayoutSpec extends SparkSpec {
         s"cold scan roots must be probed shard dirs, got $rs")
     }
 
-    // a marked store is refused by every cold twin exactly like open()
+    // a marked store is refused by the cold serve exactly like open()
     val lease = graft.operators.StoreMarker.begin(spark, path, "upsert",
       Seq(0L))
     lease.stop()

@@ -128,9 +128,9 @@ class HalfKnnSpec extends SparkSpec {
     // format mark (the 1/4-bytes claim)
     assert(HalfVecs.formatOf(lH.clustered.schema, "vec") ===
       Some(HalfVecs.F16))
-    val rH = GraphLayout.search(lH, q, 5, 16, 2, Metric.L2)
+    val rH = GraphLayout.serve(lH, q, 5, 16, 2, Metric.L2)
       .orderBy("query_id", "rnk").collect().map(_.toSeq).toSeq
-    val rD = GraphLayout.search(lD, q, 5, 16, 2, Metric.L2)
+    val rD = GraphLayout.serve(lD, q, 5, 16, 2, Metric.L2)
       .orderBy("query_id", "rnk").collect().map(_.toSeq).toSeq
     assert(rH === rD)
     assert(rH.nonEmpty)
@@ -191,7 +191,7 @@ class HalfKnnSpec extends SparkSpec {
     assert(HalfVecs.formatOf(up.clustered.schema, "vec") ===
       Some(HalfVecs.F16),
       s"upsert widened the store: ${up.clustered.schema("vec").dataType}")
-    val served = GraphLayout.search(up, q, 5, 16, 4, Metric.L2)
+    val served = GraphLayout.serve(up, q, 5, 16, 4, Metric.L2)
       .orderBy("query_id", "rnk").collect().map(_.toSeq).toSeq
     val merged = clH.join(delIds, Seq("id"), "left_anti").unionByName(added)
     val gFresh = Vamana.buildSharded(

@@ -178,17 +178,23 @@ class HierRoutingSpec extends SparkSpec {
       routingMetric = Metric.Cosine)
     val layout = GraphLayout.open(spark, path)
     assert(layout.routingMetricName === Some("cosine"))
+    // the warm and the cold serve refuse it alike, before any probing
     val e = intercept[IllegalArgumentException] {
-      GraphLayout.searchRouted(layout, q, 10, 32, 2, 8, Metric.L2)
+      GraphLayout.serve(layout, q, 10, 32, 8, Metric.L2,
+        GraphLayout.Codec.Full(l1Probes = 2))
     }
     assert(e.getMessage.contains("trained for metric"))
+    val eCold = intercept[IllegalArgumentException] {
+      GraphLayout.serveCold(spark, path, q, 10, 32, 8, Metric.L2,
+        GraphLayout.Codec.Full(l1Probes = 2))
+    }
+    assert(eCold.getMessage.contains("trained for metric"))
     // the matching metric serves, and exhaustive-l1 equals unrouted search
-    val routed = GraphLayout.searchRouted(layout, q, 10, 32,
-        l1Probes = 7, nProbes = 8, Metric.Cosine)
-      .orderBy("query_id", "rnk").collect().map(_.toSeq).toSeq
-    val flat = GraphLayout.search(layout, q, 10, 32, 8, Metric.Cosine)
-      .orderBy("query_id", "rnk").collect().map(_.toSeq).toSeq
-    assert(routed === flat)
+    def served(l: GraphLayout.Layout, l1Probes: Int) =
+      GraphLayout.serve(l, q, 10, 32, 8, Metric.Cosine,
+          GraphLayout.Codec.Full(l1Probes))
+        .orderBy("query_id", "rnk").collect().map(_.toSeq).toSeq
+    assert(served(layout, 7) === served(layout, 0))
     // upsert retrains with the STORED metric and keeps serving cosine
     val added = data.filter(col("id") % 100 === 9).limit(8)
       .select((col("id") + 7000L).as("id"), col("vec"),
@@ -198,16 +204,12 @@ class HierRoutingSpec extends SparkSpec {
     val up = GraphLayout.upsert(spark, path, added, delIds,
       BuildParams(maxDegree = 12, buildWindow = 24), Metric.Cosine)
     assert(up.routingMetricName === Some("cosine"))
-    val routedUp = GraphLayout.searchRouted(up, q, 10, 32,
-        l1Probes = 7, nProbes = 8, Metric.Cosine)
-      .orderBy("query_id", "rnk").collect().map(_.toSeq).toSeq
-    val flatUp = GraphLayout.search(up, q, 10, 32, 8, Metric.Cosine)
-      .orderBy("query_id", "rnk").collect().map(_.toSeq).toSeq
-    assert(routedUp === flatUp)
+    assert(served(up, 7) === served(up, 0))
   }
 
-  test("stored layout persists the routing level: searchRouted at " +
-      "exhaustive l1Probes equals search; missing routing fails loudly") {
+  test("stored layout persists the routing level: a routed serve at " +
+      "exhaustive l1Probes equals the flat serve; a routing-less layout " +
+      "serves flat") {
     import graft.operators.GraphLayout
     val data = Tables.embeddingVectors(spark, sfDir).select("id", "vec")
     val q = Tables.embeddingQueries(spark, sfDir)
@@ -221,20 +223,19 @@ class HierRoutingSpec extends SparkSpec {
     val layout = GraphLayout.open(spark, path)
     val (l1, groupOf) = layout.routing.get
     assert(l1.length === 7 && groupOf.keySet === cents.map(_._1).toSet)
-    val routed = GraphLayout.searchRouted(layout, q, 10, 32,
-        l1Probes = l1.length, nProbes = 8, Metric.L2)
-      .orderBy("query_id", "rnk").collect().map(_.toSeq).toSeq
-    val flat = GraphLayout.search(layout, q, 10, 32, 8, Metric.L2)
-      .orderBy("query_id", "rnk").collect().map(_.toSeq).toSeq
-    assert(routed === flat)
-    // a layout written without routing refuses searchRouted loudly
+    def served(l: GraphLayout.Layout, l1Probes: Int) =
+      GraphLayout.serve(l, q, 10, 32, 8, Metric.L2,
+          GraphLayout.Codec.Full(l1Probes))
+        .orderBy("query_id", "rnk").collect().map(_.toSeq).toSeq
+    val flat = served(layout, 0)
+    assert(served(layout, l1.length) === flat)
+    // a layout written without routing serves a routed request through
+    // the flat probe sweep (there is no level to route by)
     val pathNo = "/tmp/graft_hier_layout_none"
     GraphLayout.write(clustered, graph, cents, pathNo)
     val bare = GraphLayout.open(spark, pathNo)
-    val e = intercept[RuntimeException] {
-      GraphLayout.searchRouted(bare, q, 10, 32, 2, 8, Metric.L2)
-    }
-    assert(e.getMessage.contains("routingGroups"))
+    assert(bare.routing.isEmpty)
+    assert(served(bare, 2) === flat)
     // a REWRITE without routingGroups ignores the stale routing dirs
     // (sidecar-gated like pq/bin) instead of silently serving them
     GraphLayout.write(clustered, graph, cents, path)
@@ -254,12 +255,7 @@ class HierRoutingSpec extends SparkSpec {
     val (_, g2) = up.routing.getOrElse(fail("routing lost by upsert"))
     assert(g2.keySet === up.centroids.map(_._1).toSet,
       "retrained routing does not cover the post-upsert centroids")
-    val routedUp = GraphLayout.searchRouted(up, q, 10, 32,
-        l1Probes = 7, nProbes = 8, Metric.L2)
-      .orderBy("query_id", "rnk").collect().map(_.toSeq).toSeq
-    val flatUp = GraphLayout.search(up, q, 10, 32, 8, Metric.L2)
-      .orderBy("query_id", "rnk").collect().map(_.toSeq).toSeq
-    assert(routedUp === flatUp)
+    assert(served(up, 7) === served(up, 0))
   }
 
   test("searchRoutedLocal (zero-corpus-shuffle serve) ≡ searchRouted " +
@@ -297,12 +293,12 @@ class HierRoutingSpec extends SparkSpec {
       val layout = GraphLayout.open(s, path)
       val meter = new graft.ShuffleProbe(s)
       try {
-        val local = GraphLayout.searchRoutedLocal(layout, q, 10, 32,
-            l1Probes = 3, nProbes = 8, Metric.L2)
+        val local = GraphLayout.serve(layout, q, 10, 32, nProbes = 8,
+            Metric.L2, GraphLayout.Codec.Full(l1Probes = 3))
           .orderBy("query_id", "rnk").collect().map(_.toSeq).toSeq
         val localShuffle = meter.readBytes()
-        val cogrouped = GraphLayout.searchRouted(layout, q, 10, 32,
-            l1Probes = 3, nProbes = 8, Metric.L2)
+        val cogrouped = graft.GraphRefs.walk(layout, q, 10, 32, 8,
+            Metric.L2, GraphLayout.Codec.Full(l1Probes = 3))
           .orderBy("query_id", "rnk").collect().map(_.toSeq).toSeq
         val cogroupShuffle = meter.readBytes() - localShuffle
         assert(local === cogrouped, tag)
@@ -326,27 +322,20 @@ class HierRoutingSpec extends SparkSpec {
       s"local-serve shuffle scales with residency width: $localShuffles")
     assert(localShuffles("f16") <= 2 * localShuffles("u8"),
       s"local-serve shuffle scales with residency width: $localShuffles")
-    // a layout not opened from disk refuses the local path loudly
-    val mem = GraphLayout.open(s, "/tmp/graft_local_serve_f64")
-      .copy(path = None)
-    val e = intercept[RuntimeException] {
-      GraphLayout.searchRoutedLocal(mem, q, 10, 32, 3, 8, Metric.L2)
-    }
-    assert(e.getMessage.contains("open"))
     // traverse-but-filter carries into the local path: at exhaustive
     // l1Probes it must equal searchShardedFiltered over the reopened
     // frames (filtered rows walked through, never emitted)
     val layoutF = GraphLayout.open(s, "/tmp/graft_local_serve_f64")
     val pred = col("id") % 3 =!= 1
-    val localF = GraphLayout.searchRoutedLocal(layoutF, q, 10, 32,
-        l1Probes = 7, nProbes = 8, Metric.L2, keep = pred)
+    val localF = GraphLayout.serve(layoutF, q, 10, 32, nProbes = 8,
+        Metric.L2, GraphLayout.Codec.Full(l1Probes = 7, keep = pred))
       .orderBy("query_id", "rnk").collect().map(_.toSeq).toSeq
     val cogroupF = Vamana.searchShardedFiltered(q, layoutF.clustered,
         layoutF.graph, layoutF.centroids, 10, 32, 8, Metric.L2, pred)
       .orderBy("query_id", "rnk").collect().map(_.toSeq).toSeq
     assert(localF === cogroupF)
-    val unfiltered = GraphLayout.searchRoutedLocal(layoutF, q, 10, 32,
-        7, 8, Metric.L2)
+    val unfiltered = GraphLayout.serve(layoutF, q, 10, 32, nProbes = 8,
+        Metric.L2, GraphLayout.Codec.Full(l1Probes = 7))
       .orderBy("query_id", "rnk").collect().map(_.toSeq).toSeq
     assert(localF.nonEmpty && localF != unfiltered,
       "the predicate must actually change the result set")

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.core.Metric
 import graft.operators.{BinaryQuant, KMeans, Pq, Vamana}
+import graft.operators.GraphLayout.Codec
 import graft.operators.VamanaKernel.BuildParams
 
 /** Randomized property coverage for the round-6 serving family, beyond
@@ -205,30 +206,24 @@ class ServingPropSpec extends SparkSpec {
       def rowsOf(df: org.apache.spark.sql.DataFrame) = df
         .select("query_id", "rnk", "neighbor_id")
         .orderBy("query_id", "rnk").collect().map(_.toSeq).toSeq
-      // pure ADC, full window + all probes: the entry point must land on
-      // brute-force flat ADC (same contract as the cogroup walk)
-      val served = rowsOf(graft.operators.GraphLayout.serveAdc(layout,
-        queries, 7, 1 << 12, nProbes = 3))
-      assert(served === rowsOf(graft.operators.GraphLayout.searchAdcLocal(
-        layout, queries, 7, 1 << 12, nProbes = 3)), s"seed $seed local")
-      assert(served === rowsOf(graft.operators.GraphLayout.searchAdc(
-        layout, queries, 7, 1 << 12, nProbes = 3)), s"seed $seed cogroup")
-      assert(served === rowsOf(graft.operators.GraphLayout.serveAdc(layout,
-        queries, 7, 1 << 12, nProbes = 3, localMaxFraction = 0.0)),
-        s"seed $seed dialed")
+      // pure ADC, full window + all probes: the stored walk must land on
+      // brute-force flat ADC (same contract as the in-memory walk)
+      val served = rowsOf(graft.operators.GraphLayout.serve(layout,
+        queries, 7, 1 << 12, nProbes = 3, Metric.L2, Codec.Pq()))
+      assert(served === rowsOf(GraphRefs.walk(layout, queries, 7, 1 << 12,
+        3, Metric.L2, Codec.Pq())), s"seed $seed in-memory")
       assert(served.map(r => (r(0), r(1), r(2))).toSet ===
         Pq.searchAdc(queries, Pq.encode(data, p), p, 7)
           .select("query_id", "rnk", "neighbor_id")
           .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
           .toSet, s"seed $seed brute")
-      // reranked + keep through the entry point ≡ the manual path, and
+      // reranked + keep through the serve ≡ the in-memory walk, and
       // excluded ids never surface
-      val keep = col("id") % 2 === 0
-      val kept = rowsOf(graft.operators.GraphLayout.serveAdc(layout,
-        queries, 7, 1 << 12, nProbes = 3, kReorder = 2, keep = keep))
-      assert(kept === rowsOf(graft.operators.GraphLayout.searchAdc(layout,
-        queries, 7, 1 << 12, nProbes = 3, kReorder = 2, keep = keep)),
-        s"seed $seed keep parity")
+      val keepC = Codec.Pq(kReorder = 2, keep = col("id") % 2 === 0)
+      val kept = rowsOf(graft.operators.GraphLayout.serve(layout,
+        queries, 7, 1 << 12, nProbes = 3, Metric.L2, keepC))
+      assert(kept === rowsOf(GraphRefs.walk(layout, queries, 7, 1 << 12, 3,
+        Metric.L2, keepC)), s"seed $seed keep parity")
       kept.foreach(r => assert(r(2).asInstanceOf[Long] % 2 === 0,
         s"seed $seed emitted an excluded id"))
     }
@@ -258,8 +253,9 @@ class ServingPropSpec extends SparkSpec {
       // kReorder·k ≥ n + full window + all probes ⇒ the Hamming walk
       // shortlists EVERY row and the exact rerank is exact kNN — the
       // stored binary path's analog of the full-window contract
-      val exhaustive = graft.operators.GraphLayout.searchHamming(layout,
-          queries, k, 1 << 12, nProbes = 3, kReorder = (n / k) + 1)
+      val exhaustive = graft.operators.GraphLayout.serve(layout,
+          queries, k, 1 << 12, nProbes = 3, Metric.L2,
+          Codec.Binary(kReorder = (n / k) + 1))
         .select("query_id", "rnk", "neighbor_id")
         .orderBy("query_id", "rnk").collect().map(_.toSeq).toSeq
       val exact = graft.operators.FlatKnn.search(queries, data, k,
@@ -268,8 +264,8 @@ class ServingPropSpec extends SparkSpec {
         .orderBy("query_id", "rnk").collect().map(_.toSeq).toSeq
       assert(exhaustive === exact, s"seed $seed")
       // bounded width still yields k ranked rows per query
-      val bounded = graft.operators.GraphLayout.searchHamming(layout,
-        queries, k, 1 << 12, nProbes = 3, kReorder = 2)
+      val bounded = graft.operators.GraphLayout.serve(layout,
+        queries, k, 1 << 12, nProbes = 3, Metric.L2, Codec.Binary(2))
       assert(bounded.groupBy("query_id").count().collect()
         .forall(_.getLong(1) === k), s"seed $seed bounded")
     }
@@ -297,17 +293,11 @@ class ServingPropSpec extends SparkSpec {
         .select("query_id", "rnk", "neighbor_id")
         .orderBy("query_id", "rnk").collect().map(_.toSeq).toSeq
       for (np <- Seq(1, 3)) {
-        val served = rowsOf(graft.operators.GraphLayout.serveHamming(
-          layout, queries, 6, 1 << 12, nProbes = np, kReorder = 3))
-        assert(served === rowsOf(graft.operators.GraphLayout
-            .searchHammingLocal(layout, queries, 6, 1 << 12, nProbes = np,
-              kReorder = 3)), s"seed $seed np $np local")
-        assert(served === rowsOf(graft.operators.GraphLayout
-            .searchHamming(layout, queries, 6, 1 << 12, nProbes = np,
-              kReorder = 3)), s"seed $seed np $np cogroup")
-        assert(served === rowsOf(graft.operators.GraphLayout.serveHamming(
-          layout, queries, 6, 1 << 12, nProbes = np, kReorder = 3,
-          localMaxFraction = 0.0)), s"seed $seed np $np dialed")
+        val served = rowsOf(graft.operators.GraphLayout.serve(layout,
+          queries, 6, 1 << 12, nProbes = np, Metric.L2, Codec.Binary(3)))
+        assert(served.nonEmpty)
+        assert(served === rowsOf(GraphRefs.walk(layout, queries, 6, 1 << 12,
+          np, Metric.L2, Codec.Binary(3))), s"seed $seed np $np")
       }
     }
   }
@@ -331,17 +321,20 @@ class ServingPropSpec extends SparkSpec {
       .map { case (id, v) => (id + 400, v.map(1.0 - _)) }
       .toDF("query_id", "qvec")
     val none = queries.limit(0)
-    // empty batches: every dispatcher returns empty, both dispatch dials
-    for (lmf <- Seq(1.0, 0.0)) {
-      assert(graft.operators.GraphLayout.serve(layout, none, 5, 1 << 12,
-        nProbes = 2, Metric.L2, l1Probes = 1,
-        localMaxFraction = lmf).count() === 0, s"serve lmf=$lmf")
-      assert(graft.operators.GraphLayout.serveAdc(layout, none, 5,
-        1 << 12, nProbes = 2, localMaxFraction = lmf).count() === 0,
-        s"serveAdc lmf=$lmf")
-      assert(graft.operators.GraphLayout.serveHamming(layout, none, 5,
-        1 << 12, nProbes = 2, kReorder = 2,
-        localMaxFraction = lmf).count() === 0, s"serveHamming lmf=$lmf")
+    def cols(df: org.apache.spark.sql.DataFrame) =
+      df.schema.map(f => f.name -> f.dataType)
+    // empty batches: every codec returns the same empty result warm and
+    // cold (serveCold ≡ serve(open(path)) holds for empty batches too),
+    // at both routing dials
+    for (codec <- Seq(Codec.Full(), Codec.Full(l1Probes = 1), Codec.Pq(),
+        Codec.Pq(kReorder = 2), Codec.Binary(kReorder = 2))) {
+      val warm = graft.operators.GraphLayout.serve(layout, none, 5,
+        1 << 12, nProbes = 2, Metric.L2, codec)
+      val cold = graft.operators.GraphLayout.serveCold(spark, path, none,
+        5, 1 << 12, nProbes = 2, Metric.L2, codec)
+      assert(warm.count() === 0, s"warm $codec")
+      assert(cold.count() === 0, s"cold $codec")
+      assert(cols(cold) === cols(warm), s"cold columns $codec")
     }
     // k > n: exhaustive probes + full window return all n rows ranked —
     // per query — through every dispatcher (the walk emits min(k,
@@ -350,14 +343,15 @@ class ServingPropSpec extends SparkSpec {
     def counts(df: org.apache.spark.sql.DataFrame): Seq[Long] =
       df.groupBy("query_id").count().collect().map(_.getLong(1)).toSeq
     counts(graft.operators.GraphLayout.serve(layout, queries, n + 50,
-      1 << 12, nProbes = 2, Metric.L2, l1Probes = 2))
+      1 << 12, nProbes = 2, Metric.L2, Codec.Full(l1Probes = 2)))
       .foreach(c => assert(c === n, "serve k>n"))
-    counts(graft.operators.GraphLayout.serveAdc(layout, queries, n + 50,
-      1 << 12, nProbes = 2)).foreach(c => assert(c === n, "serveAdc k>n"))
+    counts(graft.operators.GraphLayout.serve(layout, queries, n + 50,
+      1 << 12, nProbes = 2, Metric.L2, Codec.Pq()))
+      .foreach(c => assert(c === n, "Pq k>n"))
     // the reranked paths cap at the walk's candidate count too
-    counts(graft.operators.GraphLayout.serveHamming(layout, queries,
-      n + 50, 1 << 12, nProbes = 2, kReorder = 1))
-      .foreach(c => assert(c === n, "serveHamming k>n"))
+    counts(graft.operators.GraphLayout.serve(layout, queries, n + 50,
+      1 << 12, nProbes = 2, Metric.L2, Codec.Binary(kReorder = 1)))
+      .foreach(c => assert(c === n, "Binary k>n"))
   }
 
   test("degenerate shapes through IndexLayout.serve: empty batches and " +
@@ -382,10 +376,18 @@ class ServingPropSpec extends SparkSpec {
       val layout = IndexLayout.open(spark, path)
       val l1 = layout.routing.map(_._1.size).getOrElse(0)
       assert(l1 > 0, s"$tag: routing level not persisted")
-      // empty batches at the flat AND routed dials: empty results
+      // empty batches at the flat AND routed dials: empty results, and
+      // the cold serve returns the same empty result
       for (l1p <- Seq(0, l1)) {
-        assert(IndexLayout.serve(layout, none, 5, nProbes = 2, Metric.L2,
-          l1Probes = l1p).count() === 0, s"$tag empty l1Probes=$l1p")
+        val warm = IndexLayout.serve(layout, none, 5, nProbes = 2, Metric.L2,
+          l1Probes = l1p)
+        val cold = IndexLayout.serveCold(spark, path, none, 5, nProbes = 2,
+          Metric.L2, l1Probes = l1p)
+        assert(warm.count() === 0, s"$tag empty l1Probes=$l1p")
+        assert(cold.count() === 0, s"$tag cold empty l1Probes=$l1p")
+        assert(cold.schema.map(f => f.name -> f.dataType) ===
+          warm.schema.map(f => f.name -> f.dataType),
+          s"$tag cold columns l1Probes=$l1p")
       }
       // k > n at exhaustive probes: all n rows ranked per query, both
       // dials, and routed ≡ flat bit-for-bit at exhaustive level-1
@@ -479,22 +481,14 @@ class ServingPropSpec extends SparkSpec {
       def rowsOf(df: org.apache.spark.sql.DataFrame) = df
         .select("query_id", "rnk", "neighbor_id")
         .orderBy("query_id", "rnk").collect().map(_.toSeq).toSeq
-      val manualLocal = rowsOf(graft.operators.GraphLayout
-        .searchRoutedLocal(layout, queries, 5, 1 << 12, l1Probes = 2,
-          nProbes = 4, Metric.L2, keep = keep))
+      val manualLocal = rowsOf(graft.operators.GraphLayout.serve(layout,
+        queries, 5, 1 << 12, nProbes = 4, Metric.L2,
+        Codec.Full(l1Probes = 2, keep = keep)))
       val manualCogroup = rowsOf(Vamana.searchShardedHierarchical(queries,
         layout.clustered, layout.graph, layout.centroids,
         layout.routing.get._1, layout.routing.get._2, 5, 1 << 12,
         l1Probes = 2, nProbes = 4, Metric.L2, keep = keep))
-      assert(manualLocal === manualCogroup, s"$seed/$res manual parity")
-      // default threshold (1.0) dispatches local; dialed to 0 forces
-      // the cogroup outcome via Auto — both ≡ the manual rows
-      assert(rowsOf(graft.operators.GraphLayout.serve(layout, queries, 5,
-        1 << 12, nProbes = 4, Metric.L2, l1Probes = 2, keep = keep)) ===
-        manualLocal, s"$seed/$res auto-local")
-      assert(rowsOf(graft.operators.GraphLayout.serve(layout, queries, 5,
-        1 << 12, nProbes = 4, Metric.L2, l1Probes = 2, keep = keep,
-        localMaxFraction = 0.0)) === manualLocal, s"$seed/$res auto-cogroup")
+      assert(manualLocal === manualCogroup, s"$seed/$res parity")
       manualLocal.foreach(r =>
         assert(r(2).asInstanceOf[Long] % 3 !== 1, s"$seed/$res keep"))
       assert(manualLocal.nonEmpty)

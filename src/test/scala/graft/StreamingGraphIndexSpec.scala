@@ -26,7 +26,7 @@ class StreamingGraphIndexSpec extends SparkSpec {
 
   private def servedRows(path: String) = {
     val layout = GraphLayout.open(spark, path)
-    GraphLayout.search(layout, Tables.embeddingQueries(spark, sfDir), 10,
+    GraphLayout.serve(layout, Tables.embeddingQueries(spark, sfDir), 10,
         searchWindow = 1 << 14, nProbes = layout.centroids.size, Metric.L2)
       .orderBy("query_id", "rnk").collect().map(_.toSeq).toSeq
   }

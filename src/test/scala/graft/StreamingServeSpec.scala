@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import graft.core.{Metric, Tables}
+import graft.operators.GraphLayout.Codec
 import graft.operators.{BinaryQuant, GraphLayout, IndexLayout, KMeans, Pq,
   Vamana}
 import graft.operators.VamanaKernel.BuildParams
@@ -79,10 +80,10 @@ class StreamingServeSpec extends SparkSpec {
     val out = "/tmp/graft_streaming_serve_graph"
     val res = streamed(queryRows, 3, out)(st =>
       StreamingServe.attachGraph(st, layout, out, ckpt(), K, W,
-        nProbes = 2, Metric.L2, l1Probes = 1))
+        nProbes = 2, Metric.L2, Codec.Full(l1Probes = 1)))
     val batch = GraphLayout.serve(layout,
       Tables.embeddingQueries(spark, sfDir), K, W, nProbes = 2, Metric.L2,
-      l1Probes = 1)
+      Codec.Full(l1Probes = 1))
     assert(tuples(res) === tuples(batch))
     assert(tuples(res).nonEmpty)
     // provenance: >1 distinct batch_id partitions actually materialized
@@ -92,24 +93,26 @@ class StreamingServeSpec extends SparkSpec {
 
   test("attachAdc (kReorder + keep) and attachHamming: stream ≡ batch " +
       "through the compressed and binary dispatchers") {
+    // (the name predates the one graph attach: both codecs stream
+    // through attachGraph(…, codec))
     val keep = col("id") % 3 =!= 1
     val outA = "/tmp/graft_streaming_serve_adc"
     val resA = streamed(queryRows, 2, outA)(st =>
-      StreamingServe.attachAdc(st, layout, outA, ckpt(), K, W,
-        nProbes = 2, kReorder = 2, keep = keep))
-    assert(tuples(resA) === tuples(GraphLayout.serveAdc(layout,
-      Tables.embeddingQueries(spark, sfDir), K, W, nProbes = 2,
-      kReorder = 2, keep = keep)))
+      StreamingServe.attachGraph(st, layout, outA, ckpt(), K, W,
+        nProbes = 2, Metric.L2, Codec.Pq(kReorder = 2, keep = keep)))
+    assert(tuples(resA) === tuples(GraphLayout.serve(layout,
+      Tables.embeddingQueries(spark, sfDir), K, W, nProbes = 2, Metric.L2,
+      Codec.Pq(kReorder = 2, keep = keep))))
     tuples(resA).foreach(r =>
       assert(r(2).asInstanceOf[Long] % 3 !== 1, "excluded id emitted"))
 
     val outH = "/tmp/graft_streaming_serve_hamming"
     val resH = streamed(queryRows, 2, outH)(st =>
-      StreamingServe.attachHamming(st, layout, outH, ckpt(), K, W,
-        nProbes = 2, kReorder = 2))
-    assert(tuples(resH) === tuples(GraphLayout.serveHamming(layout,
-      Tables.embeddingQueries(spark, sfDir), K, W, nProbes = 2,
-      kReorder = 2)))
+      StreamingServe.attachGraph(st, layout, outH, ckpt(), K, W,
+        nProbes = 2, Metric.L2, Codec.Binary(kReorder = 2)))
+    assert(tuples(resH) === tuples(GraphLayout.serve(layout,
+      Tables.embeddingQueries(spark, sfDir), K, W, nProbes = 2, Metric.L2,
+      Codec.Binary(kReorder = 2))))
   }
 
   test("attachIndex: stream ≡ batch through IndexLayout.serve at both " +
@@ -159,11 +162,12 @@ class StreamingServeSpec extends SparkSpec {
     val qs = queryRows
     assert(qs.length > 3, "need an oversized batch for the bound to bite")
     val res = streamed(qs, 1, out)(st =>
-      StreamingServe.attachHamming(st, layout, out, ckpt(), K, W,
-        nProbes = 2, kReorder = 2, maxQueriesPerBatch = 3))
-    assert(tuples(res) === tuples(GraphLayout.serveHamming(layout,
-      Tables.embeddingQueries(spark, sfDir), K, W, nProbes = 2,
-      kReorder = 2)))
+      StreamingServe.attachGraph(st, layout, out, ckpt(), K, W,
+        nProbes = 2, Metric.L2, Codec.Binary(kReorder = 2),
+        maxQueriesPerBatch = 3))
+    assert(tuples(res) === tuples(GraphLayout.serve(layout,
+      Tables.embeddingQueries(spark, sfDir), K, W, nProbes = 2, Metric.L2,
+      Codec.Binary(kReorder = 2))))
     // one batch → exactly one batch_id partition despite multiple slices
     assert(spark.read.parquet(out).select("batch_id").distinct().count()
       === 1L)
@@ -188,7 +192,7 @@ class StreamingServeSpec extends SparkSpec {
       Metric.L2)))
     val d = StreamingServe.decisions(spark, log).collect()
     assert(d.nonEmpty)
-    // the layout is stored on disk → Auto dispatches local for every batch
+    // one stored walk: every row records mode local
     assert(d.forall(_.getAs[String]("mode") == "local"))
     assert(d.forall(_.getAs[Int]("probed_shards") >= 1))
     assert(d.map(_.getAs[Long]("batch_id")).distinct.length === d.length,
@@ -200,15 +204,19 @@ class StreamingServeSpec extends SparkSpec {
       assert(rows.map(_.getAs[Double]("serve_ms")).distinct.length === 1,
         "slices of one batch must share the batch's serve wall")
     }
-    // forced mode is what the log records (override honored in provenance)
+    // every codec logs through the same probe-once seam: a Binary
+    // stream's row records the Hamming probe map its walk read
     val res2 = streamed(queryRows, 1, out)(st =>
       StreamingServe.attachGraph(st, layout, out, ckpt(), K, W,
-        nProbes = 2, Metric.L2, mode = GraphLayout.ServeMode.Cogroup,
+        nProbes = 2, Metric.L2, Codec.Binary(kReorder = 2),
         decisionLog = Some(log)))
     assert(tuples(res2).nonEmpty)
-    val modes = StreamingServe.decisions(spark, log)
-      .filter(col("batch_id") === 0L).collect().map(_.getAs[String]("mode"))
-    assert(modes.nonEmpty && modes.forall(_ == "cogroup"))
+    val probed = StreamingServe.decisions(spark, log)
+      .filter(col("batch_id") === 0L).collect()
+      .map(_.getAs[Int]("probed_shards")).toSeq
+    assert(probed === Seq(GraphLayout.probes(layout,
+      Tables.embeddingQueries(spark, sfDir), 2, Metric.L2,
+      Codec.Binary(kReorder = 2)).size))
     // the capacity-planning aggregate over the same log: totals line up
     // with the raw rows, and an unwritten log aggregates to zero rows
     val stats = StreamingServe.decisionStats(spark, log).collect()
@@ -304,12 +312,13 @@ class StreamingServeSpec extends SparkSpec {
     val qs = queryRows
     assert(qs.length > 3, "need a multi-slice batch")
     val res = streamed(qs, 1, out)(st =>
-      StreamingServe.attachHamming(
+      StreamingServe.attachGraph(
         st.withColumn("qvec", counting(col("qvec"))), layout, out, ckpt(),
-        K, W, nProbes = 2, kReorder = 2, maxQueriesPerBatch = 3))
-    assert(tuples(res) === tuples(GraphLayout.serveHamming(layout,
-      Tables.embeddingQueries(spark, sfDir), K, W, nProbes = 2,
-      kReorder = 2)))
+        K, W, nProbes = 2, Metric.L2, Codec.Binary(kReorder = 2),
+        maxQueriesPerBatch = 3))
+    assert(tuples(res) === tuples(GraphLayout.serve(layout,
+      Tables.embeddingQueries(spark, sfDir), K, W, nProbes = 2, Metric.L2,
+      Codec.Binary(kReorder = 2))))
     // ≤ 2 passes over the source plan: the distinct-ids pass plus the
     // eager localCheckpoint; every slice (probe collect + rerank join +
     // sink write) then reads the checkpoint. Without the checkpoint the
