@@ -24,8 +24,9 @@ import graft.sources.SyntheticData
   *      suite's standard density at 64-d (0.5 bit/dim), dims/4 is TRUE
   *      BIT PARITY with the 1-bit/dim binary codes) AND v2 bincodes;
   *      per-dir bytes,
-  *   4. `GraphLayout.serve` with the Pq and Binary codecs at kReorder 0
-  *      and 4: wall, shuffle,
+  *   4. `GraphLayout.serve` with the Pq codec at kReorder 0 and 4 and
+  *      the Binary codec at kReorder 4 (Binary has no rerank-free mode):
+  *      wall, shuffle,
   *      probed code bytes (the serving I/O ∝ probes law, per codec),
   *      recall@10 vs the exact truth.
   *
@@ -212,28 +213,27 @@ object ScaleHighDim {
           s""""probed_shards":${pmAdc.size},""" +
           s""""shuffle_read_bytes":$sr,"shuffle_write_bytes":$sw}""")
       }
-      // binary Hamming walk (bincodes ⋈ graph), pure and reranked
+      // binary Hamming walk (bincodes ⋈ graph), reranked exactly
       val pmH = GraphLayout.probes(layout, queries, nProbes, Metric.L2,
-        GraphLayout.Codec.Binary(0))
+        GraphLayout.Codec.Binary(1))
       val hProbed = probedBytes(pmH.keySet, "bincodes")
-      for (kr <- Seq(0, 4)) {
-        meter.delta()
-        val (res, tH) = time {
-          val r = GraphLayout.serve(layout, queries, k, searchWindow = 64,
-            nProbes = nProbes, Metric.L2, GraphLayout.Codec.Binary(kr))
-            .cache()
-          r.count(); r
-        }
-        val (sr, sw) = meter.delta()
-        val rec = recallOf(res)
-        res.unpersist()
-        println(s"""{"experiment":"scale_hd_serve_hamming","n":$n,""" +
-          s""""dims":$dims,"aniso":$aniso,"regime":"$regime","n_probes":$nProbes,""" +
-          s""""k_reorder":$kr,"serve_sec":$tH,""" +
-          s""""recall_at_$k":$rec,"probed_code_bytes":$hProbed,""" +
-          s""""probed_shards":${pmH.size},""" +
-          s""""shuffle_read_bytes":$sr,"shuffle_write_bytes":$sw}""")
+      val kr = 4
+      meter.delta()
+      val (res, tH) = time {
+        val r = GraphLayout.serve(layout, queries, k, searchWindow = 64,
+          nProbes = nProbes, Metric.L2, GraphLayout.Codec.Binary(kr))
+          .cache()
+        r.count(); r
       }
+      val (sr, sw) = meter.delta()
+      val rec = recallOf(res)
+      res.unpersist()
+      println(s"""{"experiment":"scale_hd_serve_hamming","n":$n,""" +
+        s""""dims":$dims,"aniso":$aniso,"regime":"$regime","n_probes":$nProbes,""" +
+        s""""k_reorder":$kr,"serve_sec":$tH,""" +
+        s""""recall_at_$k":$rec,"probed_code_bytes":$hProbed,""" +
+        s""""probed_shards":${pmH.size},""" +
+        s""""shuffle_read_bytes":$sr,"shuffle_write_bytes":$sw}""")
     }
     rmr(storePath)
     spark.stop()

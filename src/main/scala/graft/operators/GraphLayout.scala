@@ -31,7 +31,10 @@ import graft.core.Metric
 object GraphLayout {
 
   /** An opened store: its frames, centroids and sidecar params, and the
-    * store directory `path` whose `cluster_id=` dirs [[serve]] walks. */
+    * store directory `path` it was read from. [[serve]] walks the files
+    * the frames were opened over (their file index), so a layout is a
+    * snapshot of the store: after an [[upsert]], serve the layout it
+    * returns (or a fresh [[open]]). */
   final case class Layout(clustered: DataFrame, graph: DataFrame,
                           codes: Option[DataFrame],
                           centroids: Seq[(Long, Seq[Double])],
@@ -345,7 +348,8 @@ object GraphLayout {
     *   - [[Codec.Binary]] walks the sign-bit `bincodes` + `graph` dirs by
     *     Hamming (8 bytes of walk state per row at 64 dims, the smallest
     *     serving read), probing by Hamming to the word-encoded centroids,
-    *     then reranks `kReorder·k` candidates exactly.
+    *     then reranks `kReorder·k` candidates exactly (`kReorder ≥ 1`:
+    *     there are no Hamming ranks to return without the rerank).
     *
     * In every case the serve's `metric` is the metric results are ranked
     * by. */
@@ -355,7 +359,11 @@ object GraphLayout {
       extends Codec
     final case class Pq(kReorder: Int = 0, keep: Column = lit(true))
       extends Codec
-    final case class Binary(kReorder: Int) extends Codec
+    final case class Binary(kReorder: Int) extends Codec {
+      require(kReorder >= 1,
+        s"Codec.Binary reranks kReorder·k Hamming candidates exactly; " +
+          s"kReorder must be ≥ 1, got $kReorder")
+    }
   }
 
   /** Probed shard id → the (query_id, query vector) pairs probing it. */
@@ -366,12 +374,25 @@ object GraphLayout {
     * the batch is collected and probe-scored ONCE on the driver by the
     * codec's routing kernel ([[probeMap]]), then each probed shard's two
     * `cluster_id=` dirs (codec side + graph) are read straight off their
-    * parquet files into one walk task per shard. Corpus rows never enter
-    * a shuffle: I/O is the probed dirs' bytes and the only exchange is
-    * the |Q|·nProbes·k top-k partials (plus the candidate rows of `data`
-    * when a codec reranks). Rows are bit-identical to the in-memory
-    * Vamana walks over the layout's frames (`searchSharded*`,
-    * GraphLayoutSpec / HierRoutingSpec / ServingPropSpec). */
+    * parquet files into one walk task per shard — ONE Spark job, whose
+    * |Q|·nProbes·k top-k partials the driver merges as its tasks finish.
+    * Corpus rows never enter a shuffle and nothing is exchanged: I/O is
+    * the probed dirs' bytes (plus the candidate rows of `data` when a
+    * codec reranks, whose join is the only further work). Rows are
+    * bit-identical to the in-memory Vamana walks over the layout's
+    * frames (`searchSharded*`, GraphLayoutSpec / HierRoutingSpec /
+    * ServingPropSpec).
+    *
+    * Two things follow from the one job:
+    *   - The walk runs when `serve` is called, as the probe map already
+    *     did; the returned frame is a local relation of the rows
+    *     (query_id, rnk, neighbor_id, dist), not a plan that reads the
+    *     store later.
+    *   - The walk reads the files `layout` was opened over — its frames'
+    *     own file index, so no listing runs per call. A layout is a
+    *     snapshot: after an [[upsert]], serve the layout it returns (or a
+    *     fresh [[open]]); the superseded layout fails loudly on the part
+    *     files the upsert replaced rather than mix two versions. */
   def serve(layout: Layout, queries: DataFrame, k: Int, searchWindow: Int,
             nProbes: Int, metric: Metric,
             codec: Codec = Codec.Full()): DataFrame =
@@ -386,9 +407,11 @@ object GraphLayout {
     * serve pays per call. This reads the sidecar, centroids and routing
     * (none of it scales with shard count), probes with the same
     * [[probeMap]] the warm serve uses, and builds the layout over ONLY
-    * the probed `cluster_id=` dirs — listing cost ∝ probes. The marker
-    * guard still runs: a crashed store is refused, not partially
-    * served. */
+    * the probed `cluster_id=` dirs — listing cost ∝ probes, and that one
+    * listing is also the file list the walk reads (no second listing).
+    * Like [[serve]], the walk runs when this is called and returns its
+    * rows as a local relation. The marker guard still runs: a crashed
+    * store is refused, not partially served. */
   def serveCold(spark: SparkSession, path: String, queries: DataFrame,
                 k: Int, searchWindow: Int, nProbes: Int, metric: Metric,
                 codec: Codec = Codec.Full()): DataFrame = {
@@ -489,20 +512,17 @@ object GraphLayout {
   private[graft] def serveProbed(layout: Layout, queries: DataFrame,
                                  k: Int, searchWindow: Int, metric: Metric,
                                  codec: Codec, pm: ProbeMap): DataFrame = {
-    val spark = queries.sparkSession
-    val path = layout.path
     codec match {
       case Codec.Full(_, keep) =>
-        Vamana.searchStored(spark, pm, s"$path/data", s"$path/graph",
-          layout.clustered.schema, layout.graph.schema, k, searchWindow,
-          metric, keep)
+        Vamana.searchStored(pm, layout.clustered, layout.graph, k,
+          searchWindow, metric, keep)
       case Codec.Pq(kReorder, keep) =>
         val codes = layout.codes.getOrElse(
           sys.error("layout has no PQ codes — write(pq = Some(...)) first"))
         val walkK = if (kReorder > 0) kReorder * k else k
-        val walked = Vamana.searchStoredAdc(spark, pm, s"$path/codes",
-          s"$path/graph", codes.schema, layout.graph.schema, layout.pq.get,
-          walkK, searchWindow, adcWalkMetric(metric, kReorder), keep)
+        val walked = Vamana.searchStoredAdc(pm, codes, layout.graph,
+          layout.pq.get, walkK, searchWindow, adcWalkMetric(metric, kReorder),
+          keep)
         if (kReorder > 0) rerankExact(walked, queries, layout, pm, k, metric)
         else walked
       case Codec.Binary(kReorder) =>
@@ -511,10 +531,9 @@ object GraphLayout {
         val codes = layout.binCodes.getOrElse(sys.error(
           "layout has no bincodes table — rewrite with bin = Some(...) " +
             "(sidecar thresholds present but bincodes directory missing)"))
-        val cand = Vamana.searchStoredHamming(spark, pm,
-          s"$path/bincodes", s"$path/graph", codes.schema,
-          layout.graph.schema, b.wordsFor(layout.binVersion), kReorder * k,
-          searchWindow, fullDensity = layout.binVersion >= 2)
+        val cand = Vamana.searchStoredHamming(pm, codes, layout.graph,
+          b.wordsFor(layout.binVersion), kReorder * k, searchWindow,
+          fullDensity = layout.binVersion >= 2)
         rerankExact(cand, queries, layout, pm, k, metric)
     }
   }
@@ -572,7 +591,9 @@ object GraphLayout {
     * rewritten (dynamic partition overwrite — at 100 TB an upsert touching
     * 3 of 10⁴ shards rewrites 0.03% of the store). Touched shards'
     * centroids are re-derived with the same rounded-mean fold so probe
-    * routing tracks the moved mass. Returns the reopened layout.
+    * routing tracks the moved mass. Returns the reopened layout — the one
+    * to serve from now on: a layout opened before the upsert still
+    * names the replaced part files ([[Layout]] is a snapshot).
     *
     * ID-level UPSERT semantics (the q134 text-lifecycle contract, and what
     * makes micro-batch REPLAYS converge instead of duplicating): an added

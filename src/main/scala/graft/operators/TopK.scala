@@ -1,9 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, Row,
+  SparkSession}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.{Aggregator, Window}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField,
+  StructType}
 
 /** One scored candidate. `id` breaks distance ties (ascending) so results are
   * deterministic regardless of partial-aggregation merge order. */
@@ -92,6 +95,52 @@ object TopK {
       .filter(col("rnk") <= k)
       .select(keyCols.map(col) ++ Seq(col("rnk"), idCol.as("neighbor_id"),
         distCol.as("dist")): _*)
+  }
+}
+
+/** Driver-side per-key top-k over partials that arrive in pieces (the
+  * stored serve's task results, `Vamana.zipServe`): the exchange-free
+  * twin of [[TopK.perKeyViaWindow]], returning the same rows. One
+  * [[LocalTopK]] per key holds the k best non-NaN partials. NaN
+  * distances go to a second per-key buffer that keeps the k smallest
+  * ids, because the window orders NaN after every other value (before
+  * every other value when descending), ties broken by id — an order
+  * [[LocalTopK]]'s comparator does not give NaN. Memory stays
+  * O(keys·k) however many partials arrive. */
+private[graft] final class PerKeyTopK(k: Int, ascending: Boolean) {
+  private val best = scala.collection.mutable.LongMap.empty[LocalTopK]
+  private val nans = scala.collection.mutable.LongMap.empty[LocalTopK]
+
+  def add(key: Long, id: Long, dist: Double): Unit =
+    if (dist.isNaN) nans.getOrElseUpdate(key, new LocalTopK(k, true))
+      .insert(0.0, id)
+    else best.getOrElseUpdate(key, new LocalTopK(k, ascending))
+      .insert(dist, id)
+
+  /** (key, rnk, id, dist) rows, key-ascending, rnk = 1..k best-first. */
+  def rows: Seq[(Long, Long, Long, Double)] =
+    (best.keySet ++ nans.keySet).toSeq.sorted.flatMap { key =>
+      def of(h: Option[LocalTopK], nan: Boolean) = h.toSeq.flatMap { t =>
+        (0 until t.n).map(i =>
+          (t.ids(i), if (nan) Double.NaN else t.dists(i)))
+      }
+      val b = of(best.get(key), nan = false)
+      val n = of(nans.get(key), nan = true)
+      (if (ascending) b ++ n else n ++ b).take(k).zipWithIndex.map {
+        case ((id, d), i) => (key, i + 1L, id, d)
+      }
+    }
+
+  /** [[rows]] as a local relation `(keyCol, rnk, neighbor_id, dist)`,
+    * the column names and types of [[TopK.perKeyViaWindow]]'s output. */
+  def toDF(spark: SparkSession, keyCol: String): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    spark.createDataFrame(
+      rows.map { case (q, r, id, d) => Row(q, r, id, d) }.asJava,
+      StructType(Seq(StructField(keyCol, LongType, nullable = false),
+        StructField("rnk", LongType, nullable = false),
+        StructField("neighbor_id", LongType, nullable = false),
+        StructField("dist", DoubleType, nullable = false))))
   }
 }
 

@@ -322,149 +322,139 @@ object Vamana {
     hierProbeMap(queries, centroids, l1, groupOf, l1Probes, nProbes,
       metric).keySet
 
-  /** The stored zero-shuffle serve scaffold shared by
-    * [[searchStored]] and [[searchStoredAdc]]: for each
-    * probed shard with data files under BOTH `cluster_id=` dirs, one
-    * task reads the shard's two sides straight off the parquet files and
-    * feeds them to `walk`; the bounded per-query top-k finishes. A shard
-    * missing either dir — or with zero data files — emits nothing: the
-    * inner-join semantics of the frame path.
+  /** The one stored serve scaffold, shared by [[searchStored]],
+    * [[searchStoredAdc]] and [[searchStoredHamming]], and ONE Spark job:
+    * for each probed shard with data files under BOTH frames'
+    * `cluster_id=` dirs, one task reads the shard's two sides straight
+    * off the parquet files, extracts (id, payload) per `left` row,
+    * id-sorts, merges with the graph rows and walks the shard's queries
+    * (its `pm` entry, shipped in the task). The driver folds each task's
+    * partials into one bounded top-k per query as the task finishes
+    * ([[PerKeyTopK]], ≡ [[TopK.perKeyViaWindow]] row for row), so
+    * nothing is exchanged and driver memory stays |Q|·k plus the results
+    * in flight. The rows come back as a local relation (query_id, rnk,
+    * neighbor_id, dist). A shard missing either dir — or with zero data
+    * files — emits nothing: the inner-join semantics of the frame path.
     *
-    * Planning is O(1) in probed shards: file enumeration is ONE Spark
-    * job (each task lists its shard's two dirs — the per-shard RPCs run
-    * on executors, in parallel, bounded by Spark's own task machinery
-    * instead of an unbounded driver-side Await), and the parquet readers
-    * are built ONCE driver-side (`Bridge.parquetRowReader` — the same
-    * reader FileSourceScanExec ships) rather than two scan plans per
-    * shard. The former per-shard planning was ~100 ms × shards of
-    * serial driver wall — the serve bottleneck at 10⁴+ probed shards.
+    * No listing at serve time: each shard's files come from the frames'
+    * own file index (the listing their read already made — [[GraphLayout]]'s
+    * `open` lists every dir, its `serveCold` only the probed ones), and
+    * the parquet readers are built ONCE driver-side
+    * (`Bridge.parquetRowReader` — the same reader FileSourceScanExec
+    * ships), so planning is O(1) Spark work in probed shards.
     *
-    * `leftKeep` is the traverse-but-filter predicate, analyzer-resolved
+    * `keep` is the traverse-but-filter predicate, analyzer-resolved
     * and ordinal-bound against the LEFT side's file schema driver-side
     * ([[org.apache.spark.sql.graftbridge.Bridge.resolveBoundPredicate]])
     * and evaluated per file row task-side before decode — rows failing
-    * it reach `walk` flagged keep=false (null counts as false, SQL
+    * it reach the walk flagged keep=false (null counts as false, SQL
     * filter semantics). */
-  private def zipServe(spark: org.apache.spark.sql.SparkSession,
-      probed: Seq[Long], leftPath: String, graphPath: String,
-      leftSchema: org.apache.spark.sql.types.StructType,
-      graphSchema: org.apache.spark.sql.types.StructType,
-      leftKeep: Option[org.apache.spark.sql.Column],
-      walk: (Long, Iterator[(org.apache.spark.sql.Row, Boolean)],
-             Iterator[org.apache.spark.sql.Row])
-        => Iterator[(Long, Long, Double)],
-      k: Int, metric: Metric): DataFrame = {
-    import org.apache.spark.sql.graftbridge.Bridge
-    import spark.implicits._
-    val sc = spark.sparkContext
-    val hconf =
-      new org.apache.spark.util.SerializableConfiguration(
-        sc.hadoopConfiguration)
-    // one distributed listing job: (cid, left files, graph files); data
-    // files only (committer markers like _SUCCESS and hidden names are
-    // not parquet), deterministic per-shard file order
-    val lp = leftPath; val gp = graphPath
-    val shards: Array[(Long, Array[(String, Long, Long)],
-        Array[(String, Long, Long)])] =
-      if (probed.isEmpty) Array.empty
-      else sc.parallelize(probed.sorted,
-          math.max(1, math.min(probed.size, sc.defaultParallelism * 4)))
-        .map { cid =>
-          def files(root: String): Array[(String, Long, Long)] = {
-            val dir = new org.apache.hadoop.fs.Path(root, s"cluster_id=$cid")
-            val fs = dir.getFileSystem(hconf.value)
-            try fs.listStatus(dir).collect {
-              case st if st.isFile &&
-                  !st.getPath.getName.startsWith("_") &&
-                  !st.getPath.getName.startsWith(".") =>
-                (st.getPath.toString, st.getLen, st.getModificationTime)
-            }.sortBy(_._1)
-            catch { case _: java.io.FileNotFoundException => Array.empty }
-          }
-          (cid, files(lp), files(gp))
-        }
-        .collect()
-        .filter(s => s._2.nonEmpty && s._3.nonEmpty)
-        .sortBy(_._1)
-    val leftReader = Bridge.parquetRowReader(spark, leftSchema)
-    val graphReader = Bridge.parquetRowReader(spark, graphSchema)
-    val leftDec = Bridge.rowDecoder(leftSchema)
-    val graphDec = Bridge.rowDecoder(graphSchema)
-    val keepBound = leftKeep.map { c =>
-      Bridge.resolveBoundPredicate(spark,
-        Bridge.toCatalyst(c.cast("boolean")),
-        leftSchema.map(f =>
-          org.apache.spark.sql.catalyst.expressions.AttributeReference(
-            f.name, f.dataType, f.nullable, f.metadata)()))
-    }
-    val partials =
-      (if (shards.isEmpty) sc.emptyRDD[(Long, Long, Double)]
-       // one ELEMENT per slice ⇒ one task per probed shard, the exact
-       // parallelism of the former per-shard zipPartitions union
-       else sc.parallelize(shards.toIndexedSeq, shards.length)
-         .flatMap { case (cid, lFiles, gFiles) =>
-           val pred = keepBound.map(Bridge.createPredicate)
-           val lDes = leftDec.createDeserializer()
-           val gDes = graphDec.createDeserializer()
-           def rows(reader: org.apache.spark.sql.execution.datasources
-                 .PartitionedFile => Iterator[
-                   org.apache.spark.sql.catalyst.InternalRow],
-               fs: Array[(String, Long, Long)]) =
-             fs.iterator.flatMap { case (p, len, mod) =>
-               Bridge.flattenToRows(
-                 reader(Bridge.partitionedFile(p, len, mod)))
-             }
-           // eval keep on the raw InternalRow BEFORE decode: batch-backed
-           // rows are reused views, and the decoder's output is a copy
-           val lRows = rows(leftReader, lFiles).map { ir =>
-             val kp = pred.forall(_(ir))
-             (lDes(ir), kp)
-           }
-           val gRows = rows(graphReader, gFiles).map(gDes(_))
-           walk(cid, lRows, gRows)
-         })
-        .toDF("query_id", "id", "dist")
-    TopK.perKeyViaWindow(partials, Seq("query_id"), col("id"), col("dist"),
-      k, metric.ascending)
-  }
-
-  /** The shared per-shard shape of every stored zero-shuffle walk
-    * ([[searchStored]]'s residency branches,
-    * [[searchStoredAdc]], [[searchStoredHamming]]): broadcast the probe
-    * map, read each probed shard's two dirs through [[zipServe]],
-    * extract (id, payload) per left-file row, id-sort, merge with the
-    * graph rows, and walk. One definition so the sort/merge/emptiness
-    * contract cannot diverge across the variants. */
-  private def zipServeMerged[P](spark: org.apache.spark.sql.SparkSession,
-      pm: Map[Long, Array[(Long, Array[Double])]],
-      leftPath: String, graphPath: String,
-      leftSub: org.apache.spark.sql.types.StructType,
-      gSub: org.apache.spark.sql.types.StructType,
+  private def zipServe[P](pm: Map[Long, Array[(Long, Array[Double])]],
+      left: DataFrame, graph: DataFrame,
       keep: Option[org.apache.spark.sql.Column],
       extract: org.apache.spark.sql.Row => (Long, P),
       mkStore: IndexedSeq[P] => VamanaKernel.VecStore,
-      k: Int, searchWindow: Int, metric: Metric,
-      searchCapacity: Int = 0): DataFrame = {
-    val bc = spark.sparkContext.broadcast(pm)
-    val gIdIx = gSub.fieldIndex("id")
-    val gEntryIx = gSub.fieldIndex("entry_id")
-    val gNbrIx = gSub.fieldIndex("neighbors")
-    zipServe(spark, pm.keys.toSeq, leftPath, graphPath, leftSub, gSub,
-      keep,
-      (cid, lIt, gIt) => {
-        val qs = bc.value.getOrElse(cid, Array.empty[(Long, Array[Double])])
-        if (qs.isEmpty) Iterator.empty
-        else {
-          val g = gIt.map(r => (cid, longAt(r, gIdIx),
-            longAt(r, gEntryIx), longArrayAt(r, gNbrIx)))
-          val rows = lIt.map { case (r, kp) =>
-            val (id, p) = extract(r); (id, p, kp) }.toArray.sortBy(_._1)
-          walkMerged(cid, rows.map(x => (x._1, x._3)),
-            idxs => mkStore(idxs.toIndexedSeq.map(ix => rows(ix)._2)),
-            g, qs, k, searchWindow, searchCapacity, metric)
+      k: Int, searchWindow: Int, metric: Metric): DataFrame = {
+    import org.apache.spark.sql.graftbridge.Bridge
+    val spark = left.sparkSession
+    val top = new PerKeyTopK(k, metric.ascending)
+    val lFiles = shardFiles(left, pm.keySet)
+    val gFiles = shardFiles(graph, pm.keySet)
+    val shards = pm.toSeq.sortBy(_._1).flatMap { case (cid, qs) =>
+      for (lf <- lFiles.get(cid); gf <- gFiles.get(cid))
+        yield (cid, qs, lf, gf)
+    }
+    if (shards.nonEmpty) {
+      val leftSchema = fileSchema(left)
+      val graphSchema = fileSchema(graph)
+      val leftReader = Bridge.parquetRowReader(spark, leftSchema)
+      val graphReader = Bridge.parquetRowReader(spark, graphSchema)
+      val leftDec = Bridge.rowDecoder(leftSchema)
+      val graphDec = Bridge.rowDecoder(graphSchema)
+      val keepBound = keep.map { c =>
+        Bridge.resolveBoundPredicate(spark,
+          Bridge.toCatalyst(c.cast("boolean")),
+          leftSchema.map(f =>
+            org.apache.spark.sql.catalyst.expressions.AttributeReference(
+              f.name, f.dataType, f.nullable, f.metadata)()))
+      }
+      val gIdIx = graphSchema.fieldIndex("id")
+      val gEntryIx = graphSchema.fieldIndex("entry_id")
+      val gNbrIx = graphSchema.fieldIndex("neighbors")
+      val sc = spark.sparkContext
+      // one ELEMENT per slice ⇒ one task per probed shard
+      val partials = sc.parallelize(shards, shards.length)
+        .flatMap { case (cid, qs, lf, gf) =>
+          val pred = keepBound.map(Bridge.createPredicate)
+          val lDes = leftDec.createDeserializer()
+          val gDes = graphDec.createDeserializer()
+          def rows(reader: org.apache.spark.sql.execution.datasources
+                .PartitionedFile => Iterator[
+                  org.apache.spark.sql.catalyst.InternalRow],
+              fs: Array[(String, Long, Long)]) =
+            fs.iterator.flatMap { case (p, len, mod) =>
+              Bridge.flattenToRows(
+                reader(Bridge.partitionedFile(p, len, mod)))
+            }
+          // eval keep on the raw InternalRow BEFORE decode: batch-backed
+          // rows are reused views, and the decoder's output is a copy
+          val lRows = rows(leftReader, lf).map { ir =>
+            val kp = pred.forall(_(ir))
+            val (id, p) = extract(lDes(ir))
+            (id, p, kp)
+          }.toArray.sortBy(_._1)
+          val g = rows(graphReader, gf).map { ir =>
+            val r = gDes(ir)
+            (cid, longAt(r, gIdIx), longAt(r, gEntryIx),
+              longArrayAt(r, gNbrIx))
+          }
+          walkMerged(cid, lRows.map(x => (x._1, x._3)),
+            idxs => mkStore(idxs.toIndexedSeq.map(ix => lRows(ix)._2)),
+            g, qs, k, searchWindow, 0, metric)
         }
-      }, k, metric)
+      // the result handler runs on the driver as each task finishes
+      // (Spark calls it under the job waiter's lock)
+      sc.runJob(partials,
+        (it: Iterator[(Long, Long, Double)]) => it.toArray,
+        (_: Int, part: Array[(Long, Long, Double)]) =>
+          part.foreach { case (q, id, d) => top.add(q, id, d) })
+    }
+    top.toDF(spark, "query_id")
   }
+
+  /** Each of `shards`' data files in `frame`'s own file index — the
+    * listing the frame's read already made (a `partitionBy("cluster_id")`
+    * parquet read: `spark.read.parquet(dir)` or
+    * [[IvfIndex.readProbed]]) — as (path, length, modification time),
+    * path-sorted; shards without data files are absent. */
+  private def shardFiles(frame: DataFrame, shards: Set[Long])
+      : Map[Long, Array[(String, Long, Long)]] = {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
+      LogicalRelation}
+    val rel = frame.queryExecution.analyzed.collectFirst {
+      case l: LogicalRelation if l.relation.isInstanceOf[HadoopFsRelation] =>
+        l.relation.asInstanceOf[HadoopFsRelation]
+    }.getOrElse(sys.error(
+      "a stored serve needs frames read from a cluster-partitioned store " +
+        "(GraphLayout.open / serveCold), got a plan without a file scan"))
+    val cidType = rel.partitionSchema("cluster_id").dataType
+    val cidIx = rel.partitionSchema.fieldIndex("cluster_id")
+    rel.location.listFiles(Nil, Nil).flatMap { pd =>
+      val cid = pd.values.get(cidIx, cidType) match {
+        case n: java.lang.Number => n.longValue()
+      }
+      if (!shards.contains(cid) || pd.files.isEmpty) None
+      else Some(cid -> pd.files.map(f => (f.getPath.toString, f.getLen,
+        f.getModificationTime)).toArray.sortBy(_._1))
+    }.toMap
+  }
+
+  /** A stored frame's file columns: everything but the `cluster_id`
+    * partition column, which lives in the directory name. */
+  private def fileSchema(frame: DataFrame)
+      : org.apache.spark.sql.types.StructType =
+    org.apache.spark.sql.types.StructType(
+      frame.schema.filterNot(_.name == "cluster_id"))
 
   /** The in-memory walk ([[searchShardedFiltered]] /
     * [[searchShardedHierarchical]]) served straight off a PERSISTED
@@ -479,85 +469,78 @@ object Vamana {
     * shard — see [[zipServe]]) and hands them to the same per-shard
     * merge + walk kernel the cogroup walk uses — results are
     * bit-identical to the in-memory walk over the reopened frames with
-    * the same probes, but corpus rows never enter a shuffle: the only
-    * exchange is the |Q|·nProbes·k partials of the final top-k. I/O is
-    * the probed dirs' bytes (partition pruning by construction),
-    * parallelism is one task per probed shard, and planning is O(1) in
-    * probed shards (one distributed listing job + one reader per side).
-    * `pm` is the batch's probe map (shard → (query_id, query vector)),
-    * computed once by the caller's routing kernel; the walk reads
-    * exactly the shards it names.
+    * the same probes, but corpus rows never enter a shuffle and nothing
+    * is exchanged: the driver merges the |Q|·nProbes·k partials of the
+    * final top-k as the one job's tasks finish. I/O is the probed dirs'
+    * bytes (partition pruning by construction), parallelism is one task
+    * per probed shard, and the files come from the frames' own listing.
+    * The walk runs when this is called; the rows come back as a local
+    * relation. `pm` is the batch's probe map (shard → (query_id, query
+    * vector)), computed once by the caller's routing kernel; the walk
+    * reads exactly the shards it names.
     *
-    * `clusteredSchema`/`graphSchema` come from the reopened layout — the
-    * vec element type plus its signedness/half-format marks (restored
-    * from the sidecar) pick the same element-resident store the cogroup
-    * branches do. A probed shard missing either dir emits nothing, the
+    * `clustered`/`graph` are the opened layout's frames: their schemas
+    * carry the vec element type plus its signedness/half-format marks
+    * (restored from the sidecar), which pick the same element-resident
+    * store the cogroup branches do, and their file indexes name each
+    * shard's files. A probed shard missing either dir emits nothing, the
     * inner-join semantics of the frame path.
     *
     * `keep` carries the [[searchShardedFiltered]] traverse-but-filter
     * semantics into the stored walk: rows failing it are walked through
     * but never emitted. It may reference the data FILE columns (`id`,
     * `vec`) — `cluster_id` lives in the directory name, not the files. */
-  def searchStored(spark: org.apache.spark.sql.SparkSession,
-                   pm: Map[Long, Array[(Long, Array[Double])]],
-                   dataPath: String, graphPath: String,
-                   clusteredSchema: org.apache.spark.sql.types.StructType,
-                   graphSchema: org.apache.spark.sql.types.StructType,
+  def searchStored(pm: Map[Long, Array[(Long, Array[Double])]],
+                   clustered: DataFrame, graph: DataFrame,
                    k: Int, searchWindow: Int, metric: Metric,
                    keep: org.apache.spark.sql.Column = lit(true))
       : DataFrame = {
     require(searchWindow >= k, "searchWindow must be ≥ k")
-    import org.apache.spark.sql.types.{ArrayType, ByteType, FloatType, StructType}
-    val isFloat = clusteredSchema("vec").dataType match {
+    import org.apache.spark.sql.types.{ArrayType, ByteType, DoubleType,
+      FloatType}
+    val schema = clustered.schema
+    val isFloat = schema("vec").dataType match {
       case ArrayType(FloatType, _) => true
       case _                       => false
     }
-    val isByte = clusteredSchema("vec").dataType match {
+    val isByte = schema("vec").dataType match {
       case ArrayType(ByteType, _) => true
       case _                      => false
     }
     val unsigned =
-      if (isByte) graft.functions.ByteVecs.requireSignedness(
-        clusteredSchema, "vec")
+      if (isByte) graft.functions.ByteVecs.requireSignedness(schema, "vec")
       else false
-    val isHalf =
-      graft.functions.HalfVecs.isShortVec(clusteredSchema("vec").dataType)
+    val isHalf = graft.functions.HalfVecs.isShortVec(schema("vec").dataType)
     val bf16 = isHalf && graft.functions.HalfVecs.requireFormat(
-      clusteredSchema, "vec") == graft.functions.HalfVecs.BF16
-    val dSub = StructType(clusteredSchema.filterNot(_.name == "cluster_id"))
-    val gSub = StructType(graphSchema.filterNot(_.name == "cluster_id"))
+      schema, "vec") == graft.functions.HalfVecs.BF16
     // field lookups + element widening resolved ONCE against the file
-    // schemas (the walk reads raw file rows now; the former per-dir
-    // select's casts are applied here in Scala)
+    // schema (the walk reads raw file rows; the former per-dir select's
+    // casts are applied here in Scala)
+    val dSub = fileSchema(clustered)
     val dIdIx = dSub.fieldIndex("id"); val dVecIx = dSub.fieldIndex("vec")
     val vecIsDouble = dSub("vec").dataType match {
-      case org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.DoubleType, _) => true
-      case _ => false
+      case ArrayType(DoubleType, _) => true
+      case _                        => false
     }
     // residency dispatch picks the (row payload, store) pair once; the
-    // shard shape is the shared zipServeMerged scaffold
+    // shard shape is the shared zipServe scaffold
     if (isHalf)
-      zipServeMerged[Array[Short]](spark, pm, dataPath, graphPath, dSub,
-        gSub, Some(keep),
+      zipServe[Array[Short]](pm, clustered, graph, Some(keep),
         r => (longAt(r, dIdIx), r.getSeq[Short](dVecIx).toArray),
         xs => new VamanaKernel.HalfStore(xs.toArray, bf16),
         k, searchWindow, metric)
     else if (isByte)
-      zipServeMerged[Array[Byte]](spark, pm, dataPath, graphPath, dSub,
-        gSub, Some(keep),
+      zipServe[Array[Byte]](pm, clustered, graph, Some(keep),
         r => (longAt(r, dIdIx), r.getSeq[Byte](dVecIx).toArray),
         xs => new VamanaKernel.ByteStore(xs.toArray, unsigned),
         k, searchWindow, metric)
     else if (isFloat)
-      zipServeMerged[Array[Float]](spark, pm, dataPath, graphPath, dSub,
-        gSub, Some(keep),
+      zipServe[Array[Float]](pm, clustered, graph, Some(keep),
         r => (longAt(r, dIdIx), r.getSeq[Float](dVecIx).toArray),
         xs => new VamanaKernel.FloatStore(xs.toArray),
         k, searchWindow, metric)
     else
-      zipServeMerged[Array[Double]](spark, pm, dataPath, graphPath, dSub,
-        gSub, Some(keep),
+      zipServe[Array[Double]](pm, clustered, graph, Some(keep),
         r => (longAt(r, dIdIx), doubleArrayAt(r, dVecIx, vecIsDouble)),
         xs => new VamanaKernel.DoubleStore(xs.toArray),
         k, searchWindow, metric)
@@ -925,19 +908,16 @@ object Vamana {
   /** [[searchShardedAdc]] served straight off a PERSISTED layout's
     * `codes/cluster_id=c` + `graph/cluster_id=c` dirs with ZERO corpus
     * shuffle — the codes twin of [[searchStored]]: one task
-    * per probed shard reads codes + graph files directly (O(1) planning,
-    * see [[zipServe]]) into the same PqStore walk; the
-    * only exchange is the |Q|·nProbes·k top-k partials. At 100 TB this
+    * per probed shard reads codes + graph files directly (one job, see
+    * [[zipServe]]) into the same PqStore walk, and the driver merges the
+    * |Q|·nProbes·k top-k partials — nothing is exchanged. At 100 TB this
     * is DiskANN serving with per-query I/O = probed CODE partitions
     * (64× smaller than data) and network = walk output. `keep` is the
     * traverse-but-filter predicate over the codes file columns —
     * [[searchShardedAdc]]'s deleted-slot semantics on the stored path
     * (reference: index/vamana/dynamic_index.h:617-629). */
-  def searchStoredAdc(spark: org.apache.spark.sql.SparkSession,
-                      pm: Map[Long, Array[(Long, Array[Double])]],
-                      codesPath: String, graphPath: String,
-                      codesSchema: org.apache.spark.sql.types.StructType,
-                      graphSchema: org.apache.spark.sql.types.StructType,
+  def searchStoredAdc(pm: Map[Long, Array[(Long, Array[Double])]],
+                      codes: DataFrame, graph: DataFrame,
                       p: Pq.Params, k: Int, searchWindow: Int,
                       metric: Metric = Metric.L2,
                       keep: org.apache.spark.sql.Column = lit(true))
@@ -945,9 +925,7 @@ object Vamana {
     require(searchWindow >= k, "searchWindow must be ≥ k")
     require(metric == Metric.L2 || metric == Metric.IP,
       s"ADC requires a subspace-decomposable metric (L2/IP), got $metric")
-    import org.apache.spark.sql.types.StructType
-    val cSub = StructType(codesSchema.filterNot(_.name == "cluster_id"))
-    val gSub = StructType(graphSchema.filterNot(_.name == "cluster_id"))
+    val cSub = fileSchema(codes)
     val cIdIx = cSub.fieldIndex("id")
     val cIxs = (0 until p.m).map(j => cSub.fieldIndex(s"c$j")).toArray
     val books = p.codebooks
@@ -955,8 +933,7 @@ object Vamana {
     // into the stored path: it may reference the CODES file columns
     // (`id`, `c0`..`c{m-1}` — practically id, the tombstone shape);
     // `cluster_id` lives in the directory name, not the files
-    zipServeMerged[Array[Int]](spark, pm, codesPath, graphPath, cSub,
-      gSub, Some(keep),
+    zipServe[Array[Int]](pm, codes, graph, Some(keep),
       r => (longAt(r, cIdIx), cIxs.map(ix => intAt(r, ix))),
       xs => new VamanaKernel.PqStore(xs.toArray, books),
       k, searchWindow, metric)
@@ -982,25 +959,21 @@ object Vamana {
     * space — the store recombines them once per search, and the
     * word-grouping identity (BinaryQuant.codeColumns64) makes every
     * distance bit-identical across the two paths (GraphLayoutSpec pins
-    * v2 ≡ v1 serving). Candidates are bit-identical either way and the
-    * only exchange is the |Q|·nProbes·k top-k partials. At 100 TB this
+    * v2 ≡ v1 serving). Candidates are bit-identical either way, and the
+    * driver merges the |Q|·nProbes·k top-k partials with no exchange
+    * ([[zipServe]]). At 100 TB this
     * is the smallest serving I/O shape of all: 8 bytes of walk state
     * per row at 64 dims.
     * The query vectors in `pm` must already be word-encoded (word-
     * doubles, `BinaryQuant.codeColumns`), probed by Hamming against the
     * word-encoded centroids (`BinaryQuant.encodeWords`). */
-  def searchStoredHamming(spark: org.apache.spark.sql.SparkSession,
-                          pm: Map[Long, Array[(Long, Array[Double])]],
-                          codesPath: String, graphPath: String,
-                          codesSchema: org.apache.spark.sql.types.StructType,
-                          graphSchema: org.apache.spark.sql.types.StructType,
+  def searchStoredHamming(pm: Map[Long, Array[(Long, Array[Double])]],
+                          codes: DataFrame, graph: DataFrame,
                           words: Int, k: Int, searchWindow: Int,
                           fullDensity: Boolean = false)
       : DataFrame = {
     require(searchWindow >= k, "searchWindow must be ≥ k")
-    import org.apache.spark.sql.types.StructType
-    val cSub = StructType(codesSchema.filterNot(_.name == "cluster_id"))
-    val gSub = StructType(graphSchema.filterNot(_.name == "cluster_id"))
+    val cSub = fileSchema(codes)
     val cIdIx = cSub.fieldIndex("id")
     val wIxs = (0 until words).map(j => cSub.fieldIndex(s"w$j")).toArray
     // v2 (fullDensity): rows stay raw 64-bit words in a WordStore — half
@@ -1008,14 +981,12 @@ object Vamana {
     // store recombines them once per search. Hamming sums are invariant
     // to the word grouping, so candidates are bit-identical to v1.
     if (fullDensity)
-      zipServeMerged[Array[Long]](spark, pm, codesPath, graphPath, cSub,
-        gSub, None,
+      zipServe[Array[Long]](pm, codes, graph, None,
         r => (longAt(r, cIdIx), wIxs.map(ix => longAt(r, ix))),
         xs => new VamanaKernel.WordStore(xs.toArray),
         k, searchWindow, Metric.Hamming)
     else
-      zipServeMerged[Array[Double]](spark, pm, codesPath, graphPath, cSub,
-        gSub, None,
+      zipServe[Array[Double]](pm, codes, graph, None,
         r => (longAt(r, cIdIx), wIxs.map(ix => longAt(r, ix).toDouble)),
         xs => new VamanaKernel.DoubleStore(xs.toArray),
         k, searchWindow, Metric.Hamming)

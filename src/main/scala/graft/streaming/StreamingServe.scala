@@ -53,9 +53,11 @@ import graft.operators.{GraphLayout, IndexLayout}
   *     the column stays so logs written by older versions, which could
   *     also record `cogroup`, keep one schema.
   *
-  * Scale shape: each micro-batch pays I/O ∝ its probed shard union and
-  * exchange ∝ |batch|·probes·k (SCALE.md serving laws) — a steady query
-  * stream against a 100 TB store reads only what its batches probe. */
+  * Scale shape: each micro-batch pays I/O ∝ its probed shard union; a
+  * graph store's walk is one Spark job whose |batch|·probes·k partials
+  * the driver merges with no exchange (SCALE.md serving laws) — a steady
+  * query stream against a 100 TB store reads only what its batches
+  * probe. */
 object StreamingServe {
 
   /** The canonical serving result shape every family's `serve()` emits
@@ -325,7 +327,14 @@ object StreamingServe {
     * routing, `keep`, rerank width). Each slice's probe map is computed
     * once and handed to the walk; with `decisionLog` the same map is
     * recorded (mode `local` — the one stored walk — probe-union
-    * fraction, probed shards), so logging adds no routing work. */
+    * fraction, probed shards), so logging adds no routing work.
+    *
+    * As with `serve`, each slice's walk runs when the slice is served
+    * (one job, its rows a local relation the sink write then writes),
+    * and it reads the files `layout` was opened over: the stream serves
+    * that snapshot of the store. To serve a store that an upsert has
+    * changed, attach the layout the upsert returns — a stream left on
+    * the superseded layout fails loudly on the replaced part files. */
   def attachGraph(queryStream: DataFrame, layout: GraphLayout.Layout,
                   outPath: String, checkpoint: String, k: Int,
                   searchWindow: Int, nProbes: Int, metric: Metric,

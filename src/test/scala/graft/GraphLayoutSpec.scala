@@ -300,16 +300,22 @@ class GraphLayoutSpec extends SparkSpec {
       .filter(col("id").isin(delSeq: _*)).count() === 0)
     assert(spark.read.parquet(s"$path/codes")
       .filter(col("id").isin(delSeq: _*)).count() === 0)
-    // ...so the kReorder=0 code-only serves cannot emit one
-    val hammed = GraphLayout.serve(rep, queries, 10,
-        searchWindow = 1 << 14, nProbes = rep.centroids.size, Metric.L2,
-        Codec.Binary(kReorder = 0))
+    // ...so the code-only walks cannot emit one: the Hamming walk over
+    // the repaired bincodes (the candidates Codec.Binary reranks, which
+    // never touch data) and the kReorder=0 ADC serve
+    val hammed = Vamana.searchStoredHamming(
+        GraphLayout.probes(rep, queries, rep.centroids.size, Metric.L2,
+          Codec.Binary(kReorder = 1)),
+        rep.binCodes.get, rep.graph, b.wordsFor(rep.binVersion), 10,
+        searchWindow = 1 << 14, fullDensity = rep.binVersion >= 2)
       .select("neighbor_id").collect().map(_.getLong(0)).toSet
+    assert(hammed.nonEmpty)
     assert(hammed.intersect(delSeq.toSet).isEmpty)
     val adced = GraphLayout.serve(rep, queries, 10,
         searchWindow = 1 << 14, nProbes = rep.centroids.size, Metric.L2,
         Codec.Pq())
       .select("neighbor_id").collect().map(_.getLong(0)).toSet
+    assert(adced.nonEmpty)
     assert(adced.intersect(delSeq.toSet).isEmpty)
 
     // content restoration: replaying the interrupted batch converges to
@@ -627,6 +633,77 @@ class GraphLayoutSpec extends SparkSpec {
         Codec.Pq())
     }
   }
+  test("Codec.Binary refuses kReorder < 1: it always reranks, and a " +
+      "zero-wide shortlist would serve no rows") {
+    val e = intercept[IllegalArgumentException] { Codec.Binary(kReorder = 0) }
+    assert(e.getMessage.contains("kReorder"))
+    assertThrows[IllegalArgumentException] { Codec.Binary(kReorder = -1) }
+    assert(Codec.Binary(kReorder = 1).kReorder === 1)
+  }
+
+  test("one Spark job per warm serve, nothing shuffled; serveCold runs no " +
+      "listing job of its own; the layout upsert returns serves ≡ a fresh " +
+      "open for every codec") {
+    import graft.operators.BinaryQuant
+    import scala.jdk.CollectionConverters._
+    val (data, cents, clustered, graph, p) = fixture()
+    val b = BinaryQuant.train(data)
+    val path = "/tmp/graft_graphlayout_spec_onejob"
+    GraphLayout.write(clustered, graph, cents, path, pq = Some(p),
+      bin = Some(b), routingGroups = 2)
+    val layout = GraphLayout.open(spark, path)
+    // a driver-local batch: collecting it for the probe map runs no job,
+    // so every job counted below is the serve's own
+    val q0 = Tables.embeddingQueries(spark, sfDir)
+    val queries = spark.createDataFrame(q0.collect().toSeq.asJava, q0.schema)
+    val probe = new graft.ShuffleProbe(spark)
+    try {
+      // (jobs, shuffle-read bytes) of `run`
+      def cost(run: => Unit): (Long, Long) = {
+        val (j0, s0) = (probe.jobs(), probe.readBytes())
+        run
+        (probe.jobs() - j0, probe.readBytes() - s0)
+      }
+      for (codec <- Seq(Codec.Full(), Codec.Full(l1Probes = 1),
+          Codec.Pq())) {
+        var served: org.apache.spark.sql.DataFrame = null
+        assert(cost { served = GraphLayout.serve(layout, queries, 10, 40, 2,
+          Metric.L2, codec) } === ((1L, 0L)), s"$codec: (jobs, shuffle B)")
+        // the rows are a local relation: reading them runs no job
+        var n = 0
+        assert(cost { n = served.collect().length } === ((0L, 0L)))
+        assert(n > 0, s"$codec")
+      }
+      // the cold serve's reads are its metadata and the probed dirs'
+      // listing (what coldLayoutFor reads for the same flat probes); the
+      // walk is its only other job
+      val (metaJobs, _) = cost {
+        GraphLayout.coldLayoutFor(spark, path, queries, 2, Metric.L2) }
+      assert(cost { GraphLayout.serveCold(spark, path, queries, 10, 40, 2,
+        Metric.L2) } === ((metaJobs + 1, 0L)))
+    } finally probe.close()
+
+    // snapshot: upsert (adds into shard 0, deletes from shard 1) returns
+    // the reopened layout, which serves exactly what a fresh open serves
+    val params = BuildParams(maxDegree = 24, buildWindow = 48)
+    val added = data.filter(col("id") % 47 === 3).orderBy("id").limit(6)
+      .select((col("id") + 300000L).as("id"), col("vec"),
+        lit(0L).as("cluster_id"))
+    val delIds = clustered.filter(col("cluster_id") === 1L)
+      .orderBy("id").limit(5).select("id")
+    val up = GraphLayout.upsert(spark, path, added, delIds, params,
+      Metric.L2)
+    val fresh = GraphLayout.open(spark, path)
+    for (codec <- Seq(Codec.Full(), Codec.Full(l1Probes = 1), Codec.Pq(),
+        Codec.Pq(kReorder = 2), Codec.Binary(kReorder = 2))) {
+      val got = GraphRefs.rows(GraphLayout.serve(up, queries, 10, 40, 4,
+        Metric.L2, codec))
+      assert(got.nonEmpty, s"$codec")
+      assert(got === GraphRefs.rows(GraphLayout.serve(fresh, queries, 10,
+        40, 4, Metric.L2, codec)), s"$codec")
+    }
+  }
+
   test("upsert ↔ local-serve contract: a serve planned pre-upsert fails " +
       "loudly once its probed partitions are overwritten — never a " +
       "silent mixed read; a reopened layout serves the merged corpus") {
@@ -637,10 +714,9 @@ class GraphLayoutSpec extends SparkSpec {
     val layout = GraphLayout.open(spark, path)
     val queries = Tables.embeddingQueries(spark, sfDir).limit(2)
 
-    // plan a local serve over EVERY shard pre-upsert (exhaustive probes:
-    // the probed set must include the shard the upsert will overwrite);
-    // zipServe pins the shard file list at plan time — that is the
-    // snapshot the contract is about
+    // serve over EVERY shard pre-upsert (exhaustive probes: the probed
+    // set must include the shards the upsert will overwrite); the serve
+    // runs its walk when called, so its rows are a snapshot
     val planned = GraphLayout.serve(layout, queries, 5, 32, nProbes = 4,
       Metric.L2, Codec.Full(l1Probes = 2))
     val preRows = planned.select("query_id", "rnk", "neighbor_id")
@@ -658,11 +734,15 @@ class GraphLayoutSpec extends SparkSpec {
     val reopened = GraphLayout.upsert(spark, path, added, delIds, params,
       Metric.L2)
 
-    // the PRE-upsert plan now points at deleted part files: executing it
-    // fails loudly (FileNotFound inside the task) — it can never blend
-    // old and new partitions into one answer
+    // the served snapshot is unchanged by the upsert...
+    assert(planned.select("query_id", "rnk", "neighbor_id")
+      .orderBy("query_id", "rnk").collect().map(_.toSeq).toSeq === preRows)
+    // ...and the PRE-upsert layout still names the replaced part files:
+    // serving it now fails loudly (FileNotFound inside the task) — it can
+    // never blend old and new partitions into one answer
     val e = intercept[Exception] {
-      planned.select("query_id", "rnk", "neighbor_id").collect()
+      GraphLayout.serve(layout, queries, 5, 32, nProbes = 4, Metric.L2,
+        Codec.Full(l1Probes = 2))
     }
     def hasFnf(t: Throwable): Boolean =
       t != null && (t.isInstanceOf[java.io.FileNotFoundException] ||

@@ -43,6 +43,50 @@ class TopKSpec extends SparkSpec {
     assert(r.toSeq == Seq(11L, 12L, 10L))
   }
 
+  test("driver merge (PerKeyTopK) ≡ window top-k: ties by id, ±0.0, " +
+      "NaN, k beyond the candidates, empty batch; both orders") {
+    import spark.implicits._
+    import graft.operators.PerKeyTopK
+    val nan = Double.NaN
+    val partials = Seq(
+      // equal distances: the id breaks the tie
+      (1L, 30L, 2.0), (1L, 10L, 2.0), (1L, 20L, 2.0), (1L, 5L, 3.0),
+      (1L, 40L, 1.0), (1L, 41L, 2.0),
+      // signed zeros are one value, ties by id; the sign is kept
+      (2L, 9L, 0.0), (2L, 3L, -0.0), (2L, 7L, -0.0), (2L, 1L, 0.0),
+      (2L, 8L, 0.5), (2L, 11L, -0.5),
+      // NaN: after +∞ ascending, before everything descending
+      (3L, 4L, nan), (3L, 2L, 1.0), (3L, 6L, nan),
+      (3L, 1L, Double.PositiveInfinity), (3L, 9L, nan), (3L, 5L, -1.0),
+      (3L, 3L, Double.NegativeInfinity), (3L, 0L, nan),
+      // one candidate: any k ≥ 2 is beyond it
+      (4L, 99L, 5.0))
+    // dist by raw bits (±0.0 distinct; every NaN collapses to one)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("query_id", "rnk").collect().map(r => (r.getLong(0),
+        r.getLong(1), r.getLong(2),
+        java.lang.Double.doubleToLongBits(r.getDouble(3)))).toSeq
+    val window = partials.toDF("query_id", "id", "dist")
+    for (asc <- Seq(true, false); k <- Seq(1, 2, 3, 5, 50);
+         order <- Seq(partials, partials.reverse)) {
+      val want = TopK.perKeyViaWindow(window, Seq("query_id"), col("id"),
+        col("dist"), k, asc)
+      val m = new PerKeyTopK(k, asc)
+      // partials arrive in pieces, as task results do
+      order.grouped(3).foreach(_.foreach { case (q, id, d) =>
+        m.add(q, id, d) })
+      val got = m.toDF(spark, "query_id")
+      assert(got.schema === want.schema)
+      assert(rows(got) === rows(want), s"asc=$asc k=$k")
+    }
+    // an empty batch: no rows, the same columns
+    val empty = new PerKeyTopK(10, true).toDF(spark, "query_id")
+    val emptyW = TopK.perKeyViaWindow(window.limit(0), Seq("query_id"),
+      col("id"), col("dist"), 10, ascending = true)
+    assert(empty.schema === emptyW.schema)
+    assert(empty.count() === 0 && emptyW.count() === 0)
+  }
+
   test("flat knn: nearest L2 neighbor of a vector is itself") {
     import spark.implicits._
     val data = Tables.embeddingVectors(spark, sfDir).select("id", "vec")
