@@ -155,6 +155,47 @@ object KernelBench {
       }
     }
 
+    // ---- flat-kNN driver merge --------------------------------------------
+    // The rate at which the driver folds task partials into one PerKeyTopK
+    // (KnnPartialExec's result handler): partitions·|Q|·k partials a call,
+    // each task's buffer best-first per query, as TileScan emits it. This
+    // is the measured rate behind the driver-intake bound
+    // (KnnPartialExec.treeLevel).
+    {
+      val nq = 250
+      val k = 10
+      for (parts <- Seq(4, 32, 1024)) {
+        val bufs = Array.tabulate(parts) { _ =>
+          val keys = new Array[Long](nq * k)
+          val ids = new Array[Long](nq * k)
+          val dists = new Array[Double](nq * k)
+          for (q <- 0 until nq) {
+            val ds = Array.fill(k)(rnd.nextDouble()).sorted
+            for (j <- 0 until k) {
+              keys(q * k + j) = q
+              ids(q * k + j) = rnd.nextInt(1 << 30).toLong
+              dists(q * k + j) = ds(j)
+            }
+          }
+          graft.operators.KnnPartials(keys, ids, dists)
+        }
+        var best = Double.MaxValue
+        var sink = 0L
+        for (_ <- 0 until rounds) {
+          val t0 = System.nanoTime()
+          val top = new graft.operators.PerKeyTopK(k, true)
+          bufs.foreach(top.addAll)
+          sink += top.partials.ids.length
+          best = math.min(best, (System.nanoTime() - t0) / 1e9)
+        }
+        val partials = parts.toDouble * nq * k
+        println(f"""{"experiment":"topk_merge","queries":$nq,"k":$k,""" +
+          f""""partitions":$parts,"partials":${partials.toLong},""" +
+          f""""partials_per_sec":${(partials / best).toLong},""" +
+          f""""merge_ms":${best * 1000}%.3f,"rows":${sink / rounds}}""")
+      }
+    }
+
     // ---- overflow re-prune second-gather share ----------------------------
     // The overflow path gathers (dst :: neighbors) to build the re-prune
     // pool, then robustPrune gathers the SAME rows again (its contract

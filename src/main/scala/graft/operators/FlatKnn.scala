@@ -2,30 +2,38 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, DoubleType,
+  FloatType, LongType, ShortType}
 import graft.core.Metric
 
 /** Exhaustive k-NN join (SURVEY §2 J1) — the reference's flat index
   * (include/svs/index/flat/flat.h:321-464) re-expressed for Spark.
   *
-  * Fast path (`search`): the query batch (contract: broadcast-small, exactly
-  * like the reference's in-memory query matrix) is broadcast to executors;
-  * each data partition is scanned once with per-query bounded heaps — the
-  * analog of the reference's per-tile inserts (flat.h:338-375). Only
-  * |partitions|·|Q|·k partial rows shuffle to the final merge. The big side
-  * streams; nothing large shuffles or collects, so the plan survives 100 TB:
-  * scan → map → tiny exchange.
+  * Fast path (`search`): a `graft.plans.KnnPartial` plan node. The query
+  * batch (contract: broadcast-small, exactly like the reference's
+  * in-memory query matrix) is broadcast to executors; each data partition
+  * is swept once through [[FlatKnn.TileScan]]'s per-query bounded heaps —
+  * the analog of the reference's per-tile inserts (flat.h:338-375) — as
+  * the tasks of one Spark job, and the driver folds the
+  * |partitions|·|Q|·k partials into the ranked top-k as the tasks finish
+  * (the reference's final small merge). The big side streams; nothing
+  * large shuffles or collects, and the driver's intake stays bounded
+  * (`KnnPartialExec.treeLevel`).
   *
   * The declarative variant (`searchViaAggregate`) and the window variant
   * (`searchViaWindow`) keep the same semantics for cross-checks; all three
-  * produce bit-identical output (same double fold order, ties by id).
+  * produce bit-identical output (same double fold order, Spark SQL's
+  * double order, ties by id).
   *
   * Input: queries(query_id, qvec), data(id, vec). Output best-first:
   * (query_id, rnk, neighbor_id, dist).
   */
 object FlatKnn {
 
-  /** Per-partition tiled scan state, shared by both flat paths
-    * ([[search]] and the SQL path's `graft.plans.KnnPartialExec`) — the
+  /** Per-partition tiled scan state of `graft.plans.KnnPartialExec`, the
+    * one operator under both flat paths ([[search]] and the rewritten SQL
+    * top-k) — the
     * reference's flat-index tile posture
     * (include/svs/index/flat/flat.h:175,329-358) and the same trick as
     * BatchScore.probeTopKTiled: rows pack ONCE into a flat
@@ -162,12 +170,10 @@ object FlatKnn {
       if (n == cap) flush()
     }
 
-    def emit(): Iterator[(Long, Long, Double)] = {
+    /** Every query's kept candidates, in query order, best-first. */
+    def partials(): KnnPartials = {
       if (n > 0) flush()
-      (0 until nq).iterator.flatMap { q =>
-        val h = heaps(q)
-        (0 until h.n).iterator.map(i => (qIds(q), h.ids(i), h.dists(i)))
-      }
+      KnnPartials.of(qIds, heaps)
     }
   }
 
@@ -183,170 +189,63 @@ object FlatKnn {
     }
   }
 
-  def search(queries: DataFrame, data: DataFrame, k: Int, metric: Metric)
-      : DataFrame = {
-    val spark = data.sparkSession
-    import spark.implicits._
-    // queries from a float32 source are accepted as-is (no cast projection
-    // in the plan) and widened ONCE here at collect: the query batch is
-    // broadcast-small and cache-resident during the scan, so the mixed DF
-    // kernel — double query loads from L1, float row loads from the scan —
-    // beats the all-float FF kernel, which pays an extra per-element widen
-    // per pair (measured at 1M×64-d: FF 1.81 s vs DF 1.25 s; SCALE.md).
-    // computeFF stays the right kernel where BOTH sides are resident rows
-    // (the f32 graph builds). Results are bit-identical either way
-    // (F32BuildSpec).
-    val qIsFloat = queries.schema("qvec").dataType match {
-      case org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.FloatType, _) => true
-      case _ => false
-    }
-    val qRows =
-      if (qIsFloat)
-        queries.select(col("query_id").cast("long"), col("qvec")).collect()
-          .map(r => (r.getLong(0), r.getSeq[Float](1).map(_.toDouble).toArray))
-      else
-        queries.select(col("query_id").cast("long"),
-            col("qvec").cast("array<double>")).collect()
-          .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-    val qIds = qRows.map(_._1)
-    val qVecs = qRows.map(_._2)
-    val bc = spark.sparkContext.broadcast((qIds, qVecs))
-    val asc = metric.ascending
-    val m = metric
+  /** The tile kind of an ARRAY<FLOAT|DOUBLE|TINYINT|SMALLINT> column:
+    * 'f', 'd', 'b' (i8/u8) or 'h' (f16/bf16 bits). */
+  private[graft] def elemKind(dt: DataType): Char = dt match {
+    case ArrayType(FloatType, _)  => 'f'
+    case ArrayType(DoubleType, _) => 'd'
+    case ArrayType(ByteType, _)   => 'b'
+    case ArrayType(ShortType, _)  => 'h'
+    case t => sys.error(
+      s"vec must be ARRAY<FLOAT|DOUBLE|TINYINT|SMALLINT>, got $t")
+  }
 
+  def search(queries: DataFrame, data: DataFrame, k: Int, metric: Metric)
+      : DataFrame = searchWith(queries, data, k, metric)
+
+  /** [[search]] with its two planning decisions pinned, for specs: the
+    * merge `depth` (0: from the partial count, 1: straight to the driver,
+    * 2: one executor merge level first) and `widen` (None: the gate). */
+  private[graft] def searchWith(queries: DataFrame, data: DataFrame, k: Int,
+      metric: Metric, depth: Int = 0, widen: Option[Boolean] = None)
+      : DataFrame = {
+    require(k >= 1, s"k must be >= 1, got $k")
+    val spark = data.sparkSession
+    graft.plans.KnnJoinApi.installStrategy(spark)
+    // queries from a float32 source pass as-is (no cast projection) and
+    // widen ONCE at the exec's collect; anything else casts to double
+    val qvec = queries.schema("qvec").dataType match {
+      case ArrayType(FloatType, _) => col("qvec")
+      case _ => col("qvec").cast("array<double>").as("qvec")
+    }
+    val q = queries.select(col("query_id").cast("long").as("query_id"), qvec)
     // scan the source element type as-is: float32 vectors read half the
     // bytes (i8/u8 an eighth); widening to double happens per-register in
-    // the copy loop (free) rather than in a cast projection (memory
-    // traffic). u8 is ARRAY<TINYINT> carrying the ByteVecs schema mark.
+    // the tile pack rather than in a cast projection (memory traffic).
+    // u8 is ARRAY<TINYINT> carrying the ByteVecs schema mark.
     val projected =
-      if (data.schema("id").dataType ==
-        org.apache.spark.sql.types.LongType)
-        data.select(col("id"), col("vec")) // no-op cast would block the
-      else                                 // columnar scan below
-        data.select(col("id").cast("long"), col("vec"))
-    val elKind = projected.schema("vec").dataType match {
-      case org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.FloatType, _) => 'f'
-      case org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.DoubleType, _) => 'd'
-      case org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.ByteType, _) => 'b'
-      case org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.ShortType, _) => 'h'
-      case t => sys.error(
-        s"vec must be ARRAY<FLOAT|DOUBLE|TINYINT|SMALLINT>, got $t")
-    }
-    val isByte = elKind == 'b'
+      if (data.schema("id").dataType == LongType)
+        data.select(col("id"), col("vec")) // a no-op cast would block the
+      else                                 // exec's columnar read
+        data.select(col("id").cast("long").as("id"), col("vec"))
+    val elKind = elemKind(projected.schema("vec").dataType)
     // byte rows dispatch on DECLARED signedness only — a bare byte table
     // is ambiguous (mark-stripped u8 ≡ i8 by values) and fails loudly
-    val unsigned =
-      if (isByte) graft.functions.ByteVecs.requireSignedness(
-        data.schema, "vec")
-      else false
+    val unsigned = elKind == 'b' &&
+      graft.functions.ByteVecs.requireSignedness(data.schema, "vec")
     // half rows ('h') likewise dispatch on the DECLARED format only —
     // f16 and bf16 bit patterns decode to different values, so a bare
     // ARRAY<SMALLINT> fails loudly (HalfVecs mark contract)
     val bf16 =
       elKind == 'h' && graft.functions.HalfVecs.requireFormat(
         data.schema, "vec") == graft.functions.HalfVecs.BF16
-
-    // Pre-scan width (guide §2 map-side parallelism; the r16-verdict
-    // prescription applied to the distance scan): the tile sweep is the
-    // query's CPU, and its parallelism is bounded by the INPUT's
-    // partition count — a single-row-group corpus (or its cached memo,
-    // which keeps the scan partitioning) runs the whole sweep on 1-3 of
-    // the session's cores. When the input is narrower than the session
-    // parallelism, hash-repartition on `id` BEFORE the sweep: ids are
-    // unique (the table contract), so the spread is even, hash
-    // partitioning needs no sort-before-repartition pass, and per-query
-    // results are partition-invariant (per-partition heaps + the exact
-    // id-tiebroken window merge). At real scale the scan already carries
-    // ≥ parallelism splits and this is a no-op — the columnar fast path
-    // below is then untouched. Uncached and operator-local (no
-    // cross-query cached state — the r16 regression mechanism).
-    // Size-gated (the r16 lesson: widening frames whose serial sweep is
-    // already trivial only adds an exchange + AQE materialization per
-    // call — e.g. a 2 000-row code table probed once per calibration
-    // dial). The optimizer's size estimate is exact for materialized
-    // cached relations and the column-pruned file-size estimate for cold
-    // scans — the latter UNDERESTIMATES decoded width, so the threshold
-    // is deliberately low: 1 MB keeps sub-second probe frames serial
-    // while every corpus-sized sweep (cold or cached) widens.
-    val want = spark.sparkContext.defaultParallelism
-    val WidenMinBytes = 1L << 20
-    def estBytes: BigInt =
-      projected.queryExecution.optimizedPlan.stats.sizeInBytes
-    val widened =
-      if (projected.rdd.getNumPartitions >= want ||
-          estBytes < WidenMinBytes) projected
-      else projected.repartition(want, col("id"))
-
-    // Two physical scan shapes over the same tile logic ([[TileScan]]):
-    //  - columnar: when the executed plan emits ColumnarBatches (parquet
-    //    vectorized reader, id already BIGINT), rows are read straight off
-    //    the column vectors — no ColumnarToRow conversion, no per-row
-    //    UnsafeRow materialization, the scan's largest fixed cost.
-    //  - row: anything else (in-memory frames, casts, filters) through the
-    //    usual InternalRow iterator.
-    // Both feed rows in partition order into identical tiles, so results
-    // are bit-identical.
-    // unwrap the row-conversion shell: a pruned parquet scan executes
-    // columnar (`Batched: true`) but arrives as
-    // WholeStageCodegen(ColumnarToRow(InputAdapter(Scan))) — peel the
-    // pass-through wrappers (they add no compute) down to the columnar
-    // node, and use it only when its output is exactly our (id, vec)
-    import org.apache.spark.sql.execution.{ColumnarToRowExec, InputAdapter,
-      WholeStageCodegenExec}
-    @scala.annotation.tailrec
-    def columnarSource(p: org.apache.spark.sql.execution.SparkPlan)
-        : Option[org.apache.spark.sql.execution.SparkPlan] = p match {
-      case WholeStageCodegenExec(child)    => columnarSource(child)
-      case ColumnarToRowExec(child)        => columnarSource(child)
-      case InputAdapter(child)             => columnarSource(child)
-      case s if s.supportsColumnar         => Some(s)
-      case _                               => None
-    }
-    val exec = widened.queryExecution.executedPlan
-    val colSrc = columnarSource(exec).filter { s =>
-      s.output.length == 2 &&
-        s.output(0).dataType == org.apache.spark.sql.types.LongType &&
-        s.output(1).dataType == widened.schema("vec").dataType
-    }
-    val partials = (
-      if (colSrc.isDefined)
-        colSrc.get.executeColumnar().mapPartitions { batches =>
-          val (ids, vecs) = bc.value
-          val ts = new TileScan(ids, vecs, k, asc, m, elKind, unsigned, bf16)
-          while (batches.hasNext) {
-            val batch = batches.next()
-            val idCol = batch.column(0)
-            val vecCol = batch.column(1)
-            val nR = batch.numRows()
-            var r = 0
-            while (r < nR) {
-              if (!idCol.isNullAt(r) && !vecCol.isNullAt(r))
-                ts.addRow(idCol.getLong(r), vecCol.getArray(r))
-              r += 1
-            }
-          }
-          ts.emit()
-        }
-      else
-        widened.queryExecution.toRdd.mapPartitions { iter =>
-          val (ids, vecs) = bc.value
-          val ts = new TileScan(ids, vecs, k, asc, m, elKind, unsigned, bf16)
-          while (iter.hasNext) {
-            val row = iter.next()
-            if (!row.isNullAt(0) && !row.isNullAt(1))
-              ts.addRow(row.getLong(0), row.getArray(1))
-          }
-          ts.emit()
-        }
-      ).toDF("query_id", "id", "dist")
-    // final merge: |partitions|·|Q|·k rows — window rank is exact and cheap
-    TopK.perKeyViaWindow(partials, Seq("query_id"), col("id"), col("dist"), k,
-      asc)
+    // the renaming projection lets the analyzer re-id the columns when a
+    // plan reads the result twice (a self-join); the optimizer removes it
+    // otherwise, so `collect` still runs the node alone
+    Bridge.ofRows(spark, graft.plans.KnnPartial(Bridge.logicalPlan(q),
+      Bridge.logicalPlan(projected), k, metric, unsigned = unsigned,
+      bf16 = bf16, depth = depth, widen = widen))
+      .toDF("query_id", "rnk", "neighbor_id", "dist")
   }
 
   /** Declarative reference: broadcast NL join + bounded top-k aggregate. */

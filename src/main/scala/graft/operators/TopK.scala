@@ -32,7 +32,7 @@ class TopKAggregator(k: Int, ascending: Boolean)
     extends Aggregator[Neighbor, TopKBuffer, Seq[Neighbor]] {
 
   private def better(d1: Double, i1: Long, d2: Double, i2: Long): Boolean =
-    if (d1 != d2) { if (ascending) d1 < d2 else d1 > d2 } else i1 < i2
+    LocalTopK.better(d1, i1, d2, i2, ascending)
 
   override def zero: TopKBuffer =
     TopKBuffer(new Array[Long](k), new Array[Double](k), 0)
@@ -98,37 +98,57 @@ object TopK {
   }
 }
 
-/** Driver-side per-key top-k over partials that arrive in pieces (the
-  * stored serve's task results, `Vamana.zipServe`): the exchange-free
-  * twin of [[TopK.perKeyViaWindow]], returning the same rows. One
-  * [[LocalTopK]] per key holds the k best non-NaN partials. NaN
-  * distances go to a second per-key buffer that keeps the k smallest
-  * ids, because the window orders NaN after every other value (before
-  * every other value when descending), ties broken by id — an order
-  * [[LocalTopK]]'s comparator does not give NaN. Memory stays
-  * O(keys·k) however many partials arrive. */
+/** One task's per-key candidates as three parallel arrays: the compact
+  * shape a flat-kNN sweep ships to the driver (24 bytes a partial). */
+private[graft] final case class KnnPartials(keys: Array[Long],
+    ids: Array[Long], dists: Array[Double])
+
+private[graft] object KnnPartials {
+
+  /** `heaps(i)`'s kept candidates under `keys(i)`, in that order. */
+  def of(keys: Array[Long], heaps: Array[LocalTopK]): KnnPartials = {
+    val n = heaps.iterator.map(_.n).sum
+    val out = KnnPartials(new Array[Long](n), new Array[Long](n),
+      new Array[Double](n))
+    var o = 0
+    for (i <- keys.indices) {
+      val h = heaps(i)
+      java.util.Arrays.fill(out.keys, o, o + h.n, keys(i))
+      System.arraycopy(h.ids, 0, out.ids, o, h.n)
+      System.arraycopy(h.dists, 0, out.dists, o, h.n)
+      o += h.n
+    }
+    out
+  }
+}
+
+/** Per-key top-k over partials that arrive in pieces (the flat sweep's
+  * and the stored serve's task results, `graft.plans.KnnPartialExec` and
+  * `Vamana.zipServe`): the exchange-free twin of
+  * [[TopK.perKeyViaWindow]], returning the same rows. One [[LocalTopK]]
+  * per key, so memory stays O(keys·k) however many partials arrive. */
 private[graft] final class PerKeyTopK(k: Int, ascending: Boolean) {
   private val best = scala.collection.mutable.LongMap.empty[LocalTopK]
-  private val nans = scala.collection.mutable.LongMap.empty[LocalTopK]
 
   def add(key: Long, id: Long, dist: Double): Unit =
-    if (dist.isNaN) nans.getOrElseUpdate(key, new LocalTopK(k, true))
-      .insert(0.0, id)
-    else best.getOrElseUpdate(key, new LocalTopK(k, ascending))
-      .insert(dist, id)
+    best.getOrElseUpdate(key, new LocalTopK(k, ascending)).insert(dist, id)
+
+  def addAll(p: KnnPartials): Unit = {
+    var i = 0
+    while (i < p.keys.length) { add(p.keys(i), p.ids(i), p.dists(i)); i += 1 }
+  }
+
+  /** The kept candidates, key-ascending, best-first within a key. */
+  def partials: KnnPartials = {
+    val ks = best.keys.toArray.sorted
+    KnnPartials.of(ks, ks.map(best))
+  }
 
   /** (key, rnk, id, dist) rows, key-ascending, rnk = 1..k best-first. */
   def rows: Seq[(Long, Long, Long, Double)] =
-    (best.keySet ++ nans.keySet).toSeq.sorted.flatMap { key =>
-      def of(h: Option[LocalTopK], nan: Boolean) = h.toSeq.flatMap { t =>
-        (0 until t.n).map(i =>
-          (t.ids(i), if (nan) Double.NaN else t.dists(i)))
-      }
-      val b = of(best.get(key), nan = false)
-      val n = of(nans.get(key), nan = true)
-      (if (ascending) b ++ n else n ++ b).take(k).zipWithIndex.map {
-        case ((id, d), i) => (key, i + 1L, id, d)
-      }
+    best.keys.toSeq.sorted.flatMap { key =>
+      val t = best(key)
+      (0 until t.n).map(i => (key, i + 1L, t.ids(i), t.dists(i)))
     }
 
   /** [[rows]] as a local relation `(keyCol, rnk, neighbor_id, dist)`,

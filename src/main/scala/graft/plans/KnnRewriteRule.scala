@@ -19,15 +19,16 @@ import graft.functions.{CosineSimilarity, CosineSimilaritySimd, InnerProduct,
   *         Join(queries, data, Cross))))
   * }}}
   *
-  * into the same tree with the cross join replaced by a [[KnnPartial]] node:
-  * each data partition then contributes at most k candidates per query
-  * instead of its full row count, while the Window/Filter stay untouched and
-  * exact. Fires only when every guard holds (single row_number window over
-  * one query-side partition attribute, distance expression between one
-  * attribute from each join side, tie-break by the data-side id, sort
-  * direction matching the metric, literal bound); otherwise the plan is left
-  * alone. Result rows are identical — the distance kernel, fold order, and
-  * tie-breaks are the same code paths.
+  * into `Project(..., dist AS _w0, ..., rnk, KnnPartial(queries, data))`:
+  * the [[KnnPartial]] node sweeps each data partition into per-query
+  * heaps and merges, ranks and cuts at k on the driver, so the SQL top-k
+  * runs the same operator and merge code as `FlatKnn.search`. Fires only
+  * when every guard holds (single row_number window over one query-side
+  * partition attribute, distance expression between one attribute from
+  * each join side, tie-break by the data-side id, sort direction matching
+  * the metric, literal bound); otherwise the plan is left alone. Result
+  * rows are identical — the distance kernel, fold order, and tie-breaks
+  * are the same code paths.
   */
 object KnnRewriteRule extends Rule[LogicalPlan] {
 
@@ -73,15 +74,33 @@ object KnnRewriteRule extends Rule[LogicalPlan] {
       case al @ Alias(child: Attribute, _) if al.exprId == a.exprId => child
     }
 
+  /** The node's query side, a driver-local batch folded to one local
+    * relation: this rule runs after the optimizer's own folding, and the
+    * exec collects the query side — a projection left over a local
+    * relation would cost a Spark job per call. */
+  private def querySide(p: Project): LogicalPlan =
+    org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation(p)
+
+  /** `proj`'s columns with the distance alias now renaming the node's
+    * `dist` (its exprId kept, so everything above still binds). */
+  private def renameDist(proj: Project, distAlias: Alias,
+      distAttr: Attribute): Seq[NamedExpression] =
+    proj.projectList.map {
+      case a: Alias if a.exprId == distAlias.exprId =>
+        Alias(distAttr, a.name)(a.exprId, a.qualifier,
+          a.explicitMetadata, a.nonInheritableMetadataKeys)
+      case other => other
+    }
+
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
     // SURVEY §4's literal stretch pattern: `... ORDER BY dist, id LIMIT k`
-    // (no window) — global top-k over the cross product. Per-query
-    // partition-local top-k is a superset of the global top-k (any row in
-    // the global top-k is in its own query's per-partition top-k under the
-    // same (dist, id) order), so replacing the join with KnnPartial(k) and
-    // keeping the Sort/Limit on top is exact. Spark then plans the
-    // Sort+Limit as TakeOrderedAndProject over |partitions|·|Q|·k partials
-    // instead of a full cross product.
+    // (no window) — global top-k over the cross product. The per-key
+    // top-k is a superset of the global top-k (any row in the global top-k
+    // is in its own key's top-k under the same (dist, id) order), so
+    // replacing the join with KnnPartial(k) and keeping the Sort/Limit on
+    // top is exact. Spark then plans the Sort+Limit as
+    // TakeOrderedAndProject over the node's keys·k rows instead of a full
+    // cross product.
     case gl @ GlobalLimit(IntegerLiteral(k), ll @ LocalLimit(_, body))
         if k >= 1 =>
       val rewritten = for {
@@ -124,9 +143,8 @@ object KnnRewriteRule extends Rule[LogicalPlan] {
         }
         // left-side attributes the projection exposes: all must collapse to
         // one long attribute (the KnnPartial grouping key); none exposed →
-        // synthesize a constant key (the exec keeps one heap per left ROW,
-        // so a shared key still yields a per-query-top-k superset of the
-        // global top-k)
+        // synthesize a constant key (the merge then keeps the k best of
+        // every left row's candidates: exactly the global top-k)
         leftRefs = proj.projectList.flatMap {
           case a: Attribute if join.left.outputSet.contains(a) => Some(a)
           case Alias(c: Attribute, _)
@@ -160,31 +178,28 @@ object KnnRewriteRule extends Rule[LogicalPlan] {
             Alias(Literal(0L), partAttr.name)(partAttr.exprId)
           else partAttr
         val knn = KnnPartial(
-          Project(Seq(leftKey, qvecAttr), join.left),
+          querySide(Project(Seq(leftKey, qvecAttr), join.left)),
           Project(Seq(idAttr, vecAttr), join.right),
-          k, metric.name,
-          output = Seq(partAttr, idAttr, distAttr))
-        val newProjList = proj.projectList.map {
-          case a: Alias if a.exprId == distAlias.exprId =>
-            Alias(distAttr, a.name)(a.exprId, a.qualifier,
-              a.explicitMetadata, a.nonInheritableMetadataKeys)
-          case other => other
-        }
+          k, metric,
+          output = Seq(partAttr, AttributeReference("rnk",
+            org.apache.spark.sql.types.LongType, nullable = false)(),
+            idAttr, distAttr))
+        val newProjList = renameDist(proj, distAlias, distAttr)
         val newSort = srt.copy(child = Project(newProjList, knn))
         gl.copy(child = ll.copy(child =
           prune.map(p => p.copy(child = newSort)).getOrElse(newSort)))
       }
       rewritten.getOrElse(gl)
     case f @ Filter(cond,
-        w @ Window(Seq(al @ Alias(WindowExpression(RowNumber(), _), _)),
+        Window(Seq(al @ Alias(WindowExpression(RowNumber(), _), _)),
           Seq(partAttr: Attribute), orderSpec, wChild, _)) =>
       val rewritten = for {
         k <- limitOf(cond, al.toAttribute)
         if k >= 1 // rnk < 1 selects nothing; leave the degenerate plan alone
         // optional WindowGroupLimit between Window and the Project
-        (wgl, proj) <- wChild match {
-          case g @ WindowGroupLimit(_, _, _, _, p: Project) => Some((Some(g), p))
-          case p: Project => Some((None, p))
+        proj <- wChild match {
+          case WindowGroupLimit(_, _, _, _, p: Project) => Some(p)
+          case p: Project => Some(p)
           case _ => None
         }
         join <- proj.child match {
@@ -228,22 +243,16 @@ object KnnRewriteRule extends Rule[LogicalPlan] {
       } yield {
         val distAttr = AttributeReference("dist",
           org.apache.spark.sql.types.DoubleType, nullable = false)()
+        // the node ranks and cuts at k itself: it stands in for the whole
+        // Filter(Window(...)), emitting the projection's columns and rnk
+        // under their original exprIds so everything above still binds
         val knn = KnnPartial(
-          Project(Seq(partAttr, qvecAttr), join.left),
+          querySide(Project(Seq(partAttr, qvecAttr), join.left)),
           Project(Seq(idAttr, vecAttr), join.right),
-          k, metric.name,
-          output = Seq(partAttr, idAttr, distAttr))
-        // rebuild the projection on top, distance alias now just renames the
-        // produced dist column (exprIds preserved so Window/Filter bind)
-        val newProjList = proj.projectList.map {
-          case a: Alias if a.exprId == distAlias.exprId =>
-            Alias(distAttr, a.name)(a.exprId, a.qualifier,
-              a.explicitMetadata, a.nonInheritableMetadataKeys)
-          case other => other
-        }
-        val newProj = Project(newProjList, knn)
-        val newChild = wgl.map(g => g.copy(child = newProj)).getOrElse(newProj)
-        f.copy(child = w.copy(child = newChild))
+          k, metric,
+          output = Seq(partAttr, al.toAttribute, idAttr, distAttr))
+        val newProjList = renameDist(proj, distAlias, distAttr)
+        Project(newProjList :+ al.toAttribute, knn)
       }
       rewritten.getOrElse(f)
   }

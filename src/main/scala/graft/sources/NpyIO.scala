@@ -605,11 +605,14 @@ object NpyIO {
     // The collect runs the segment-writing tasks, so it sits INSIDE the
     // sweep-on-failure region below — a task-side dims/density failure
     // must not strand the segments it already landed.
-    def collectMeta() = df.select(col("id").cast("long"), col("vec")
-        .cast("array<double>"))
-      .repartitionByRange(math.max(1, df.rdd.getNumPartitions), col("id"))
-      .sortWithinPartitions("id")
-      .rdd
+    // The range count is the input's own width, read off the RDD this
+    // job runs (no second planning of `df` to count it).
+    def collectMeta() = {
+      val byId = df.select(col("id").cast("long"), col("vec")
+          .cast("array<double>")).rdd
+        .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
+      byId.repartitionAndSortWithinPartitions(new org.apache.spark
+          .RangePartitioner(math.max(1, byId.getNumPartitions), byId))
       .mapPartitionsWithIndex { case (pi, iter) =>
         if (iter.isEmpty) Iterator.empty
         else {
@@ -620,9 +623,7 @@ object NpyIO {
           var cols = -1
           var rows = 0L
           try {
-            iter.foreach { row =>
-              val id = row.getLong(0)
-              val v = row.getSeq[Double](1)
+            iter.foreach { case (id, v) =>
               if (cols < 0) { cols = v.length; first = id; prev = id - 1 }
               require(v.length == cols,
                 s"row $id: ${v.length} dims, expected $cols")
@@ -641,6 +642,7 @@ object NpyIO {
       }
       .collect()
       .sortBy(_._1)
+    }
     // header+concat go to outPath+".tmp" and RENAME into place on success
     // (writeAtomic): the final name never holds a truncated file, and a
     // failed re-run — task failure, dims drift, non-dense ids — sweeps

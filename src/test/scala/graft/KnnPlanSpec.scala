@@ -53,8 +53,8 @@ class KnnPlanSpec extends SparkSpec {
     val plan = df.queryExecution.executedPlan.toString
     // SparkPlan.nodeName strips the Exec suffix in plan strings
     assert(plan.contains("KnnPartial"), plan.take(1500))
-    // merge stays declarative: window machinery over the partials
-    assert(plan.contains("WindowGroupLimit") || plan.contains("Window"),
+    // the node merges and ranks itself: no window, no exchange over it
+    assert(!plan.contains("Window") && !plan.contains("Exchange"),
       plan.take(800))
   }
 
@@ -227,5 +227,131 @@ class KnnPlanSpec extends SparkSpec {
         |ORDER BY dist ASC LIMIT 9""".stripMargin)
     assert(!noTie.queryExecution.optimizedPlan.toString
       .contains("KnnPartial"))
+  }
+
+  /** The SQL top-k the rule rewrites, with `dist` kept in the output. */
+  private def sqlTopK(qView: String, dView: String, k: Int, m: Metric)
+      : org.apache.spark.sql.DataFrame = {
+    GraftFunctions.register(spark)
+    KnnJoinApi.install(spark)
+    val (fn, dir) =
+      if (m == Metric.L2) ("l2_distance", "ASC") else ("inner_product", "DESC")
+    val df = spark.sql(
+      s"""SELECT query_id, rnk, id AS neighbor_id, dist FROM (
+         |  SELECT query_id, id, dist, row_number() OVER (
+         |    PARTITION BY query_id ORDER BY dist $dir, id ASC) AS rnk
+         |  FROM (SELECT q.query_id, d.id, $fn(q.qvec, d.vec) AS dist
+         |        FROM $qView q CROSS JOIN $dView d) s) t
+         |WHERE rnk <= $k""".stripMargin)
+    assert(df.queryExecution.optimizedPlan.toString.contains("KnnPartial"),
+      df.queryExecution.optimizedPlan.toString.take(1200))
+    df
+  }
+
+  /** (query_id, rnk, neighbor_id, dist bits) sorted; a NaN only has to
+    * stay NaN, so every NaN reads as one value. */
+  private def bitRows(df: org.apache.spark.sql.DataFrame)
+      : Seq[(Long, Long, Long, Long)] =
+    df.select("query_id", "rnk", "neighbor_id", "dist").collect().map { r =>
+      val d = r.getDouble(3)
+      (r.getLong(0), r.getAs[Number](1).longValue, r.getLong(2),
+        if (d.isNaN) Long.MinValue
+        else java.lang.Double.doubleToRawLongBits(d))
+    }.toSeq.sorted
+
+  /** `emb` collected once: a driver-local frame plans no source job. */
+  private def localFrame(df: org.apache.spark.sql.DataFrame) = {
+    import scala.jdk.CollectionConverters._
+    spark.createDataFrame(df.collect().toSeq.asJava, df.schema)
+  }
+
+  test("NaN distances rank as Spark SQL orders them: FlatKnn.search ≡ SQL " +
+      "top-k ≡ window reference, L2 and IP") {
+    import spark.implicits._
+    // id 0 scores NaN against every query; it must not block finite rows
+    val data = Seq((0L, Array(Double.NaN, 0.0)), (1L, Array(1.0, 0.0)),
+      (2L, Array(2.0, 0.0)), (3L, Array(0.0, 3.0))).toDF("id", "vec")
+      .repartition(1)
+    val queries = Seq((7L, Array(0.0, 0.0)), (8L, Array(1.0, 1.0)))
+      .toDF("query_id", "qvec")
+    data.createOrReplaceTempView("kp_nan_data")
+    queries.createOrReplaceTempView("kp_nan_q")
+    for (m <- Seq(Metric.L2, Metric.IP); k <- Seq(1, 2, 4)) {
+      val want = bitRows(FlatKnn.searchViaWindow(queries, data, k, m))
+      assert(want.length === 2 * k)
+      assert(bitRows(FlatKnn.search(queries, data, k, m)) === want,
+        s"${m.name} k=$k FlatKnn.search")
+      assert(bitRows(sqlTopK("kp_nan_q", "kp_nan_data", k, m)) === want,
+        s"${m.name} k=$k SQL")
+    }
+    // ascending puts NaN last: with room for 3, the three finite rows win
+    assert(FlatKnn.search(queries, data, 3, Metric.L2)
+      .filter(col("query_id") === 7L).select("neighbor_id").as[Long]
+      .collect().sorted.toSeq === Seq(1L, 2L, 3L))
+  }
+
+  test("partition invariance: 1, 3 and 8 partitions, widened and not, " +
+      "both flat paths give identical rows (dist by raw bits)") {
+    import graft.plans.KnnPartial
+    import org.apache.spark.sql.graftbridge.Bridge
+    val queries = localFrame(q)
+    queries.createOrReplaceTempView("kp_inv_q")
+    val corpus = emb.select("id", "vec").collect().toSeq
+    val results = for (n <- Seq(1, 3, 8); widen <- Seq(false, true)) yield {
+      val data = spark.createDataFrame(
+        spark.sparkContext.parallelize(corpus, n), emb.select("id", "vec")
+          .schema)
+      assert(data.rdd.getNumPartitions === n)
+      data.createOrReplaceTempView("kp_inv_data")
+      val flat = bitRows(FlatKnn.searchWith(queries, data, 10, Metric.L2,
+        widen = Some(widen)))
+      // the SQL path with the same gate pinned on its rewritten node
+      val sqlPlan = sqlTopK("kp_inv_q", "kp_inv_data", 10, Metric.L2)
+        .queryExecution.optimizedPlan.transform {
+          case p: KnnPartial => p.copy(widen = Some(widen))
+        }
+      val sql = bitRows(Bridge.ofRows(spark, sqlPlan))
+      assert(sql === flat, s"$n partitions, widen=$widen")
+      (n, widen) -> flat
+    }
+    val ref = results.head._2
+    assert(ref.nonEmpty)
+    for ((cfg, rows) <- results) assert(rows === ref, s"$cfg")
+    assert(ref === bitRows(FlatKnn.searchViaWindow(queries, emb, 10,
+      Metric.L2)))
+  }
+
+  test("one Spark job per FlatKnn.search collect, nothing shuffled; the SQL " +
+      "top-k runs at most 2 jobs; a forced two-level merge returns the " +
+      "same rows") {
+    val path = "/tmp/graft_knnplan_spec_jobs"
+    emb.select("id", "vec").repartition(3).write.mode("overwrite")
+      .parquet(path)
+    val data = spark.read.parquet(path)
+    assert(data.inputFiles.length === 3)
+    val queries = localFrame(q)
+    queries.createOrReplaceTempView("kp_jobs_q")
+    data.createOrReplaceTempView("kp_jobs_data")
+    val sql = sqlTopK("kp_jobs_q", "kp_jobs_data", 10, Metric.L2)
+    val probe = new graft.ShuffleProbe(spark)
+    try {
+      def cost[A](run: => A): (A, Long, Long) = {
+        val (j0, s0) = (probe.jobs(), probe.readBytes())
+        val a = run
+        (a, probe.jobs() - j0, probe.readBytes() - s0)
+      }
+      val (flat, flatJobs, flatBytes) =
+        cost(FlatKnn.search(queries, data, 10, Metric.L2).collect())
+      assert((flatJobs, flatBytes) === ((1L, 0L)))
+      assert(flat.length === 10 * queries.count())
+      val (sqlRows, sqlJobs, sqlBytes) = cost(sql.collect())
+      assert(sqlJobs <= 2 && sqlBytes === 0L, s"jobs $sqlJobs, B $sqlBytes")
+      assert(sqlRows.length === flat.length)
+    } finally probe.close()
+    val depth1 = bitRows(FlatKnn.searchWith(queries, data, 10, Metric.L2,
+      depth = 1))
+    assert(bitRows(FlatKnn.searchWith(queries, data, 10, Metric.L2,
+      depth = 2)) === depth1)
+    assert(depth1 === bitRows(FlatKnn.search(queries, data, 10, Metric.L2)))
   }
 }

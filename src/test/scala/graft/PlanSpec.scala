@@ -198,14 +198,16 @@ class PlanSpec extends SparkSpec {
     assert(plan.contains("Sort ") || plan.contains("Sort["), plan.take(800))
   }
 
-  test("flat kNN merge pre-limits per partition before the shuffle") {
+  test("flat kNN pre-limits per partition and merges on the driver, " +
+      "no shuffle") {
     val q = Tables.embeddingQueries(spark, sfDir)
     val data = Tables.embeddingVectors(spark, sfDir).select("id", "vec")
     val res = FlatKnn.search(q, data, 10, Metric.L2)
-    val plan = res.queryExecution.executedPlan.toString
-    // WindowGroupLimit(Partial) before the Exchange = map-side top-k
-    assert(plan.contains("WindowGroupLimit"), plan.take(800))
-    assert(plan.contains("Partial"), plan.take(800))
+    val plan = res.queryExecution.executedPlan
+    // the exec is the whole plan: a collect runs the node itself
+    assert(plan.nodeName === "KnnPartial", plan.toString.take(800))
+    assert(!plan.toString.contains("Exchange") &&
+      !plan.toString.contains("Window"), plan.toString.take(800))
   }
 
   test("BSP vamana search with exhaustive window equals exact top-k") {
