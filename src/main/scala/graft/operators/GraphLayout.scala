@@ -20,6 +20,10 @@ import graft.core.Metric
   *   path/layout.json — PQ codebooks / binary thresholds sidecar
   *                    (shortest-round-trip doubles, so reopened ADC and
   *                    Hamming arithmetic are bit-identical)
+  *   path/manifest.json — the committed file list ([[StoreManifest]]):
+  *                    per big dir its read schema and each shard's part
+  *                    files, so [[open]] / [[serveCold]] build their
+  *                    frames without listing a dir or inferring a schema
   *
   * Every component is partitioned by `cluster_id`, so a served search reads
   * only the probed shards' partitions of graph + codes (plus the candidate
@@ -93,7 +97,7 @@ object GraphLayout {
       else None
     // the rebuild is itself a multi-artifact commit: bracket it with a
     // rebuild-kind marker (superseding any stale upsert marker) and lift
-    // it only after the LAST artifact (the sidecar) lands — a crash
+    // it only after the LAST artifact (the manifest) lands — a crash
     // mid-rebuild leaves a marked, open()-refused store instead of an
     // unmarked inconsistent one (the pre-r16 delete-marker-first order
     // dropped the protection exactly when the store was being remade)
@@ -120,8 +124,9 @@ object GraphLayout {
       // every artifact write below is independent (disjoint dirs, shared
       // read-only inputs) and the rebuild marker covers the whole commit —
       // run them concurrently (guide §2.6) so the write fixture is bound
-      // by the largest artifact, not the sum; the sidecar stays LAST (its
-      // arrival plus the lifted marker is the completion signal)
+      // by the largest artifact, not the sum; the sidecar and then the
+      // manifest follow them (the manifest's arrival plus the lifted
+      // marker is the completion signal)
       UpsertBatch.runConcurrently(Seq(
         () => IvfIndex.writeClustered(clustered, s"$path/data"),
         () => graph.write.partitionBy("cluster_id").mode("overwrite")
@@ -168,8 +173,15 @@ object GraphLayout {
           s""""routing_metric":"${routingMetric.name.stripSuffix("_simd")}",""" +
           s""""byte_unsigned":${byteU.map(_.toString).getOrElse("null")},""" +
           s""""half_format":${halfF.map(f => s""""$f"""").getOrElse("null")}}""")
+      StoreManifest.commit(spark, path,
+        StoreManifest.list(spark, path, bigDirs(pq, bin)))
     }
   }
+
+  /** The cluster-partitioned dirs a store with these codecs holds. */
+  private def bigDirs(pq: Option[Pq.Params],
+                      bin: Option[BinaryQuant.Params]): Seq[String] =
+    Seq("data", "graph") ++ pq.map(_ => "codes") ++ bin.map(_ => "bincodes")
 
   /** Re-open a written layout. FAILS LOUDLY if an upsert's in-progress
     * marker is present: the multi-dir commit (data → graph → codes →
@@ -180,22 +192,18 @@ object GraphLayout {
     * deleted id (reranked serves drop it in the inner data join — that
     * window is answer-grade only on the code-only paths). Run [[repair]]
     * to restore the codes ≡ centroids ≡ data-rows invariant, then
-    * re-apply the upsert batch (replace-on-add converges). */
-  def open(spark: SparkSession, path: String): Layout = {
-    // marker triage is mechanized (StoreMarker): a fresh heartbeat means
-    // a LIVE writer (do not repair under it), a stale upsert marker
-    // directs to repair(), a stale rebuild marker to re-running write()
-    StoreMarker.guard(spark, path, "graph layout",
-      "GraphLayout.repair(spark, path)", "GraphLayout.write")
-    openUnchecked(spark, path)
-  }
+    * re-apply the upsert batch (replace-on-add converges).
+    *
+    * The frames come from the committed manifest: no listing, no schema
+    * inference, and (with the sidecar, centroids and routing level read
+    * on the driver) no Spark job. A store without a manifest fails here;
+    * one [[repair]] lists it and commits one. */
+  def open(spark: SparkSession, path: String): Layout =
+    assembleLayout(spark, path, guardedMeta(spark, path), None)
 
-  /** Everything [[openUnchecked]] reads EXCEPT the big cluster-partitioned
-    * directories (data/graph/codes/bincodes) — sidecar params, centroid
-    * table, routing level. None of it scales with shard count; the big
-    * dirs' partition LISTING is the one open cost ∝ total shards, which
-    * [[serveCold]] avoids by listing only probed `cluster_id=` dirs
-    * (the [[IndexLayout.serveCold]] pattern, r15/r16 scale finding). */
+  /** Everything a layout holds besides its frames — sidecar params,
+    * centroid table, routing level — plus the manifest the frames are
+    * built from. */
   private case class GMeta(pq: Option[Pq.Params],
                            bin: Option[BinaryQuant.Params], binVersion: Int,
                            centroids: IndexedSeq[(Long, Seq[Double])],
@@ -203,23 +211,31 @@ object GraphLayout {
                              Map[Long, Long])],
                            routingMetricName: Option[String],
                            byteU: Option[Boolean], halfF: Option[String],
-                           hasCodesDir: Boolean, hasBinDir: Boolean)
+                           manifest: StoreManifest.Manifest)
 
-  /** [[open]] minus the marker guard — [[repair]]'s entry point. */
-  private def openUnchecked(spark: SparkSession, path: String): Layout = {
-    val m = readMetaG(spark, path)
-    assembleLayout(spark, path, m,
-      sub => spark.read.parquet(s"$path/$sub"))
+  /** The marker guard, then [[readMetaG]]. Marker triage is mechanized
+    * (StoreMarker): a fresh heartbeat means a LIVE writer (do not repair
+    * under it), a stale upsert marker directs to repair(), a stale
+    * rebuild marker to re-running write(). */
+  private def guardedMeta(spark: SparkSession, path: String): GMeta = {
+    StoreMarker.guard(spark, path, "graph layout",
+      "GraphLayout.repair(spark, path)", "GraphLayout.write")
+    readMetaG(spark, path)
   }
 
-  /** Build the served frames from [[GMeta]] + a reader for the big
-    * cluster-partitioned dirs (full listing for [[openUnchecked]], probed
-    * dirs only for [[serveCold]]). */
+  /** Build the served frames from [[GMeta]]'s manifest: every shard, or
+    * only `shards` ([[serveCold]]'s probed ones). */
   private def assembleLayout(spark: SparkSession, path: String, m: GMeta,
-                             readBig: String => DataFrame): Layout = {
-    val codes = if (m.pq.isDefined && m.hasCodesDir) Some(readBig("codes"))
+                             shards: Option[Iterable[Long]]): Layout = {
+    def readBig(sub: String) =
+      StoreManifest.frame(spark, path, sub, m.manifest(sub), shards)
+    val codes =
+      if (m.pq.isDefined && m.manifest.contains("codes"))
+        Some(readBig("codes"))
       else None
-    val binCodes = if (m.bin.isDefined && m.hasBinDir) Some(readBig("bincodes"))
+    val binCodes =
+      if (m.bin.isDefined && m.manifest.contains("bincodes"))
+        Some(readBig("bincodes"))
       else None
     val data0 = readBig("data")
     val data = (m.byteU, m.halfF) match {
@@ -236,7 +252,12 @@ object GraphLayout {
       if (m.routing.isDefined) m.routingMetricName else None, path)
   }
 
-  private def readMetaG(spark: SparkSession, path: String): GMeta = {
+  /** Sidecar, centroids and routing level (read on the driver), and the
+    * manifest: the committed one, or with `relist` the committed one
+    * with the `relist` shards listed afresh (every shard when there is
+    * none) — [[repair]]'s view of a store whose commit did not finish. */
+  private def readMetaG(spark: SparkSession, path: String,
+                        relist: Option[Seq[Long]] = None): GMeta = {
     // crash recovery for the centroid swap: if an upsert died between
     // delete and rename, finish the rename (centroids.tmp holds the
     // complete new table)
@@ -258,10 +279,6 @@ object GraphLayout {
         (node \ "books").extract[Seq[Seq[Seq[Double]]]]
           .map(_.map(_.toArray).toArray).toArray))
     }
-    val fs = new org.apache.hadoop.fs.Path(s"$path/codes")
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hasCodesDir =
-      fs.exists(new org.apache.hadoop.fs.Path(s"$path/codes"))
     val binNode = parsed \ "bin"
     val bin = binNode match {
       case JNull | JNothing => None
@@ -282,8 +299,6 @@ object GraphLayout {
       s"bincodes layout at $path has version $binVersion, which this " +
         "reader does not understand (supported: 1, 2) — refusing to " +
         "serve rather than misread the word packing")
-    val hasBinDir =
-      fs.exists(new org.apache.hadoop.fs.Path(s"$path/bincodes"))
     // routing is SIDECAR-gated like pq/bin: a rewrite without
     // routingGroups records 0 and stale routing dirs are ignored rather
     // than silently served
@@ -297,16 +312,11 @@ object GraphLayout {
     }
     val routing =
       if (routingGroups > 0 &&
-        fs.exists(new org.apache.hadoop.fs.Path(s"$path/routing_l1")) &&
-        fs.exists(new org.apache.hadoop.fs.Path(s"$path/routing_groups")))
-        Some((
-          spark.read.parquet(s"$path/routing_l1").select("id", "vec")
-            .collect()
-            .map(r => r.getLong(0) -> r.getSeq[Double](1).toIndexedSeq)
-            .toIndexedSeq.sortBy(_._1).toSeq,
-          spark.read.parquet(s"$path/routing_groups")
-            .select("cluster_id", "group_id").collect()
-            .map(r => r.getLong(0) -> r.getLong(1)).toMap))
+        cfs.exists(new org.apache.hadoop.fs.Path(s"$path/routing_l1")) &&
+        cfs.exists(new org.apache.hadoop.fs.Path(s"$path/routing_groups")))
+        Some((DriverParquet.vectors(spark, s"$path/routing_l1"),
+          DriverParquet.longPairs(spark, s"$path/routing_groups",
+            "cluster_id", "group_id")))
       else None
     // restore byte signedness from the sidecar: the authoritative copy of
     // the mark — a data dir whose schema metadata was stripped by an
@@ -319,12 +329,19 @@ object GraphLayout {
       case JNull | JNothing => None
       case node             => Some(node.extract[String])
     }
-    GMeta(pq, bin, binVersion,
-      spark.read.parquet(s"$path/centroids").select("id", "vec").collect()
-        .map(r => r.getLong(0) -> r.getSeq[Double](1).toIndexedSeq)
-        .toIndexedSeq.sortBy(_._1),
+    val committed = StoreManifest.read(spark, path)
+    val manifest = relist match {
+      case None => committed.getOrElse(sys.error(
+        s"graph layout at $path has no ${StoreManifest.FileName} (a store " +
+          "written before stores committed one, or it was removed) — run " +
+          "GraphLayout.repair(spark, path) once to list the store and " +
+          "commit it"))
+      case Some(t) => StoreManifest.list(spark, path, bigDirs(pq, bin),
+        committed.getOrElse(Map.empty), Some(t))
+    }
+    GMeta(pq, bin, binVersion, DriverParquet.vectors(spark, s"$path/centroids"),
       routing, if (routingGroups > 0) routingMetricName else None,
-      byteU, halfF, hasCodesDir, hasBinDir)
+      byteU, halfF, manifest)
   }
 
   /** What a serve walks, and how it ranks. One case per stored codec
@@ -400,51 +417,33 @@ object GraphLayout {
       probes(layout, queries, nProbes, metric, codec))
 
   /** Cold one-shot serve ≡ `serve(open(path), …)`, row for row (and an
-    * empty batch returns the same empty result). [[open]] lists EVERY
-    * `cluster_id=` partition of the four big dirs up front, a driver-side
-    * cost ∝ total shards (34.7 s at 20k shards on the IVF store,
-    * SCALE.md r16) that an amortized server pays once but a one-shot
-    * serve pays per call. This reads the sidecar, centroids and routing
-    * (none of it scales with shard count), probes with the same
-    * [[probeMap]] the warm serve uses, and builds the layout over ONLY
-    * the probed `cluster_id=` dirs — listing cost ∝ probes, and that one
-    * listing is also the file list the walk reads (no second listing).
-    * Like [[serve]], the walk runs when this is called and returns its
-    * rows as a local relation. The marker guard still runs: a crashed
-    * store is refused, not partially served. */
+    * empty batch returns the same empty result). This reads the sidecar,
+    * centroids, routing level and manifest on the driver, probes with the
+    * same [[probeMap]] the warm serve uses, and builds the layout over
+    * ONLY the probed shards' manifest entries: no listing, no schema
+    * inference, and the walk is the one Spark job. Like [[serve]], the
+    * walk runs when this is called and returns its rows as a local
+    * relation. The marker guard still runs: a crashed store is refused,
+    * not partially served. */
   def serveCold(spark: SparkSession, path: String, queries: DataFrame,
                 k: Int, searchWindow: Int, nProbes: Int, metric: Metric,
                 codec: Codec = Codec.Full()): DataFrame = {
-    StoreMarker.guard(spark, path, "graph layout",
-      "GraphLayout.repair(spark, path)", "GraphLayout.write")
-    val m = readMetaG(spark, path)
+    val m = guardedMeta(spark, path)
     val pm = probeMap(queries, nProbes, metric, codec, m.centroids,
       m.routing, m.routingMetricName, m.bin)
-    // an empty batch probes nothing: read one shard's dirs (for their
-    // schemas only) so the walk plans the same empty result a warm
-    // serve returns
-    val read = if (pm.nonEmpty) pm.keys else m.centroids.take(1).map(_._1)
-    serveProbed(coldLayout(spark, path, m, read), queries, k, searchWindow,
-      metric, codec, pm)
+    serveProbed(assembleLayout(spark, path, m, Some(pm.keys)), queries, k,
+      searchWindow, metric, codec, pm)
   }
 
-  /** The layout over only the `probed` dirs of the big cluster-partitioned
-    * components — [[serveCold]]'s read. */
-  private def coldLayout(spark: SparkSession, path: String, m: GMeta,
-                         probed: Iterable[Long]): Layout =
-    assembleLayout(spark, path, m,
-      sub => IvfIndex.readProbed(spark, s"$path/$sub", probed))
-
-  /** Regression seam (r16 verdict: the cold path must keep its listing
+  /** Regression seam (r16 verdict: the cold path must keep its reads
     * ∝ probes, not shards): the cold layout [[serveCold]] would build for
     * a flat probe set, so a spec can assert every big-dir FileIndex is
-    * rooted at probed `cluster_id=` dirs — never the store-wide dir
-    * whose listing the cold serve exists to avoid. */
+    * rooted at probed `cluster_id=` dirs — never the store-wide dir. */
   private[graft] def coldLayoutFor(spark: SparkSession, path: String,
       queries: DataFrame, nProbes: Int, metric: Metric): Layout = {
     val m = readMetaG(spark, path)
-    coldLayout(spark, path, m,
-      Vamana.flatProbeMap(queries, m.centroids, nProbes, metric).keys)
+    assembleLayout(spark, path, m, Some(
+      Vamana.flatProbeMap(queries, m.centroids, nProbes, metric).keys))
   }
 
   /** [[probeMap]] over an opened layout — with [[serveProbed]], the
@@ -591,9 +590,13 @@ object GraphLayout {
     * rewritten (dynamic partition overwrite — at 100 TB an upsert touching
     * 3 of 10⁴ shards rewrites 0.03% of the store). Touched shards'
     * centroids are re-derived with the same rounded-mean fold so probe
-    * routing tracks the moved mass. Returns the reopened layout — the one
-    * to serve from now on: a layout opened before the upsert still
-    * names the replaced part files ([[Layout]] is a snapshot).
+    * routing tracks the moved mass. The store is read through its
+    * manifest, and the commit relists only the touched `cluster_id=`
+    * dirs, carrying the other shards' entries over, and commits the new
+    * manifest last. Returns the layout built from that manifest (no
+    * listing, no schema inference) — the one to serve from now on: a
+    * layout opened before the upsert still names the replaced part files
+    * ([[Layout]] is a snapshot).
     *
     * ID-level UPSERT semantics (the q134 text-lifecycle contract, and what
     * makes micro-batch REPLAYS converge instead of duplicating): an added
@@ -603,7 +606,8 @@ object GraphLayout {
   def upsert(spark: SparkSession, path: String, added: DataFrame,
              deletedIds: DataFrame, params: VamanaKernel.BuildParams,
              metric: Metric): Layout = {
-    val layout = open(spark, path)
+    val meta = guardedMeta(spark, path)
+    val layout = assembleLayout(spark, path, meta, None)
     import spark.implicits._
     val stored = layout.clustered
       .select(col("id").cast("long").as("id"), col("vec"),
@@ -705,7 +709,7 @@ object GraphLayout {
     // of a crashed upsert can emit deleted ids), and repair()
     // restores the codes ≡ centroids ≡ data-rows invariant from the
     // marker's touched list
-    val (mergedCents, routing) =
+    val (mergedCents, routing, manifest) =
       StoreMarker.bracket(spark, path, "upsert", touched) {
         // materialize the touched shards' new rows BEFORE overwriting: the
         // plans read the very partitions the writes replace, and the source
@@ -820,37 +824,16 @@ object GraphLayout {
               .write.mode("overwrite").parquet(s"$path/routing_groups")
             Some((l1, groupOf))
           } else None
-        (mergedCents, routingNew)
+        val manifest = StoreManifest.list(spark, path,
+          meta.manifest.keys.toSeq, meta.manifest, Some(touched))
+        StoreManifest.commit(spark, path, manifest)
+        (mergedCents, routingNew, manifest)
       }
-    // construct the reopened layout directly instead of a full open():
-    // the rewritten dirs need fresh reads (new file listings), but the
-    // centroid table, codec params and routing level are the values this
-    // very commit just wrote (parquet round-trips the doubles
-    // bit-exactly; GraphLayoutSpec pins upsert ≡ reopen) — the sidecar +
-    // centroid re-read cost several more driver jobs per upsert
-    val data0 = spark.read.parquet(s"$path/data")
-    val dataR = (storedSig, storedHalf) match {
-      case (Some(u), _) =>
-        graft.functions.ByteVecs.markSignedness(data0, "vec", u)
-      case (_, Some(f)) =>
-        graft.functions.HalfVecs.markHalf(data0, f, "vec")
-      case _ => data0
-    }
-    val fsR = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val codesR =
-      if (layout.pq.isDefined && fsR.exists(
-        new org.apache.hadoop.fs.Path(s"$path/codes")))
-        Some(spark.read.parquet(s"$path/codes"))
-      else None
-    val binCodesR =
-      if (layout.bin.isDefined && fsR.exists(
-        new org.apache.hadoop.fs.Path(s"$path/bincodes")))
-        Some(spark.read.parquet(s"$path/bincodes"))
-      else None
-    Layout(dataR, spark.read.parquet(s"$path/graph"), codesR, mergedCents,
-      layout.pq, binCodesR, layout.bin, layout.binVersion, routing,
-      layout.routingMetricName, path)
+    // the centroid table and routing level are the values this commit
+    // just wrote (parquet round-trips the doubles bit-exactly;
+    // GraphLayoutSpec pins upsert ≡ reopen)
+    assembleLayout(spark, path, meta.copy(centroids = mergedCents.toIndexedSeq,
+      routing = routing, manifest = manifest), None)
   }
 
   /** Restore a graph store whose upsert crashed mid-commit (open()
@@ -878,8 +861,11 @@ object GraphLayout {
     * can emit an id the data partitions no longer hold, and every
     * touched shard is servable; re-applying the interrupted upsert
     * batch afterwards restores the CONTENT (replace-on-add re-routes,
-    * rebuilds the touched shards' graphs, and converges). Idempotent; a
-    * store without a marker is returned unchanged. */
+    * rebuilds the touched shards' graphs, and converges). The touched
+    * shards are listed afresh and the manifest is committed last, inside
+    * the marker bracket. Idempotent; a store without a marker is returned
+    * unchanged, except that a store without a manifest (written before
+    * stores committed one) is listed once and gets one. */
   def repair(spark: SparkSession, path: String): Layout = {
     import spark.implicits._
     // the guard refuses LIVE markers (repair under a running writer
@@ -889,14 +875,24 @@ object GraphLayout {
     val info = StoreMarker.guard(spark, path, "graph layout",
       "GraphLayout.repair(spark, path)", "GraphLayout.write",
       forRepair = true)
-    if (info.isEmpty) return open(spark, path)
+    if (info.isEmpty) {
+      // an unmarked store without a manifest (written before stores
+      // committed one, or the file was removed): list it once, commit
+      if (StoreManifest.read(spark, path).isEmpty)
+        StoreManifest.commit(spark, path,
+          readMetaG(spark, path, relist = Some(Nil)).manifest)
+      return open(spark, path)
+    }
     val touched = info.get.touched.sorted
     // re-mark with a fresh session + heartbeat for the repair's own
     // rewrite: a crash mid-repair leaves the same stale-upsert state
     // (repair is idempotent), and the heartbeat keeps a concurrent
     // open() from reading "stale — repair me" under a live repair
     StoreMarker.bracket(spark, path, "upsert", touched) {
-      val layout = openUnchecked(spark, path)
+      // the touched shards as they are on disk now, whatever subset of
+      // the crashed commit landed
+      val meta = readMetaG(spark, path, relist = Some(touched))
+      val layout = assembleLayout(spark, path, meta, None)
       val touchedRows = layout.clustered
         .select(col("id").cast("long").as("id"), col("vec"),
           col("cluster_id").cast("long").as("cluster_id"))
@@ -983,7 +979,8 @@ object GraphLayout {
       val touchedSet = touched.toSet
       val newCents = KMeans.roundedMeans(touchedW)
       val kept = layout.centroids.filterNot(c => touchedSet.contains(c._1))
-      (kept ++ newCents).sortBy(_._1).toDF("id", "vec")
+      val mergedCents = (kept ++ newCents).sortBy(_._1)
+      mergedCents.toDF("id", "vec")
         .write.mode("overwrite").parquet(s"$path/centroids.tmp")
       fs.delete(new org.apache.hadoop.fs.Path(s"$path/centroids"), true)
       require(fs.rename(new org.apache.hadoop.fs.Path(s"$path/centroids.tmp"),
@@ -992,22 +989,20 @@ object GraphLayout {
       // refreshed centroids make a persisted routing level stale
       val rg = routingGroupsOf(spark, path)
       if (rg > 0) {
-        val newCentTable = spark.read.parquet(s"$path/centroids")
-          .select("id", "vec").collect()
-          .map(r => r.getLong(0) -> r.getSeq[Double](1).toIndexedSeq)
-          .toIndexedSeq.sortBy(_._1)
         val rm = layout.routingMetricName match {
           case Some(name) => Metric.byName(name).getOrElse(sys.error(
             s"layout routing_metric '$name' is not a routable metric"))
           case None => Metric.L2
         }
-        val (l1, groupOf) = Vamana.trainRoutingLevel(newCentTable, rg,
+        val (l1, groupOf) = Vamana.trainRoutingLevel(mergedCents, rg,
           metric = rm)
         l1.toDF("id", "vec").write.mode("overwrite")
           .parquet(s"$path/routing_l1")
         groupOf.toSeq.toDF("cluster_id", "group_id").write.mode("overwrite")
           .parquet(s"$path/routing_groups")
       }
+      StoreManifest.commit(spark, path, StoreManifest.list(spark, path,
+        meta.manifest.keys.toSeq, meta.manifest, Some(touched)))
     }
     open(spark, path)
   }

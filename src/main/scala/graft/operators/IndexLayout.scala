@@ -280,19 +280,11 @@ object IndexLayout {
       if (routingGroups > 0 &&
         fsR.exists(new org.apache.hadoop.fs.Path(s"$path/routing_l1")) &&
         fsR.exists(new org.apache.hadoop.fs.Path(s"$path/routing_groups")))
-        Some((
-          spark.read.parquet(s"$path/routing_l1").select("id", "vec")
-            .collect()
-            .map(r => r.getLong(0) -> r.getSeq[Double](1).toIndexedSeq)
-            .toIndexedSeq.sortBy(_._1).toSeq,
-          spark.read.parquet(s"$path/routing_groups")
-            .select("cluster_id", "group_id").collect()
-            .map(r => r.getLong(0) -> r.getLong(1)).toMap))
+        Some((DriverParquet.vectors(spark, s"$path/routing_l1"),
+          DriverParquet.longPairs(spark, s"$path/routing_groups",
+            "cluster_id", "group_id")))
       else None
-    Meta(codec, byteU, halfF,
-      spark.read.parquet(s"$path/centroids").select("id", "vec").collect()
-        .map(r => r.getLong(0) -> r.getSeq[Double](1).toIndexedSeq)
-        .toIndexedSeq.sortBy(_._1),
+    Meta(codec, byteU, halfF, DriverParquet.vectors(spark, s"$path/centroids"),
       routing,
       if (routingGroups > 0) routingMetricName else None)
   }

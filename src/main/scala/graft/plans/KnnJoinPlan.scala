@@ -2,7 +2,8 @@ package graft.plans
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, GenericInternalRow, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference, GenericInternalRow, NamedExpression, UnsafeProjection}
+import org.apache.spark.sql.catalyst.planning.PhysicalOperation
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
 import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, Partitioning, SinglePartition}
 import org.apache.spark.sql.execution.{BinaryExecNode, ColumnarToRowExec, InputAdapter, SparkPlan, WholeStageCodegenExec}
@@ -73,14 +74,21 @@ object KnnPartial {
 /** [[KnnPartial]]'s one physical form. `widen`: `Some` is decided (the
   * size gate said no, or a caller forced it); `None` widens when the
   * sweep's own input RDD has fewer partitions than the session's
-  * parallelism. `depth` 0 takes the merge depth from the partial count. */
+  * parallelism. `depth` 0 takes the merge depth from the partial count.
+  * `select` is the column selection and renaming of the node's
+  * `nodeOutput` that a projection above the node asked for (the rewritten
+  * SQL top-k's); it is applied to the merged rows on the driver, so no
+  * operator above the node runs a second job over them. */
 case class KnnPartialExec(queries: SparkPlan, data: SparkPlan, k: Int,
-                          metric: Metric, output: Seq[Attribute],
+                          metric: Metric, nodeOutput: Seq[Attribute],
                           unsigned: Boolean, bf16: Boolean, depth: Int,
-                          widen: Option[Boolean])
+                          widen: Option[Boolean],
+                          select: Seq[NamedExpression])
     extends BinaryExecNode {
   override def left: SparkPlan = queries
   override def right: SparkPlan = data
+
+  override def output: Seq[Attribute] = select.map(_.toAttribute)
 
   override def producedAttributes: org.apache.spark.sql.catalyst.expressions
     .AttributeSet =
@@ -170,8 +178,8 @@ case class KnnPartialExec(queries: SparkPlan, data: SparkPlan, k: Int,
         // waiter's lock
         (_: Int, ps: Array[KnnPartials]) => ps.foreach(top.addAll))
     }
-    val proj = UnsafeProjection.create(output.map(_.dataType).toArray)
-    val rnkInt = output(1).dataType == IntegerType
+    val proj = UnsafeProjection.create(select, nodeOutput)
+    val rnkInt = nodeOutput(1).dataType == IntegerType
     top.rows.iterator.map { case (q, r, id, d) =>
       proj(new GenericInternalRow(Array[Any](q,
         if (rnkInt) r.toInt else r, id, d))).copy()
@@ -252,12 +260,17 @@ object KnnPartialStrategy extends org.apache.spark.sql.execution.SparkStrategy {
   private val WidenMinBytes = 1L << 20
 
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case p: KnnPartial =>
+    // the node under (possibly no) projections that only select and
+    // rename its columns: the exec emits the selection itself
+    case PhysicalOperation(select, Nil, p: KnnPartial) if select.forall {
+        case _: Attribute | Alias(_: Attribute, _) => true
+        case _                                      => false
+      } =>
       // the size gate first: it costs no planning of the data side
       val widen = p.widen.orElse(
         if (p.data.stats.sizeInBytes < WidenMinBytes) Some(false) else None)
       KnnPartialExec(planLater(p.queries), planLater(p.data), p.k, p.metric,
-        p.output, p.unsigned, p.bf16, p.depth, widen) :: Nil
+        p.output, p.unsigned, p.bf16, p.depth, widen, select) :: Nil
     case Widen(child) => WidenExec(planLater(child)) :: Nil
     case _ => Nil
   }

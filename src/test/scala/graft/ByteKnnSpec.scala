@@ -406,6 +406,10 @@ class ByteKnnSpec extends SparkSpec {
     fs.delete(new org.apache.hadoop.fs.Path(s"$path/data"), true)
     require(fs.rename(new org.apache.hadoop.fs.Path(s"$path/data_rewrite"),
       new org.apache.hadoop.fs.Path(s"$path/data")))
+    // the rewrite replaced the files the store's manifest names: drop
+    // the stale manifest, and repair lists the store and commits a new one
+    fs.delete(new org.apache.hadoop.fs.Path(s"$path/manifest.json"), false)
+    GraphLayout.repair(spark, path)
     val re = GraphLayout.open(spark, path)
     assert(ByteVecs.isUnsigned(re.clustered.schema, "vec"),
       "sidecar did not restore the u8 mark after a stripping rewrite")

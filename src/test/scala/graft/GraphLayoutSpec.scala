@@ -877,4 +877,60 @@ class GraphLayoutSpec extends SparkSpec {
     assert(e.getMessage.contains("marker"))
     lease.complete()
   }
+
+  test("manifest: entries ≡ a fresh listing, schemas ≡ spark.read's; at " +
+      "listing threshold 0 open runs no job and serveCold only the walk; " +
+      "a store without a manifest fails open naming repair, which lists " +
+      "it once") {
+    import graft.operators.StoreManifest
+    import scala.jdk.CollectionConverters._
+    val (_, cents, clustered, graph, p) = fixture()
+    val path = "/tmp/graft_graphlayout_spec_manifest"
+    GraphLayout.write(clustered, graph, cents, path, pq = Some(p))
+    def listing(sub: String): Set[(Long, String, Long)] =
+      new java.io.File(s"$path/$sub").listFiles.toSeq
+        .filter(_.getName.startsWith("cluster_id=")).flatMap { d =>
+          d.listFiles.toSeq.filter(f => f.isFile &&
+              !f.getName.startsWith(".") && !f.getName.startsWith("_"))
+            .map(f => (d.getName.stripPrefix("cluster_id=").toLong,
+              f.getName, f.length))
+        }.toSet
+    val man = StoreManifest.read(spark, path).get
+    assert(man.keySet === Set("data", "graph", "codes"))
+    for ((sub, d) <- man) {
+      assert(d.shards.toSeq.flatMap { case (c, ps) =>
+        ps.map(x => (c, x.name, x.length)) }.toSet === listing(sub), sub)
+      assert(d.schema === spark.read.parquet(s"$path/$sub").schema, sub)
+    }
+    val q0 = Tables.embeddingQueries(spark, sfDir)
+    val queries = spark.createDataFrame(q0.collect().toSeq.asJava, q0.schema)
+    val key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    val before = spark.conf.getOption(key)
+    spark.conf.set(key, "0")
+    val probe = new graft.ShuffleProbe(spark)
+    try {
+      def jobs(run: => Unit): Long = {
+        val j0 = probe.jobs(); run; probe.jobs() - j0
+      }
+      var layout: GraphLayout.Layout = null
+      assert(jobs { layout = GraphLayout.open(spark, path) } === 0L)
+      assert(jobs { GraphLayout.serveCold(spark, path, queries, 10, 40, 2,
+        Metric.L2) } === 1L)
+      val served = GraphRefs.rows(GraphLayout.serve(layout, queries, 10, 40,
+        2, Metric.L2))
+      // no manifest: open refuses and names repair; repair lists once
+      java.nio.file.Files.delete(java.nio.file.Paths.get(s"$path/manifest.json"))
+      java.nio.file.Files.deleteIfExists(
+        java.nio.file.Paths.get(s"$path/.manifest.json.crc"))
+      val e = intercept[RuntimeException] { GraphLayout.open(spark, path) }
+      assert(e.getMessage.contains("GraphLayout.repair"))
+      val rep = GraphLayout.repair(spark, path)
+      assert(GraphRefs.rows(GraphLayout.serve(rep, queries, 10, 40, 2,
+        Metric.L2)) === served)
+      assert(StoreManifest.read(spark, path).get === man)
+    } finally {
+      probe.close()
+      before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
+  }
 }

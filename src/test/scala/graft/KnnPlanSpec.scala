@@ -345,7 +345,7 @@ class KnnPlanSpec extends SparkSpec {
       assert((flatJobs, flatBytes) === ((1L, 0L)))
       assert(flat.length === 10 * queries.count())
       val (sqlRows, sqlJobs, sqlBytes) = cost(sql.collect())
-      assert(sqlJobs <= 2 && sqlBytes === 0L, s"jobs $sqlJobs, B $sqlBytes")
+      assert(sqlJobs === 1L && sqlBytes === 0L, s"jobs $sqlJobs, B $sqlBytes")
       assert(sqlRows.length === flat.length)
     } finally probe.close()
     val depth1 = bitRows(FlatKnn.searchWith(queries, data, 10, Metric.L2,

@@ -216,7 +216,7 @@ class PlanSpec extends SparkSpec {
     val q = Tables.embeddingQueries(spark, sfDir).limit(3)
     val graph = Vamana.buildSingle(data,
       BuildParams(maxDegree = 16, buildWindow = 32), Metric.L2).cache()
-    val bsp = Vamana.searchBsp(q, data, graph, k = 10, searchWindow = 200,
+    val bsp = BspSearch.searchBsp(q, data, graph, k = 10, searchWindow = 200,
       Metric.L2)
     val exact = FlatKnn.search(q, data, 10, Metric.L2)
     assert(bsp.select("query_id", "rnk", "neighbor_id")
@@ -238,7 +238,7 @@ class PlanSpec extends SparkSpec {
     def recall(df: org.apache.spark.sql.DataFrame): Double =
       df.select("query_id", "neighbor_id").intersect(truth).count()
         .toDouble / truth.count()
-    val rBsp = recall(Vamana.searchBsp(q, data, graph, 10, 30, Metric.L2))
+    val rBsp = recall(BspSearch.searchBsp(q, data, graph, 10, 30, Metric.L2))
     val rLocal = recall(Vamana.searchSharded(q, clustered, graph, cents, 10,
       30, 1, Metric.L2))
     // BSP expands every unexpanded window node per round — strictly more
