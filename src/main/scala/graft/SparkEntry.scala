@@ -285,10 +285,6 @@ object SparkEntry {
   private val JaccardT = 0.5
   private val CosineT = 0.4
 
-  private def docGrams(s: SparkSession, dir: String): DataFrame =
-    docs(s, dir).select(col("doc_id").as("id"),
-      Dedup.wordNGrams(TextAnalysis.tokens(col("text")), 2).as("grams"))
-
   /** Certified on the scale path: the ppjoin-style prefix-filtered join
     * (no driver collect), proven equal to the bitset/naive variants in
     * DedupTextSpec. */

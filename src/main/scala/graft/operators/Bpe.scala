@@ -43,14 +43,19 @@ object Bpe {
     concat(lit(" "), array_join(split(w, ""), "  "),
       lit("  " + EndMark + " "))
 
-  /** Adjacent symbol pairs of a canonical string, as `left SEP right`.
-    * Guarded for fully-merged single-symbol words: sequence(1, 0) would
-    * DESCEND to [1, 0] and element_at(0) throws under ANSI. */
-  private def pairsOf(s: Column): Column = {
-    val syms = split(trim(s), "  ")
-    when(size(syms) < 2, array().cast("array<string>"))
+  /** One round's pair counts (pr, cnt) over a (freq, s) vocab, `pr` =
+    * `left SEP right`; each symbol string is split once into a column the
+    * pair lambda reads. Guarded for fully-merged single-symbol words:
+    * sequence(1, 0) would DESCEND to [1, 0] and element_at(0) throws
+    * under ANSI. */
+  private[graft] def pairCounts(vocab: DataFrame): DataFrame = {
+    val syms = col("syms")
+    val pairs = when(size(syms) < 2, array().cast("array<string>"))
       .otherwise(transform(sequence(lit(1), size(syms) - 1),
         i => concat(element_at(syms, i), lit(Sep), element_at(syms, i + 1))))
+    vocab.select(col("freq"), split(trim(col("s")), "  ").as("syms"))
+      .select(col("freq"), explode(pairs).as("pr"))
+      .groupBy("pr").agg(sum("freq").as("cnt"))
   }
 
   /** One merge rewrite: ` x  y ` → ` xy ` (plain replace-all). */
@@ -77,9 +82,7 @@ object Bpe {
     var r = 1
     var exhausted = false
     while (r <= m && !exhausted) {
-      val best = vocab
-        .select(col("freq"), explode(pairsOf(col("s"))).as("pr"))
-        .groupBy("pr").agg(sum("freq").as("cnt"))
+      val best = pairCounts(vocab)
         .orderBy(desc("cnt"), asc("pr"))
         .limit(1)
         .as[(String, Long)].collect()

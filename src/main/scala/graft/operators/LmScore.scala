@@ -30,7 +30,11 @@ import org.apache.spark.sql.functions._
   * Scale shape: scoring is one equi-join of the exploded corpus bigrams
   * against the (broadcast-able) count tables + a per-doc sort-free
   * aggregation — `sort_array` runs INSIDE each doc's collected pair list,
-  * no window, no cross-doc shuffle beyond the doc_id groupBy. */
+  * no window, no cross-doc shuffle beyond the doc_id groupBy. Within a
+  * document the work is linear in tokens: every pass takes its pairs from
+  * one extractor that splits each text once into a column and zips the
+  * pairs from it, never a `split` inside a per-element lambda (that
+  * re-splits the whole text per pair, quadratic per document). */
 object LmScore {
 
   /** Milli-scale for the certified integer score. */
@@ -42,21 +46,33 @@ object LmScore {
     * aggregation or an order-pinned fold. */
   private def widened(df: DataFrame): DataFrame = Width.widen(df)
 
-  private def rawPairs(docs: DataFrame, textCol: String): DataFrame = {
-    val toks = split(col(textCol), " ")
-    widened(docs)
-      .select(explode(when(size(toks) < 2,
-          array().cast("array<struct<w1:string,w2:string>>"))
-        .otherwise(transform(sequence(lit(1), size(toks) - 1), i =>
-          struct(element_at(toks, i).as("w1"),
-            element_at(toks, i + 1).as("w2"))))).as("pr"))
-      .select(col("pr.w1"), col("pr.w2"))
+  private val PairsType = "array<struct<w1:string,w2:string>>"
+
+  /** The one pair extractor (see Scale shape): (doc_id, pos, w1, w2),
+    * `pos` the 0-based pair index that orders the score folds, or (w1, w2)
+    * when `idCol` is None. Texts with < 2 tokens or null yield no pair. */
+  private def bigramRows(docs: DataFrame, textCol: String,
+      idCol: Option[String]): DataFrame = {
+    val toks = col("toks")
+    val n = size(toks)
+    val prs = when(n < 2, array().cast(PairsType)).otherwise(
+      arrays_zip(slice(toks, lit(1), n - 1), slice(toks, lit(2), n - 1))
+        .cast(PairsType))
+    val id = idCol.toSeq.map(c => col(c).cast("long").as("doc_id"))
+    val tokenized = widened(docs)
+      .select(id :+ split(col(textCol), " ").as("toks"): _*)
+    idCol match {
+      case None => tokenized.select(explode(prs).as("pr"))
+        .select(col("pr.w1"), col("pr.w2"))
+      case Some(_) => tokenized.select(col("doc_id"), posexplode(prs))
+        .select(col("doc_id"), col("pos"), col("col.w1"), col("col.w2"))
+    }
   }
 
   /** (w1, w2, c2) bigram and (w1, c1) unigram count tables. */
   def trainBigrams(docs: DataFrame, textCol: String = "text")
       : (DataFrame, DataFrame) = {
-    val prs = rawPairs(docs, textCol)
+    val prs = bigramRows(docs, textCol, None)
     val bigrams = prs.groupBy("w1", "w2").agg(count(lit(1)).as("c2"))
     val unigrams = bigrams.groupBy("w1").agg(sum("c2").as("c1"))
     (bigrams, unigrams)
@@ -72,7 +88,7 @@ object LmScore {
     * worst-case non-Zipf 77M-bigram corpus at 1M docs. */
   def trainBigramsHashed(docs: DataFrame, textCol: String = "text")
       : (DataFrame, DataFrame) = {
-    val keyed = rawPairs(docs, textCol)
+    val keyed = bigramRows(docs, textCol, None)
       .select(xxhash64(col("w1")).as("k1"),
         xxhash64(col("w1"), col("w2")).as("k2"))
     val bigrams = keyed.groupBy("k1", "k2").agg(count(lit(1)).as("c2"))
@@ -89,14 +105,7 @@ object LmScore {
   def scoreMeanProb(docs: DataFrame, bigrams: DataFrame,
       unigrams: DataFrame, idCol: String = "doc_id",
       textCol: String = "text", hashKeys: Boolean = false): DataFrame = {
-    val toks = split(col(textCol), " ")
-    val pairs = widened(docs)
-      .select(col(idCol).cast("long").as("doc_id"),
-        posexplode(when(size(toks) < 2, array().cast("array<struct<w1:string,w2:string>>"))
-          .otherwise(transform(sequence(lit(1), size(toks) - 1), i =>
-            struct(element_at(toks, i).as("w1"),
-              element_at(toks, i + 1).as("w2"))))))
-      .select(col("doc_id"), col("pos"), col("col.w1"), col("col.w2"))
+    val pairs = bigramRows(docs, textCol, Some(idCol))
     val joined =
       if (hashKeys)
         pairs.select(col("doc_id"), col("pos"),
@@ -143,14 +152,7 @@ object LmScore {
       unigrams: DataFrame, tokenUnigrams: DataFrame, lambda: Double,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     require(lambda >= 0.0 && lambda <= 1.0, "lambda in [0, 1]")
-    val toks = split(col(textCol), " ")
-    val pairs = widened(docs)
-      .select(col(idCol).cast("long").as("doc_id"),
-        posexplode(when(size(toks) < 2, array().cast("array<struct<w1:string,w2:string>>"))
-          .otherwise(transform(sequence(lit(1), size(toks) - 1), i =>
-            struct(element_at(toks, i).as("w1"),
-              element_at(toks, i + 1).as("w2"))))))
-      .select(col("doc_id"), col("pos"), col("col.w1"), col("col.w2"))
+    val pairs = bigramRows(docs, textCol, Some(idCol))
     val probs = pairs
       .join(bigrams, Seq("w1", "w2"), "left")
       .join(unigrams, Seq("w1"), "left")
@@ -250,15 +252,7 @@ object LmScore {
     }
     val (nt, _) = totals(targetBigrams)
     val (nr, v) = totals(rawBigrams) // smoothing vocab = RAW bigram types
-    val toks = split(col(textCol), " ")
-    val pairs = widened(docs)
-      .select(col(idCol).cast("long").as("doc_id"),
-        posexplode(when(size(toks) < 2,
-          array().cast("array<struct<w1:string,w2:string>>"))
-          .otherwise(transform(sequence(lit(1), size(toks) - 1), i =>
-            struct(element_at(toks, i).as("w1"),
-              element_at(toks, i + 1).as("w2"))))))
-      .select(col("doc_id"), col("pos"), col("col.w1"), col("col.w2"))
+    val pairs = bigramRows(docs, textCol, Some(idCol))
     val terms = pairs
       .join(targetBigrams.select(col("w1"), col("w2"),
         col("c2").as("ct")), Seq("w1", "w2"), "left")
@@ -285,14 +279,7 @@ object LmScore {
   def perplexity(docs: DataFrame, bigrams: DataFrame, unigrams: DataFrame,
       idCol: String = "doc_id", textCol: String = "text",
       eps: Double = 1e-9): DataFrame = {
-    val toks = split(col(textCol), " ")
-    val pairs = widened(docs)
-      .select(col(idCol).cast("long").as("doc_id"),
-        explode(when(size(toks) < 2, array().cast("array<struct<w1:string,w2:string>>"))
-          .otherwise(transform(sequence(lit(1), size(toks) - 1), i =>
-            struct(element_at(toks, i).as("w1"),
-              element_at(toks, i + 1).as("w2"))))).as("pr"))
-      .select(col("doc_id"), col("pr.w1"), col("pr.w2"))
+    val pairs = bigramRows(docs, textCol, Some(idCol))
     pairs
       .join(bigrams, Seq("w1", "w2"), "left")
       .join(unigrams, Seq("w1"), "left")

@@ -103,8 +103,7 @@ private[graft] object StoreManifest {
     val root = new Path(store)
     val fs = fsOf(spark, root)
     def partsOf(dir: Path): Seq[Part] =
-      if (!fs.exists(dir)) Nil
-      else fs.listStatus(dir).toSeq
+      fs.listStatus(dir).toSeq
         .filter(f => f.isFile && DriverParquet.isDataFile(f.getPath.getName))
         .map(f => Part(f.getPath.getName, f.getLen, f.getModificationTime))
         .sortBy(_.name)
@@ -114,8 +113,11 @@ private[graft] object StoreManifest {
       else {
         val listed: Map[Long, Seq[Part]] = (touched, prior.get(sub)) match {
           case (Some(t), Some(old)) =>
-            old.shards -- t ++ t.map(c =>
-              c -> partsOf(new Path(dir, s"cluster_id=$c")))
+            // a touched shard may be gone (emptied by deletes)
+            old.shards -- t ++ t.map { c =>
+              val cdir = new Path(dir, s"cluster_id=$c")
+              c -> (if (fs.exists(cdir)) partsOf(cdir) else Nil)
+            }
           case _ =>
             fs.listStatus(dir).toSeq
               .filter(d => d.isDirectory &&

@@ -207,13 +207,17 @@ object TextAnalysis {
 
   def repetitionMetrics(docs: DataFrame, idCol: String = "doc_id",
                         textCol: String = "text"): DataFrame = {
-    val toks = tokens(col(textCol))
+    // split once into a column the gram lambda reads; the top-gram branch
+    // explodes the gram expression, as exploding the `grams` column infers
+    // a filter the optimizer pushes below the split, into the lambda
+    val toks = col("toks")
     val n = size(toks)
     val grams = when(n < 2, array().cast("array<string>")).otherwise(
       transform(sequence(lit(1), n - 1),
         i => concat_ws("_", element_at(toks, i), element_at(toks, i + 1))))
-    val base = docs.select(col(idCol).cast("long").as("doc_id"),
-      toks.as("toks"), grams.as("grams"))
+    val tokenized = docs.select(col(idCol).cast("long").as("doc_id"),
+      tokens(col(textCol)).as("toks"))
+    val base = tokenized.select(col("doc_id"), toks, grams.as("grams"))
     val gn = size(col("grams"))
     val tn = size(col("toks"))
     val metrics = base.select(col("doc_id"),
@@ -222,7 +226,7 @@ object TextAnalysis {
       when(gn === 0, 0L).otherwise(
         floor(lit(1000.0) * (gn - size(array_distinct(col("grams")))) / gn)
           .cast("long")).as("dup_gram_milli"))
-    val top = base.select(col("doc_id"), explode(col("grams")).as("gram"))
+    val top = tokenized.select(col("doc_id"), explode(grams).as("gram"))
       .groupBy("doc_id", "gram").agg(count(lit(1)).as("c"))
       .groupBy("doc_id").agg(max("c").as("top_gram_cnt"))
     metrics.join(top, Seq("doc_id"), "left")

@@ -878,6 +878,22 @@ class GraphLayoutSpec extends SparkSpec {
     lease.complete()
   }
 
+  /** (cluster_id, file name, length) of every part file under
+    * `path/sub`, listed from the local file system. */
+  private def listing(path: String, sub: String): Set[(Long, String, Long)] =
+    new java.io.File(s"$path/$sub").listFiles.toSeq
+      .filter(_.getName.startsWith("cluster_id=")).flatMap { d =>
+        d.listFiles.toSeq.filter(f => f.isFile &&
+            !f.getName.startsWith(".") && !f.getName.startsWith("_"))
+          .map(f => (d.getName.stripPrefix("cluster_id=").toLong,
+            f.getName, f.length))
+      }.toSet
+
+  private def manifestEntries(d: graft.operators.StoreManifest.Dir)
+      : Set[(Long, String, Long)] =
+    d.shards.toSeq.flatMap { case (c, ps) =>
+      ps.map(x => (c, x.name, x.length)) }.toSet
+
   test("manifest: entries ≡ a fresh listing, schemas ≡ spark.read's; at " +
       "listing threshold 0 open runs no job and serveCold only the walk; " +
       "a store without a manifest fails open naming repair, which lists " +
@@ -887,19 +903,10 @@ class GraphLayoutSpec extends SparkSpec {
     val (_, cents, clustered, graph, p) = fixture()
     val path = "/tmp/graft_graphlayout_spec_manifest"
     GraphLayout.write(clustered, graph, cents, path, pq = Some(p))
-    def listing(sub: String): Set[(Long, String, Long)] =
-      new java.io.File(s"$path/$sub").listFiles.toSeq
-        .filter(_.getName.startsWith("cluster_id=")).flatMap { d =>
-          d.listFiles.toSeq.filter(f => f.isFile &&
-              !f.getName.startsWith(".") && !f.getName.startsWith("_"))
-            .map(f => (d.getName.stripPrefix("cluster_id=").toLong,
-              f.getName, f.length))
-        }.toSet
     val man = StoreManifest.read(spark, path).get
     assert(man.keySet === Set("data", "graph", "codes"))
     for ((sub, d) <- man) {
-      assert(d.shards.toSeq.flatMap { case (c, ps) =>
-        ps.map(x => (c, x.name, x.length)) }.toSet === listing(sub), sub)
+      assert(manifestEntries(d) === listing(path, sub), sub)
       assert(d.schema === spark.read.parquet(s"$path/$sub").schema, sub)
     }
     val q0 = Tables.embeddingQueries(spark, sfDir)
@@ -931,6 +938,29 @@ class GraphLayoutSpec extends SparkSpec {
     } finally {
       probe.close()
       before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
+  }
+
+  test("manifest after an upsert that empties one shard and creates " +
+      "another ≡ a fresh listing") {
+    import graft.operators.StoreManifest
+    val (data, cents, clustered, graph, p) = fixture()
+    val path = "/tmp/graft_graphlayout_spec_manifest_upsert"
+    GraphLayout.write(clustered, graph, cents, path, pq = Some(p))
+    val newCid = 4L
+    val added = data.filter(col("id") % 50 === 7).orderBy("id").limit(20)
+      .select((col("id") + 100000L).as("id"), col("vec"),
+        lit(newCid).as("cluster_id"))
+    val allOf3 = clustered.filter(col("cluster_id") === 3L).select("id")
+    val up = GraphLayout.upsert(spark, path, added, allOf3,
+      BuildParams(maxDegree = 24, buildWindow = 48), Metric.L2)
+    assert(up.centroids.map(_._1).toSet === Set(0L, 1L, 2L, newCid))
+    val man = StoreManifest.read(spark, path).get
+    assert(man.keySet === Set("data", "graph", "codes"))
+    for ((sub, d) <- man) {
+      val listed = listing(path, sub)
+      assert(listed.map(_._1) === Set(0L, 1L, 2L, newCid), sub)
+      assert(manifestEntries(d) === listed, sub)
     }
   }
 }

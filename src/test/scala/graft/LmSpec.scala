@@ -11,16 +11,18 @@ class LmSpec extends SparkSpec {
       .toDF("doc_id", "text")
   }
 
-  /** Scala reference: bigram counts and per-doc ordered mean probability. */
+  /** Scala reference: bigram counts and per-doc ordered mean probability.
+    * Tokens are the operator's `split(text, " ")`: every single space
+    * separates, so doubled and trailing spaces make empty tokens. */
   private def refScores(docs: Seq[String]): Map[Long, Long] = {
     val pairs = docs.flatMap { t =>
-      val w = t.split(" ").filter(_.nonEmpty)
+      val w = t.split(" ", -1)
       w.zip(w.tail)
     }
     val c2 = pairs.groupBy(identity).view.mapValues(_.size.toLong).toMap
     val c1 = pairs.groupBy(_._1).view.mapValues(_.size.toLong).toMap
     docs.zipWithIndex.flatMap { case (t, i) =>
-      val w = t.split(" ").filter(_.nonEmpty)
+      val w = t.split(" ", -1)
       val ps = w.zip(w.tail).map(p => c2(p).toDouble / c1(p._1))
       if (ps.isEmpty) None
       else {
@@ -38,7 +40,10 @@ class LmSpec extends SparkSpec {
       "the cat ran",
       "a dog sat on a log",
       "the the the the",       // repeated bigram, p = 1 within 'the the'
-      "solo")                  // single token: no row
+      "solo",                  // single token: no row
+      "",                      // empty text: one empty token, no row
+      "a  b",                  // doubled space: an empty middle token
+      "x y ")                  // trailing space: an empty last token
     val df = corpusDF(docs)
     val (bg, ug) = LmScore.trainBigrams(df)
     val got = LmScore.scoreMeanProb(df, bg, ug).collect()
